@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
@@ -179,7 +179,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_BENCH_FILTER=sub1,sub2 -> bench only matching queries
     // (local iteration on a family, the Verify third-arg convention);
     // the driver sets no filter and benches the whole board.
@@ -190,47 +189,18 @@ object Bench {
           name => ps.exists(name.contains)
         case None => _ => true
       }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS) — see Verify.scala
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Whole-stage-codegen class cache (r14 opt round, guide §1.2 step
-      // 3): the default 100-entry cache cannot hold a 243-query board's
-      // ~10³ codegen units, so the timed pass re-ran janino on plans
-      // the warm-up pass had ALREADY compiled — the warm-up exists
-      // precisely to absorb compilation (steady-state contract above).
-      // Sized to the board, not to the data — scale-independent, same
-      // value a production fleet running this workload would use.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      // Join-strategy regime knob for the r15 board A/B (guide §3.2,
-      // verdict item 2): preferSortMergeJoin=false lets the planner
-      // pick shuffled-hash join where the per-partition build side
-      // fits, skipping the big side's sort — the candidate sites are
-      // the checkpointed-frame SMJs (t22/t39/m6/d14) whose erased
-      // stats force SMJ today. Default stays Spark's (true) unless the
-      // A/B shows a board-level win; env-parameterised either way so
-      // the regime is re-measurable at any scale.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Steady-state measurement: one untimed warm-up pass over every query
     // absorbs JVM/classloader/janino-codegen JIT, parquet footer reads and
     // shuffle-infra startup (cold-vs-warm is 2.7s vs 0.26s for a simple
     // hash groupBy), then the timed pass measures the queries themselves.
-    // The warm-up also BUILDS every shared memoized artifact
-    // (TradingPairs/TradingRank iterate chain, InjectedShingles,
-    // PqArtifact codebooks, the ClassifierModel trained weights +
-    // eval), so the timed per-query numbers are
-    // order-INdependent: no timed query pays — or escapes — the shared
-    // construction cost depending on who ran first; what a timed g1 or
-    // d20 measures is the steady-state probe against the warm artifact
-    // (the documented Verify/Bench contract for those families).
+    // The warm-up also BUILDS every shared artifact (Artifacts.all), so
+    // the timed per-query numbers are order-INdependent: no timed query
+    // pays — or escapes — the shared construction cost depending on
+    // who ran first; what a timed g1 or d20 measures is the
+    // steady-state probe against the warm artifact (the documented
+    // Verify/Bench contract for those families).
     // Warm-up swallowing exceptions is deliberate (best-effort by design);
     // the timed pass below records them.
     def secsOf(body: => Unit): Double = {
@@ -238,62 +208,27 @@ object Bench {
       body
       (System.nanoTime() - t0) / 1e9
     }
-    // One-time shared-artifact builds, individually timed BEFORE the
-    // query sweep (which would otherwise absorb them as cache probes) —
-    // emitted as the "builds" JSON block. Each force is the artifact's
-    // own evaluation, not a query's: counts materialize the lazy
-    // localCheckpoints. Skipped under a bench filter (local family
+    // One-time shared-artifact builds: every force step of
+    // Artifacts.all, individually timed BEFORE the query sweep (which
+    // would otherwise absorb them as cache probes) — emitted as the
+    // "builds" JSON block. Skipped under a bench filter (local family
     // iteration wants speed; the sweep still builds what it needs).
     // First-in-JVM codegen/JIT overhead lands in these numbers — they
     // are first-run costs by definition.
     val builds: Option[Seq[(String, Double)]] =
       if (sys.env.contains("SPARK_GRAFT_BENCH_FILTER")) None
       else Some {
-        import graft.queries.{ExtensionQueries, TrainingQueries}
         // JIT-warm collect is best-effort like every force below — a
         // throw here must not kill main before any output line is
         // emitted. NonFatal only (ADVICE r13): an OutOfMemoryError
         // must crash the run, not let a corrupted JVM publish timings.
         try spark.range(1000000L).selectExpr("sum(id)").collect()
         catch { case scala.util.control.NonFatal(_) => () }
-        (Seq[(String, () => Unit)](
-          "trading_pairs" -> (() =>
-            TrainingQueries.TradingPairs(spark, sfDir).count()),
-          "copurchase_pairs" -> (() =>
-            TrainingQueries.CoPurchasePairs(spark, sfDir).count()),
-          "trading_rank_5it" -> (() =>
-            TrainingQueries.TradingRank(spark, sfDir)
-              .ranks(iterations = 5).count()),
-          // g3's convergence walk can extend the shared iterate chain
-          // past the 5 fixed iterations — force the full depth HERE so
-          // the chain is complete (and cleanup-protected) before any
-          // timed pass
-          "trading_rank_converged" -> (() =>
-            TrainingQueries.TradingRank(spark, sfDir)
-              .converged(maxIterations = 10, epsilon = 1.0)._1.count()),
-          "injected_shingles" -> (() => {
-            val (docs, sh) = TrainingQueries.InjectedShingles(spark, sfDir)
-            docs.count(); sh.count()
-          }),
-          "pq_codebooks_encode" -> (() => {
-            val (books, codes) = ExtensionQueries.PqArtifact(spark, sfDir)
-            books.count(); codes.count()
-          }),
-          "classifier_train_score" -> (() => {
-            val parts = TrainingQueries.ClassifierModel(spark, sfDir)
-            parts.weights.count(); parts.scored.count()
-          }),
-          "classifier_heldout_eval" -> (() =>
-            TrainingQueries.ClassifierModel(spark, sfDir)
-              .evalRow.count())
-        ) ++ (if (TrainingQueries.exportTierMemo)
-          Seq("export_doc_grain" -> (() => {
-            TrainingQueries.ExportTier(spark, sfDir)._2.count(); ()
-          }))
-        else Nil)).map { case (n, force) =>
-          n -> (try secsOf(force()) catch {
-            case scala.util.control.NonFatal(_) => -1.0
-          })
+        graft.queries.Artifacts.all.flatMap(_.steps(spark, sfDir)).map {
+          case (n, force) =>
+            n -> (try secsOf(force()) catch {
+              case scala.util.control.NonFatal(_) => -1.0
+            })
         }
       }
     // Per-query transient-block cleanup (VERDICT r13 item 2, the
@@ -304,15 +239,12 @@ object Bench {
     // time the late (x*) families run — r13 measured x2 at 8.4 s
     // in-sweep vs 4.7 s in a fresh process on a byte-identical plan.
     // After each query, unpersist every block that did not exist when
-    // the builds block finished: builds forces EVERY memoized shared
-    // artifact (including g3's convergence chain depth, above), so
-    // anything newer is per-query transient by construction. Active
-    // only on the full-board path — under a bench filter builds are
-    // skipped, warmup builds artifacts lazily, and an empty protected
-    // set would destroy them. Opt out: SPARK_GRAFT_BENCH_CLEANUP=0
-    // (regime C of the controlled experiment).
-    val cleanup = !sys.env.contains("SPARK_GRAFT_BENCH_FILTER") &&
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_CLEANUP", "1") == "1"
+    // the builds block finished: builds forces every step of every
+    // registered artifact, so anything newer is per-query transient by
+    // construction. Active only on the full-board path — under a bench
+    // filter builds are skipped, warmup builds artifacts lazily, and an
+    // empty protected set would destroy them.
+    val cleanup = builds.isDefined
     val protectedIds: Set[Int] =
       spark.sparkContext.getPersistentRDDs.keySet.toSet
     def sweepClean(): Unit = if (cleanup)

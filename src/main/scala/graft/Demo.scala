@@ -2,7 +2,6 @@ package graft
 
 import java.sql.{Date, Timestamp}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.CovidPipeline
@@ -14,15 +13,7 @@ import graft.streaming.StreamingOps
   * Usage: `sbt "runMain graft.Demo"`. */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     import spark.implicits._
 
     // --- covid integration pipeline on reference-shaped frames -----------

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of selected queries
   * so scan pruning (`PushedFilters`/`ReadSchema`), join strategies and
   * whole-stage-codegen spans can be reviewed.
@@ -16,15 +14,7 @@ import org.apache.spark.sql.SparkSession
   * artifact; the executed (AQE-final) plan is still printed to stdout. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val outDir = sys.env.get("SPARK_GRAFT_EXPLAIN_DIR")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_SUFFIX", "plan")

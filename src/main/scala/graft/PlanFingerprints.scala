@@ -82,17 +82,7 @@ object PlanFingerprints {
 
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "PLAN_FINGERPRINTS.json"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4) // the pins assume 4 shuffle partitions
     val fps = computeAll(spark, "/root/testdata/sf0.001")
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       render(fps).getBytes("UTF-8"))

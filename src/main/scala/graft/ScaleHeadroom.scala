@@ -65,23 +65,12 @@ object ScaleHeadroom {
   def main(args: Array[String]): Unit = {
     val base = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val work = if (args.length > 1) args(1) else "/tmp/graft_scale"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // fresh temp warehouse per run: the bucketed-index saveAsTable
-      // below would otherwise collide with an orphaned
-      // ./spark-warehouse/span_idx_x* location left by a killed
-      // previous run (DROP TABLE IF EXISTS can't see locations the
-      // fresh in-memory catalog never registered)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-scale-wh").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    // GraftSession's fresh temp warehouse keeps the bucketed-index
+    // saveAsTable below clear of an orphaned span_idx_x* location a
+    // killed previous run left (DROP TABLE IF EXISTS can't see locations
+    // the fresh in-memory catalog never registered)
+    val spark = GraftSession.local(cpus)
 
     // ---- deterministic inflated fixtures ----------------------------
     val docs = Tables.documents(spark, base)
@@ -1197,7 +1186,7 @@ object ScaleHeadroom {
         report(q, scale, secs, rows)
       }
       // evict this scale's artifact before the next scale builds —
-      // see ClassifierModel.invalidate (pinned 1×+10× artifacts made
+      // see Artifact (pinned 1×+10× artifacts made
       // the 25× build memory-bound, not compute-bound)
       graft.queries.TrainingQueries.ClassifierModel.invalidate(spark, dir)
       System.gc()

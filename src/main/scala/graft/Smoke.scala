@@ -1,21 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local replica of the driver's t1 smoke: run `SparkEntry.entry` and
   * assert rows > 0. Usage: `sbt "runMain graft.Smoke"`. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(20, truncate = false)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,26 +11,8 @@ object Verify {
       if (args.length > 2) { val pats = args(2).split(',').toSeq
         name => pats.exists(name.contains)
       } else _ => true
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS) — unsupported by Spark's
-      // micros TimestampType; read as raw Long (converted in Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Whole-stage-codegen class cache sized to the board, not the
-      // data (r15, verdict item 7 — wall-clock only, same rationale as
-      // Bench.scala): the 100-entry default cannot hold 243 queries'
-      // ~10³ codegen units, so dumping the board re-paid janino
-      // compilation throughout. Values are unaffected; keeps the
-      // oracle path inside the driver's budget as the board grows.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => nameFilter(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

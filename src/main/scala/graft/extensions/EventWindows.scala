@@ -167,12 +167,6 @@ object EventWindows {
           .as("v_interp"))
   }
 
-  /** `from_json` over the `props` JSON string column — the map/json
-    * scalar surface the reference lacks (SURVEY.md §2.H). */
-  def parsedProps(events: DataFrame): DataFrame =
-    events.withColumn("k",
-      get_json_object(col("props"), "$.k").cast("long"))
-
   /** Distributed EXCLUSIVE running max: for each row, the max of
     * `valCol` over all rows with a strictly smaller `seqCol` (`seqCol`
     * must be unique — ties would make the exclusive frame ambiguous).

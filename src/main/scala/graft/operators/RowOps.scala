@@ -87,8 +87,4 @@ object RowOps {
   /** X12 — guarded percent change over a window (data_merger.py:196-202). */
   def percentChange(first: Column, last: Column): Column =
     when(first > 0, round((last - first) / first * 100, 2)).otherwise(lit(0.0))
-
-  /** X13 — display-string ops (streamlit_app.py:255). */
-  def displayTitle(c: Column): Column =
-    initcap(regexp_replace(c, "_", " "))
 }

@@ -23,25 +23,25 @@ object ExtensionQueries {
     * nobody retrains per query. Keyed per (session, sfDir); the lazy
     * checkpoints make the second consumer's training cost zero while
     * keeping each frame recomputable from lineage on executor loss. */
-  private[graft] object PqArtifact {
+  private[graft] object PqArtifact
+      extends Artifact[(DataFrame, DataFrame)]("pq_codebooks_encode" -> {
+        case (books, codes) => books.count(); codes.count()
+      }) {
     val M = 16
     val KSUB = 16
-    private val cache = scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), (DataFrame, DataFrame)]
     /** (codebooks, encoded corpus codes). */
-    def apply(s: SparkSession, d: String): (DataFrame, DataFrame) =
-      cache.getOrElseUpdate((s, d), {
-        val emb = Tables.embeddings(s, d)
-        // codebooks train on a deterministic 1-in-5 sample shard — the
-        // canonical PQ practice (codebooks are KB-sized global state;
-        // the full corpus only ever encodes against them)
-        val books = Similarity.pqCodebooks(
-          emb.filter(col("vec_id") % 5 === 0), m = M, ksub = KSUB,
-          iters = 2)
-        val codes = Similarity.pqEncode(emb, books, m = M)
-          .localCheckpoint(eager = false)
-        (books, codes)
-      })
+    protected def build(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+      val emb = Tables.embeddings(s, d)
+      // codebooks train on a deterministic 1-in-5 sample shard — the
+      // canonical PQ practice (codebooks are KB-sized global state;
+      // the full corpus only ever encodes against them)
+      val books = Similarity.pqCodebooks(
+        emb.filter(col("vec_id") % 5 === 0), m = M, ksub = KSUB,
+        iters = 2)
+      val codes = Similarity.pqEncode(emb, books, m = M)
+        .localCheckpoint(eager = false)
+      (books, codes)
+    }
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -5,21 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession for all suites (forked test JVM). */
 object SparkTestSession {
-  lazy val get: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // local[4]: PLAN_FINGERPRINTS.json pins 4 shuffle partitions
+  lazy val get: SparkSession = GraftSession.local(4)
 }
 
 trait SparkSpec extends AnyFunSuite {
