@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators._
-import graft.queries.{ExtensionQueries, ParityQueries, TrainingQueries}
+import graft.queries.{ExtensionQueries, ParityQueries, QuerySpec, TrainingQueries}
 import graft.sources.Tables
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
@@ -39,22 +39,27 @@ object SparkEntry {
     *
     * ADD-A-QUERY CHECKLIST (each step is gated by a test — skipping one
     * turns the suite red, so do all four in the same change):
-    *   1. the query lambda here (via one of the three registries) and,
-    *      unless genuinely non-SQL-expressible, its DuckDB oracle;
-    *   2. a row in OPERATORS.md (backticked query name), the Totals
-    *      line recount, and README.md's "(N queries, M oracled" counts
-    *      — QueriesSpec's doc-rot guard pins all three;
+    *   1. one [[QuerySpec]] in the family's `specs`, with `oracle` set
+    *      unless the query cannot be expressed in SQL (a repeated name
+    *      fails [[QuerySpec.index]] when this object initializes);
+    *   2. a row in OPERATORS.md (backticked query name); the Totals line
+    *      and README.md's "(N queries, M oracled" must state what
+    *      `specs` holds — QueriesSpec's doc-rot guard derives and pins
+    *      both counts;
     *   3. refresh PLAN_FINGERPRINTS.json (`sbt "runMain graft.PlanFingerprints"`)
     *      — PlanFingerprintSpec pins every query's physical-plan shape;
     *   4. the per-query ScalaTest assertions (QueriesSpec executes every
     *      entry automatically; add a dedicated spec for new operator code).
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ParityQueries.queries ++ ExtensionQueries.queries ++ TrainingQueries.queries
+  val specs: Seq[QuerySpec] =
+    ParityQueries.specs ++ ExtensionQueries.specs ++ TrainingQueries.specs
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    QuerySpec.index(specs).map { case (name, q) => name -> q.plan }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops
-    * (MinHash-LSH, SimHash, ANN) → driver records a rows-only check. */
-  def oracleSql: Map[String, String] =
-    ParityQueries.oracles ++ ExtensionQueries.oracles ++ TrainingQueries.oracles
+    * (ANN, sketches) → driver records a rows-only check. */
+  val oracleSql: Map[String, String] =
+    specs.collect { case QuerySpec(name, _, Some(sql)) => name -> sql }.toMap
 }

@@ -2,7 +2,6 @@ package graft.extensions
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing (SURVEY.md §7.4): media payloads travel as
   * opaque `binary` columns with typed metadata; decode / feature-extract
@@ -26,15 +25,6 @@ object Multimodal {
       width: Int,      // stub: derived from checksum
       height: Int,     // stub: derived from checksum
       frames: Int)     // stub: derived from length
-
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("n_bytes", LongType, nullable = false),
-    StructField("checksum", LongType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("frames", IntegerType, nullable = false)
-  ))
 
   /** Attach a binary payload column (here: utf-8 bytes of `text` stand
     * in for real media bytes; in production this is the raw blob column

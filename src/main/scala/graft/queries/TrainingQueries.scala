@@ -41,7 +41,38 @@ object TrainingQueries {
   val SpamMarker: String =
     " ### ### ### ### ### ### ### ### ### ###"
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Shared e1-replay CTE: the brute-force cosine top-10 ground truth
+    * the e5/e6/e12b/e14b contract oracles re-derive (round-4 cosine,
+    * (sim DESC, vec_id) tiebreak — bruteForceTopK's exact ordering).
+    * ONE copy: a drift in the rounding or tiebreak convention must hit
+    * all four oracles together or none. */
+  private val BruteForceTop10Cte: String =
+    """WITH q AS (
+      |  SELECT generate_subscripts(embedding, 1) AS i,
+      |    CAST(unnest(embedding) AS DOUBLE) AS qv
+      |  FROM embeddings WHERE vec_id = 0
+      |), v AS (
+      |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
+      |    CAST(unnest(embedding) AS DOUBLE) AS ev
+      |  FROM embeddings WHERE vec_id <> 0
+      |), m AS (
+      |  SELECT v.vec_id, sum(v.ev * q.qv) AS dot,
+      |    sum(v.ev * v.ev) AS vv, sum(q.qv * q.qv) AS qq
+      |  FROM v JOIN q ON v.i = q.i GROUP BY v.vec_id
+      |), top10 AS (
+      |  SELECT vec_id FROM m
+      |  ORDER BY round(dot / (sqrt(vv) * sqrt(qq)), 4) DESC, vec_id
+      |  LIMIT 10
+      |)""".stripMargin
+
+  /** t42's split predicate, the s18 convention verbatim: seeded md5 of
+    * the content fingerprint mod 10 — buckets 0–7 train. Applied to the
+    * SPAM-INJECTED text (corpus0), exactly what the Spark side hashes. */
+  private val SplitTrainPred =
+    "CAST('0x' || substr(md5('split42:' || md5(lower(trim(text)))), " +
+      "1, 15) AS BIGINT) % 10 <= 7"
+
+  val specs: Seq[QuerySpec] = Seq(
 
     // S8 — stratified deterministic sampling via a multiplicative integer
     // hash: the scale-safe substitute for rand()-based sampleBy (seeded
@@ -50,7 +81,7 @@ object TrainingQueries {
     // cluster layout and pushes down to the scan). Per-stratum rates:
     // A 5%, R 10%, N 2%. All arithmetic stays in BIGINT range:
     // (key % 999983) * 2654435761 < 2^63.
-    "s8_hash_sample" -> ((s, d) => {
+    QuerySpec("s8_hash_sample", (s, d) => {
       Tables.lineitem(s, d)
         .withColumn("h",
           ((col("l_orderkey") * 7 + col("l_linenumber")) % 999983)
@@ -63,7 +94,14 @@ object TrainingQueries {
         .agg(count(lit(1)).as("n_sampled"),
           Summaries.exactSum(col("l_quantity"), 2).as("sum_qty"))
         .orderBy(col("l_returnflag"))
-    }),
+    }, oracle = Some(
+      """SELECT l_returnflag, count(*) AS n_sampled,
+        |CAST(round(sum(CAST(l_quantity AS DECIMAL(38,6))), 2) AS DOUBLE) AS sum_qty
+        |FROM (SELECT *,
+        |  ((l_orderkey * 7 + l_linenumber) % 999983) * 2654435761 % 1000 AS h
+        |  FROM lineitem)
+        |WHERE h < CASE l_returnflag WHEN 'A' THEN 50 WHEN 'R' THEN 100 ELSE 20 END
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
     // S13 — deterministic shuffle + sharding: epoch-stable pseudo-random
     // order and shard assignment from a seeded md5-derived key — the
@@ -73,7 +111,7 @@ object TrainingQueries {
     // byte. One narrow map pass + one per-shard window; at 100 TB the
     // export writes partitionBy(shard_id) with the key as sort column —
     // the window never sees more than one shard per task.
-    "s13_shuffle_shard" -> ((s, d) => {
+    QuerySpec("s13_shuffle_shard", (s, d) => {
       val key = conv(substring(md5(concat(lit("epoch42:"),
           col("doc_id").cast("string")).cast("binary")), 1, 15), 16, 10)
         .cast("long")
@@ -85,7 +123,17 @@ object TrainingQueries {
             .orderBy(col("__key"), col("doc_id"))).cast("long"))
         .select(col("doc_id"), col("shard_id"), col("pos_in_shard"))
         .orderBy(col("shard_id"), col("pos_in_shard"))
-    }),
+    }, oracle = Some(
+      """WITH k AS (
+        |  SELECT doc_id, CAST('0x' || substr(
+        |    md5('epoch42:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
+        |    AS key
+        |  FROM documents
+        |)
+        |SELECT doc_id, key % 8 AS shard_id,
+        |  CAST(row_number() OVER (PARTITION BY key % 8
+        |    ORDER BY key, doc_id) AS BIGINT) AS pos_in_shard
+        |FROM k ORDER BY shard_id, pos_in_shard""".stripMargin)),
 
     // S18 — leakage-safe dataset split: assign train(0–7)/val(8)/test(9)
     // by a seeded hash of the CONTENT FINGERPRINT vs naively by doc_id,
@@ -95,7 +143,7 @@ object TrainingQueries {
     // scatters them (n_leaking_fps > 0 — the train→eval contamination
     // a real pipeline must not ship). Both variants replay in SQL via
     // the s13 seeded-md5 convention.
-    "s18_leakage_split" -> ((s, d) => {
+    QuerySpec("s18_leakage_split", (s, d) => {
       val docs = Tables.documentsWithDups(s, d)
       def bucketOf(c: org.apache.spark.sql.Column) = pmod(
         Dedup.md5Hash60(concat(lit("split42:"), c)), lit(10))
@@ -119,7 +167,37 @@ object TrainingQueries {
       variant("by_doc_id", col("b_doc"))
         .unionByName(variant("by_fingerprint", col("split_bucket")))
         .orderBy(col("variant"))
-    }),
+    }, oracle = Some(
+      """WITH d AS (
+        |  SELECT * FROM documents
+        |  UNION ALL SELECT doc_id + 1000000, text, lang, source, n_chars
+        |  FROM documents WHERE doc_id % 25 = 0
+        |), a AS (
+        |  SELECT doc_id, md5(lower(trim(text))) AS fp,
+        |    CAST('0x' || substr(md5('split42:' || md5(lower(trim(text)))),
+        |      1, 15) AS BIGINT) % 10 AS b_fp,
+        |    CAST('0x' || substr(md5('split42:' || CAST(doc_id AS VARCHAR)),
+        |      1, 15) AS BIGINT) % 10 AS b_doc
+        |  FROM d
+        |), v AS (
+        |  SELECT 'by_doc_id' AS variant,
+        |    count(CASE WHEN b_doc <= 7 THEN 1 END) AS n_train,
+        |    count(CASE WHEN b_doc = 8 THEN 1 END) AS n_val,
+        |    count(CASE WHEN b_doc = 9 THEN 1 END) AS n_test,
+        |    (SELECT count(*) FROM (SELECT fp FROM a GROUP BY fp
+        |      HAVING count(DISTINCT b_doc) > 1)) AS n_leaking_fps
+        |  FROM a
+        |  UNION ALL
+        |  SELECT 'by_fingerprint',
+        |    count(CASE WHEN b_fp <= 7 THEN 1 END),
+        |    count(CASE WHEN b_fp = 8 THEN 1 END),
+        |    count(CASE WHEN b_fp = 9 THEN 1 END),
+        |    (SELECT count(*) FROM (SELECT fp FROM a GROUP BY fp
+        |      HAVING count(DISTINCT b_fp) > 1))
+        |  FROM a
+        |)
+        |SELECT variant, n_train, n_val, n_test, n_leaking_fps
+        |FROM v ORDER BY variant""".stripMargin)),
 
     // S21 — purged TEMPORAL split with embargo (López de Prado 2018
     // ch. 7): train < t1, val/test each start an embargo width after
@@ -129,9 +207,37 @@ object TrainingQueries {
     // float quantiles); output: per-split event/user counts + the
     // spanning-user audit (users in >1 of train/val/test — per-user
     // temporal state leaks across their boundary).
-    "s21_temporal_split" -> ((s, d) =>
+    QuerySpec("s21_temporal_split", (s, d) =>
       graft.extensions.EventWindows.temporalSplit(Tables.events(s, d))
-        .orderBy(col("split"))),
+        .orderBy(col("split")), oracle = Some(
+      // s21's replay: same integer boundary arithmetic ((hi−lo)·pct//100 —
+      // BIGINT-exact both engines), same fate CASE, same spanning audit.
+      """WITH ev AS MATERIALIZED (
+        |  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec
+        |  FROM events
+        |), mm AS (
+        |  SELECT min(sec) AS lo, max(sec) AS hi FROM ev
+        |), tagged AS MATERIALIZED (
+        |  SELECT user_id,
+        |    CASE WHEN sec < lo + (hi - lo) * 60 // 100 THEN 'train'
+        |         WHEN sec < lo + (hi - lo) * 60 // 100
+        |           + (hi - lo) * 1 // 100 THEN 'embargo'
+        |         WHEN sec < lo + (hi - lo) * 80 // 100 THEN 'val'
+        |         WHEN sec < lo + (hi - lo) * 80 // 100
+        |           + (hi - lo) * 1 // 100 THEN 'embargo'
+        |         ELSE 'test' END AS split
+        |  FROM ev CROSS JOIN mm
+        |)
+        |SELECT split, n_events, n_users, n_spanning_users
+        |FROM (
+        |  SELECT split, CAST(count(*) AS BIGINT) AS n_events,
+        |    CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
+        |  FROM tagged GROUP BY split)
+        |CROSS JOIN (
+        |  SELECT CAST(count(*) AS BIGINT) AS n_spanning_users FROM (
+        |    SELECT user_id FROM tagged WHERE split <> 'embargo'
+        |    GROUP BY user_id HAVING count(DISTINCT split) > 1))
+        |ORDER BY split""".stripMargin)),
 
     // S10 — dataset MIXTURE up/down-sampling: each source gets an epoch
     // weight (>1 repeats documents, <1 hash-samples them) — the
@@ -140,7 +246,7 @@ object TrainingQueries {
     // map-side explode(sequence(…)), so a 100 TB corpus up-samples
     // without any shuffle before the (summary) aggregation. The same
     // integer-hash determinism as s8: reproducible on any cluster layout.
-    "s10_mixture_upsample" -> ((s, d) => {
+    QuerySpec("s10_mixture_upsample", (s, d) => {
       val w = when(col("source") === "src0", 2.5)
         .when(col("source") === "src1", 1.0)
         .when(col("source") === "src2", 0.25)
@@ -161,13 +267,28 @@ object TrainingQueries {
         .agg(count(lit(1)).as("n_rows"),
           countDistinct(col("doc_id")).as("n_docs"))
         .orderBy(col("source"))
-    }),
+    }, oracle = Some(
+      """WITH rep AS (
+        |  SELECT doc_id, source,
+        |    CAST(floor(w) AS BIGINT) +
+        |      CASE WHEN (doc_id % 999983) * 2654435761 % 1000 < (w - floor(w)) * 1000
+        |        THEN 1 ELSE 0 END AS repeats
+        |  FROM (SELECT doc_id, source,
+        |    CASE source WHEN 'src0' THEN 2.5 WHEN 'src1' THEN 1.0
+        |      WHEN 'src2' THEN 0.25 ELSE 0.5 END AS w
+        |    FROM documents)
+        |)
+        |SELECT source, count(*) AS n_rows,
+        |  count(DISTINCT doc_id) AS n_docs
+        |FROM (SELECT doc_id, source,
+        |  unnest(generate_series(1, repeats)) AS epoch FROM rep)
+        |GROUP BY source ORDER BY source""".stripMargin)),
 
     // D6 — dedup APPLICATION: materialize the survivor set (min-id doc
     // per exact-dup group) via a left-semi join — the step that actually
     // shrinks the corpus after d1's group discovery. Semi join keeps the
     // plan skinny (no payload duplication) and hash-partitions on doc_id.
-    "d6_dedup_apply" -> ((s, d) => {
+    QuerySpec("d6_dedup_apply", (s, d) => {
       // documentsWithDups: with the injected clones the semi-join now
       // genuinely DROPS duplicates (one per 25 docs; the near-dup-free
       // raw corpus left the survivors check essentially vacuous)
@@ -176,7 +297,16 @@ object TrainingQueries {
       docs.join(keep, docs("doc_id") === keep("keep_id"), "left_semi")
         .select(col("doc_id"), col("n_chars"))
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      """WITH dwd AS (
+        |  SELECT * FROM documents
+        |  UNION ALL SELECT doc_id + 1000000, text, lang, source, n_chars
+        |  FROM documents WHERE doc_id % 25 = 0
+        |)
+        |SELECT doc_id, n_chars FROM dwd
+        |WHERE doc_id IN (SELECT min(doc_id) FROM dwd
+        |                 GROUP BY md5(lower(trim(text))))
+        |ORDER BY doc_id""".stripMargin)),
 
     // W20 — exact grouped percentiles (quantile_cont interpolation, same
     // (n-1)*p rank formula in Spark `percentile` and DuckDB
@@ -186,7 +316,7 @@ object TrainingQueries {
     // integers, so the builtin's O(distinct)-state map is fixed-size and
     // one-pass — the cardinality rule documented at
     // Summaries.sortedPercentiles.
-    "w20_percentiles" -> ((s, d) => {
+    QuerySpec("w20_percentiles", (s, d) => {
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(
@@ -194,13 +324,18 @@ object TrainingQueries {
           expr("percentile(l_quantity, 0.5)").as("p50"),
           expr("percentile(l_quantity, 0.9)").as("p90"))
         .orderBy(col("l_returnflag"))
-    }),
+    }, oracle = Some(
+      """SELECT l_returnflag,
+        |quantile_cont(l_quantity, 0.25) AS p25,
+        |quantile_cont(l_quantity, 0.5) AS p50,
+        |quantile_cont(l_quantity, 0.9) AS p90
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
     // T6 — text normalization (lowercase, strip non-alphanumerics,
     // collapse runs of spaces): the canonicalization step in front of
     // exact dedup/fingerprinting. Emitted as md5 + length so the verified
     // row stays narrow.
-    "t6_normalize" -> ((s, d) => {
+    QuerySpec("t6_normalize", (s, d) => {
       val norm = regexp_replace(
         regexp_replace(lower(trim(col("text"))), "[^a-z0-9 ]", ""),
         " +", " ")
@@ -210,7 +345,13 @@ object TrainingQueries {
           length(norm).cast("long").as("n_norm_chars"))
         .orderBy(col("doc_id"))
         .limit(500)
-    }),
+    }, oracle = Some(
+      """SELECT doc_id,
+        |md5(regexp_replace(regexp_replace(lower(trim(text)), '[^a-z0-9 ]', '', 'g'),
+        |    ' +', ' ', 'g')) AS norm_hash,
+        |CAST(length(regexp_replace(regexp_replace(lower(trim(text)),
+        |    '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS BIGINT) AS n_norm_chars
+        |FROM documents ORDER BY doc_id LIMIT 500""".stripMargin)),
 
     // T8 — TF-IDF scoring: explode → per-(doc,term) counts, then exactly
     // ONE shuffle of the fat (doc,term) frame. Doc length is a window
@@ -234,10 +375,23 @@ object TrainingQueries {
     // demonstrates exactly that key-join shape for its bigram vocab.
     // PlanSpec("t8") pins the broadcast so a silent planner fallback
     // to a fat-side shuffle is a caught regression.
-    "t8_tfidf" -> ((s, d) =>
+    QuerySpec("t8_tfidf", (s, d) =>
       tfidfScores(s, d)
         .orderBy(col("tfidf").desc, col("doc_id"), col("term"))
-        .limit(20)),
+        .limit(20), oracle = Some(
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
+        |), tf AS (
+        |  SELECT doc_id, term, count(*) AS cnt FROM tok GROUP BY doc_id, term
+        |), dl AS (
+        |  SELECT doc_id, sum(cnt) AS total FROM tf GROUP BY doc_id
+        |), df AS (
+        |  SELECT term, count(*) AS df FROM tf GROUP BY term
+        |), n AS (SELECT count(*) AS n FROM documents)
+        |SELECT tf.doc_id, tf.term,
+        |  round((tf.cnt * 1.0 / dl.total) * ln(n.n * 1.0 / df.df), 6) AS tfidf
+        |FROM tf JOIN dl USING (doc_id) JOIN df USING (term) CROSS JOIN n
+        |ORDER BY tfidf DESC, tf.doc_id, tf.term LIMIT 20""".stripMargin)),
 
     // T25 — per-document KEYWORD extraction: each doc's top-3 TF-IDF
     // terms (the doc-tagging / index-summarization pass) off the SAME
@@ -245,7 +399,7 @@ object TrainingQueries {
     // cardinality, never global), so the cut is one per-doc heap pass
     // over the posting-sized frame. Deterministic: round-6 scores,
     // (tfidf desc, term asc) tiebreak.
-    "t25_doc_keywords" -> ((s, d) => {
+    QuerySpec("t25_doc_keywords", (s, d) => {
       val wRank = org.apache.spark.sql.expressions.Window
         .partitionBy("doc_id")
         .orderBy(col("tfidf").desc, col("term"))
@@ -253,13 +407,36 @@ object TrainingQueries {
         .withColumn("rnk", row_number().over(wRank).cast("long"))
         .filter(col("rnk") <= 3)
         .orderBy(col("doc_id"), col("rnk"))
-    }),
+    }, oracle = Some(
+      // t25 ranks the identical t8 scored frame per doc
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
+        |), tf AS (
+        |  SELECT doc_id, term, count(*) AS cnt FROM tok GROUP BY doc_id, term
+        |), dl AS (
+        |  SELECT doc_id, sum(cnt) AS total FROM tf GROUP BY doc_id
+        |), df AS (
+        |  SELECT term, count(*) AS df FROM tf GROUP BY term
+        |), n AS (SELECT count(*) AS n FROM documents),
+        |sc AS (
+        |  SELECT tf.doc_id, tf.term,
+        |    round((tf.cnt * 1.0 / dl.total) * ln(n.n * 1.0 / df.df), 6)
+        |      AS tfidf
+        |  FROM tf JOIN dl USING (doc_id) JOIN df USING (term) CROSS JOIN n
+        |), r AS (
+        |  SELECT doc_id, term, tfidf,
+        |    row_number() OVER (PARTITION BY doc_id
+        |      ORDER BY tfidf DESC, term) AS rnk
+        |  FROM sc
+        |)
+        |SELECT doc_id, rnk, term, tfidf FROM r WHERE rnk <= 3
+        |ORDER BY doc_id, rnk""".stripMargin)),
 
     // J8 — flagship analytical join (TPC-H Q3 shape): selective dimension
     // filter → 3-way equi-join → decimal-exact revenue agg → top-k.
     // Filters sit under the joins (pushed to the scans); the aggregation
     // is partial+final; top-10 plans as TakeOrderedAndProject.
-    "j8_flagship_join" -> ((s, d) => {
+    QuerySpec("j8_flagship_join", (s, d) => {
       val cutoff = lit("1998-01-01").cast("timestamp")
       Tables.customer(s, d).filter(col("c_mktsegment") === "BUILDING")
         .join(Tables.orders(s, d).filter(col("o_orderdate") < cutoff),
@@ -274,13 +451,24 @@ object TrainingQueries {
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_orderdate"))
         .orderBy(col("revenue").desc, col("l_orderkey"))
         .limit(10)
-    }),
+    }, oracle = Some(
+      """SELECT l_orderkey,
+        |CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))),
+        |  2) AS DOUBLE) AS revenue,
+        |strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate
+        |FROM customer JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON l_orderkey = o_orderkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |  AND o_orderdate < TIMESTAMP '1998-01-01'
+        |  AND l_shipdate > TIMESTAMP '1998-01-01'
+        |GROUP BY l_orderkey, o_orderdate
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin)),
 
     // V4 — sliding event-time windows (1 h window, 15 min slide): each
     // event lands in exactly windowDur/slide = 4 buckets. The batch form
     // of the streaming sliding aggregation; same map-side explode +
     // partial agg shape at any scale.
-    "v4_sliding_window" -> ((s, d) => {
+    QuerySpec("v4_sliding_window", (s, d) => {
       Tables.events(s, d)
         .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
@@ -288,7 +476,12 @@ object TrainingQueries {
         .select(unix_timestamp(col("window.start")).as("bucket_start_s"),
           col("event_type"), col("n_events"), col("sum_value"))
         .orderBy(col("bucket_start_s"), col("event_type"))
-    }),
+    }, oracle = Some(
+      """SELECT (CAST(floor(epoch(ts)) AS BIGINT) // 900 - gs.i) * 900
+        |  AS bucket_start_s, event_type, count(*) AS n_events,
+        |CAST(round(sum(CAST(value AS DECIMAL(38,6))), 2) AS DOUBLE) AS sum_value
+        |FROM events CROSS JOIN (SELECT unnest([0,1,2,3]) AS i) gs
+        |GROUP BY 1, 2 ORDER BY bucket_start_s, event_type""".stripMargin)),
 
     // V5 — per-user INTERVAL JOIN (view → click attribution within 2 h).
     // The equi-key is (user_id, 2-h bucket), not user_id
@@ -301,7 +494,7 @@ object TrainingQueries {
     // DuckDB epoch_us) — never raw timestamps, which the two engines
     // hold at different precisions (µs vs ns); sub-µs-tie fixture in
     // EventWindowsSpec.
-    "v5_interval_join" -> ((s, d) => {
+    QuerySpec("v5_interval_join", (s, d) => {
       val ev = Tables.events(s, d)
       graft.extensions.EventWindows.intervalJoin(
           ev.filter(col("event_type") === "view"),
@@ -310,7 +503,16 @@ object TrainingQueries {
         .select(col("l_id").as("view_id"), col("r_id").as("click_id"),
           col("lag_s"))
         .orderBy(col("view_id"), col("click_id"))
-    }),
+    }, oracle = Some(
+      """SELECT v.event_id AS view_id, c.event_id AS click_id,
+        |  CAST(floor(epoch(c.ts)) AS BIGINT)
+        |    - CAST(floor(epoch(v.ts)) AS BIGINT) AS lag_s
+        |FROM events v JOIN events c
+        |  ON v.user_id = c.user_id
+        |  AND v.event_type = 'view' AND c.event_type = 'click'
+        |  AND epoch_us(c.ts) >= epoch_us(v.ts)
+        |  AND epoch_us(c.ts) < epoch_us(v.ts) + 7200000000
+        |ORDER BY view_id, click_id""".stripMargin)),
 
     // V11 — per-user TIME-WEIGHTED average (step-interpolated gauge
     // resample): each value holds until the user's next event, so the
@@ -319,22 +521,46 @@ object TrainingQueries {
     // final division unrounded (exactAvg rule); zero-duration users
     // yield NULL. One user_id shuffle serves both the lead window and
     // the aggregate.
-    "v11_time_weighted_avg" -> ((s, d) => {
+    QuerySpec("v11_time_weighted_avg", (s, d) => {
       graft.extensions.EventWindows.timeWeightedAvg(Tables.events(s, d))
         .orderBy(col("user_id"))
-    }),
+    }, oracle = Some(
+      // v11 replays the lead-window form on epoch_us longs; the numerator
+      // is integer-exact (centi-unit value × µs duration in HUGEINT —
+      // the operator's decimal(38,0) twin), final division unrounded
+      """WITH e AS (
+        |  SELECT user_id, event_id, epoch_us(ts) AS us,
+        |    CAST(round(value * 100.0) AS HUGEINT) AS vu
+        |  FROM events WHERE value IS NOT NULL
+        |), d AS (
+        |  SELECT user_id, vu,
+        |    lead(us) OVER (PARTITION BY user_id ORDER BY us, event_id)
+        |      - us AS dt
+        |  FROM e
+        |)
+        |SELECT user_id, count(*) AS n_events,
+        |  CASE WHEN sum(dt) > 0
+        |    THEN CAST(sum(vu * dt) AS DOUBLE)
+        |      / (CAST(sum(dt) AS DOUBLE) * 100.0) END AS twa
+        |FROM d GROUP BY user_id ORDER BY user_id""".stripMargin)),
 
     // V6 — stream-static enrichment join (batch form of
     // StreamingOps.enrichedSegmentCounts; streaming parity in
     // StreamingSpec): events decorated from the broadcast customer dim,
     // rolled up by market segment. The stream side never shuffles for
     // the join — the scale property that holds at any event rate.
-    "v6_stream_static_join" -> ((s, d) => {
+    QuerySpec("v6_stream_static_join", (s, d) => {
       graft.streaming.StreamingOps.enrichedSegmentCounts(
           Tables.events(s, d),
           Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment")))
         .orderBy(col("c_mktsegment"), col("event_type"))
-    }),
+    }, oracle = Some(
+      """SELECT c.c_mktsegment, e.event_type, count(*) AS n_events,
+        |  CAST(round(sum(CAST(e.value AS DECIMAL(38,6))), 2) AS DOUBLE)
+        |    AS sum_value
+        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
+        |GROUP BY c.c_mktsegment, e.event_type
+        |ORDER BY c.c_mktsegment, e.event_type""".stripMargin)),
 
     // V7 — watermark lateness audit: replay `withWatermark(10 min)`
     // over the historical stream and count, per type, the events a
@@ -352,7 +578,7 @@ object TrainingQueries {
     // (EventWindows.runningMaxExclusive): no single-partition global
     // window; second-floored integer comparisons keep the verdict
     // engine-exact; int/int late_frac is bit-identical IEEE.
-    "v7_watermark_audit" -> ((s, d) => {
+    QuerySpec("v7_watermark_audit", (s, d) => {
       val jit = Dedup.md5Hash60(col("event_id").cast("string")) % 5
       val ev = Tables.events(s, d).withColumn("__arr",
         (col("event_id") + jit) * lit(1048576L) + col("event_id"))
@@ -363,7 +589,22 @@ object TrainingQueries {
           Summaries.countIf(col("is_late")).as("n_late"))
         .withColumn("late_frac", col("n_late") * lit(1.0) / col("n_events"))
         .orderBy(col("event_type"))
-    }),
+    }, oracle = Some(
+      """WITH r AS (
+        |  SELECT event_type,
+        |    CAST(floor(epoch(ts)) AS BIGINT) AS ts_s,
+        |    (event_id + CAST('0x' || substr(md5(CAST(event_id AS VARCHAR)),
+        |      1, 15) AS BIGINT) % 5) * 1048576 + event_id AS arr
+        |  FROM events
+        |), w AS (
+        |  SELECT event_type, ts_s,
+        |    max(ts_s) OVER (ORDER BY arr
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) - 600 AS wm_s
+        |  FROM r)
+        |SELECT event_type, count(*) AS n_events,
+        |  count(CASE WHEN ts_s < wm_s THEN 1 END) AS n_late,
+        |  count(CASE WHEN ts_s < wm_s THEN 1 END) * 1.0 / count(*) AS late_frac
+        |FROM w GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
     // V19 — event-time disorder profile: the watermark-sizing query run
     // BEFORE deploying a streaming job. Per event type: how many events
@@ -373,7 +614,7 @@ object TrainingQueries {
     // then audits that exact choice. Built on the runningMaxExclusive
     // range-partition decomposition (no single-partition window) +
     // sortedPercentiles (exact, quantile_cont-compatible).
-    "v19_disorder_profile" -> ((s, d) => {
+    QuerySpec("v19_disorder_profile", (s, d) => {
       val jit = Dedup.md5Hash60(col("event_id").cast("string")) % 5
       val ev = Tables.events(s, d).withColumn("__arr",
         (col("event_id") + jit) * lit(1048576L) + col("event_id"))
@@ -393,7 +634,34 @@ object TrainingQueries {
         .withColumn("disorder_frac",
           col("n_disordered") * lit(1.0) / col("n_events"))
         .orderBy(col("event_type"))
-    }),
+    }, oracle = Some(
+      // v7's running-max CTE with the delay magnitude kept instead of one
+      // candidate verdict; quantile_cont over the positive delays matches
+      // sortedPercentiles (the x16/w20-proven bit-compatible pair) and
+      // skips NULLs, mirroring the Spark left join.
+      """WITH r AS (
+        |  SELECT event_type,
+        |    CAST(floor(epoch(ts)) AS BIGINT) AS ts_s,
+        |    (event_id + CAST('0x' || substr(md5(CAST(event_id AS VARCHAR)),
+        |      1, 15) AS BIGINT) % 5) * 1048576 + event_id AS arr
+        |  FROM events
+        |), w AS (
+        |  SELECT event_type,
+        |    greatest(coalesce(max(ts_s) OVER (ORDER BY arr
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) - ts_s,
+        |      0), 0) AS delay_s
+        |  FROM r)
+        |SELECT event_type, count(*) AS n_events,
+        |  count(CASE WHEN delay_s > 0 THEN 1 END) AS n_disordered,
+        |  count(CASE WHEN delay_s > 0 THEN 1 END) * 1.0 / count(*)
+        |    AS disorder_frac,
+        |  quantile_cont(CASE WHEN delay_s > 0 THEN delay_s END, 0.5)
+        |    AS p50_delay_s,
+        |  quantile_cont(CASE WHEN delay_s > 0 THEN delay_s END, 0.95)
+        |    AS p95_delay_s,
+        |  quantile_cont(CASE WHEN delay_s > 0 THEN delay_s END, 1.0)
+        |    AS max_delay_s
+        |FROM w GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
     // D13 — graded decontamination: instead of d8's binary any-collision
     // drop, score every training doc by the FRACTION of its distinct
@@ -401,17 +669,35 @@ object TrainingQueries {
     // thresholdable form real pipelines act on (hard-drop above ~5%
     // overlap, flag below). Integer counts + one int/int division:
     // bit-identical across engines, no rounding policy needed.
-    "d13_contamination_frac" -> ((s, d) => {
+    QuerySpec("d13_contamination_frac", (s, d) => {
       val docs = Tables.documents(s, d)
       Dedup.contaminationFraction(
           docs.filter(col("doc_id") % 20 =!= 0),
           docs.filter(col("doc_id") % 20 === 0), "text", "doc_id", n = 8)
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      """WITH csh AS (
+        |  SELECT doc_id, unnest(list_distinct(list_transform(
+        |    range(1, greatest(len(string_split(text,' ')) - 8 + 2, 2)),
+        |    i -> array_to_string(list_slice(string_split(text,' '), i, i + 7), ' '))))
+        |    AS sh
+        |  FROM documents WHERE doc_id % 20 <> 0
+        |), bsh AS (
+        |  SELECT DISTINCT unnest(list_distinct(list_transform(
+        |    range(1, greatest(len(string_split(text,' ')) - 8 + 2, 2)),
+        |    i -> array_to_string(list_slice(string_split(text,' '), i, i + 7), ' '))))
+        |    AS sh
+        |  FROM documents WHERE doc_id % 20 = 0
+        |)
+        |SELECT c.doc_id, count(*) AS n_shingles,
+        |  count(b.sh) AS n_contaminated,
+        |  count(b.sh) * 1.0 / count(*) AS contamination_frac
+        |FROM csh c LEFT JOIN bsh b ON c.sh = b.sh
+        |GROUP BY c.doc_id ORDER BY doc_id""".stripMargin)),
 
     // W21 — arbitrary GROUPING SETS (beyond the rollup/cube hierarchies):
     // sets ((r,n),(n),()) mix a non-hierarchical slice with the total.
-    "w21_grouping_sets" -> ((s, d) => {
+    QuerySpec("w21_grouping_sets", (s, d) => {
       val joined = Tables.customer(s, d)
         .join(broadcast(Tables.nation(s, d)),
           col("c_nationkey") === col("n_nationkey"))
@@ -431,12 +717,24 @@ object TrainingQueries {
             .otherwise(coalesce(col("n_name"), lit("(null)"))).as("n_name"),
           col("n_customers"), col("sum_acctbal"))
         .orderBy(col("r_name"), col("n_name"))
-    }),
+    }, oracle = Some(
+      """SELECT
+        |CASE WHEN GROUPING(r_name) = 1 THEN 'ALL'
+        |  ELSE COALESCE(r_name,'(null)') END AS r_name,
+        |CASE WHEN GROUPING(n_name) = 1 THEN 'ALL'
+        |  ELSE COALESCE(n_name,'(null)') END AS n_name,
+        |count(*) AS n_customers,
+        |CAST(round(sum(CAST(c_acctbal AS DECIMAL(38,6))), 2) AS DOUBLE)
+        |  AS sum_acctbal
+        |FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY GROUPING SETS ((r_name, n_name), (n_name), ())
+        |ORDER BY r_name, n_name""".stripMargin)),
 
     // W22 — ranking/distribution window-function suite: percent_rank,
     // cume_dist, ntile, lead, nth_value over one shared window spec (one
     // exchange + one sort serves all five).
-    "w22_window_suite" -> ((s, d) => {
+    QuerySpec("w22_window_suite", (s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("o_orderpriority"))
         .orderBy(col("o_totalprice"), col("o_orderkey"))
@@ -454,14 +752,26 @@ object TrainingQueries {
         // while the windows still compute over every row
         .filter(col("o_orderkey") % 7 === 0)
         .orderBy(col("o_orderpriority"), col("o_orderkey"))
-    }),
+    }, oracle = Some(
+      """SELECT * FROM (
+        |  SELECT o_orderkey, o_orderpriority,
+        |  percent_rank() OVER w AS pct_rank,
+        |  cume_dist() OVER w AS cdist,
+        |  CAST(ntile(4) OVER w AS BIGINT) AS quartile,
+        |  lead(o_orderkey, 1) OVER w AS next_key,
+        |  nth_value(o_orderkey, 2) OVER w AS second_key
+        |  FROM orders
+        |  WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)
+        |)
+        |WHERE o_orderkey % 7 = 0
+        |ORDER BY o_orderpriority, o_orderkey""".stripMargin)),
 
     // J9 — salted skew join parity: the fact side is salted by a
     // high-cardinality column, the dim side replicated ×factor, so one
     // hot key's rows spread over `factor` reducers instead of one — and
     // the result is bit-identical to the plain equi-join (the oracle IS
     // the plain join).
-    "j9_salted_join" -> ((s, d) => {
+    QuerySpec("j9_salted_join", (s, d) => {
       val lineitem = Tables.lineitem(s, d).select(col("l_orderkey"),
         col("l_linenumber"), col("l_extendedprice"), col("l_discount"))
       val orders = Tables.orders(s, d)
@@ -475,32 +785,58 @@ object TrainingQueries {
             col("l_extendedprice") * (lit(1) - col("l_discount")), 2)
             .as("revenue"))
         .orderBy(col("o_orderpriority"))
-    }),
+    }, oracle = Some(
+      """SELECT o_orderpriority, count(*) AS n_items,
+        |CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))),
+        |  2) AS DOUBLE) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
 
     // D7 — exact decontamination against a held-out eval split
     // (doc_id % 20 == 0 plays the benchmark set): corpus docs whose
     // normalized hash matches any benchmark doc are dropped before
     // training. Benchmark side broadcasts; corpus never shuffles.
-    "d7_decontaminate_exact" -> ((s, d) => {
+    QuerySpec("d7_decontaminate_exact", (s, d) => {
       val docs = Tables.documents(s, d)
       Dedup.decontaminateExact(
           docs.filter(col("doc_id") % 20 =!= 0),
           docs.filter(col("doc_id") % 20 === 0), "text")
         .select(col("doc_id"), col("source"))
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      """SELECT doc_id, source FROM documents a
+        |WHERE doc_id % 20 <> 0 AND NOT EXISTS (
+        |  SELECT 1 FROM documents b WHERE b.doc_id % 20 = 0
+        |  AND md5(lower(trim(b.text))) = md5(lower(trim(a.text))))
+        |ORDER BY doc_id""".stripMargin)),
 
     // D8 — n-gram decontamination (any shared 8-gram with the held-out
     // split): catches paraphrase/partial-copy leakage exact hashing
     // misses.
-    "d8_decontaminate_ngram" -> ((s, d) => {
+    QuerySpec("d8_decontaminate_ngram", (s, d) => {
       val docs = Tables.documents(s, d)
       Dedup.decontaminateNgram(
           docs.filter(col("doc_id") % 20 =!= 0),
           docs.filter(col("doc_id") % 20 === 0), "text", "doc_id", n = 8)
         .select(col("doc_id"))
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      """WITH csh AS (
+        |  SELECT doc_id, unnest(list_distinct(list_transform(
+        |    range(1, greatest(len(string_split(text,' ')) - 8 + 2, 2)),
+        |    i -> array_to_string(list_slice(string_split(text,' '), i, i + 7), ' '))))
+        |    AS sh
+        |  FROM documents WHERE doc_id % 20 <> 0
+        |), bsh AS (
+        |  SELECT DISTINCT unnest(list_distinct(list_transform(
+        |    range(1, greatest(len(string_split(text,' ')) - 8 + 2, 2)),
+        |    i -> array_to_string(list_slice(string_split(text,' '), i, i + 7), ' '))))
+        |    AS sh
+        |  FROM documents WHERE doc_id % 20 = 0
+        |)
+        |SELECT doc_id FROM documents WHERE doc_id % 20 <> 0 AND doc_id NOT IN
+        |  (SELECT DISTINCT c.doc_id FROM csh c JOIN bsh USING (sh))
+        |ORDER BY doc_id""".stripMargin)),
 
     // D11 — incremental ingest dedup: the first 400 doc_ids play the
     // already-deduped snapshot (only its fingerprint INDEX is touched),
@@ -509,7 +845,7 @@ object TrainingQueries {
     // the snapshot index — the existing corpus text is never re-read,
     // which is the property that makes dedup affordable per-ingest at
     // 100 TB.
-    "d11_incremental_dedup" -> ((s, d) => {
+    QuerySpec("d11_incremental_dedup", (s, d) => {
       val docs = Tables.documents(s, d)
       val index = Dedup.exactGroups(
         docs.filter(col("doc_id") < 400), "text", "doc_id")
@@ -518,7 +854,20 @@ object TrainingQueries {
           docs.filter(col("doc_id") >= 400), index, "text", "doc_id")
         .select(col("doc_id"), col("source"))
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      """WITH idx AS (
+        |  SELECT DISTINCT md5(lower(trim(text))) AS fp
+        |  FROM documents WHERE doc_id < 400
+        |), batch AS (
+        |  SELECT doc_id, source, md5(lower(trim(text))) AS fp
+        |  FROM documents WHERE doc_id >= 400
+        |), firstb AS (
+        |  SELECT fp, min(doc_id) AS doc_id FROM batch GROUP BY fp
+        |)
+        |SELECT b.doc_id, b.source FROM batch b
+        |JOIN firstb f ON b.fp = f.fp AND b.doc_id = f.doc_id
+        |WHERE b.fp NOT IN (SELECT fp FROM idx)
+        |ORDER BY b.doc_id""".stripMargin)),
 
     // D10 — bloom-filter decontamination CONTRACT (companion to d7, same
     // pattern as e5/e6): the bloom path must (a) never keep a doc the
@@ -527,7 +876,7 @@ object TrainingQueries {
     // (the filter auto-sizes to 16 bits per benchmark entry, keeping the
     // expected rate orders of magnitude below that at ANY eval-set
     // size). The oracle asserts the two booleans as literals.
-    "d10_bloom_decontaminate" -> ((s, d) => {
+    QuerySpec("d10_bloom_decontaminate", (s, d) => {
       val docs = Tables.documents(s, d)
       val corpus = docs.filter(col("doc_id") % 20 =!= 0)
       val bench = docs.filter(col("doc_id") % 20 === 0)
@@ -551,14 +900,24 @@ object TrainingQueries {
           (col("n_fp_dropped") * lit(1.0) / col("n_corpus") <= 0.01)
             .as("fp_rate_le_1pct"),
           col("n_exact_kept"), col("n_corpus"))
-    }),
+    }, oracle = Some(
+      // d10's exact side re-derives via the d7 replay (the d17 pattern)
+      """SELECT true AS bloom_subset_of_exact,
+        |  true AS fp_rate_le_1pct,
+        |  (SELECT count(*) FROM documents a
+        |   WHERE doc_id % 20 <> 0 AND NOT EXISTS (
+        |     SELECT 1 FROM documents b WHERE b.doc_id % 20 = 0
+        |     AND md5(lower(trim(b.text))) = md5(lower(trim(a.text)))))
+        |    AS n_exact_kept,
+        |  (SELECT count(*) FROM documents WHERE doc_id % 20 <> 0)
+        |    AS n_corpus""".stripMargin)),
 
     // T9 — C4/Gopher-style quality filtering: compose the text-analysis
     // signals (language-ID, composite quality score, token-count band,
     // repeated-3-gram boilerplate ratio) into the single cleaning filter
     // a pretraining pipeline runs over the raw corpus. All signals are
     // one codegen span over the scan — no shuffle until the final sort.
-    "t9_quality_filter" -> ((s, d) => {
+    QuerySpec("t9_quality_filter", (s, d) => {
       val toks = col("toks")
       // Materialize the token array once; every signal reads it instead
       // of re-splitting the text (operators don't share subexpressions).
@@ -584,7 +943,35 @@ object TrainingQueries {
         .select(col("doc_id"), col("quality_score"), col("dup_3gram_ratio"),
           col("n_tokens"))
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      """WITH sig AS (
+        |  SELECT doc_id, n_chars,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS nt,
+        |    CAST(len(list_filter(string_split(text, ' '),
+        |      x -> x IN ('the','a','of','and','to','in','is'))) AS BIGINT) AS s_en,
+        |    CAST(len(list_filter(string_split(text, ' '),
+        |      x -> x IN ('el','la','de','y','que','en','un'))) AS BIGINT) AS s_es,
+        |    CAST(len(list_filter(string_split(text, ' '),
+        |      x -> x IN ('der','die','das','und','ist','ein','zu'))) AS BIGINT) AS s_de,
+        |    CAST(len(list_filter(string_split(text, ' '),
+        |      x -> x IN ('le','la','de','et','est','un','dans'))) AS BIGINT) AS s_fr,
+        |    round(1.0 - len(list_distinct(list_transform(
+        |        range(1, greatest(len(string_split(text,' ')) - 3 + 2, 2)),
+        |        i -> array_to_string(list_slice(string_split(text,' '), i, i + 2),
+        |          ' ')))) * 1.0
+        |      / greatest(len(string_split(text,' ')) - 3 + 1, 1), 4) AS dup3,
+        |    round((CASE WHEN n_chars BETWEEN 100 AND 5000 THEN 1.0 ELSE 0.5 END)
+        |        * 0.4
+        |      + least(len(list_distinct(string_split(text, ' '))) * 1.0 /
+        |          len(string_split(text, ' ')) * 2, 1.0) * 0.6, 4) AS q
+        |  FROM documents
+        |)
+        |SELECT doc_id, q AS quality_score, dup3 AS dup_3gram_ratio, nt AS n_tokens
+        |FROM sig
+        |WHERE s_en + s_es + s_de + s_fr > 0
+        |  AND s_en >= s_es AND s_en >= s_de AND s_en >= s_fr
+        |  AND q >= 0.5 AND nt BETWEEN 20 AND 1000 AND dup3 <= 0.3
+        |ORDER BY doc_id""".stripMargin)),
 
     // T27 — the published Gopher/MassiveText rule filter (Rae et al.
     // 2021, §A1.1): word-count band, mean-word-length band,
@@ -593,10 +980,39 @@ object TrainingQueries {
     // (the form a pipeline logs for per-rule filter-rate audits; t9 is
     // the score-threshold complement). One token-array projection, all
     // rules read it — a pure map-only codegen pass at 100 TB.
-    "t27_gopher_rules" -> ((s, d) =>
+    QuerySpec("t27_gopher_rules", (s, d) =>
       TextAnalysis.gopherProfile(Tables.spread(Tables.documents(s, d)),
           "text", "doc_id", "n_chars")
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")), oracle = Some(
+      // Replays every Gopher rule signal: replace() is leftmost
+      // non-overlapping in both engines, the ellipsis delta is an exact
+      // multiple of 3, and the CASE precedence mirrors the Spark
+      // when-chain verbatim.
+      """WITH sig AS (
+        |  SELECT doc_id,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
+        |    round((n_chars - len(string_split(text, ' ')) + 1) * 1.0
+        |      / len(string_split(text, ' ')), 4) AS mean_word_len,
+        |    round(((len(text) - len(replace(text, '#', '')))
+        |        + (len(text) - len(replace(text, '...', ''))) / 3) * 1.0
+        |      / len(string_split(text, ' ')), 4) AS symbol_ratio,
+        |    round(len(list_filter(string_split(text, ' '),
+        |        x -> regexp_matches(x, '[A-Za-z]'))) * 1.0
+        |      / len(string_split(text, ' ')), 4) AS alpha_frac,
+        |    CAST(len(list_filter(string_split(text, ' '),
+        |      x -> x IN ('the','be','to','of','and','that','have','with')))
+        |      AS BIGINT) AS n_stopword_hits
+        |  FROM documents)
+        |SELECT doc_id, n_words, mean_word_len, symbol_ratio, alpha_frac,
+        |  n_stopword_hits,
+        |  CASE WHEN n_words NOT BETWEEN 50 AND 100000 THEN 'word_count'
+        |       WHEN mean_word_len NOT BETWEEN 3.0 AND 10.0
+        |         THEN 'mean_word_len'
+        |       WHEN symbol_ratio > 0.1 THEN 'symbol_ratio'
+        |       WHEN alpha_frac < 0.8 THEN 'alpha_frac'
+        |       WHEN n_stopword_hits < 2 THEN 'stopwords'
+        |       ELSE 'pass' END AS reject_reason
+        |FROM sig ORDER BY doc_id""".stripMargin)),
 
     // T28 — distributed BPE merge LEARNING (Sennrich et al. 2016): the
     // tokenizer-training complement of t19's apply-side count. Pair
@@ -606,9 +1022,9 @@ object TrainingQueries {
     // leftmost-non-overlapping application via the double-separator
     // replace trick — semantics identical in both engines (see
     // Bpe.learnMerges). k = 4 merges; output = the learned merge table.
-    "t28_bpe_merges" -> ((s, d) =>
+    QuerySpec("t28_bpe_merges", (s, d) =>
       Bpe.learnMerges(Tables.spread(Tables.documents(s, d)), "text", k = 4)
-        .orderBy(col("merge_rank"))),
+        .orderBy(col("merge_rank")), oracle = Some(bpeOracleSql(4))),
 
     // T31 — BPE APPLY: segment the corpus with the merge table t28
     // learns (train-then-apply on the same corpus — the tokenizer-
@@ -618,7 +1034,7 @@ object TrainingQueries {
     // the e17 shortlist rule) inlined as literals into one vocab-grain
     // codegen chain — the corpus pays tokenize + one word equi-join
     // (see Bpe.applyMerges for the 100-TB shape).
-    "t31_bpe_apply" -> ((s, d) => {
+    QuerySpec("t31_bpe_apply", (s, d) => {
       val docs = Tables.spread(Tables.documents(s, d))
       // the frozen tokenizer is ONE artifact: the same k=4 merge table
       // off `documents` that x2/x3/x4 freeze (ExportTier._1 memoizes the
@@ -628,7 +1044,10 @@ object TrainingQueries {
       // t28's work inside every t31 timing.
       Bpe.applyMerges(docs, "text", "doc_id", ExportTier(s, d)._1)
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      // t31 replays the full train chain (t28's oracle) PLUS the k-th
+      // application, then the vocab→corpus word join and per-doc counts
+      bpeApplyOracleSql(4))),
 
     // T37 — the PRODUCTION BPE path on the oracled board (VERDICT r9
     // item 1): the BATCHED learner at k=16/maxBatch=4 — the form a
@@ -642,10 +1061,14 @@ object TrainingQueries {
     // bpeBatchedOracleSql). Output adds `pass`, the rewrite round that
     // learned each merge — max(pass) ≈ k/B is the round-count collapse,
     // now driver-hash-checked on the real corpus.
-    "t37_bpe_batched" -> ((s, d) =>
+    QuerySpec("t37_bpe_batched", (s, d) =>
       Bpe.learnMergesBatched(Tables.spread(Tables.documents(s, d)), "text",
           k = 16, maxBatch = 4)
-        .orderBy(col("merge_rank"))),
+        .orderBy(col("merge_rank")), oracle = Some(
+      // t37 replays the BATCHED learner itself (unrolled passes, greedy
+      // conflict-checked slot CTEs) — NOT the serial chain; see
+      // bpeBatchedOracleSql
+      bpeBatchedOracleSql(16, 4))),
 
     // T38 — model-based quality scoring (the classifier-filter stage:
     // GPT-3's LR filter, DCLM/FineWeb's fastText filters): linear
@@ -658,12 +1081,42 @@ object TrainingQueries {
     // per-row final, round-6. Plan: one token-grain explode, broadcast
     // weight join, one doc-grain partial-agg exchange — see
     // QualityModel.classifierScore for the 100 TB shape.
-    "t38_quality_classifier" -> ((s, d) => {
+    QuerySpec("t38_quality_classifier", (s, d) => {
       import graft.extensions.QualityModel
       QualityModel.classifierScore(Tables.spread(Tables.documents(s, d)),
           "text", "doc_id", QualityModel.standInWeights(s, 4096), 4096)
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      // t38's replay: same feature bag (unigram occurrences + bigrams —
+      // range(1, len) is end-exclusive, matching Spark's zip_with/slice
+      // form), same md5→bucket and md5→milliweight derivations, integer
+      // sum, sigmoid at the end. kept re-derived from the integer sign.
+      """WITH toks AS (
+        |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
+        |), feats AS (
+        |  SELECT doc_id, unnest(list_concat(t,
+        |    list_transform(range(1, len(t)),
+        |      i -> t[i] || ' ' || t[i + 1]))) AS f
+        |  FROM toks
+        |), bk AS (
+        |  SELECT doc_id,
+        |    CAST('0x' || substr(md5(f), 1, 15) AS BIGINT) % 4096 AS bucket
+        |  FROM feats
+        |), w AS (
+        |  SELECT range AS bucket,
+        |    CAST('0x' || substr(md5('w:' || range), 1, 15) AS BIGINT)
+        |      % 2001 - 1000 AS wm
+        |  FROM range(0, 4096)
+        |), sc AS (
+        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_features,
+        |    CAST(sum(coalesce(wm, 0)) AS BIGINT) AS s
+        |  FROM bk LEFT JOIN w USING (bucket) GROUP BY doc_id
+        |)
+        |SELECT doc_id, n_features,
+        |  round(1.0 / (1.0 + exp(-(CAST(s AS DOUBLE)
+        |    / (1000.0 * n_features)))), 6) AS quality_score,
+        |  s >= 0 AS kept
+        |FROM sc ORDER BY doc_id""".stripMargin)),
 
     // T39 — dataset-card audit (the per-source datasheet a corpus
     // release ships — Gebru et al. 2021 "Datasheets for Datasets";
@@ -680,7 +1133,7 @@ object TrainingQueries {
     // aggregate; the two rates reuse the d3/t36 machinery (band join,
     // group-collapsed shingle probe) and land as source-grain left
     // joins against the card.
-    "t39_dataset_card" -> ((s, d) => {
+    QuerySpec("t39_dataset_card", (s, d) => {
       val docs = Tables.spread(Tables.documentsWithDups(s, d))
         .localCheckpoint(eager = false) // signals + rate probes + BPE
       val flagged = TextAnalysis.gopherProfile(docs,
@@ -736,7 +1189,128 @@ object TrainingQueries {
           round(coalesce(col("__n_contam"), lit(0L)) * lit(1.0)
             / col("n_docs"), 4).as("cross_src_contam_frac"))
         .orderBy(col("source"))
-    }),
+    }, oracle = Some(
+      // t39's replay: the green t27 signal battery at source grain over
+      // the d1 clone injection; every rate a double division of exact
+      // ints, round 4
+      // t39: the card CTE replays the t27 battery at source grain; the
+      // near-dup rate replays the full d3 signature/banding/cap/pair
+      // chain over the SAME clone-injected fixture, the cross-source
+      // contamination rate the t36 shingle collapse at doc grain.
+      s"""${bpeChainSql(4, applyAll = true)}
+        |, docs AS MATERIALIZED (
+        |  SELECT * FROM documents
+        |  UNION ALL SELECT doc_id + 1000000, text, lang, source, n_chars
+        |  FROM documents WHERE doc_id % 25 = 0
+        |), bpe_by AS MATERIALIZED (
+        |  SELECT d.source,
+        |    CAST(sum(len(string_split(v.rep, ' '))) AS BIGINT) AS n_bpe
+        |  FROM (SELECT source, unnest(string_split(text, ' ')) AS w
+        |        FROM docs) d
+        |  JOIN w4 v ON d.w = v.w
+        |  GROUP BY d.source
+        |), consts AS (SELECT $minhashA AS ca, $minhashB AS cb),
+        |sig AS MATERIALIZED (
+        |  SELECT doc_id, list_transform(range(1, 33), s ->
+        |    list_min(list_transform(hs, h -> (ca[s] * h + cb[s]) % 1000000007)))
+        |    AS sig
+        |  FROM (
+        |    SELECT doc_id, list_transform(list_distinct(list_transform(
+        |      range(1, greatest(len(string_split(text,' ')) - 3 + 2, 2)),
+        |      i -> array_to_string(list_slice(string_split(text,' '), i, i + 2), ' '))),
+        |      x -> CAST('0x' || substr(md5(x),1,15) AS BIGINT) % 1000000007) AS hs
+        |    FROM docs) CROSS JOIN consts
+        |), capped AS MATERIALIZED (
+        |  SELECT * FROM (
+        |    SELECT doc_id, sig, band,
+        |      array_to_string(list_slice(sig, band * 4 + 1, band * 4 + 4), ',')
+        |        AS bkey,
+        |      row_number() OVER (
+        |        PARTITION BY band,
+        |          array_to_string(list_slice(sig, band * 4 + 1, band * 4 + 4), ',')
+        |        ORDER BY doc_id) AS brank
+        |    FROM sig CROSS JOIN (SELECT unnest(range(0, 8)) AS band) b)
+        |  WHERE brank <= 100
+        |), nd AS MATERIALIZED (
+        |  SELECT DISTINCT doc_id FROM (
+        |    SELECT unnest(LIST_VALUE(a_id, b_id)) AS doc_id FROM (
+        |      SELECT a_id, b_id,
+        |        round(len(list_filter(range(1, 33), i -> a_sig[i] = b_sig[i]))
+        |          / 32.0, 4) AS ej
+        |      FROM (
+        |        SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
+        |          a.sig AS a_sig, b.sig AS b_sig
+        |        FROM capped a JOIN capped b
+        |          ON a.band = b.band AND a.bkey = b.bkey
+        |          AND a.doc_id < b.doc_id))
+        |    WHERE ej >= 0.3)
+        |), nd_by AS MATERIALIZED (
+        |  SELECT d.source, CAST(count(*) AS BIGINT) AS n_near
+        |  FROM nd JOIN docs d USING (doc_id) GROUP BY d.source
+        |), dh AS MATERIALIZED (
+        |  SELECT DISTINCT doc_id, source,
+        |    CAST('0x' || substr(md5(s), 1, 15) AS BIGINT) AS h
+        |  FROM (
+        |    SELECT doc_id, source, unnest(list_distinct(list_transform(
+        |      range(1, greatest(len(toks) - 7, 1) + 1),
+        |      i -> array_to_string(list_slice(toks, i, i + 7), ' ')))) AS s
+        |    FROM (SELECT doc_id, source, string_split(text, ' ') AS toks
+        |          FROM docs))
+        |), gsh AS MATERIALIZED (
+        |  SELECT DISTINCT source AS og, h FROM dh
+        |), ct_by AS MATERIALIZED (
+        |  SELECT source, CAST(count(*) AS BIGINT) AS n_ct FROM (
+        |    SELECT DISTINCT d.doc_id, d.source
+        |    FROM dh d JOIN gsh g USING (h) WHERE g.og <> d.source)
+        |  GROUP BY source
+        |), flagged AS MATERIALIZED (
+        |  SELECT source, lang, md5(lower(trim(text))) AS fp, n_words,
+        |    CASE WHEN n_words NOT BETWEEN 50 AND 100000 THEN 'word_count'
+        |         WHEN mean_word_len NOT BETWEEN 3.0 AND 10.0
+        |           THEN 'mean_word_len'
+        |         WHEN symbol_ratio > 0.1 THEN 'symbol_ratio'
+        |         WHEN alpha_frac < 0.8 THEN 'alpha_frac'
+        |         WHEN n_stopword_hits < 2 THEN 'stopwords'
+        |         ELSE 'pass' END AS reject_reason
+        |  FROM (
+        |    SELECT source, lang, text,
+        |      CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
+        |      round((len(text) - len(string_split(text, ' ')) + 1) * 1.0
+        |        / len(string_split(text, ' ')), 4) AS mean_word_len,
+        |      round(((len(text) - len(replace(text, '#', '')))
+        |          + (len(text) - len(replace(text, '...', ''))) / 3) * 1.0
+        |        / len(string_split(text, ' ')), 4) AS symbol_ratio,
+        |      round(len(list_filter(string_split(text, ' '),
+        |          x -> regexp_matches(x, '[A-Za-z]'))) * 1.0
+        |        / len(string_split(text, ' ')), 4) AS alpha_frac,
+        |      CAST(len(list_filter(string_split(text, ' '),
+        |        x -> x IN ('the','be','to','of','and','that','have','with')))
+        |        AS BIGINT) AS n_stopword_hits
+        |    FROM docs)
+        |), card AS MATERIALIZED (
+        |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        |    CAST(sum(n_words) AS BIGINT) AS n_tokens,
+        |    round(sum(n_words) * 1.0 / count(*), 4) AS avg_doc_tokens,
+        |    round(sum(CASE WHEN reject_reason = 'pass' THEN 1 ELSE 0 END)
+        |      * 1.0 / count(*), 4) AS quality_pass_rate,
+        |    CAST(count(DISTINCT fp) AS BIGINT) AS n_distinct_fp,
+        |    round(1.0 - count(DISTINCT fp) * 1.0 / count(*), 4) AS dup_frac,
+        |    CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
+        |  FROM flagged GROUP BY source
+        |)
+        |SELECT c.source, c.n_docs, c.n_tokens,
+        |  CAST(coalesce(bb.n_bpe, 0) AS BIGINT) AS n_bpe_tokens,
+        |  c.avg_doc_tokens,
+        |  c.quality_pass_rate, c.n_distinct_fp, c.dup_frac, c.n_langs,
+        |  round(coalesce(nb.n_near, 0) * 1.0 / c.n_docs, 4)
+        |    AS near_dup_frac,
+        |  round(coalesce(cb.n_ct, 0) * 1.0 / c.n_docs, 4)
+        |    AS cross_src_contam_frac
+        |FROM card c
+        |LEFT JOIN nd_by nb ON c.source = nb.source
+        |LEFT JOIN ct_by cb ON c.source = cb.source
+        |LEFT JOIN bpe_by bb ON c.source = bb.source
+        |ORDER BY c.source""".stripMargin)),
 
     // T40 — classifier TRAINING (batch-GD logistic regression over the
     // t38 hashed feature space), labels DISTILLED from the t27 Gopher
@@ -752,8 +1326,10 @@ object TrainingQueries {
     // Build-once: the family's trained model is a [[ClassifierModel]]
     // artifact (the TradingRank contract — one GD run serves t40's
     // weight output, t41's cut, t42's eval and t43's contract).
-    "t40_classifier_training" -> ((s, d) =>
-      ClassifierModel(s, d).weights.orderBy(col("bucket"))),
+    QuerySpec("t40_classifier_training", (s, d) =>
+      ClassifierModel(s, d).weights.orderBy(col("bucket")),
+      oracle = Some(classifierTrainingOracleSql(4096, 3, 100.0) +
+        "\nSELECT bucket, w AS weight FROM w3 ORDER BY bucket")),
 
     // T41 — the trained model SCORES the corpus (the back half of the
     // DCLM loop t40 opens): t40's 3-GD-iteration weights applied per
@@ -762,7 +1338,7 @@ object TrainingQueries {
     // rank far better than they calibrate), and the rule label
     // alongside so model-vs-rules agreement is readable. The oracle
     // replays training AND inference in one statement.
-    "t41_model_scored_corpus" -> ((s, d) => {
+    QuerySpec("t41_model_scored_corpus", (s, d) => {
       import graft.extensions.QualityModel
       // the scored frame comes from the family's build-once
       // [[ClassifierModel]] artifact (ONE featurize pass + ONE GD run
@@ -772,7 +1348,7 @@ object TrainingQueries {
       QualityModel.modelScoreFromScored(ClassifierModel(s, d).scored,
           "doc_id", checkpoint = false)
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(modelScoredOracleSql(4096, 3, 100.0))),
 
     // T42 — HELD-OUT classifier evaluation: the t40/t41 loop finally
     // measured on docs the optimizer never saw. Split by the s18
@@ -786,7 +1362,10 @@ object TrainingQueries {
     // split convention, slices and training all live in the
     // [[ClassifierModel]] artifact (t42 is the family member that
     // trains on the s18-split train slice rather than the full corpus)
-    "t42_classifier_eval" -> ((s, d) => ClassifierModel(s, d).evalRow),
+    QuerySpec("t42_classifier_eval", (s, d) => ClassifierModel(s, d).evalRow, oracle = Some(
+      // t42 replays split → train-slice GD → both scoring passes →
+      // confusion sums; see classifierEvalOracleSql
+      classifierEvalOracleSql(4096, 3, 100.0))),
 
     // T43 — t41's quantile cut in its PRODUCTION form (percentile_
     // approx, bounded sketch state) tied to the exact cut by a one-row
@@ -796,11 +1375,14 @@ object TrainingQueries {
     // inside rank slack + tie widths + 1. n_docs/kept_exact replay
     // exactly in SQL; the booleans are Spark-verified, oracle-pinned
     // (the w33 discipline — DuckDB has no GK sketch to replay).
-    "t43_model_approx_cut" -> ((s, d) => {
+    QuerySpec("t43_model_approx_cut", (s, d) => {
       import graft.extensions.QualityModel
       QualityModel.approxCutContractFromScored(
         ClassifierModel(s, d).scored, accuracy = 10000)
-    }),
+    }, oracle = Some(
+      // t43 replays the exact half (n_docs, kept_exact); sketch booleans
+      // Spark-verified, oracle-pinned — see approxCutOracleSql
+      approxCutOracleSql(4096, 3, 100.0))),
 
     // T32 — BM25 ranked retrieval (Robertson/Spärck Jones; Lucene's
     // +1-inside-the-log idf so scores stay positive), k1=1.2, b=0.75:
@@ -812,7 +1394,7 @@ object TrainingQueries {
     // policy: per-row fixed-order arithmetic (no float aggregation
     // anywhere — the sums are over exact longs), final score round-6,
     // (bm25 desc, doc_id) total order so the cut is engine-identical.
-    "t32_bm25_topk" -> ((s, d) => {
+    QuerySpec("t32_bm25_topk", (s, d) => {
       val terms = Seq("hash", "join", "scan")
       val docs = Tables.spread(Tables.documents(s, d))
         .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
@@ -841,7 +1423,39 @@ object TrainingQueries {
         .filter(col("bm25") > 0)
         .orderBy(col("bm25").desc, col("doc_id"))
         .limit(15)
-    }),
+    }, oracle = Some(
+      // t32 replays the map-only tf projection, the one-aggregate corpus
+      // stats and the fixed-order per-row BM25 arithmetic; identical
+      // operator associativity keeps the round-6 scores bit-aligned
+      """WITH base AS (
+        |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+        |), tf AS (
+        |  SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
+        |    CAST(len(list_filter(toks, x -> x = 'hash')) AS BIGINT) AS tf0,
+        |    CAST(len(list_filter(toks, x -> x = 'join')) AS BIGINT) AS tf1,
+        |    CAST(len(list_filter(toks, x -> x = 'scan')) AS BIGINT) AS tf2
+        |  FROM base
+        |), st AS (
+        |  SELECT CAST(count(*) AS BIGINT) AS n,
+        |    CAST(sum(n_tokens) AS BIGINT) AS sl,
+        |    CAST(sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df0,
+        |    CAST(sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df1,
+        |    CAST(sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df2
+        |  FROM tf
+        |)
+        |SELECT doc_id, n_tokens, bm25 FROM (
+        |  SELECT doc_id, n_tokens, round(
+        |    ln(1.0 + (n - df0 + 0.5) / (df0 + 0.5)) * (tf0 * 2.2)
+        |      / (tf0 + 1.2 * (1.0 - 0.75 + 0.75 * n_tokens / (sl * 1.0 / n)))
+        |    + ln(1.0 + (n - df1 + 0.5) / (df1 + 0.5)) * (tf1 * 2.2)
+        |      / (tf1 + 1.2 * (1.0 - 0.75 + 0.75 * n_tokens / (sl * 1.0 / n)))
+        |    + ln(1.0 + (n - df2 + 0.5) / (df2 + 0.5)) * (tf2 * 2.2)
+        |      / (tf2 + 1.2 * (1.0 - 0.75 + 0.75 * n_tokens / (sl * 1.0 / n))),
+        |    6) AS bm25
+        |  FROM tf, st)
+        |WHERE bm25 > 0
+        |ORDER BY bm25 DESC, doc_id
+        |LIMIT 15""".stripMargin)),
 
     // T34 — sequence-packing audit (GPT-style concat-and-chunk: docs
     // concatenate in deterministic (source, doc_id) order and split
@@ -854,7 +1468,7 @@ object TrainingQueries {
     // ((source, hash(doc_id) % k)) so no single source serializes into
     // one task — any deterministic order packs equally well, so
     // sharding changes boundaries but not the audit's meaning.
-    "t34_sequence_packing" -> ((s, d) => {
+    QuerySpec("t34_sequence_packing", (s, d) => {
       val c = 256
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("source")).orderBy(col("doc_id"))
@@ -875,7 +1489,27 @@ object TrainingQueries {
           Summaries.countIf(col("__split")).as("split_docs"),
           expr(s"($c - (max(__cum) % $c)) % $c").as("pad_tokens"))
         .orderBy(col("source"))
-    }),
+    }, oracle = Some(
+      // t34 replays the deterministic (source, doc_id) concat order, the
+      // cumulative window, the boundary-split predicate and the per-source
+      // window/padding arithmetic — all exact integer ops (// ≡ div)
+      """WITH cum AS (
+        |  SELECT source, doc_id,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+        |    CAST(sum(len(string_split(text, ' '))) OVER (
+        |      PARTITION BY source ORDER BY doc_id
+        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c
+        |  FROM documents
+        |)
+        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
+        |  ((max(c) - 1) // 256) + 1 AS n_windows,
+        |  CAST(sum(CASE WHEN (c - n_tokens) // 256 <> (c - 1) // 256
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS split_docs,
+        |  (256 - (max(c) % 256)) % 256 AS pad_tokens
+        |FROM cum
+        |GROUP BY source
+        |ORDER BY source""".stripMargin)),
 
     // T36 — cross-source contamination matrix (corpus forensics): which
     // sources share width-8 shingles with which — mirrors, syndicated
@@ -883,11 +1517,37 @@ object TrainingQueries {
     // to DISTINCT (source, shingle-hash) FIRST, so the self-join's worst
     // bucket is |sources|² pairs — bounded by group cardinality, never
     // corpus size (see Dedup.crossGroupOverlap).
-    "t36_source_overlap" -> ((s, d) => {
+    QuerySpec("t36_source_overlap", (s, d) => {
       Dedup.crossGroupOverlap(Tables.spread(Tables.documents(s, d)),
           "source", "text", n = 8)
         .orderBy(col("a_group"), col("b_group"))
-    }),
+    }, oracle = Some(
+      // t36 replays the shingle recipe (d5's list_slice form at n=8, md5
+      // hash), the (source, h) collapse, the pair join and the jaccard
+      """WITH sh AS (
+        |  SELECT DISTINCT source AS g,
+        |    CAST('0x' || substr(md5(s), 1, 15) AS BIGINT) AS h
+        |  FROM (
+        |    SELECT source, unnest(list_distinct(list_transform(
+        |      range(1, greatest(len(toks) - 7, 1) + 1),
+        |      i -> array_to_string(list_slice(toks, i, i + 7), ' ')))) AS s
+        |    FROM (SELECT source, string_split(text, ' ') AS toks
+        |          FROM documents))
+        |), per AS (
+        |  SELECT g, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY g
+        |), shared AS (
+        |  SELECT a.g AS a_group, b.g AS b_group,
+        |    CAST(count(*) AS BIGINT) AS shared_shingles
+        |  FROM sh a JOIN sh b ON a.h = b.h AND a.g < b.g
+        |  GROUP BY 1, 2
+        |)
+        |SELECT s.a_group, s.b_group, s.shared_shingles,
+        |  round(s.shared_shingles * 1.0
+        |    / (pa.n + pb.n - s.shared_shingles), 4) AS jaccard
+        |FROM shared s
+        |JOIN per pa ON s.a_group = pa.g
+        |JOIN per pb ON s.b_group = pb.g
+        |ORDER BY a_group, b_group""".stripMargin)),
 
     // T35 — PII scrubbing audit: regex battery (emails, phone-shaped
     // strings) counted per doc plus the post-scrub char count — the
@@ -898,7 +1558,7 @@ object TrainingQueries {
     // column discriminating; both engines replay the injection. All
     // map-only — regex count + replace in one codegen projection, no
     // shuffle anywhere but the output sort.
-    "t35_pii_audit" -> ((s, d) => {
+    QuerySpec("t35_pii_audit", (s, d) => {
       val email = "[a-z0-9]+@[a-z0-9.]+"
       val phone = "555-[0-9]+"
       Tables.spread(Tables.documents(s, d))
@@ -920,7 +1580,31 @@ object TrainingQueries {
             phone, "<PHONE>")).cast("long").as("n_chars_clean"))
         .withColumn("has_pii", col("n_emails") + col("n_phones") > 0)
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      // t35 replays the deterministic PII injection, the regex counts and
+      // the global-flag scrub ('g' — DuckDB defaults to first-match-only,
+      // Spark replaces all)
+      """WITH d AS (
+        |  SELECT doc_id,
+        |    CASE WHEN doc_id % 7 = 0 THEN text || ' contact'
+        |        || CAST(doc_id AS VARCHAR) || '@example.com'
+        |      WHEN doc_id % 7 = 1 THEN text || ' call 555-'
+        |        || CAST(doc_id % 9000 + 1000 AS VARCHAR)
+        |      ELSE text END AS t
+        |  FROM documents
+        |)
+        |SELECT doc_id,
+        |  CAST(len(regexp_extract_all(t, '[a-z0-9]+@[a-z0-9.]+'))
+        |    AS BIGINT) AS n_emails,
+        |  CAST(len(regexp_extract_all(t, '555-[0-9]+')) AS BIGINT)
+        |    AS n_phones,
+        |  CAST(length(regexp_replace(regexp_replace(t,
+        |    '[a-z0-9]+@[a-z0-9.]+', '<EMAIL>', 'g'),
+        |    '555-[0-9]+', '<PHONE>', 'g')) AS BIGINT) AS n_chars_clean,
+        |  (len(regexp_extract_all(t, '[a-z0-9]+@[a-z0-9.]+'))
+        |    + len(regexp_extract_all(t, '555-[0-9]+'))) > 0 AS has_pii
+        |FROM d
+        |ORDER BY doc_id""".stripMargin)),
 
     // T33 — temperature-scaled source mixing (the multilingual/multi-
     // domain sampling rule, cf. mT5 §3.1: p_s ∝ n_s^α with α = 0.3):
@@ -931,7 +1615,7 @@ object TrainingQueries {
     // 1-row total broadcast back. Float policy: pow round-6 BEFORE the
     // denominator sum, which runs in DECIMAL so the (bounded) source
     // frame sums exactly in any order; ratios divide exact inputs.
-    "t33_mix_weights" -> ((s, d) => {
+    QuerySpec("t33_mix_weights", (s, d) => {
       val per = Tables.spread(Tables.documents(s, d))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
@@ -949,7 +1633,28 @@ object TrainingQueries {
             * (pw / col("__tot_pw").cast("double")) / col("n_tokens"), 4)
             .as("epochs_at_2x"))
         .orderBy(col("source"))
-    }),
+    }, oracle = Some(
+      // t33 replays the source-grain aggregates, the round-6 pow, the
+      // DECIMAL denominator sum and the exact-input ratios
+      """WITH per AS (
+        |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
+        |  FROM documents GROUP BY source
+        |), tot AS (
+        |  SELECT CAST(sum(n_tokens) AS BIGINT) AS tot_tokens,
+        |    sum(CAST(round(power(n_tokens, 0.3), 6) AS DECIMAL(38,6)))
+        |      AS tot_pw
+        |  FROM per
+        |)
+        |SELECT source, n_docs, n_tokens,
+        |  n_tokens * 1.0 / tot_tokens AS p_raw,
+        |  round(round(power(n_tokens, 0.3), 6) / CAST(tot_pw AS DOUBLE), 6)
+        |    AS p_alpha,
+        |  round(2.0 * tot_tokens
+        |    * (round(power(n_tokens, 0.3), 6) / CAST(tot_pw AS DOUBLE))
+        |    / n_tokens, 4) AS epochs_at_2x
+        |FROM per, tot
+        |ORDER BY source""".stripMargin)),
 
     // D21 — the END-TO-END curation recipe (quality rules → exact dedup
     // → benchmark decontamination) as ONE composed Catalyst plan with
@@ -959,13 +1664,74 @@ object TrainingQueries {
     // convention; eval docs present in the corpus are themselves flagged
     // contaminated — exactly what decontamination is for). Stage
     // precedence and scale shape documented on Curation.curate.
-    "d21_corpus_curation" -> ((s, d) => {
+    QuerySpec("d21_corpus_curation", (s, d) => {
       val docs = Tables.documents(s, d)
       Curation.curate(Tables.spread(Tables.documentsWithDups(s, d)),
           docs.filter(col("doc_id") % 20 === 0), "text", "doc_id",
           "n_chars")
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      // Replays the full three-stage recipe: t9's signal formulas over the
+      // cloned corpus, keeper election per fingerprint among
+      // quality-passing docs, d8's shingle replay for contamination, and
+      // the same CASE precedence as Curation.curate.
+      """WITH corpus AS (
+        |  SELECT doc_id, text, n_chars FROM documents
+        |  UNION ALL SELECT doc_id + 1000000, text, n_chars
+        |  FROM documents WHERE doc_id % 25 = 0
+        |), sig AS (
+        |  SELECT doc_id, text, md5(lower(trim(text))) AS fp,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS nt,
+        |    CAST(len(list_filter(string_split(text, ' '),
+        |      x -> x IN ('the','a','of','and','to','in','is'))) AS BIGINT) AS s_en,
+        |    CAST(len(list_filter(string_split(text, ' '),
+        |      x -> x IN ('el','la','de','y','que','en','un'))) AS BIGINT) AS s_es,
+        |    CAST(len(list_filter(string_split(text, ' '),
+        |      x -> x IN ('der','die','das','und','ist','ein','zu'))) AS BIGINT) AS s_de,
+        |    CAST(len(list_filter(string_split(text, ' '),
+        |      x -> x IN ('le','la','de','et','est','un','dans'))) AS BIGINT) AS s_fr,
+        |    round(1.0 - len(list_distinct(list_transform(
+        |        range(1, greatest(len(string_split(text,' ')) - 3 + 2, 2)),
+        |        i -> array_to_string(list_slice(string_split(text,' '), i, i + 2),
+        |          ' ')))) * 1.0
+        |      / greatest(len(string_split(text,' ')) - 3 + 1, 1), 4) AS dup3,
+        |    round((CASE WHEN n_chars BETWEEN 100 AND 5000 THEN 1.0 ELSE 0.5 END)
+        |        * 0.4
+        |      + least(len(list_distinct(string_split(text, ' '))) * 1.0 /
+        |          len(string_split(text, ' ')) * 2, 1.0) * 0.6, 4) AS q
+        |  FROM corpus
+        |), flagged AS (
+        |  SELECT *, (s_en + s_es + s_de + s_fr > 0
+        |    AND s_en >= s_es AND s_en >= s_de AND s_en >= s_fr
+        |    AND q >= 0.5 AND nt BETWEEN 20 AND 1000 AND dup3 <= 0.3)
+        |    AS quality_ok
+        |  FROM sig
+        |), keep AS (
+        |  SELECT fp, min(doc_id) AS keep_id FROM flagged
+        |  WHERE quality_ok GROUP BY fp
+        |), bsh AS (
+        |  SELECT DISTINCT unnest(list_distinct(list_transform(
+        |    range(1, greatest(len(string_split(text,' ')) - 8 + 2, 2)),
+        |    i -> array_to_string(list_slice(string_split(text,' '), i, i + 7), ' '))))
+        |    AS sh
+        |  FROM documents WHERE doc_id % 20 = 0
+        |), contam AS (
+        |  SELECT DISTINCT c.doc_id FROM (
+        |    SELECT doc_id, unnest(list_distinct(list_transform(
+        |      range(1, greatest(len(string_split(text,' ')) - 8 + 2, 2)),
+        |      i -> array_to_string(list_slice(string_split(text,' '), i, i + 7), ' '))))
+        |      AS sh
+        |    FROM flagged WHERE quality_ok) c JOIN bsh USING (sh)
+        |)
+        |SELECT f.doc_id,
+        |  CASE WHEN NOT f.quality_ok THEN 'low_quality'
+        |       WHEN f.doc_id <> k.keep_id THEN 'exact_dup'
+        |       WHEN f.doc_id IN (SELECT doc_id FROM contam)
+        |         THEN 'contaminated'
+        |       ELSE 'kept' END AS status,
+        |  f.nt AS n_tokens
+        |FROM flagged f LEFT JOIN keep k ON f.fp = k.fp
+        |ORDER BY f.doc_id""".stripMargin)),
 
     // X2 — the TRAINING-DATA EXPORT FLAGSHIP (VERDICT r11 item 1): ONE
     // composed plan running the whole ship-it path — d21's curation
@@ -986,10 +1752,41 @@ object TrainingQueries {
     // with tier construction disclosed in the bench `builds` block —
     // the classifier_train_score precedent, adopted after the round-14
     // controlled experiment (EXPLAIN.md).
-    "x2_training_export" -> ((s, d) =>
+    QuerySpec("x2_training_export", (s, d) =>
       Curation.manifestFromDocGrain(ExportTier(s, d)._2,
           "doc_id", contextLen = 256, alpha = 0.3)
-        .orderBy(col("shard_id"), col("source"))),
+        .orderBy(col("shard_id"), col("source")), oracle = Some(
+      // x2 replays the whole export: the t28/t31 BPE chain (w0..w4 over
+      // the reference corpus — the frozen tokenizer), the d21 curation
+      // CTEs with source carried through, kept-slice BPE counts via the
+      // vocab join, the s13 seeded-md5 shard key, the t34 cumulative
+      // window per shard, and the t33 pow-round-6/decimal-sum mixture.
+      // The chain through `cum` is shared with x3 (exportCumCteSql).
+      s"""$exportCumCteSql
+        |, g1 AS MATERIALIZED (
+        |  SELECT shard_id, source, CAST(count(*) AS BIGINT) AS n_docs,
+        |    CAST(sum(n_bpe) AS BIGINT) AS n_tokens,
+        |    CAST(count(CASE WHEN (cum - n_bpe) // 256 <> (cum - 1) // 256
+        |      THEN 1 END) AS BIGINT) AS split_src
+        |  FROM cum GROUP BY shard_id, source
+        |), shd AS (
+        |  SELECT shard_id, CAST(sum(n_tokens) AS BIGINT) AS sh_tokens,
+        |    CAST(sum(split_src) AS BIGINT) AS split_docs
+        |  FROM g1 GROUP BY shard_id
+        |), srcw AS (
+        |  SELECT source, round(pow(CAST(sum(n_tokens) AS DOUBLE), 0.3), 6)
+        |    AS pw
+        |  FROM g1 GROUP BY source
+        |), tpw AS (SELECT sum(CAST(pw AS DECIMAL(38,6))) AS tpw FROM srcw)
+        |SELECT g1.shard_id, g1.source, g1.n_docs, g1.n_tokens,
+        |  g1.n_tokens * 1.0 / shd.sh_tokens AS tok_frac,
+        |  CAST((shd.sh_tokens - 1) // 256 + 1 AS BIGINT) AS n_sequences,
+        |  CAST((256 - (shd.sh_tokens % 256)) % 256 AS BIGINT) AS pad_tokens,
+        |  shd.split_docs,
+        |  round(srcw.pw / CAST(t.tpw AS DOUBLE), 6) AS p_alpha
+        |FROM g1 JOIN shd USING (shard_id) JOIN srcw USING (source)
+        |CROSS JOIN tpw t
+        |ORDER BY shard_id, source""".stripMargin)),
 
     // X3 — the export's WINDOW-MEMBERSHIP index (x2's row-grain
     // companion): one row per packed C=256 training sequence with the
@@ -999,10 +1796,32 @@ object TrainingQueries {
     // were in this sample's window"). Same fixture, tokenizer and
     // packing order as x2; scale shape on Curation.packedWindows (the
     // explode is tokens/256 grain — 256× below token grain).
-    "x3_packed_windows" -> ((s, d) =>
+    QuerySpec("x3_packed_windows", (s, d) =>
       Curation.packedWindowsFromDocGrain(ExportTier(s, d)._2, "doc_id",
           contextLen = 256)
-        .orderBy(col("shard_id"), col("seq_id"))),
+        .orderBy(col("shard_id"), col("seq_id")), oracle = Some(
+      // x3: the shared export chain, then one generate-range explode of
+      // each doc's spanned window interval and the (shard, seq)
+      // membership aggregate; arg_min/arg_max over the strictly
+      // increasing cumulative position mirror Spark's min_by/max_by
+      // (unique within a shard — no tie to break).
+      s"""$exportCumCteSql
+        |, wins AS MATERIALIZED (
+        |  SELECT shard_id, doc_id, n_bpe, cum,
+        |    unnest(range(CAST((cum - n_bpe) // 256 AS BIGINT),
+        |      CAST((cum - 1) // 256 + 1 AS BIGINT))) AS seq_id
+        |  FROM cum
+        |)
+        |SELECT shard_id, CAST(seq_id AS BIGINT) AS seq_id,
+        |  CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(arg_min(doc_id, cum) AS BIGINT) AS first_doc,
+        |  CAST(arg_max(doc_id, cum) AS BIGINT) AS last_doc,
+        |  CAST(sum(least(cum, (seq_id + 1) * 256)
+        |    - greatest(cum - n_bpe, seq_id * 256)) AS BIGINT) AS n_tokens,
+        |  CAST(256 - sum(least(cum, (seq_id + 1) * 256)
+        |    - greatest(cum - n_bpe, seq_id * 256)) AS BIGINT) AS n_pad
+        |FROM wins GROUP BY shard_id, seq_id
+        |ORDER BY shard_id, seq_id""".stripMargin)),
 
     // X4 — doc→window INVERSE attribution (VERDICT r12 item 5; x3's
     // companion direction): given suspect doc_ids — here the
@@ -1016,10 +1835,30 @@ object TrainingQueries {
     // position is a corpus-order fact) and BEFORE the explode, so the
     // added work over x2's shared doc-grain tier is probe-grain only —
     // scale shape on Curation.docWindows.
-    "x4_doc_windows" -> ((s, d) =>
+    QuerySpec("x4_doc_windows", (s, d) =>
       Curation.docWindowsFromDocGrain(ExportTier(s, d)._2, "doc_id",
           probe = col("doc_id") % 13 === 0, contextLen = 256)
-        .orderBy(col("doc_id"), col("seq_id"))),
+        .orderBy(col("doc_id"), col("seq_id")), oracle = Some(
+      // x4: the shared export chain, the doc_id % 13 probe cut AFTER the
+      // cumulative window (position is a corpus-order fact), then the
+      // same generate-range explode at probe-doc grain — no regroup; the
+      // in-window offsets are the least/greatest clamp arithmetic x3
+      // sums, kept per row instead.
+      s"""$exportCumCteSql
+        |SELECT doc_id, shard_id, CAST(seq_id AS BIGINT) AS seq_id,
+        |  CAST(greatest(cum - n_bpe, seq_id * 256) - seq_id * 256
+        |    AS BIGINT) AS tok_start,
+        |  CAST(least(cum, (seq_id + 1) * 256) - seq_id * 256
+        |    AS BIGINT) AS tok_end,
+        |  CAST(least(cum, (seq_id + 1) * 256)
+        |    - greatest(cum - n_bpe, seq_id * 256) AS BIGINT) AS n_tokens
+        |FROM (
+        |  SELECT shard_id, doc_id, n_bpe, cum,
+        |    unnest(range(CAST((cum - n_bpe) // 256 AS BIGINT),
+        |      CAST((cum - 1) // 256 + 1 AS BIGINT))) AS seq_id
+        |  FROM cum WHERE doc_id % 13 = 0
+        |)
+        |ORDER BY doc_id, seq_id""".stripMargin)),
 
     // T29 — DSIR importance resampling (Xie et al. 2023): select raw
     // docs whose hashed-n-gram profile looks like the TARGET domain
@@ -1027,10 +1866,50 @@ object TrainingQueries {
     // Laplace-smoothed bucket distributions. 512 buckets, top-100 kept.
     // The bounded log-ratio table broadcasts back; selection is the w5
     // heap plan — see TextAnalysis.dsirWeights for the 100-TB shape.
-    "t29_dsir_select" -> ((s, d) =>
+    QuerySpec("t29_dsir_select", (s, d) =>
       TextAnalysis.dsirWeights(Tables.spread(Tables.documents(s, d)),
           isTarget = col("lang") === "en", buckets = 512, keep = 100)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")), oracle = Some(
+      // t29 replays DSIR end-to-end: unigram+bigram explode, md5 bucket
+      // hash, Laplace-smoothed bucket distributions, round-6 ln pair,
+      // exact-decimal Σ c·lr, unrounded per-gram division, top-100 by
+      // (avg desc, doc_id) — the same system t23/t26 proved hash-exact.
+      """WITH base AS (
+        |  SELECT doc_id, lang = 'en' AS is_target,
+        |    string_split(text, ' ') AS toks
+        |  FROM documents
+        |), grams AS (
+        |  SELECT doc_id, is_target, unnest(list_concat(toks,
+        |    list_transform(range(1, len(toks)),
+        |      i -> toks[i] || ' ' || toks[i + 1]))) AS g
+        |  FROM base
+        |), docf AS (
+        |  SELECT doc_id, is_target,
+        |    CAST('0x' || substr(md5(g), 1, 15) AS BIGINT) % 512 AS f,
+        |    count(*) AS c
+        |  FROM grams GROUP BY 1, 2, 3
+        |), bucket AS (
+        |  SELECT f, sum(CASE WHEN is_target THEN c ELSE 0 END) AS ct,
+        |    sum(c) AS cr
+        |  FROM docf GROUP BY f
+        |), tot AS (SELECT sum(ct) AS nt, sum(cr) AS nr FROM bucket),
+        |lr AS (
+        |  SELECT f, round(ln((ct + 1) * 1.0 / (nt + 512)), 6)
+        |    - round(ln((cr + 1) * 1.0 / (nr + 512)), 6) AS lr
+        |  FROM bucket, tot
+        |), scored AS (
+        |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_grams,
+        |    CAST(sum(CAST(lr AS DECIMAL(38,6)) * c) AS DOUBLE) / sum(c)
+        |      AS avg_logratio
+        |  FROM docf JOIN lr USING (f) GROUP BY doc_id
+        |), kept AS (
+        |  SELECT doc_id FROM scored
+        |  ORDER BY avg_logratio DESC, doc_id LIMIT 100
+        |)
+        |SELECT s.doc_id, s.n_grams, s.avg_logratio,
+        |  k.doc_id IS NOT NULL AS selected
+        |FROM scored s LEFT JOIN kept k ON s.doc_id = k.doc_id
+        |ORDER BY s.doc_id""".stripMargin)),
 
     // T30 — CCNet perplexity buckets (Wenzek et al. 2020 §4.3): score
     // every doc by bigram cross-entropy against a per-language LM
@@ -1042,7 +1921,7 @@ object TrainingQueries {
     // combinable per-lang percentile agg broadcast back, map-side
     // banding — the corpus never sorts; swap percentile for
     // approx_percentile at 100 TB if ce cardinality bites).
-    "t30_ccnet_buckets" -> ((s, d) => {
+    QuerySpec("t30_ccnet_buckets", (s, d) => {
       val cleanSrcs = Seq("src0", "src1", "src2", "src3", "src4")
       val docs = Tables.spread(Tables.documents(s, d))
         .select(col("doc_id"), col("lang"), col("source"),
@@ -1092,7 +1971,52 @@ object TrainingQueries {
         .select(col("doc_id"), col("lang"), col("nb"), col("ce"),
           col("bucket"))
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      // t30 replays the clean-slice per-lang bigram LM (t26's arithmetic
+      // with COALESCE-0 unseen counts), then the tercile banding against
+      // quantile_cont bounds (percentile ≡ quantile_cont proven by w20;
+      // the two literals are the exact doubles of Scala's 1.0/3, 2.0/3).
+      """WITH base AS (
+        |  SELECT doc_id, lang, source, string_split(text, ' ') AS toks
+        |  FROM documents
+        |), bg AS (
+        |  SELECT doc_id, lang, source, g, count(*) AS c FROM (
+        |    SELECT doc_id, lang, source, unnest(list_transform(
+        |      range(1, len(toks)), i -> toks[i] || ' ' || toks[i + 1])) AS g
+        |    FROM base)
+        |  GROUP BY 1, 2, 3, 4
+        |), cbg AS (
+        |  SELECT lang, g, sum(c) AS cbg FROM bg
+        |  WHERE source IN ('src0','src1','src2','src3','src4')
+        |  GROUP BY 1, 2
+        |), uni AS (
+        |  SELECT lang, w1, count(*) AS cw1 FROM (
+        |    SELECT lang, unnest(toks) AS w1 FROM base
+        |    WHERE source IN ('src0','src1','src2','src3','src4'))
+        |  GROUP BY 1, 2
+        |), v AS (SELECT lang, count(*) AS v FROM uni GROUP BY lang),
+        |scored AS (
+        |  SELECT b.doc_id, b.lang, CAST(sum(b.c) AS BIGINT) AS nb,
+        |    -CAST(sum(CAST(round(ln((COALESCE(cb.cbg, 0) + 1) * 1.0
+        |        / (COALESCE(u.cw1, 0) + v.v)), 6) AS DECIMAL(38,6)) * b.c)
+        |      AS DOUBLE) / sum(b.c) AS ce
+        |  FROM bg b
+        |  LEFT JOIN cbg cb ON b.lang = cb.lang AND b.g = cb.g
+        |  LEFT JOIN uni u
+        |    ON b.lang = u.lang AND string_split(b.g, ' ')[1] = u.w1
+        |  LEFT JOIN v ON b.lang = v.lang
+        |  GROUP BY b.doc_id, b.lang
+        |), bounds AS (
+        |  SELECT lang, quantile_cont(ce, 0.3333333333333333) AS b1,
+        |    quantile_cont(ce, 0.6666666666666666) AS b2
+        |  FROM scored GROUP BY lang
+        |)
+        |SELECT s.doc_id, s.lang, s.nb, s.ce,
+        |  CASE WHEN s.ce IS NULL THEN 'no_lm'
+        |    WHEN s.ce <= b.b1 THEN 'head'
+        |    WHEN s.ce <= b.b2 THEN 'middle' ELSE 'tail' END AS bucket
+        |FROM scored s JOIN bounds b ON s.lang = b.lang
+        |ORDER BY s.doc_id""".stripMargin)),
 
     // W15B — sketch-accuracy CONTRACT: the HLL distinct count and the
     // approximate median must land within their documented error bounds
@@ -1103,7 +2027,7 @@ object TrainingQueries {
     // the engine-specific sketch values stay Spark-computed, reduced to
     // the asserted booleans. A broken exact path now hash-mismatches
     // instead of silently weakening both sides of the bound.
-    "w15b_sketch_bounds" -> ((s, d) => {
+    QuerySpec("w15b_sketch_bounds", (s, d) => {
       val exactMed = graft.operators.Summaries.sortedPercentiles(
         Tables.lineitem(s, d), Seq("l_returnflag"),
         col("l_extendedprice"), Seq("exact_median" -> 0.5))
@@ -1131,7 +2055,22 @@ object TrainingQueries {
           (abs(col("approx_median") - col("exact_median"))
             <= col("exact_median") * 0.05).as("median_within_5pct"))
         .orderBy(col("l_returnflag"))
-    }),
+    }, oracle = Some(
+      // w15b's exact sides re-derive INDEPENDENTLY (the d17 pattern):
+      // count(DISTINCT) and quantile_cont replay the countDistinct /
+      // sortedPercentiles ground truth (the x16-proven bit-compatible
+      // pair); only the sketch-accuracy booleans stay engine-asserted
+      """WITH med AS (
+        |  SELECT l_returnflag, quantile_cont(l_extendedprice, 0.5)
+        |    AS exact_median
+        |  FROM lineitem GROUP BY l_returnflag
+        |)
+        |SELECT l.l_returnflag,
+        |  count(DISTINCT l.l_partkey) AS exact_parts,
+        |  max(m.exact_median) AS exact_median,
+        |  true AS hll_within_5pct, true AS median_within_5pct
+        |FROM lineitem l JOIN med m ON l.l_returnflag = m.l_returnflag
+        |GROUP BY l.l_returnflag ORDER BY l.l_returnflag""".stripMargin)),
 
     // E14 — MMR diversified re-rank (Similarity.mmrRerank): greedy
     // λ-tradeoff between relevance and redundancy over a bounded
@@ -1140,11 +2079,11 @@ object TrainingQueries {
     // under the documented bounded-small-side contract). Rows-only at
     // the oracle (float greedy selection has no SQL replay); the
     // e14b contract twin pins the semantics.
-    "e14_mmr_rerank" -> ((s, d) => {
+    QuerySpec("e14_mmr_rerank", (s, d) => {
       Similarity.mmrRerank(Tables.embeddings(s, d), queryId = 0L,
           k = 10, shortlist = 50, lambda = 0.7)
         .orderBy(col("rank"))
-    }),
+    }, oracle = None),
 
     // E14B — MMR CONTRACT (oracle asserts the booleans): k rows
     // selected from within the shortlist; the first pick IS the top-1
@@ -1152,7 +2091,7 @@ object TrainingQueries {
     // the plain top-k (determinism + tiebreak pinned); and the λ=0.7
     // selection is no MORE redundant than plain top-k (mean pairwise
     // cosine within the selected set — the property MMR exists for).
-    "e14b_mmr_contract" -> ((s, d) => {
+    QuerySpec("e14b_mmr_contract", (s, d) => {
       val spark = s
       import spark.implicits._
       val emb = Tables.embeddings(s, d)
@@ -1190,7 +2129,14 @@ object TrainingQueries {
         topIds.sorted.mkString(",")
       )).toDF("k_selected", "first_is_top1", "subset_of_shortlist",
         "lambda1_equals_topk", "diversity_not_worse", "exact_top10_ids")
-    }),
+    }, oracle = Some(
+      // e14 itself is rows-only (greedy float selection has no SQL
+      // replay); this contract twin pins its semantics
+      (BruteForceTop10Cte + """
+        |SELECT true AS k_selected, true AS first_is_top1,
+        |  true AS subset_of_shortlist, true AS lambda1_equals_topk,
+        |  true AS diversity_not_worse,
+        |  (SELECT array_to_string(list_sort(list(vec_id)), ',') FROM top10) AS exact_top10_ids""".stripMargin))),
 
     // E16 — NEAREST-CENTROID classification eval (Rocchio): fit one
     // exact per-label centroid, predict each vector's label as its
@@ -1199,10 +2145,45 @@ object TrainingQueries {
     // eval shape on the dense modality). |labels| centroids broadcast,
     // scoring is bounded map-side fanout, argmax one vec_id window;
     // cosine round-4 (e1 convention), exact-integer accuracy division.
-    "e16_centroid_eval" -> ((s, d) => {
+    QuerySpec("e16_centroid_eval", (s, d) => {
       Similarity.nearestCentroidEval(Tables.embeddings(s, d))
         .orderBy(col("label"))
-    }),
+    }, oracle = Some(
+      // e16 replays the e10 exact-centroid CTE, the e1 unnest cosine per
+      // (vector, candidate-label) pair, the identical round-4 + (sim
+      // desc, cand) argmax window, and the exact-integer accuracy
+      """WITH x AS (
+        |  SELECT vec_id, CAST(label AS BIGINT) AS actual,
+        |    generate_subscripts(embedding, 1) AS i,
+        |    CAST(unnest(embedding) AS DOUBLE) AS v
+        |  FROM embeddings
+        |), nz AS (
+        |  SELECT vec_id FROM x GROUP BY vec_id HAVING sum(v * v) > 0
+        |), cent AS (
+        |  SELECT actual AS cand, i,
+        |    CAST(sum(CAST(v AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS c
+        |  FROM x WHERE vec_id IN (SELECT vec_id FROM nz)
+        |  GROUP BY actual, i
+        |), s AS (
+        |  SELECT x.vec_id, x.actual, cent.cand,
+        |    sum(x.v * cent.c) AS dot, sum(x.v * x.v) AS vv,
+        |    sum(cent.c * cent.c) AS cc
+        |  FROM x JOIN cent ON x.i = cent.i
+        |  WHERE x.vec_id IN (SELECT vec_id FROM nz)
+        |  GROUP BY x.vec_id, x.actual, cent.cand
+        |), p AS (
+        |  SELECT vec_id, actual, cand,
+        |    row_number() OVER (PARTITION BY vec_id
+        |      ORDER BY round(dot / (sqrt(vv) * sqrt(cc)), 4) DESC, cand)
+        |      AS rn
+        |  FROM s
+        |)
+        |SELECT actual AS label, count(*) AS n_vecs,
+        |  CAST(sum(CASE WHEN cand = actual THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_correct,
+        |  CAST(sum(CASE WHEN cand = actual THEN 1 ELSE 0 END) AS BIGINT)
+        |    * 1.0 / count(*) AS accuracy
+        |FROM p WHERE rn = 1 GROUP BY actual ORDER BY label""".stripMargin)),
 
     // E15 — HYBRID RETRIEVAL via Reciprocal-Rank Fusion: fuse the
     // lexical BM25 ranking (t21 machinery) with the dense cosine
@@ -1217,7 +2198,7 @@ object TrainingQueries {
     // Determinism: ranks are integers off total-order (rounded score,
     // id) sorts; each reciprocal term is one double division rounded
     // to 9, and their sum is a single IEEE add both engines replay.
-    "e15_rrf_fusion" -> ((s, d) => {
+    QuerySpec("e15_rrf_fusion", (s, d) => {
       val wLex = org.apache.spark.sql.expressions.Window
         .orderBy(col("score").desc, col("doc_id"))
       val lex = TextAnalysis.bm25(Tables.documents(s, d),
@@ -1239,7 +2220,59 @@ object TrainingQueries {
               lit(0.0))).as("rrf"))
         .orderBy(col("rrf").desc, col("doc_id"))
         .limit(20)
-    }),
+    }, oracle = Some(
+      // e15 stitches the t21 BM25 replay and the e1 unnest/rejoin cosine
+      // replay into the same two 50-row shortlists, ranks each with the
+      // identical total-order window, and fuses with the same
+      // round-9 reciprocal terms + one IEEE add
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
+        |), tf AS (
+        |  SELECT doc_id, term, count(*) AS cnt FROM tok GROUP BY doc_id, term
+        |), dl AS (
+        |  SELECT doc_id, sum(cnt) AS dl FROM tf GROUP BY doc_id
+        |), st AS (
+        |  SELECT count(*) AS n, CAST(sum(dl) AS DOUBLE) AS sumdl FROM dl
+        |), df AS (
+        |  SELECT term, count(*) AS df FROM tf
+        |  WHERE term IN ('vector', 'stream', 'window') GROUP BY term
+        |), w AS (
+        |  SELECT tf.doc_id,
+        |    round(ln(1.0 + (st.n - df.df + 0.5) / (df.df + 0.5))
+        |      * (tf.cnt * 2.2)
+        |      / (tf.cnt + 1.2 * (0.25 + (0.75 * dl.dl) / (st.sumdl / st.n))),
+        |      6) AS w
+        |  FROM tf JOIN df USING (term) JOIN dl USING (doc_id) CROSS JOIN st
+        |), lexs AS (
+        |  SELECT doc_id, CAST(sum(CAST(w AS DECIMAL(38,6))) AS DOUBLE) AS score
+        |  FROM w GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 50
+        |), lexr AS (
+        |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS r_lex
+        |  FROM lexs
+        |), q AS (
+        |  SELECT generate_subscripts(embedding, 1) AS i,
+        |    CAST(unnest(embedding) AS DOUBLE) AS qv
+        |  FROM embeddings WHERE vec_id = 0
+        |), v AS (
+        |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
+        |    CAST(unnest(embedding) AS DOUBLE) AS ev
+        |  FROM embeddings WHERE vec_id <> 0
+        |), m AS (
+        |  SELECT v.vec_id, sum(v.ev * q.qv) AS dot, sum(v.ev * v.ev) AS vv,
+        |    sum(q.qv * q.qv) AS qq
+        |  FROM v JOIN q ON v.i = q.i GROUP BY v.vec_id
+        |), dens AS (
+        |  SELECT vec_id AS doc_id, round(dot / (sqrt(vv) * sqrt(qq)), 4) AS cos
+        |  FROM m ORDER BY cos DESC, vec_id LIMIT 50
+        |), denr AS (
+        |  SELECT doc_id, row_number() OVER (ORDER BY cos DESC, doc_id) AS r_dense
+        |  FROM dens
+        |)
+        |SELECT COALESCE(l.doc_id, r.doc_id) AS doc_id, l.r_lex, r.r_dense,
+        |  coalesce(round(1.0 / (60 + l.r_lex), 9), 0.0)
+        |    + coalesce(round(1.0 / (60 + r.r_dense), 9), 0.0) AS rrf
+        |FROM lexr l FULL OUTER JOIN denr r ON l.doc_id = r.doc_id
+        |ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin)),
 
     // J10 — BANDED range join (price-tier rollup): "price BETWEEN
     // tier.lo AND tier.hi" as a bucket equi-join (Joins.bandJoin, the
@@ -1251,7 +2284,7 @@ object TrainingQueries {
     // engine-exact; the bands cover the full observed price range
     // ([902, 105000] dollars), so the inner join drops no rows and
     // the oracle's BETWEEN replay is total.
-    "j10_band_join" -> ((s, d) => {
+    QuerySpec("j10_band_join", (s, d) => {
       val spark = s
       import spark.implicits._
       val tiers = Seq(
@@ -1269,7 +2302,19 @@ object TrainingQueries {
         .agg(count(lit(1)).as("n_items"),
           Summaries.exactSum(col("l_extendedprice"), 2).as("sum_price"))
         .orderBy(col("tier"))
-    }),
+    }, oracle = Some(
+      // j10's oracle is the plain BETWEEN join — bucket-decomposition
+      // invariance of the result IS the correctness contract
+      """WITH tiers(tier, lo_c, hi_c) AS (VALUES
+        |  ('t1_budget', 0, 2500000), ('t2_mid', 2500000, 5000000),
+        |  ('t3_high', 5000000, 7500000), ('t4_premium', 7500000, 11000000))
+        |SELECT tier, count(*) AS n_items,
+        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(38,6))), 2)
+        |    AS DOUBLE) AS sum_price
+        |FROM lineitem JOIN tiers
+        |  ON CAST(round(l_extendedprice * 100) AS BIGINT) >= lo_c
+        |  AND CAST(round(l_extendedprice * 100) AS BIGINT) < hi_c
+        |GROUP BY tier ORDER BY tier""".stripMargin)),
 
     // D15 — SEMANTIC dedup APPLY (embedding grain): the end-to-end
     // "drop near-duplicate meanings" pass — SRP-bucketed cosine
@@ -1280,7 +2325,7 @@ object TrainingQueries {
     // convention) so the collapse provably fires. Rows-only at the
     // oracle (SRP buckets + float cosine have no SQL replay); d15b
     // pins the semantics.
-    "d15_semantic_dedup" -> ((s, d) => {
+    QuerySpec("d15_semantic_dedup", (s, d) => {
       val emb = Tables.embeddings(s, d)
       val cloned = emb.unionByName(emb.filter(col("vec_id") % 50 === 0)
           .withColumn("vec_id", col("vec_id") + 1000000L))
@@ -1291,7 +2336,7 @@ object TrainingQueries {
         .filter(col("is_canonical"))
         .select(col("vec_id"))
         .orderBy(col("vec_id"))
-    }),
+    }, oracle = None),
 
     // D15B — semantic-dedup CONTRACT (oracle asserts the booleans):
     // every planted clone lands in its original's cluster (cos 1.0 ≥
@@ -1299,7 +2344,7 @@ object TrainingQueries {
     // plane count — structurally guaranteed candidates), no clone
     // survives the keep-min apply (clone ids sit +1e6 above their
     // originals), and the kept + collapsed counts conserve the input.
-    "d15b_semantic_dedup_contract" -> ((s, d) => {
+    QuerySpec("d15b_semantic_dedup_contract", (s, d) => {
       val spark = s
       import spark.implicits._
       val emb = Tables.embeddings(s, d)
@@ -1334,14 +2379,24 @@ object TrainingQueries {
         count(when(col("vec_id") >= 1000000L, 1)).as("n_planted"),
         count(lit(1)).as("n_input"))
       planted.crossJoin(conserve)
-    }),
+    }, oracle = Some(
+      // d15 itself is rows-only (SRP buckets + float cosine have no SQL
+      // replay); this contract twin pins its semantics
+      """WITH pl AS (
+        |  SELECT count(*) AS n_planted FROM embeddings WHERE vec_id % 50 = 0
+        |), tot AS (SELECT count(*) AS n FROM embeddings)
+        |SELECT true AS planted_pairs_exist,
+        |  true AS clones_cluster_with_original, true AS no_clone_survives,
+        |  true AS kept_plus_collapsed_conserves,
+        |  pl.n_planted, tot.n + pl.n_planted AS n_input
+        |FROM pl, tot""".stripMargin)),
 
     // E5 — ANN recall CONTRACT: multi-probe SRP-LSH top-10 must recover
     // at least half of the exact brute-force top-10 (the standard
     // recall@k acceptance gate for an ANN index). Oracle asserts the
     // boolean. Config planes=6/probe=2 measured at recall 7/10 (sf0.01)
     // and 10/10 (sf0.1) on the clusterless synthetic corpus.
-    "e5_ann_recall" -> ((s, d) => {
+    QuerySpec("e5_ann_recall", (s, d) => {
       val emb = Tables.embeddings(s, d)
       val exact = Similarity.bruteForceTopK(emb, queryId = 0L, k = 10)
         .select(col("vec_id")).localCheckpoint(eager = false)
@@ -1357,11 +2412,18 @@ object TrainingQueries {
         .crossJoin(exact.agg(
           array_join(sort_array(collect_list(col("vec_id"))), ",")
             .as("exact_top10_ids")))
-    }),
+    }, oracle = Some(
+      // e5/e6/e12b/e14b re-derive the brute-force top-10 ground truth
+      // via e1's replay CTE (the d17 pattern) — the recall booleans stay
+      // engine-asserted, but the exact id set they are measured against
+      // is now independently recomputed by the oracle
+      (BruteForceTop10Cte + """
+        |SELECT true AS recall_at_10_ge_half,
+        |  (SELECT array_to_string(list_sort(list(vec_id)), ',') FROM top10) AS exact_top10_ids""".stripMargin))),
 
     // E6 — IVF recall CONTRACT (companion to e5): probing 4 of 16 cells
     // must recover >=8 of the exact top-10. Measured 10/10 at both SFs.
-    "e6_ivf_recall" -> ((s, d) => {
+    QuerySpec("e6_ivf_recall", (s, d) => {
       val emb = Tables.embeddings(s, d)
       val exact = Similarity.bruteForceTopK(emb, queryId = 0L, k = 10)
         .select(col("vec_id")).localCheckpoint(eager = false)
@@ -1374,7 +2436,10 @@ object TrainingQueries {
         .crossJoin(exact.agg(
           array_join(sort_array(collect_list(col("vec_id"))), ",")
             .as("exact_top10_ids")))
-    }),
+    }, oracle = Some(
+      (BruteForceTop10Cte + """
+        |SELECT true AS recall_at_10_ge_08,
+        |  (SELECT array_to_string(list_sort(list(vec_id)), ',') FROM top10) AS exact_top10_ids""".stripMargin))),
 
     // E12B — PQ CONTRACT (e6 pattern; value-verifies e12): the ADC
     // shortlist (256 of N by quantized score) must recover ≥8 of the
@@ -1384,7 +2449,7 @@ object TrainingQueries {
     // only ~2/10 on this near-random corpus — the re-rank stage is
     // what makes byte codes usable), and every corpus vector must
     // encode to exactly m in-range codes.
-    "e12b_pq_recall" -> ((s, d) => {
+    QuerySpec("e12b_pq_recall", (s, d) => {
       val emb = Tables.embeddings(s, d)
       // codebooks + checkpointed codes from the SHARED train-once
       // artifact (ExtensionQueries.PqArtifact): the contract verifies
@@ -1410,7 +2475,10 @@ object TrainingQueries {
       recall.crossJoin(codes).crossJoin(exact.agg(
         array_join(sort_array(collect_list(col("vec_id"))), ",")
             .as("exact_top10_ids")))
-    }),
+    }, oracle = Some(
+      (BruteForceTop10Cte + """
+        |SELECT true AS ok_recall, true AS ok_codes,
+        |  (SELECT array_to_string(list_sort(list(vec_id)), ',') FROM top10) AS exact_top10_ids""".stripMargin))),
 
     // E17B — IVF-PQ CONTRACT (e6/e12b pattern; value-verifies e17):
     // after BOTH lossy stages (cell routing to 8 of 16 cells, ADC
@@ -1418,7 +2486,7 @@ object TrainingQueries {
     // still recover ≥8 of the exact top-10 — measured 10/10 at sf0.01
     // and 9/10 at sf0.1 (deterministic, no RNG). The d17 pattern:
     // exact_top10_ids rides along for independent oracle re-derivation.
-    "e17b_ivfpq_recall" -> ((s, d) => {
+    QuerySpec("e17b_ivfpq_recall", (s, d) => {
       val emb = Tables.embeddings(s, d)
       val (books, codes) = ExtensionQueries.PqArtifact(s, d)
       val exact = Similarity.bruteForceTopK(emb, queryId = 0L, k = 10)
@@ -1434,34 +2502,67 @@ object TrainingQueries {
         .crossJoin(exact.agg(
           array_join(sort_array(collect_list(col("vec_id"))), ",")
             .as("exact_top10_ids")))
-    }),
+    }, oracle = Some(
+      (BruteForceTop10Cte + """
+        |SELECT true AS ok_recall,
+        |  (SELECT array_to_string(list_sort(list(vec_id)), ',') FROM top10) AS exact_top10_ids""".stripMargin))),
 
     // T10 — document chunking (64-token windows, 16-token overlap):
     // the doc → training-unit explosion, emitted as chunk hashes so the
     // verified rows stay narrow.
-    "t10_chunking" -> ((s, d) => {
+    QuerySpec("t10_chunking", (s, d) => {
       TextAnalysis.chunk(Tables.spread(Tables.documents(s, d)),
           "text", "doc_id", chunkTokens = 64, overlap = 16)
         .select(col("doc_id"), col("chunk_id"), col("n_chunk_tokens"),
           md5(col("chunk_text").cast("binary")).as("chunk_hash"))
         .orderBy(col("doc_id"), col("chunk_id"))
-    }),
+    }, oracle = Some(
+      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
+        |s AS (SELECT doc_id, toks, unnest(range(1, len(toks)+1, 48)) AS st FROM t)
+        |SELECT doc_id, (st-1)//48 AS chunk_id,
+        |  CAST(least(64, len(toks)-st+1) AS BIGINT) AS n_chunk_tokens,
+        |  md5(array_to_string(list_slice(toks, st, st+63), ' ')) AS chunk_hash
+        |FROM s WHERE st = 1 OR st + 16 <= len(toks)
+        |ORDER BY doc_id, chunk_id""".stripMargin)),
 
     // D9 — near-dup cluster canonicalization: connected components over
     // the token-Jaccard pair graph (d2's generation), min-id canonical
     // per cluster. The oracle replays it with a recursive CTE.
-    "d9_dedup_clusters" -> ((s, d) => {
+    QuerySpec("d9_dedup_clusters", (s, d) => {
       val docs = Tables.documents(s, d)
       val pairs = Dedup.tokenJaccardPairs(docs, threshold = 0.5)
       Dedup.nearDupClusters(docs, pairs, "doc_id")
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      """WITH RECURSIVE prepared AS (
+        |  SELECT doc_id, source, CAST(floor(n_chars / 32.0) AS BIGINT) AS bkt,
+        |    list_distinct(string_split(text, ' ')) AS toks
+        |  FROM documents
+        |), pairs AS (
+        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
+        |  FROM prepared a JOIN prepared b
+        |    ON a.source = b.source AND abs(a.bkt - b.bkt) <= 1
+        |    AND a.doc_id < b.doc_id
+        |  WHERE round(len(list_intersect(a.toks, b.toks)) * 1.0 /
+        |    (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))), 4)
+        |    >= 0.5
+        |), edges AS (
+        |  SELECT a_id AS s, b_id AS t FROM pairs
+        |  UNION ALL SELECT b_id, a_id FROM pairs
+        |), reach(id, r) AS (
+        |  SELECT doc_id, doc_id FROM documents
+        |  UNION
+        |  SELECT e.t, r.r FROM reach r JOIN edges e ON e.s = r.id
+        |)
+        |SELECT id AS doc_id, min(r) AS cluster_id,
+        |  CASE WHEN id = min(r) THEN true ELSE false END AS is_canonical
+        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin)),
 
     // Q1 — TPC-H Q1 pricing summary (the canonical scan-heavy
     // aggregation benchmark): one wide partial+final hash aggregate over
     // the filtered scan, decimal-exact sums, UNROUNDED decimal-quotient
     // averages (engine-divergent round-half ties live exactly there).
-    "q1_pricing_summary" -> ((s, d) => {
+    QuerySpec("q1_pricing_summary", (s, d) => {
       def dsum(c: org.apache.spark.sql.Column) =
         sum(c.cast("decimal(38,6)"))
       val li = Tables.lineitem(s, d)
@@ -1483,12 +2584,32 @@ object TrainingQueries {
             .as("avg_disc"),
           count(lit(1)).as("count_order"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
+    }, oracle = Some(
+      """SELECT l_returnflag, l_linestatus,
+        |CAST(round(sum(CAST(l_quantity AS DECIMAL(38,6))), 2) AS DOUBLE)
+        |  AS sum_qty,
+        |CAST(round(sum(CAST(l_extendedprice AS DECIMAL(38,6))), 2) AS DOUBLE)
+        |  AS sum_base_price,
+        |CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
+        |  AS DECIMAL(38,6))), 2) AS DOUBLE) AS sum_disc_price,
+        |CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax)
+        |  AS DECIMAL(38,6))), 2) AS DOUBLE) AS sum_charge,
+        |CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE)
+        |  / count(l_quantity) AS avg_qty,
+        |CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE)
+        |  / count(l_extendedprice) AS avg_price,
+        |CAST(sum(CAST(l_discount AS DECIMAL(38,6))) AS DOUBLE)
+        |  / count(l_discount) AS avg_disc,
+        |count(*) AS count_order
+        |FROM lineitem
+        |WHERE l_shipdate <= TIMESTAMP '2001-09-01'
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
 
     // W23 — RANGE-frame window (trailing 7 calendar days per customer):
     // value-based frames are a different window surface than the ROWS
     // frames of w18 — peers enter by timestamp distance, not row count.
-    "w23_range_frame" -> ((s, d) => {
+    QuerySpec("w23_range_frame", (s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("o_custkey"))
         .orderBy(col("od_s"))
@@ -1500,12 +2621,20 @@ object TrainingQueries {
             .cast("double").as("trailing_7d_total"))
         .orderBy(col("o_custkey"), col("od_s"), col("o_orderkey"))
         .limit(2000)
-    }),
+    }, oracle = Some(
+      """SELECT o_custkey, CAST(floor(epoch(o_orderdate)) AS BIGINT) AS od_s,
+        |  o_orderkey,
+        |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(38,6))) OVER (
+        |    PARTITION BY o_custkey ORDER BY o_orderdate
+        |    RANGE BETWEEN INTERVAL 7 DAY PRECEDING AND CURRENT ROW), 2)
+        |    AS DOUBLE) AS trailing_7d_total
+        |FROM orders
+        |ORDER BY o_custkey, od_s, o_orderkey LIMIT 2000""".stripMargin)),
 
     // O6 — schema-evolution append: unionByName with missing columns
     // (the shape of appending a newer, narrower batch to an existing
     // table — columns align by NAME, absent ones null-fill).
-    "o6_union_by_name" -> ((s, d) => {
+    QuerySpec("o6_union_by_name", (s, d) => {
       val customer = Tables.customer(s, d)
       val base = customer.select(col("c_custkey"), col("c_name"),
         col("c_acctbal"))
@@ -1517,7 +2646,16 @@ object TrainingQueries {
             .as("c_acctbal"))
         .orderBy(col("c_custkey"), col("c_name").asc_nulls_first)
         .limit(1000)
-    }),
+    }, oracle = Some(
+      """SELECT c_custkey, c_name,
+        |  CAST(round(CAST(c_acctbal AS DECIMAL(38,6)), 2) AS DOUBLE) AS c_acctbal
+        |FROM (
+        |  SELECT c_custkey, c_name, c_acctbal FROM customer
+        |  UNION ALL BY NAME
+        |  SELECT c_acctbal, c_custkey FROM customer
+        |  WHERE c_mktsegment = 'BUILDING'
+        |)
+        |ORDER BY c_custkey, c_name NULLS FIRST LIMIT 1000""".stripMargin)),
 
     // W26 — incremental aggregate maintenance (metric-state merge): a
     // 100 TB metrics pipeline never re-scans history to refresh an
@@ -1526,7 +2664,7 @@ object TrainingQueries {
     // recomputes from ALL raw rows, so the merge algebra (count add,
     // exact-sum add, avg re-derived from merged sums — never averaged
     // averages) must agree with the from-scratch truth exactly.
-    "w26_incremental_agg_merge" -> ((s, d) => {
+    QuerySpec("w26_incremental_agg_merge", (s, d) => {
       val li = Tables.lineitem(s, d)
       def partial(df: DataFrame) = df.groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),
@@ -1540,7 +2678,13 @@ object TrainingQueries {
           round(col("s2"), 2).cast("double").as("sum_qty"),
           (col("s2").cast("double") / col("n_rows")).as("avg_qty"))
         .orderBy(col("l_returnflag"))
-    }),
+    }, oracle = Some(
+      """SELECT l_returnflag, count(*) AS n_rows,
+        |CAST(round(sum(CAST(l_quantity AS DECIMAL(38,6))), 2) AS DOUBLE)
+        |  AS sum_qty,
+        |CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) / count(*)
+        |  AS avg_qty
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
     // W27 — per-group OLS trend fit (slope / intercept / R² of value
     // vs event DAY): drift detection and per-cohort growth rates in
@@ -1549,14 +2693,40 @@ object TrainingQueries {
     // (Summaries.olsFit). The regressor is the epoch-DAY long
     // (unix_micros DIV 86_400_000_000 — the epoch-µs convention,
     // integer both engines agree on), never a raw timestamp.
-    "w27_ols_trend" -> ((s, d) => {
+    QuerySpec("w27_ols_trend", (s, d) => {
       Summaries.olsFit(
           Tables.events(s, d),
           Seq(col("event_type")),
           expr("unix_micros(ts) div 86400000000").as("day"),
           col("value"))
         .orderBy(col("event_type"))
-    }),
+    }, oracle = Some(
+      // w27 replays olsFit's exact-decimal moments and the identical
+      // double expression tree (same parenthesization — a different op
+      // order could ulp-shift within round-6's tie window)
+      """WITH m AS (
+        |  SELECT event_type,
+        |    CAST(count(*) AS DOUBLE) AS n,
+        |    CAST(sum(CAST(day AS DECIMAL(38,10))) AS DOUBLE) AS sx,
+        |    CAST(sum(CAST(value AS DECIMAL(38,10))) AS DOUBLE) AS sy,
+        |    CAST(sum(CAST(day * value AS DECIMAL(38,10))) AS DOUBLE) AS sxy,
+        |    CAST(sum(CAST(day * day AS DECIMAL(38,10))) AS DOUBLE) AS sxx,
+        |    CAST(sum(CAST(value * value AS DECIMAL(38,10))) AS DOUBLE) AS syy
+        |  FROM (
+        |    SELECT event_type, epoch_us(ts) // 86400000000 AS day, value
+        |    FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
+        |  ) GROUP BY event_type
+        |)
+        |SELECT event_type, CAST(n AS BIGINT) AS n_obs,
+        |  round(CASE WHEN n * sxx - sx * sx > 0.0
+        |    THEN (n * sxy - sx * sy) / (n * sxx - sx * sx) END, 6) AS slope,
+        |  round(CASE WHEN n * sxx - sx * sx > 0.0
+        |    THEN (sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n
+        |    END, 6) AS intercept,
+        |  round(CASE WHEN n * sxx - sx * sx > 0.0 AND n * syy - sy * sy > 0.0
+        |    THEN ((n * sxy - sx * sy) * (n * sxy - sx * sy))
+        |      / ((n * sxx - sx * sx) * (n * syy - sy * sy)) END, 6) AS r2
+        |FROM m ORDER BY event_type""".stripMargin)),
 
     // W32 — full 4×4 Pearson correlation matrix over the lineitem
     // measures in ONE pass (Summaries.pearsonMatrix): 1 + 2k + C(k,2)
@@ -1568,11 +2738,48 @@ object TrainingQueries {
     // moment) keep the shared-moment trick honest; documented on the
     // operator. The oracle replays the identical moment sums and
     // double tree per cell and stacks the six rows with UNION ALL.
-    "w32_correlation_matrix" -> ((s, d) => {
+    QuerySpec("w32_correlation_matrix", (s, d) => {
       Summaries.pearsonMatrix(Tables.lineitem(s, d),
           Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
         .orderBy(col("col_a"), col("col_b"))
-    }),
+    }, oracle = Some(
+      // w32 replays pearsonMatrix: one complete-case moment CTE, then
+      // each cell's five scalars combine in the IDENTICAL double tree
+      // (cab / sqrt(va * vb), same parenthesization as the Spark
+      // Column expression) and the six cells stack via UNION ALL
+      {
+      val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+      val moments =
+        (cols.map(c =>
+          s"CAST(sum(CAST($c AS DECIMAL(38,10))) AS DOUBLE) AS s_$c") ++
+         cols.map(c =>
+           s"CAST(sum(CAST($c * $c AS DECIMAL(38,10))) AS DOUBLE) AS ss_$c") ++
+         (for { i <- cols.indices; j <- cols.indices if i < j }
+           yield {
+             val (a, b) = (cols(i), cols(j))
+             s"CAST(sum(CAST($a * $b AS DECIMAL(38,10))) AS DOUBLE) AS x_${a}_$b"
+           })).mkString(",\n        |    ")
+      val cells = (for { i <- cols.indices; j <- cols.indices if i < j }
+        yield {
+          val (a, b) = (cols(i), cols(j))
+          s"""SELECT '$a' AS col_a, '$b' AS col_b,
+             |  round(CASE WHEN n * ss_$a - s_$a * s_$a > 0.0
+             |         AND n * ss_$b - s_$b * s_$b > 0.0
+             |    THEN (n * x_${a}_$b - s_$a * s_$b)
+             |      / sqrt((n * ss_$a - s_$a * s_$a)
+             |             * (n * ss_$b - s_$b * s_$b)) END, 6) AS corr,
+             |  CAST(n AS BIGINT) AS n_obs FROM m""".stripMargin
+        }).mkString("\n        |  UNION ALL\n        |  ")
+      s"""WITH m AS (
+        |  SELECT CAST(count(*) AS DOUBLE) AS n,
+        |    $moments
+        |  FROM lineitem
+        |  WHERE ${cols.map(c => s"$c IS NOT NULL").mkString(" AND ")}
+        |)
+        |SELECT * FROM (
+        |  $cells
+        |) ORDER BY col_a, col_b""".stripMargin
+    })),
 
     // W28 — ROLLUP subtotal lattice (grouping sets): per-(returnflag,
     // linestatus) detail, per-returnflag subtotals and the grand total
@@ -1585,7 +2792,7 @@ object TrainingQueries {
     // coalesce to '(all)' so the output carries no NULLs and the
     // cross-engine NULL-ordering divergence (Spark NULLS FIRST vs
     // DuckDB NULLS LAST) never enters the ORDER BY.
-    "w28_rollup" -> ((s, d) => {
+    QuerySpec("w28_rollup", (s, d) => {
       Tables.lineitem(s, d)
         .rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(grouping_id().cast("long").as("gid"),
@@ -1597,7 +2804,22 @@ object TrainingQueries {
           coalesce(col("l_linestatus"), lit("(all)")).as("linestatus"),
           col("n_rows"), col("sum_qty"), col("sum_price"))
         .orderBy(col("gid"), col("returnflag"), col("linestatus"))
-    }),
+    }, oracle = Some(
+      // w28 replays the rollup lattice; GROUPING(a, b) carries the same
+      // bitmask (first column = MSB) in both engines, and the '(all)'
+      // coalesce keeps NULLs out of the ORDER BY (Spark NULLS FIRST vs
+      // DuckDB NULLS LAST would otherwise reorder subtotal rows)
+      """SELECT CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
+        |  coalesce(l_returnflag, '(all)') AS returnflag,
+        |  coalesce(l_linestatus, '(all)') AS linestatus,
+        |  count(*) AS n_rows,
+        |  CAST(round(sum(CAST(l_quantity AS DECIMAL(38,6))), 2) AS DOUBLE)
+        |    AS sum_qty,
+        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(38,6))), 2)
+        |    AS DOUBLE) AS sum_price
+        |FROM lineitem
+        |GROUP BY ROLLUP(l_returnflag, l_linestatus)
+        |ORDER BY gid, returnflag, linestatus""".stripMargin)),
 
     // T21 — Okapi BM25 ranked keyword retrieval (TextAnalysis.bm25):
     // tf saturation + length normalization over the t8 posting
@@ -1605,12 +2827,38 @@ object TrainingQueries {
     // broadcasts at |queryTerms| rows, corpus stats ride a 1-row
     // broadcast cross join. Per-term contributions round-6 after the
     // one ln() (t8 convention) and sum as exact DECIMAL(38,6).
-    "t21_bm25" -> ((s, d) => {
+    QuerySpec("t21_bm25", (s, d) => {
       TextAnalysis.bm25(Tables.documents(s, d),
           Seq("vector", "stream", "window"))
         .orderBy(col("score").desc, col("doc_id"))
         .limit(20)
-    }),
+    }, oracle = Some(
+      // t21 replays bm25 with the identical expression tree: ln once per
+      // (doc, term), round-6, decimal sum; constants pre-folded to
+      // (k1+1)=2.2 and (1-b)=0.25 in BOTH engines so the parse trees
+      // agree literal-for-literal
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
+        |), tf AS (
+        |  SELECT doc_id, term, count(*) AS cnt FROM tok GROUP BY doc_id, term
+        |), dl AS (
+        |  SELECT doc_id, sum(cnt) AS dl FROM tf GROUP BY doc_id
+        |), st AS (
+        |  SELECT count(*) AS n, CAST(sum(dl) AS DOUBLE) AS sumdl FROM dl
+        |), df AS (
+        |  SELECT term, count(*) AS df FROM tf
+        |  WHERE term IN ('vector', 'stream', 'window') GROUP BY term
+        |), w AS (
+        |  SELECT tf.doc_id,
+        |    round(ln(1.0 + (st.n - df.df + 0.5) / (df.df + 0.5))
+        |      * (tf.cnt * 2.2)
+        |      / (tf.cnt + 1.2 * (0.25 + (0.75 * dl.dl) / (st.sumdl / st.n))),
+        |      6) AS w
+        |  FROM tf JOIN df USING (term) JOIN dl USING (doc_id) CROSS JOIN st
+        |)
+        |SELECT doc_id, CAST(sum(CAST(w AS DECIMAL(38,6))) AS DOUBLE) AS score,
+        |  count(*) AS n_terms_hit
+        |FROM w GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 20""".stripMargin)),
 
     // X17 — EQUAL-FREQUENCY feature binning (quantile discretization):
     // bin k of n rows by global rank — ((rn−1)·k) div n, integer-exact
@@ -1621,7 +2869,7 @@ object TrainingQueries {
     // on one core (the o7 argument, reused on a second consumer). The
     // (value, orderkey, linenumber) tiebreak makes the rank — and so
     // every bin boundary — deterministic under ties.
-    "x17_equal_freq_binning" -> ((s, d) => {
+    QuerySpec("x17_equal_freq_binning", (s, d) => {
       val base = Tables.lineitem(s, d)
         .select(col("l_extendedprice").as("v"),
           col("l_orderkey"), col("l_linenumber"))
@@ -1634,7 +2882,20 @@ object TrainingQueries {
         .agg(count(lit(1)).as("n_rows"),
           min(col("v")).as("lo"), max(col("v")).as("hi"))
         .orderBy(col("bin"))
-    }),
+    }, oracle = Some(
+      // x17's oracle uses the single-task window DuckDB runs happily;
+      // the Spark side must NOT (globalRowNumber — the o7 argument). The
+      // bin formula is pure BIGINT arithmetic: div in Spark, // here.
+      """WITH r AS (
+        |  SELECT l_extendedprice AS v,
+        |    row_number() OVER
+        |      (ORDER BY l_extendedprice, l_orderkey, l_linenumber) AS rn,
+        |    count(*) OVER () AS n
+        |  FROM lineitem
+        |)
+        |SELECT ((rn - 1) * 8) // n AS bin, count(*) AS n_rows,
+        |  min(v) AS lo, max(v) AS hi
+        |FROM r GROUP BY bin ORDER BY bin""".stripMargin)),
 
     // T22 — classifier evaluation: per-class precision / recall / F1 of
     // the t2 language-ID heuristic against the labeled `lang` column —
@@ -1646,7 +2907,7 @@ object TrainingQueries {
     // surface with the right zeros. Ratios are exact-integer → double
     // single divisions (identical IEEE op both engines, unrounded —
     // the exactAvg rule); F1's guarded form never divides by zero.
-    "t22_langid_eval" -> ((s, d) => {
+    QuerySpec("t22_langid_eval", (s, d) => {
       val preds = Tables.documents(s, d)
         .select(col("lang").as("actual"),
           TextAnalysis.langId(col("text")).as("predicted"))
@@ -1674,7 +2935,51 @@ object TrainingQueries {
           when(coalesce(p, lit(0.0)) + coalesce(r, lit(0.0)) > 0,
             lit(2.0) * p * r / (p + r)).otherwise(lit(0.0)))
         .orderBy(col("cls"))
-    }),
+    }, oracle = Some(
+      // t22 replays t2's prediction SQL then stitches the three class
+      // counts exactly like the Spark side; ratios are single divisions
+      // of exact integers (identical IEEE result), unrounded
+      """WITH preds AS (
+        |  SELECT lang AS actual,
+        |    CASE WHEN s_en + s_es + s_de + s_fr > 0 THEN
+        |      CASE
+        |        WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
+        |        WHEN s_es >= s_en AND s_es >= s_de AND s_es >= s_fr THEN 'es'
+        |        WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr THEN 'de'
+        |        WHEN s_fr >= s_en AND s_fr >= s_es AND s_fr >= s_de THEN 'fr'
+        |        ELSE 'unknown' END
+        |    ELSE 'unknown' END AS predicted
+        |  FROM (SELECT lang,
+        |    CAST(len(list_filter(string_split(text, ' '),
+        |      x -> x IN ('the','a','of','and','to','in','is'))) AS BIGINT) AS s_en,
+        |    CAST(len(list_filter(string_split(text, ' '),
+        |      x -> x IN ('el','la','de','y','que','en','un'))) AS BIGINT) AS s_es,
+        |    CAST(len(list_filter(string_split(text, ' '),
+        |      x -> x IN ('der','die','das','und','ist','ein','zu'))) AS BIGINT) AS s_de,
+        |    CAST(len(list_filter(string_split(text, ' '),
+        |      x -> x IN ('le','la','de','et','est','un','dans'))) AS BIGINT) AS s_fr
+        |  FROM documents)
+        |), na AS (SELECT actual AS cls, count(*) AS n_actual FROM preds GROUP BY 1),
+        |np AS (SELECT predicted AS cls, count(*) AS n_predicted FROM preds GROUP BY 1),
+        |tp AS (SELECT actual AS cls, count(*) AS tp FROM preds
+        |       WHERE actual = predicted GROUP BY 1),
+        |base AS (
+        |  SELECT cls, coalesce(n_actual, 0) AS n_actual,
+        |    coalesce(n_predicted, 0) AS n_predicted, coalesce(tp, 0) AS tp
+        |  FROM na FULL OUTER JOIN np USING (cls) FULL OUTER JOIN tp USING (cls)
+        |), m AS (
+        |  SELECT cls, n_actual, n_predicted, tp,
+        |    CASE WHEN n_predicted > 0
+        |      THEN CAST(tp AS DOUBLE) / n_predicted END AS precision,
+        |    CASE WHEN n_actual > 0
+        |      THEN CAST(tp AS DOUBLE) / n_actual END AS recall
+        |  FROM base
+        |)
+        |SELECT cls, n_actual, n_predicted, tp, precision, recall,
+        |  CASE WHEN coalesce(precision, 0.0) + coalesce(recall, 0.0) > 0
+        |    THEN 2.0 * precision * recall / (precision + recall)
+        |    ELSE 0.0 END AS f1
+        |FROM m ORDER BY cls""".stripMargin)),
 
     // V13 — rolling z-score anomaly flags (leakage-free): each event
     // scored against the mean/std of its OWN user's previous 8 events
@@ -1688,7 +2993,7 @@ object TrainingQueries {
     // mean/variance/z derive through one identical double expression
     // tree. Sample variance (n−1); full-window-only (n = 8) — partial
     // baselines yield NULL z and never flag. One user_id exchange.
-    "v13_rolling_zscore" -> ((s, d) => {
+    QuerySpec("v13_rolling_zscore", (s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id"))
         .orderBy(col("us"), col("event_id"))
@@ -1711,7 +3016,34 @@ object TrainingQueries {
           coalesce(abs(col("z")) > 3.0, lit(false)))
         .select(col("event_id"), col("user_id"), col("z"), col("is_anomaly"))
         .orderBy(col("event_id"))
-    }),
+    }, oracle = Some(
+      // v13 replays the same rows-frame on centi-unit integers; windowed
+      // integer sums are association-free, so DuckDB's segment-tree
+      // window and Spark's running accumulation agree bit-for-bit, and
+      // the z expression is one shared double tree
+      """WITH e AS (
+        |  SELECT event_id, user_id, epoch_us(ts) AS us,
+        |    CAST(round(value * 100.0) AS BIGINT) AS vu
+        |  FROM events
+        |), s AS (
+        |  SELECT event_id, user_id, vu,
+        |    count(vu) OVER w AS n, sum(vu) OVER w AS s1,
+        |    sum(vu * vu) OVER w AS s2
+        |  FROM e
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id
+        |    ROWS BETWEEN 8 PRECEDING AND 1 PRECEDING)
+        |), z AS (
+        |  SELECT event_id, user_id,
+        |    CASE WHEN n = 8 AND CAST(n * s2 - s1 * s1 AS DOUBLE)
+        |        / CAST(n * (n - 1) AS DOUBLE) > 0
+        |      THEN round((CAST(vu AS DOUBLE) - CAST(s1 AS DOUBLE) / n)
+        |        / sqrt(CAST(n * s2 - s1 * s1 AS DOUBLE)
+        |          / CAST(n * (n - 1) AS DOUBLE)), 6) END AS z
+        |  FROM s
+        |)
+        |SELECT event_id, user_id, z,
+        |  coalesce(abs(z) > 3.0, false) AS is_anomaly
+        |FROM z ORDER BY event_id""".stripMargin)),
 
     // W29 — join-key skew profile: the pre-flight diagnostic a 100 TB
     // join plan starts from (decides broadcast vs salt vs AQE skew
@@ -1723,7 +3055,7 @@ object TrainingQueries {
     // there because frequencies have bounded cardinality (the w6
     // decision rule). avg_freq and top1_share stay unrounded
     // (exactAvg rule: single division of exact integers).
-    "w29_key_skew_profile" -> ((s, d) => {
+    QuerySpec("w29_key_skew_profile", (s, d) => {
       val li = Tables.lineitem(s, d)
       def profile(keyCol: String): DataFrame = {
         val freq = li.groupBy(col(keyCol)).agg(count(lit(1)).as("f"))
@@ -1742,7 +3074,30 @@ object TrainingQueries {
       profile("l_partkey").unionByName(profile("l_suppkey"))
         .unionByName(profile("l_orderkey"))
         .orderBy(col("key"))
-    }),
+    }, oracle = Some(
+      """WITH fp AS (SELECT l_partkey AS k, count(*) AS f FROM lineitem GROUP BY 1),
+        |fs AS (SELECT l_suppkey AS k, count(*) AS f FROM lineitem GROUP BY 1),
+        |fo AS (SELECT l_orderkey AS k, count(*) AS f FROM lineitem GROUP BY 1),
+        |p AS (
+        |  SELECT 'l_partkey' AS key, count(*) AS n_keys, sum(f) AS n_rows,
+        |    max(f) AS max_freq,
+        |    CAST(quantile_cont(f, 0.5) AS DOUBLE) AS p50_freq,
+        |    CAST(quantile_cont(f, 0.99) AS DOUBLE) AS p99_freq
+        |  FROM fp
+        |  UNION ALL
+        |  SELECT 'l_suppkey', count(*), sum(f), max(f),
+        |    CAST(quantile_cont(f, 0.5) AS DOUBLE),
+        |    CAST(quantile_cont(f, 0.99) AS DOUBLE) FROM fs
+        |  UNION ALL
+        |  SELECT 'l_orderkey', count(*), sum(f), max(f),
+        |    CAST(quantile_cont(f, 0.5) AS DOUBLE),
+        |    CAST(quantile_cont(f, 0.99) AS DOUBLE) FROM fo
+        |)
+        |SELECT key, n_keys, CAST(n_rows AS BIGINT) AS n_rows, max_freq,
+        |  CAST(max_freq AS DOUBLE)
+        |    / (CAST(n_rows AS DOUBLE) / n_keys) AS skew_ratio,
+        |  p50_freq, p99_freq
+        |FROM p ORDER BY key""".stripMargin)),
 
     // V18 — INTER-ARRIVAL time profile per event type: the gap
     // distribution (n, mean, exact p50/p95) between a user's
@@ -1755,7 +3110,7 @@ object TrainingQueries {
     // w6 decision rule's sort path), the mean is the exactAvg rule,
     // and the two per-type aggregates stitch on the bounded
     // event-type key.
-    "v18_interarrival" -> ((s, d) => {
+    QuerySpec("v18_interarrival", (s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id"))
         .orderBy(col("us"), col("event_id"))
@@ -1775,7 +3130,28 @@ object TrainingQueries {
         Seq("p50_gap_s" -> 0.5, "p95_gap_s" -> 0.95))
       stats.join(pcts, Seq("event_type"))
         .orderBy(col("event_type"))
-    }),
+    }, oracle = Some(
+      // w29: quantile_cont is DuckDB's (n−1)p linear interpolation —
+      // the same rank formula as Spark's exact percentile (the w6
+      // median convention, at two more quantiles)
+      // v18 replays the µs lag window, the integer-second div, the
+      // exactAvg mean and quantile_cont (≡ the Hive interpolation
+      // sortedPercentiles reproduces bit-for-bit — the w29 pairing)
+      """WITH g AS (
+        |  SELECT event_type,
+        |    (epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id
+        |      ORDER BY epoch_us(ts), event_id)) // 1000000 AS gap_s
+        |  FROM events
+        |)
+        |SELECT event_type, count(*) AS n_gaps,
+        |  CAST(sum(CAST(CAST(gap_s AS DOUBLE) AS DECIMAL(38,6)))
+        |    AS DOUBLE) / count(*) AS mean_gap_s,
+        |  CAST(quantile_cont(CAST(gap_s AS DOUBLE), 0.5) AS DOUBLE)
+        |    AS p50_gap_s,
+        |  CAST(quantile_cont(CAST(gap_s AS DOUBLE), 0.95) AS DOUBLE)
+        |    AS p95_gap_s
+        |FROM g WHERE gap_s IS NOT NULL
+        |GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
     // X18 — feature STANDARDIZATION (z-score scaling): the
     // fit-then-transform feature-prep pass every model input runs —
@@ -1787,7 +3163,7 @@ object TrainingQueries {
     // 200th row) keeps the oracle output bounded while the transform
     // itself is corpus-wide by construction. z rounds to 6 after the
     // one division (the shared float convention).
-    "x18_standardize" -> ((s, d) => {
+    QuerySpec("x18_standardize", (s, d) => {
       val li = Tables.lineitem(s, d)
       val stats = li.agg(
         count(lit(1)).cast("double").as("n"),
@@ -1804,7 +3180,22 @@ object TrainingQueries {
               - (col("sx") / col("n")) * (col("sx") / col("n"))), 6)
             .as("z"))
         .orderBy(col("l_orderkey"))
-    }),
+    }, oracle = Some(
+      // x18 replays the moment CTE and the identical (x−μ)/σ tree
+      """WITH m AS (
+        |  SELECT CAST(count(*) AS DOUBLE) AS n,
+        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(38,10))) AS DOUBLE)
+        |      AS sx,
+        |    CAST(sum(CAST(l_extendedprice * l_extendedprice
+        |      AS DECIMAL(38,10))) AS DOUBLE) AS sxx
+        |  FROM lineitem
+        |)
+        |SELECT l_orderkey, l_extendedprice,
+        |  round((l_extendedprice - sx / n)
+        |    / sqrt(sxx / n - (sx / n) * (sx / n)), 6) AS z
+        |FROM lineitem CROSS JOIN m
+        |WHERE l_orderkey % 200 = 0 AND l_linenumber = 1
+        |ORDER BY l_orderkey""".stripMargin)),
 
     // O13 — integrity REPAIR (o12's apply stage): quarantine FK
     // orphans instead of just counting them — the clean side continues
@@ -1814,7 +3205,7 @@ object TrainingQueries {
     // clean pass-through — two joins against the same broadcast key
     // side, no row ever silently dropped: clean + quarantined = input
     // (asserted by the audit row the query emits).
-    "o13_integrity_repair" -> ((s, d) => {
+    QuerySpec("o13_integrity_repair", (s, d) => {
       val ordAug = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"))
         .unionByName(Tables.orders(s, d)
@@ -1834,7 +3225,23 @@ object TrainingQueries {
         .select(col("n_input"), col("n_clean"), col("n_quarantined"),
           (col("n_clean") + col("n_quarantined") === col("n_input"))
             .as("partitioned"))
-    }),
+    }, oracle = Some(
+      // o13 replays the augmentation and counts both sides of the
+      // semi/anti partition
+      """WITH ord_aug AS (
+        |  SELECT o_orderkey, o_custkey FROM orders
+        |  UNION ALL SELECT o_orderkey + 10000000, o_custkey + 10000000
+        |  FROM orders WHERE o_orderkey % 50 = 0
+        |)
+        |SELECT count(*) AS n_input,
+        |  CAST(sum(CASE WHEN EXISTS (SELECT 1 FROM customer c
+        |    WHERE c.c_custkey = o.o_custkey) THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS n_clean,
+        |  CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM customer c
+        |    WHERE c.c_custkey = o.o_custkey) THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS n_quarantined,
+        |  true AS partitioned
+        |FROM ord_aug o""".stripMargin)),
 
     // W36 — WEIGHTED median (SURVEY §7.4's named extension): per
     // returnflag, the price point at which half the shipped QUANTITY
@@ -1843,12 +3250,31 @@ object TrainingQueries {
     // 50× more than a 1-unit one). Summaries.weightedMedian: one group
     // exchange, one in-group sort, integer cumulative-weight threshold
     // (2·cumw ≥ W — no float can ulp-flip it), min-over-qualifying.
-    "w36_weighted_median" -> ((s, d) => {
+    QuerySpec("w36_weighted_median", (s, d) => {
       Summaries.weightedMedian(Tables.lineitem(s, d),
           Seq("l_returnflag"), col("l_extendedprice"), col("l_quantity"),
           Seq(col("l_orderkey"), col("l_linenumber")))
         .orderBy(col("l_returnflag"))
-    }),
+    }, oracle = Some(
+      // w36 replays the ordered cumulative-weight frame and the integer
+      // threshold
+      """WITH f AS (
+        |  SELECT l_returnflag, l_extendedprice AS v,
+        |    CAST(floor(l_quantity) AS BIGINT) AS w, l_orderkey, l_linenumber
+        |  FROM lineitem
+        |  WHERE l_extendedprice IS NOT NULL
+        |    AND CAST(floor(l_quantity) AS BIGINT) > 0
+        |), c AS (
+        |  SELECT l_returnflag, v, w,
+        |    sum(w) OVER (PARTITION BY l_returnflag
+        |      ORDER BY v, l_orderkey, l_linenumber
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumw,
+        |    sum(w) OVER (PARTITION BY l_returnflag) AS tot
+        |  FROM f
+        |)
+        |SELECT l_returnflag, CAST(max(tot) AS BIGINT) AS total_weight,
+        |  min(CASE WHEN cumw * 2 >= tot THEN v END) AS weighted_median
+        |FROM c GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
     // W35 — GINI coefficient of customer spend per nation (the
     // inequality/concentration analytic w33's HHI doesn't give: HHI
@@ -1863,7 +3289,7 @@ object TrainingQueries {
     // guard. rank·cents multiplies in BIGINT then casts — bounded by
     // n·max_spend; at a scale where that nears 2⁶³, multiply in
     // decimal instead (documented trade).
-    "w35_gini_spend" -> ((s, d) => {
+    QuerySpec("w35_gini_spend", (s, d) => {
       val spend = Tables.customer(s, d)
         .select(col("c_custkey"), col("c_nationkey"))
         .join(Tables.orders(s, d)
@@ -1889,7 +3315,31 @@ object TrainingQueries {
             (lit(2.0) * col("sxi") - (col("n") + lit(1.0)) * col("sx"))
               / (col("n") * col("sx"))), 6).as("gini"))
         .orderBy(col("n_name"))
-    }),
+    }, oracle = Some(
+      // w35 replays the integer-cent quantization, the identical
+      // per-nation rank window and the same Gini double tree
+      """WITH spend AS (
+        |  SELECT c.c_custkey, c.c_nationkey,
+        |    CAST(coalesce(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)),
+        |      0) AS BIGINT) AS cents
+        |  FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
+        |  GROUP BY c.c_custkey, c.c_nationkey
+        |), ranked AS (
+        |  SELECT c_nationkey, cents,
+        |    row_number() OVER (PARTITION BY c_nationkey
+        |      ORDER BY cents, c_custkey) AS rnk
+        |  FROM spend
+        |), agg AS (
+        |  SELECT c_nationkey, CAST(count(*) AS DOUBLE) AS n,
+        |    CAST(sum(CAST(cents AS DECIMAL(38,0))) AS DOUBLE) AS sx,
+        |    CAST(sum(CAST(rnk * cents AS DECIMAL(38,0))) AS DOUBLE) AS sxi
+        |  FROM ranked GROUP BY c_nationkey
+        |)
+        |SELECT n_name, CAST(n AS BIGINT) AS n_customers,
+        |  round(CASE WHEN sx > 0.0
+        |    THEN (2.0 * sxi - (n + 1.0) * sx) / (n * sx) END, 6) AS gini
+        |FROM agg JOIN nation ON c_nationkey = n_nationkey
+        |ORDER BY n_name""".stripMargin)),
 
     // W33 — corpus DIVERSITY profile per source: language entropy
     // (Shannon, nats), Herfindahl concentration (HHI = Σ p²), language
@@ -1904,7 +3354,7 @@ object TrainingQueries {
     // unrounded); HHI's numerator Σ cnt² accumulates in exact DECIMAL
     // and the n² denominator squares in double, so NEITHER side wraps
     // past 2³¹-row sources (the 100 TB consideration).
-    "w33_diversity_profile" -> ((s, d) => {
+    QuerySpec("w33_diversity_profile", (s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("source"))
       Tables.documents(s, d)
@@ -1927,7 +3377,27 @@ object TrainingQueries {
             .as("hhi"),
           (max(col("cnt")) * lit(1.0) / max(col("n"))).as("top_share"))
         .orderBy(col("source"))
-    }),
+    }, oracle = Some(
+      // w33 replays the diversity profile: same (source,lang) counts,
+      // same per-source window total (one partition), the t23 round-6-ln
+      // entropy system and the exact-integer/double-denominator ratios
+      """WITH c AS (
+        |  SELECT source, lang, count(*) AS cnt
+        |  FROM documents GROUP BY source, lang
+        |), t AS (
+        |  SELECT source, lang, cnt,
+        |    sum(cnt) OVER (PARTITION BY source) AS n FROM c
+        |), l AS (
+        |  SELECT source, cnt, n, round(ln(cnt * 1.0 / n), 6) AS lp FROM t
+        |)
+        |SELECT source, CAST(max(n) AS BIGINT) AS n_docs,
+        |  count(*) AS n_langs,
+        |  -CAST(sum(CAST(lp AS DECIMAL(38,6)) * cnt) AS DOUBLE) / max(n)
+        |    AS lang_entropy,
+        |  CAST(sum(CAST(cnt AS DECIMAL(38,0)) * cnt) AS DOUBLE)
+        |    / (CAST(max(n) AS DOUBLE) * CAST(max(n) AS DOUBLE)) AS hhi,
+        |  max(cnt) * 1.0 / max(n) AS top_share
+        |FROM l GROUP BY source ORDER BY source""".stripMargin)),
 
     // S19 — STRATIFIED k-fold assignment: deterministic 5-fold
     // cross-validation splits that preserve per-language proportions —
@@ -1940,7 +3410,7 @@ object TrainingQueries {
     // export yields byte-identical folds. Output: per (fold, lang)
     // cell counts + per-cell char mass — the audit a CV harness
     // actually reads.
-    "s19_stratified_kfold" -> ((s, d) => {
+    QuerySpec("s19_stratified_kfold", (s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("lang"))
         .orderBy(col("h"), col("doc_id"))
@@ -1952,7 +3422,22 @@ object TrainingQueries {
         .groupBy(col("fold"), col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
         .orderBy(col("fold"), col("lang"))
-    }),
+    }, oracle = Some(
+      // s19 replays the stratified fold assignment via the s13 seeded-md5
+      // order and the identical per-lang rank window
+      """WITH h AS (
+        |  SELECT doc_id, lang, n_chars,
+        |    md5('fold42:' || CAST(doc_id AS VARCHAR)) AS h
+        |  FROM documents
+        |), f AS (
+        |  SELECT lang, n_chars,
+        |    (row_number() OVER (PARTITION BY lang ORDER BY h, doc_id) - 1) % 5
+        |      AS fold
+        |  FROM h
+        |)
+        |SELECT fold, lang, count(*) AS n_docs,
+        |  CAST(sum(n_chars) AS BIGINT) AS n_chars
+        |FROM f GROUP BY fold, lang ORDER BY fold, lang""".stripMargin)),
 
     // V14 — cumulative unique users (the reach curve): per-day NEW
     // users (each user counted on their first event day) plus the
@@ -1964,7 +3449,7 @@ object TrainingQueries {
     // bounded-single-partition exception, on a ~30-row frame). Days
     // are epoch-day longs (integer div of epoch-µs — the v9
     // convention).
-    "v14_cumulative_uniques" -> ((s, d) => {
+    QuerySpec("v14_cumulative_uniques", (s, d) => {
       val w = org.apache.spark.sql.expressions.Window.orderBy(col("day"))
         .rowsBetween(org.apache.spark.sql.expressions.Window
           .unboundedPreceding, 0)
@@ -1974,7 +3459,18 @@ object TrainingQueries {
         .groupBy(col("day")).agg(count(lit(1)).as("new_users"))
         .withColumn("cum_users", sum(col("new_users")).over(w))
         .orderBy(col("day"))
-    }),
+    }, oracle = Some(
+      """WITH f AS (
+        |  SELECT user_id, min(epoch_us(ts) // 86400000000) AS day
+        |  FROM events GROUP BY user_id
+        |), dd AS (
+        |  SELECT day, count(*) AS new_users FROM f GROUP BY day
+        |)
+        |SELECT day, new_users,
+        |  CAST(sum(new_users) OVER (ORDER BY day
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+        |    AS cum_users
+        |FROM dd ORDER BY day""".stripMargin)),
 
     // T24 — Zipf rank-frequency fit: OLS of ln(freq) on ln(rank) over
     // the corpus vocabulary — the corpus-statistics diagnostic (natural
@@ -1985,7 +3481,7 @@ object TrainingQueries {
     // the rank is a row_number over the BOUNDED vocabulary frame (the
     // t8 vocab-size contract), and the fit is exact-decimal moments +
     // one shared double expression tree.
-    "t24_zipf_fit" -> ((s, d) => {
+    QuerySpec("t24_zipf_fit", (s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .orderBy(col("freq").desc, col("word"))
       val ranked = Tables.spread(Tables.documents(s, d))
@@ -1996,7 +3492,39 @@ object TrainingQueries {
           round(log(col("rank").cast("double")), 6),
           round(log(col("freq").cast("double")), 6))
         .orderBy(col("corpus"))
-    }),
+    }, oracle = Some(
+      // t24 replays the ranked vocabulary and w27's exact-decimal moment
+      // system over round-6 ln values
+      """WITH tok AS (
+        |  SELECT unnest(string_split(text, ' ')) AS word FROM documents
+        |), v AS (
+        |  SELECT word, count(*) AS freq FROM tok GROUP BY word
+        |), r AS (
+        |  SELECT freq, row_number() OVER (ORDER BY freq DESC, word) AS rank
+        |  FROM v
+        |), xy AS (
+        |  SELECT round(ln(CAST(rank AS DOUBLE)), 6) AS x,
+        |    round(ln(CAST(freq AS DOUBLE)), 6) AS y
+        |  FROM r
+        |), m AS (
+        |  SELECT 'vocab' AS corpus, CAST(count(*) AS DOUBLE) AS n,
+        |    CAST(sum(CAST(x AS DECIMAL(38,10))) AS DOUBLE) AS sx,
+        |    CAST(sum(CAST(y AS DECIMAL(38,10))) AS DOUBLE) AS sy,
+        |    CAST(sum(CAST(x * y AS DECIMAL(38,10))) AS DOUBLE) AS sxy,
+        |    CAST(sum(CAST(x * x AS DECIMAL(38,10))) AS DOUBLE) AS sxx,
+        |    CAST(sum(CAST(y * y AS DECIMAL(38,10))) AS DOUBLE) AS syy
+        |  FROM xy
+        |)
+        |SELECT corpus, CAST(n AS BIGINT) AS n_obs,
+        |  round(CASE WHEN n * sxx - sx * sx > 0.0
+        |    THEN (n * sxy - sx * sy) / (n * sxx - sx * sx) END, 6) AS slope,
+        |  round(CASE WHEN n * sxx - sx * sx > 0.0
+        |    THEN (sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n
+        |    END, 6) AS intercept,
+        |  round(CASE WHEN n * sxx - sx * sx > 0.0 AND n * syy - sy * sy > 0.0
+        |    THEN ((n * sxy - sx * sy) * (n * sxy - sx * sy))
+        |      / ((n * sxx - sx * sx) * (n * syy - sy * sy)) END, 6) AS r2
+        |FROM m ORDER BY corpus""".stripMargin)),
 
     // T26 — add-one-smoothed BIGRAM LM cross-entropy per doc: the
     // context-aware step up from t23's unigram perplexity proxy (a doc
@@ -2009,7 +3537,7 @@ object TrainingQueries {
     // final per-bigram division unrounded. The corpus bigram-count
     // join is a plain equi-join (no broadcast hint — the bigram vocab
     // is the n-gram case t8's escape hatch documents).
-    "t26_bigram_lm" -> ((s, d) => {
+    QuerySpec("t26_bigram_lm", (s, d) => {
       val docs = Tables.spread(Tables.documents(s, d))
         .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
         .localCheckpoint(eager = false) // bigram AND unigram passes
@@ -2034,7 +3562,35 @@ object TrainingQueries {
         .select(col("doc_id"), col("nb"),
           (-col("nll").cast("double") / col("nb")).as("bigram_ce"))
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      // t26 replays the smoothed bigram LM: positional bigram assembly
+      // via range(1, len), the identical (cbg+1)/(cw1+V) round-6 ln,
+      // c·lp in exact decimal, per-bigram division unrounded
+      """WITH t AS (
+        |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+        |), b AS (
+        |  SELECT doc_id, toks[i] || ' ' || toks[i + 1] AS bg
+        |  FROM (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i FROM t)
+        |), bgc AS (
+        |  SELECT doc_id, bg, count(*) AS c FROM b GROUP BY doc_id, bg
+        |), cbg AS (
+        |  SELECT bg, sum(c) AS cbg FROM bgc GROUP BY bg
+        |), uni AS (
+        |  SELECT word, count(*) AS cw1 FROM (
+        |    SELECT unnest(string_split(text, ' ')) AS word FROM documents
+        |  ) GROUP BY word
+        |), v AS (SELECT count(*) AS v FROM uni),
+        |sc AS (
+        |  SELECT bgc.doc_id, bgc.c,
+        |    round(ln((cbg.cbg + 1) * 1.0 / (uni.cw1 + v.v)), 6) AS lp
+        |  FROM bgc JOIN cbg USING (bg)
+        |  JOIN uni ON string_split(bgc.bg, ' ')[1] = uni.word
+        |  CROSS JOIN v
+        |)
+        |SELECT doc_id, CAST(sum(c) AS BIGINT) AS nb,
+        |  -CAST(sum(CAST(lp AS DECIMAL(38,6)) * c) AS DOUBLE) / sum(c)
+        |    AS bigram_ce
+        |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
     // G10 — degree ASSORTATIVITY of the trading graph: the Pearson
     // correlation of endpoint degrees across edges (do hubs attach to
@@ -2051,7 +3607,7 @@ object TrainingQueries {
     // g10_assortativity_*.txt). Then one five-moment hash aggregate.
     // Integer degrees make every decimal moment exact; the closed form
     // is w8's rounded double tree.
-    "g10_assortativity" -> ((s, d) => {
+    QuerySpec("g10_assortativity", (s, d) => {
       val edges = tradingEdges(s, d)
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .localCheckpoint(eager = false) // joins both endpoints
@@ -2072,7 +3628,36 @@ object TrainingQueries {
         .transform(df => Summaries.pearson(df, Seq(col("graph")),
           col("deg_src").cast("double"), col("deg_dst").cast("double")))
         .orderBy(col("graph"))
-    }),
+    }, oracle = Some(
+      // g10 replays the degree frame + double edge join and the w8
+      // exact-moment correlation tree
+      """WITH ce AS (
+        |  SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS c,
+        |    's' || CAST(l_suppkey AS VARCHAR) AS s
+        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |), e AS (
+        |  SELECT c AS src, s AS dst FROM ce
+        |  UNION ALL SELECT s, c FROM ce
+        |), deg AS (
+        |  SELECT src, count(*) AS deg FROM e GROUP BY src
+        |), xy AS (
+        |  SELECT 'trading' AS graph, CAST(a.deg AS DOUBLE) AS x,
+        |    CAST(b.deg AS DOUBLE) AS y
+        |  FROM e JOIN deg a ON e.src = a.src JOIN deg b ON e.dst = b.src
+        |), m AS (
+        |  SELECT graph, CAST(count(*) AS DOUBLE) AS n,
+        |    CAST(sum(CAST(x AS DECIMAL(38,10))) AS DOUBLE) AS sx,
+        |    CAST(sum(CAST(y AS DECIMAL(38,10))) AS DOUBLE) AS sy,
+        |    CAST(sum(CAST(x * y AS DECIMAL(38,10))) AS DOUBLE) AS sxy,
+        |    CAST(sum(CAST(x * x AS DECIMAL(38,10))) AS DOUBLE) AS sxx,
+        |    CAST(sum(CAST(y * y AS DECIMAL(38,10))) AS DOUBLE) AS syy
+        |  FROM xy GROUP BY graph
+        |)
+        |SELECT graph,
+        |  round((n * sxy - sx * sy)
+        |    / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
+        |    AS corr_xy
+        |FROM m ORDER BY graph""".stripMargin)),
 
     // G9 — degree distribution + power-law fit on the trading graph:
     // the first diagnostic a graph pipeline runs (is this scale-free
@@ -2083,7 +3668,7 @@ object TrainingQueries {
     // degrees) rides Summaries.olsFit over the |distinct degrees|-row
     // frame; the 4-column fit broadcasts back onto every histogram
     // row.
-    "g9_degree_dist" -> ((s, d) => {
+    QuerySpec("g9_degree_dist", (s, d) => {
       val hist = tradingEdges(s, d)
         .groupBy(col("src")).agg(count(lit(1)).as("degree"))
         .groupBy(col("degree")).agg(count(lit(1)).as("n_nodes"))
@@ -2094,7 +3679,40 @@ object TrainingQueries {
           round(log(col("n_nodes").cast("double")), 6))
         .select(col("slope"), col("r2"))
       hist.crossJoin(broadcast(fit)).orderBy(col("degree"))
-    }),
+    }, oracle = Some(
+      // g9 replays the degree histogram and the t24-style ln-ln moment
+      // fit, cross-joined back onto every histogram row
+      """WITH ce AS (
+        |  SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS c,
+        |    's' || CAST(l_suppkey AS VARCHAR) AS s
+        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |), e AS (
+        |  SELECT c AS src FROM ce UNION ALL SELECT s FROM ce
+        |), deg AS (
+        |  SELECT src, count(*) AS degree FROM e GROUP BY src
+        |), h AS (
+        |  SELECT degree, count(*) AS n_nodes FROM deg GROUP BY degree
+        |), xy AS (
+        |  SELECT degree, n_nodes,
+        |    round(ln(CAST(degree AS DOUBLE)), 6) AS x,
+        |    round(ln(CAST(n_nodes AS DOUBLE)), 6) AS y
+        |  FROM h
+        |), m AS (
+        |  SELECT CAST(count(*) AS DOUBLE) AS n,
+        |    CAST(sum(CAST(x AS DECIMAL(38,10))) AS DOUBLE) AS sx,
+        |    CAST(sum(CAST(y AS DECIMAL(38,10))) AS DOUBLE) AS sy,
+        |    CAST(sum(CAST(x * y AS DECIMAL(38,10))) AS DOUBLE) AS sxy,
+        |    CAST(sum(CAST(x * x AS DECIMAL(38,10))) AS DOUBLE) AS sxx,
+        |    CAST(sum(CAST(y * y AS DECIMAL(38,10))) AS DOUBLE) AS syy
+        |  FROM xy
+        |)
+        |SELECT h.degree, h.n_nodes,
+        |  round(CASE WHEN n * sxx - sx * sx > 0.0
+        |    THEN (n * sxy - sx * sy) / (n * sxx - sx * sx) END, 6) AS slope,
+        |  round(CASE WHEN n * sxx - sx * sx > 0.0 AND n * syy - sy * sy > 0.0
+        |    THEN ((n * sxy - sx * sy) * (n * sxy - sx * sy))
+        |      / ((n * sxx - sx * sx) * (n * syy - sy * sy)) END, 6) AS r2
+        |FROM h CROSS JOIN m ORDER BY h.degree""".stripMargin)),
 
     // T23 — unigram cross-entropy quality score (the perplexity-proxy
     // filter): each document scored by −Σ tf·ln(p(term)) / len against
@@ -2107,7 +3725,7 @@ object TrainingQueries {
     // final per-token division stays unrounded (exactAvg rule). The
     // vocabulary frame broadcasts (bounded vocab — same contract and
     // same n-gram escape hatch as t8).
-    "t23_unigram_logprob" -> ((s, d) => {
+    QuerySpec("t23_unigram_logprob", (s, d) => {
       val tokc = Tables.spread(Tables.documents(s, d))
         .select(col("doc_id"),
           explode(TextAnalysis.tokens(col("text"))).as("word"))
@@ -2125,7 +3743,25 @@ object TrainingQueries {
         .select(col("doc_id"), col("nt"),
           (-col("nll").cast("double") / col("nt")).as("cross_entropy"))
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      // t23 replays the LM with the shared rounded system: one ln per
+      // vocabulary term rounded to 6 dp, c·lp in exact decimal, final
+      // per-token division unrounded
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
+        |), tf AS (
+        |  SELECT doc_id, word, count(*) AS c FROM tok GROUP BY doc_id, word
+        |), vocab AS (
+        |  SELECT word, sum(c) AS freq FROM tf GROUP BY word
+        |), tot AS (SELECT sum(freq) AS tot FROM vocab),
+        |w AS (
+        |  SELECT doc_id, c, round(ln(freq * 1.0 / tot), 6) AS lp
+        |  FROM tf JOIN vocab USING (word) CROSS JOIN tot
+        |)
+        |SELECT doc_id, CAST(sum(c) AS BIGINT) AS nt,
+        |  -CAST(sum(CAST(lp AS DECIMAL(38,6)) * c) AS DOUBLE) / sum(c)
+        |    AS cross_entropy
+        |FROM w GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
     // G6 — per-edge common-neighbor Jaccard on the support-≥2
     // co-purchase graph (the g5 graph): link strength for related-item
@@ -2134,10 +3770,57 @@ object TrainingQueries {
     // triangle witnesses its three edges once — an explode, not a new
     // join), so the common-neighbor count never pays an unoriented
     // wedge blowup; the Jaccard is one division of exact integers.
-    "g6_edge_jaccard" -> ((s, d) => {
+    QuerySpec("g6_edge_jaccard", (s, d) => {
       graft.operators.Graph.edgeJaccard(CoPurchasePairs(s, d))
         .orderBy(col("a"), col("b"))
-    }),
+    }, oracle = Some(
+      // g6 reuses g5's oriented-triangle CTE chain; each triangle
+      // witnesses its three edges, the count left-joins back to the
+      // canonical edge set (no-common edges score 0.0), and the Jaccard
+      // is the same single integer division as the Spark side
+      """WITH und AS (
+        |  SELECT x.l_partkey AS a, y.l_partkey AS b
+        |  FROM lineitem x JOIN lineitem y ON x.l_orderkey = y.l_orderkey
+        |    AND x.l_partkey < y.l_partkey
+        |  GROUP BY a, b HAVING count(*) >= 2
+        |), deg AS (
+        |  SELECT node, count(*) AS deg FROM (
+        |    SELECT a AS node FROM und UNION ALL SELECT b FROM und
+        |  ) GROUP BY node
+        |), o AS (
+        |  SELECT
+        |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
+        |         THEN u.a ELSE u.b END AS src,
+        |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
+        |         THEN u.b ELSE u.a END AS dst,
+        |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
+        |         THEN db.deg ELSE da.deg END AS ddeg
+        |  FROM und u
+        |  JOIN deg da ON u.a = da.node
+        |  JOIN deg db ON u.b = db.node
+        |), tri AS (
+        |  SELECT e1.src AS u, e1.dst AS v, e2.dst AS w
+        |  FROM o e1 JOIN o e2 ON e1.src = e2.src
+        |    AND (e1.ddeg < e2.ddeg
+        |      OR (e1.ddeg = e2.ddeg AND e1.dst < e2.dst))
+        |  WHERE EXISTS (
+        |    SELECT 1 FROM o e3 WHERE e3.src = e1.dst AND e3.dst = e2.dst)
+        |), wit AS (
+        |  SELECT least(x, y) AS a, greatest(x, y) AS b, count(*) AS common
+        |  FROM (
+        |    SELECT v AS x, w AS y FROM tri
+        |    UNION ALL SELECT u, w FROM tri
+        |    UNION ALL SELECT u, v FROM tri
+        |  ) GROUP BY 1, 2
+        |)
+        |SELECT u.a, u.b, coalesce(wit.common, 0) AS common,
+        |  CAST(coalesce(wit.common, 0) AS DOUBLE)
+        |    / (da.deg + db.deg - coalesce(wit.common, 0)) AS jaccard
+        |FROM und u
+        |LEFT JOIN wit ON u.a = wit.a AND u.b = wit.b
+        |JOIN deg da ON u.a = da.node
+        |JOIN deg db ON u.b = db.node
+        |ORDER BY u.a, u.b""".stripMargin)),
 
     // O8 — CDC upsert/delete merge (MERGE INTO semantics without a
     // table format): apply a keyed change stream to a snapshot — the
@@ -2149,7 +3832,7 @@ object TrainingQueries {
     // sort is removed by keeping snapshot and changes bucketBy(key)
     // on disk (the s12 layout): the SMJ then reads both pre-sorted,
     // zero exchanges.
-    "o8_cdc_merge" -> ((s, d) => {
+    QuerySpec("o8_cdc_merge", (s, d) => {
       val snap = Tables.customer(s, d)
         .select(col("c_custkey").as("key"), col("c_acctbal").as("value"))
       val w = org.apache.spark.sql.expressions.Window
@@ -2165,7 +3848,22 @@ object TrainingQueries {
         .select(col("key"), coalesce(col("new_value"), col("value"))
           .as("value"))
         .orderBy(col("key"))
-    }),
+    }, oracle = Some(
+      """WITH ch AS (
+        |  SELECT o_custkey AS key, o_orderkey AS seq,
+        |    o_orderstatus = 'F' AS tombstone, o_totalprice AS new_value
+        |  FROM orders
+        |), latest AS (
+        |  SELECT key, tombstone, new_value FROM (
+        |    SELECT *, row_number() OVER (PARTITION BY key ORDER BY seq DESC)
+        |      AS rn FROM ch)
+        |  WHERE rn = 1
+        |)
+        |SELECT COALESCE(c.c_custkey, l.key) AS key,
+        |  COALESCE(l.new_value, c.c_acctbal) AS value
+        |FROM customer c FULL OUTER JOIN latest l ON c.c_custkey = l.key
+        |WHERE NOT COALESCE(l.tombstone, false)
+        |ORDER BY key""".stripMargin)),
 
     // O9 — SCD2 dimension history (the interval twin of o8's
     // latest-state merge): per-user event_type runs collapse into
@@ -2173,12 +3871,36 @@ object TrainingQueries {
     // version flagged. Gaps-and-islands on value CHANGES (v8's
     // machinery pointed at attribute transitions instead of time
     // gaps); everything rides one user_id exchange.
-    "o9_scd2_history" -> ((s, d) => {
+    QuerySpec("o9_scd2_history", (s, d) => {
       WindowOps.scd2History(Tables.events(s, d), keyCol = "user_id",
           attrCol = "event_type", tsCol = "ts",
           orderCols = Seq(col("ts"), col("event_id")))
         .orderBy(col("user_id"), col("version"))
-    }),
+    }, oracle = Some(
+      """WITH e AS (
+        |  SELECT user_id, event_id, ts, event_type,
+        |    CAST(floor(epoch(ts)) AS BIGINT) AS secs
+        |  FROM events
+        |), m AS (
+        |  SELECT *, CASE WHEN lag(1) OVER w IS NULL OR lag(event_type)
+        |    OVER w IS DISTINCT FROM event_type THEN 1 ELSE 0 END AS chg
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
+        |), r AS (
+        |  SELECT *, CAST(sum(chg) OVER (PARTITION BY user_id
+        |    ORDER BY epoch_us(ts), event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+        |    AS version
+        |  FROM m
+        |), runs AS (
+        |  SELECT user_id, version, event_type, min(secs) AS valid_from,
+        |    count(*) AS n_events
+        |  FROM r GROUP BY user_id, version, event_type
+        |)
+        |SELECT user_id, version, event_type, valid_from,
+        |  lead(valid_from) OVER wv AS valid_to, n_events,
+        |  lead(valid_from) OVER wv IS NULL AS is_current
+        |FROM runs WINDOW wv AS (PARTITION BY user_id ORDER BY version)
+        |ORDER BY user_id, version""".stripMargin)),
 
     // J11 — POINT-IN-TIME dimension join (the feature-store /
     // warehouse correctness join): each purchase event joins the SCD2
@@ -2193,7 +3915,7 @@ object TrainingQueries {
     // integer µs division. The oracle replays the dim CTE chain and
     // uses DuckDB's native ASOF LEFT JOIN — two independent
     // formulations of the same semantics agreeing is the point.
-    "j11_pit_join" -> ((s, d) => {
+    QuerySpec("j11_pit_join", (s, d) => {
       val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
         unix_micros(col("ts")).as("us"), col("event_type"))
       // same-µs tie collapse (the v17 simultaneous-click rule): two
@@ -2223,7 +3945,40 @@ object TrainingQueries {
           col("version"),
           expr("(us - valid_from) div 1000000").as("state_age_s"))
         .orderBy(col("event_id"))
-    }),
+    }, oracle = Some(
+      // j11 replays the non-purchase SCD2 dim (o9's CTE chain at µs
+      // grain) and does the PIT lookup with DuckDB's native ASOF LEFT
+      // JOIN — an independent formulation of the as-of-union semantics
+      """WITH np AS (
+        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us
+        |  FROM events WHERE event_type <> 'purchase'
+        |), m AS (
+        |  SELECT *, CASE WHEN lag(1) OVER w IS NULL OR lag(event_type)
+        |    OVER w IS DISTINCT FROM event_type THEN 1 ELSE 0 END AS chg
+        |  FROM np WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
+        |), r AS (
+        |  SELECT *, CAST(sum(chg) OVER (PARTITION BY user_id
+        |    ORDER BY us, event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+        |    AS version
+        |  FROM m
+        |), dim0 AS (
+        |  SELECT user_id, version, event_type AS state_type,
+        |    min(us) AS valid_from
+        |  FROM r GROUP BY user_id, version, event_type
+        |), dim AS (
+        |  SELECT * FROM dim0
+        |  QUALIFY row_number() OVER (PARTITION BY user_id, valid_from
+        |    ORDER BY version DESC) = 1
+        |), purch AS (
+        |  SELECT event_id, user_id, epoch_us(ts) AS us
+        |  FROM events WHERE event_type = 'purchase'
+        |)
+        |SELECT p.event_id, p.user_id, d.state_type, d.version,
+        |  (p.us - d.valid_from) // 1000000 AS state_age_s
+        |FROM purch p ASOF LEFT JOIN dim d
+        |  ON p.user_id = d.user_id AND p.us >= d.valid_from
+        |ORDER BY p.event_id""".stripMargin)),
 
     // O10 — corpus snapshot diff: classify every doc id across two
     // corpus versions as added / removed / changed / unchanged by
@@ -2236,7 +3991,7 @@ object TrainingQueries {
     // do; every verdict class is populated at sf0.01 (20 added /
     // 29 changed / 22 removed / 449 unchanged), so each branch of the
     // classifier discriminates.
-    "o10_snapshot_diff" -> ((s, d) => {
+    QuerySpec("o10_snapshot_diff", (s, d) => {
       // v1 feeds the diff's old side AND both v2 branches — one
       // materialization, not three document scans (t8/e3 convention)
       val v1 = Tables.documents(s, d).select(col("doc_id"), col("text"))
@@ -2249,7 +4004,28 @@ object TrainingQueries {
       graft.operators.Joins.snapshotDiff(v1, v2, "doc_id",
           df => md5(df("text").cast("binary")))
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      """WITH v1 AS (
+        |  SELECT doc_id, text FROM documents
+        |), v2 AS (
+        |  SELECT doc_id,
+        |    CASE WHEN doc_id % 17 = 3 THEN text || ' v2' ELSE text END AS text
+        |  FROM documents WHERE doc_id % 23 <> 5
+        |  UNION ALL
+        |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 25 = 0
+        |), a AS (
+        |  SELECT doc_id, md5(text) AS fp_old FROM v1
+        |), b AS (
+        |  SELECT doc_id, md5(text) AS fp_new FROM v2
+        |)
+        |SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
+        |  CASE WHEN a.doc_id IS NULL THEN 'added'
+        |       WHEN b.doc_id IS NULL THEN 'removed'
+        |       WHEN fp_old <> fp_new THEN 'changed'
+        |       ELSE 'unchanged' END AS status,
+        |  fp_old, fp_new
+        |FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id
+        |ORDER BY doc_id""".stripMargin)),
 
     // G1 — damped PageRank (5 supersteps) on the customer↔supplier
     // bipartite graph (distinct trading pairs from orders⋈lineitem,
@@ -2263,13 +4039,13 @@ object TrainingQueries {
     // convention), so five supersteps stay hash-identical; teleport
     // constant is written 1.0−0.85 in BOTH engines (the two literals
     // subtract to a different double than literal 0.15).
-    "g1_pagerank" -> ((s, d) => {
+    QuerySpec("g1_pagerank", (s, d) => {
       // rides the shared TradingRank run: iterates 1-4 are the SAME
       // checkpointed states g3's ε-stop walks — only the final
       // superstep is this query's own work
       TradingRank(s, d).ranks(iterations = 5)
         .orderBy(col("node"))
-    }),
+    }, oracle = Some(pageRankOracleSql(5, weighted = false))),
 
     // G3 — CONVERGENCE-terminated PageRank on the same graph: iterate
     // until the L1 residual (total rank mass moved — scale-free, the
@@ -2282,10 +4058,14 @@ object TrainingQueries {
     // scale factor. The oracle replays the selected count through the
     // fixed-iteration chained-CTE system — if the ε-stop fired one
     // superstep early or late, every rank hash-mismatches.
-    "g3_pagerank_converged" -> ((s, d) => {
+    QuerySpec("g3_pagerank_converged", (s, d) => {
       TradingRank(s, d).converged(maxIterations = 10, epsilon = 1.0)._1
         .orderBy(col("node"))
-    }),
+    }, oracle = Some(
+      // the ε = 1.0 L1-stop deterministically selects 4 supersteps on this
+      // graph at EVERY scale factor (SF-invariant residual sequence — see
+      // the g3 query comment); the oracle pins that selected count
+      pageRankOracleSql(4, weighted = false))),
 
     // G8 — HITS hubs & authorities (3 iterations) on the DIRECTED
     // customer→supplier trading graph — the two-sided ranking PageRank
@@ -2295,12 +4075,12 @@ object TrainingQueries {
     // ranking is identical to textbook L2 HITS, normalization being a
     // monotone per-side rescale); edges checkpoint once, state
     // broadcasts per half-step, L1 totals ride 1-row broadcast joins.
-    "g8_hits" -> ((s, d) => {
+    QuerySpec("g8_hits", (s, d) => {
       graft.operators.Graph.hits(
           TradingPairs(s, d).select(col("c").as("src"), col("s").as("dst")),
           iterations = 3)
         .orderBy(col("side"), col("node"))
-    }),
+    }, oracle = Some(hitsOracleSql(3))),
 
     // G4 — PERSONALIZED PageRank: teleport returns only to a seed set
     // (every 100th customer), so rank measures proximity to THOSE
@@ -2309,7 +4089,7 @@ object TrainingQueries {
     // stay in the output (total ranking). Same rounded-system
     // determinism as g1; the oracle replays the per-node teleport
     // through a LEFT JOIN against the seed set each iteration.
-    "g4_personalized_pagerank" -> ((s, d) => {
+    QuerySpec("g4_personalized_pagerank", (s, d) => {
       val seeds = Tables.customer(s, d)
         .filter(col("c_custkey") % 100 === 0)
         .select(concat(lit("c"), col("c_custkey").cast("string"))
@@ -2318,7 +4098,7 @@ object TrainingQueries {
       // state is seed-specific, so no iterate sharing — see Run scaladoc)
       TradingRank(s, d).personalized(seeds, iterations = 5)
         .orderBy(col("node"))
-    }),
+    }, oracle = Some(personalizedPageRankOracleSql(5))),
 
     // G2 — WEIGHTED PageRank: same graph as g1, but each edge carries
     // the pair's lineitem count as weight, so influence follows trading
@@ -2326,7 +4106,7 @@ object TrainingQueries {
     // weight is an exact integer both engines aggregate identically;
     // the single (rank·w)/Σw double division replays bit-for-bit
     // (DuckDB sum(BIGINT) is HUGEINT — the oracle casts it back).
-    "g2_weighted_pagerank" -> ((s, d) => {
+    QuerySpec("g2_weighted_pagerank", (s, d) => {
       // the pair counts come from the shared TradingPairs artifact —
       // same frame g1/g3/g4 read their keys from
       val ce = TradingPairs(s, d)
@@ -2336,7 +4116,7 @@ object TrainingQueries {
       graft.operators.Graph.pageRank(edges, iterations = 5,
           weightCol = Some("w"))
         .orderBy(col("node"))
-    }),
+    }, oracle = Some(pageRankOracleSql(5, weighted = true))),
 
     // G5 — exact triangle counting on the part co-purchase graph (parts
     // appearing in the same order are linked): community structure /
@@ -2356,10 +4136,46 @@ object TrainingQueries {
     // prune is one HAVING on the already-grouped pair aggregate (no
     // extra pass) and cuts the edge set ~300× at sf0.1 — the
     // difference between mining structure and brute-forcing noise.
-    "g5_triangle_count" -> ((s, d) => {
+    QuerySpec("g5_triangle_count", (s, d) => {
       graft.operators.Graph.triangleCount(CoPurchasePairs(s, d))
         .orderBy(col("node"))
-    }),
+    }, oracle = Some(
+      // g5 replays the oriented-wedge system: same (deg, id) orientation,
+      // same wedge ordering, EXISTS for the closing semi-join — exact
+      // integer counts end to end
+      """WITH und AS (
+        |  SELECT x.l_partkey AS a, y.l_partkey AS b
+        |  FROM lineitem x JOIN lineitem y ON x.l_orderkey = y.l_orderkey
+        |    AND x.l_partkey < y.l_partkey
+        |  GROUP BY a, b HAVING count(*) >= 2
+        |), deg AS (
+        |  SELECT node, count(*) AS deg FROM (
+        |    SELECT a AS node FROM und UNION ALL SELECT b FROM und
+        |  ) GROUP BY node
+        |), o AS (
+        |  SELECT
+        |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
+        |         THEN u.a ELSE u.b END AS src,
+        |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
+        |         THEN u.b ELSE u.a END AS dst,
+        |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
+        |         THEN db.deg ELSE da.deg END AS ddeg
+        |  FROM und u
+        |  JOIN deg da ON u.a = da.node
+        |  JOIN deg db ON u.b = db.node
+        |), tri AS (
+        |  SELECT e1.src AS u, e1.dst AS v, e2.dst AS w
+        |  FROM o e1 JOIN o e2 ON e1.src = e2.src
+        |    AND (e1.ddeg < e2.ddeg
+        |      OR (e1.ddeg = e2.ddeg AND e1.dst < e2.dst))
+        |  WHERE EXISTS (
+        |    SELECT 1 FROM o e3 WHERE e3.src = e1.dst AND e3.dst = e2.dst)
+        |)
+        |SELECT node, count(*) AS triangles FROM (
+        |  SELECT u AS node FROM tri
+        |  UNION ALL SELECT v FROM tri
+        |  UNION ALL SELECT w FROM tri
+        |) GROUP BY node ORDER BY node""".stripMargin)),
 
     // G11 — CONNECTED COMPONENTS as a first-class graph query
     // (r5 verdict item 5): per-component part counts over the SHARED
@@ -2370,12 +4186,32 @@ object TrainingQueries {
     // CTE oracle — this query re-proves it on a DIFFERENT graph with
     // the same transitive-closure replay. min-id component labels make
     // the rollup deterministic.
-    "g11_connected_components" -> ((s, d) => {
+    QuerySpec("g11_connected_components", (s, d) => {
       graft.operators.Graph.connectedComponents(CoPurchasePairs(s, d))
         .groupBy(col("component_id"))
         .agg(count(lit(1)).as("n_parts"), max(col("node")).as("max_part"))
         .orderBy(col("n_parts").desc, col("component_id"))
-    }),
+    }, oracle = Some(
+      // g11 replays min-label components via the d9 transitive-closure
+      // recursive CTE — a second formulation of the same closure on the
+      // co-purchase graph
+      """WITH RECURSIVE cp AS (
+        |  SELECT x.l_partkey AS src, y.l_partkey AS dst
+        |  FROM lineitem x JOIN lineitem y ON x.l_orderkey = y.l_orderkey
+        |  WHERE x.l_partkey < y.l_partkey
+        |  GROUP BY 1, 2 HAVING count(*) >= 2
+        |), nodes AS (
+        |  SELECT src AS node FROM cp UNION SELECT dst FROM cp
+        |), edges AS (
+        |  SELECT src AS s, dst AS t FROM cp UNION ALL SELECT dst, src FROM cp
+        |), reach(id, r) AS (
+        |  SELECT node, node FROM nodes
+        |  UNION
+        |  SELECT e.t, r.r FROM reach r JOIN edges e ON e.s = r.id
+        |), lbl AS (SELECT id, min(r) AS component_id FROM reach GROUP BY id)
+        |SELECT component_id, count(*) AS n_parts, max(id) AS max_part
+        |FROM lbl GROUP BY component_id
+        |ORDER BY n_parts DESC, component_id""".stripMargin)),
 
     // G12 — K-HOP NEIGHBORHOOD AGGREGATION over the shared TradingPairs
     // artifact: for each seed customer (c_custkey % 100 == 0 — the g4
@@ -2386,7 +4222,7 @@ object TrainingQueries {
     // with no iteration state, no cartesian exposure; seeds broadcast
     // by stats, countDistinct exchanges on the seed key only. Seeds
     // with no trades report zeros via the corpus left join.
-    "g12_khop_aggregation" -> ((s, d) => {
+    QuerySpec("g12_khop_aggregation", (s, d) => {
       val ce = TradingPairs(s, d)
       val seeds = Tables.customer(s, d)
         .filter(col("c_custkey") % 100 === 0)
@@ -2433,7 +4269,32 @@ object TrainingQueries {
           coalesce(col("w_1hop"), lit(0L)).as("w_1hop"),
           coalesce(col("n_customers_2hop"), lit(0L)).as("n_customers_2hop"))
         .orderBy(col("seed"))
-    }),
+    }, oracle = Some(
+      """WITH ce AS (
+        |  SELECT 'c' || CAST(o_custkey AS VARCHAR) AS c,
+        |    's' || CAST(l_suppkey AS VARCHAR) AS s, count(*) AS w
+        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |  GROUP BY 1, 2
+        |), seeds AS (
+        |  SELECT 'c' || CAST(c_custkey AS VARCHAR) AS seed FROM customer
+        |  WHERE c_custkey % 100 = 0
+        |), h1 AS (SELECT seed, s, w FROM seeds JOIN ce ON seed = c),
+        |h1agg AS (
+        |  SELECT seed, count(DISTINCT s) AS n_suppliers_1hop,
+        |    CAST(sum(w) AS BIGINT) AS w_1hop FROM h1 GROUP BY seed
+        |), h2 AS (
+        |  SELECT DISTINCT h.seed, ce.c AS c2
+        |  FROM (SELECT DISTINCT seed, s FROM h1) h JOIN ce ON h.s = ce.s
+        |  WHERE ce.c <> h.seed
+        |), h2agg AS (
+        |  SELECT seed, count(*) AS n_customers_2hop FROM h2 GROUP BY seed
+        |)
+        |SELECT sd.seed, coalesce(a.n_suppliers_1hop, 0) AS n_suppliers_1hop,
+        |  coalesce(a.w_1hop, 0) AS w_1hop,
+        |  coalesce(b.n_customers_2hop, 0) AS n_customers_2hop
+        |FROM seeds sd LEFT JOIN h1agg a ON sd.seed = a.seed
+        |LEFT JOIN h2agg b ON sd.seed = b.seed
+        |ORDER BY sd.seed""".stripMargin)),
 
     // O7 — deterministic global row numbering (contiguous example ids /
     // leaderboard positions) WITHOUT `row_number() OVER (ORDER BY …)`'s
@@ -2442,13 +4303,17 @@ object TrainingQueries {
     // count table (WindowOps.globalRowNumber — the DataFrame
     // zipWithIndex). The oracle replays it as the naive global window,
     // proving the decomposition loses/renumbers nothing.
-    "o7_global_rownum" -> ((s, d) => {
+    QuerySpec("o7_global_rownum", (s, d) => {
       WindowOps.globalRowNumber(
           Tables.customer(s, d).select(col("c_custkey"), col("c_acctbal")),
           Seq(col("c_acctbal").desc, col("c_custkey")), "global_rank")
         .select(col("c_custkey"), col("global_rank"))
         .orderBy(col("global_rank"))
-    }),
+    }, oracle = Some(
+      """SELECT c_custkey,
+        |CAST(row_number() OVER (ORDER BY c_acctbal DESC, c_custkey) AS BIGINT)
+        |  AS global_rank
+        |FROM customer ORDER BY global_rank""".stripMargin)),
 
     // T18 — curriculum/quality-decile binning: exact global decile
     // bounds of the per-doc quality score (percentile ≡ quantile_cont
@@ -2458,7 +4323,7 @@ object TrainingQueries {
     // occupancy + score range — the table a curriculum sampler feeds
     // on. Scale: one combinable agg for bounds (9 doubles), one narrow
     // map for banding, one grouped agg; the corpus never sorts.
-    "t18_quality_deciles" -> ((s, d) => {
+    QuerySpec("t18_quality_deciles", (s, d) => {
       val scored = Tables.spread(Tables.documents(s, d))
         .select(col("doc_id"),
           TextAnalysis.qualityScore(col("text"), col("n_chars")).as("q"))
@@ -2473,7 +4338,22 @@ object TrainingQueries {
         .agg(count(lit(1)).as("n_docs"),
           min(col("q")).as("min_q"), max(col("q")).as("max_q"))
         .orderBy(col("decile"))
-    }),
+    }, oracle = Some(
+      """WITH s AS (
+        |  SELECT doc_id,
+        |    round((CASE WHEN n_chars BETWEEN 100 AND 5000 THEN 1.0 ELSE 0.5 END)
+        |        * 0.4
+        |      + least(len(list_distinct(string_split(text, ' '))) * 1.0
+        |          / len(string_split(text, ' ')) * 2, 1.0) * 0.6, 4) AS q
+        |  FROM documents
+        |), b AS (
+        |  SELECT quantile_cont(q, [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]) AS bs
+        |  FROM s
+        |)
+        |SELECT CAST(len(list_filter(b.bs, x -> s.q > x)) + 1 AS BIGINT)
+        |    AS decile,
+        |  count(*) AS n_docs, min(s.q) AS min_q, max(s.q) AS max_q
+        |FROM s CROSS JOIN b GROUP BY 1 ORDER BY decile""".stripMargin)),
 
     // T12 — sequence PACKING (concat-and-chunk): the step that turns a
     // deduped corpus into fixed-budget training sequences. Docs are
@@ -2486,7 +4366,7 @@ object TrainingQueries {
     // pipelines parallelize this (each shard emits its own sequence
     // stream), and the integer shard hash keeps it deterministic on any
     // cluster layout.
-    "t12_pack_sequences" -> ((s, d) => {
+    QuerySpec("t12_pack_sequences", (s, d) => {
       val budget = 512
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("shard").orderBy("doc_id")
@@ -2501,7 +4381,24 @@ object TrainingQueries {
           (floor((col("start") + col("nt") - 1) / budget)
             - floor(col("start") / budget) + 1).as("n_seqs_spanned"))
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      """WITH docs AS (
+        |  SELECT doc_id, doc_id % 8 AS shard,
+        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS nt
+        |  FROM documents
+        |), pos AS (
+        |  SELECT doc_id, shard, nt,
+        |    CAST(COALESCE(sum(nt) OVER (PARTITION BY shard ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+        |      AS BIGINT) AS start
+        |  FROM docs
+        |)
+        |SELECT doc_id, shard, nt,
+        |  CAST(floor(start / 512) AS BIGINT) AS seq_id,
+        |  start % 512 AS seq_offset,
+        |  CAST(floor((start + nt - 1) / 512) - floor(start / 512) + 1
+        |    AS BIGINT) AS n_seqs_spanned
+        |FROM pos ORDER BY doc_id""".stripMargin)),
 
     // T13 — unigram LM quality score (the CCNet-style signal: docs whose
     // words are globally rare are likelier noise; docs dominated by the
@@ -2513,7 +4410,7 @@ object TrainingQueries {
     // shuffle of the (doc,word) frame; the vocabulary aggregate and the
     // top-K list are vocabulary-sized and BROADCAST back, so the fat
     // frame never shuffles by word (stopword skew lives there).
-    "t13_unigram_quality" -> ((s, d) => {
+    QuerySpec("t13_unigram_quality", (s, d) => {
       val tokc = Tables.spread(Tables.documents(s, d))
         .select(col("doc_id"),
           explode(TextAnalysis.tokens(col("text"))).as("word"))
@@ -2532,14 +4429,32 @@ object TrainingQueries {
           (col("sum_freq") * lit(1.0) / col("nt")).as("mean_word_freq"),
           (col("top_toks") * lit(1.0) / col("nt")).as("top20_frac"))
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      """WITH tokc AS (
+        |  SELECT doc_id, word, count(*) AS c FROM (
+        |    SELECT doc_id, unnest(string_split(text, ' ')) AS word
+        |    FROM documents)
+        |  GROUP BY doc_id, word
+        |), vocab AS (
+        |  SELECT word, CAST(sum(c) AS BIGINT) AS freq FROM tokc GROUP BY word
+        |), top AS (
+        |  SELECT word, 1 AS in_top FROM vocab
+        |  ORDER BY freq DESC, word LIMIT 20
+        |)
+        |SELECT t.doc_id,
+        |  CAST(sum(t.c * v.freq) AS BIGINT) * 1.0
+        |    / CAST(sum(t.c) AS BIGINT) AS mean_word_freq,
+        |  CAST(sum(t.c * COALESCE(p.in_top, 0)) AS BIGINT) * 1.0
+        |    / CAST(sum(t.c) AS BIGINT) AS top20_frac
+        |FROM tokc t JOIN vocab v USING (word) LEFT JOIN top p USING (word)
+        |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin)),
 
     // T16 — best-k docs per source via the bounded PAIR aggregator (the
     // curation step that selects exemplar documents per corpus slice).
     // Same scale shape as e8: the shuffle after map-side combine carries
     // at most k (score, id) pairs per (source, partition) — a
     // rank()<=k window would shuffle and sort every document.
-    "t16_topk_docs" -> ((s, d) => {
+    QuerySpec("t16_topk_docs", (s, d) => {
       val topk = udaf(new graft.functions.TopKPairAggregator(3))
       Tables.documents(s, d)
         .select(col("source"), col("doc_id"),
@@ -2550,7 +4465,24 @@ object TrainingQueries {
         .select(col("source"), (col("pos") + 1).cast("long").as("rnk"),
           col("col.id").as("doc_id"), col("col.score").as("quality_score"))
         .orderBy(col("source"), col("rnk"))
-    }),
+    }, oracle = Some(
+      // Same quality-score formula as the t1 oracle; row_number replays
+      // the aggregator's (score DESC, doc_id) tie order.
+      """WITH q AS (
+        |  SELECT source, doc_id,
+        |    round((CASE WHEN n_chars BETWEEN 100 AND 5000
+        |        THEN 1.0 ELSE 0.5 END) * 0.4
+        |      + least(len(list_distinct(string_split(text, ' '))) * 1.0
+        |        / len(string_split(text, ' ')) * 2, 1.0) * 0.6, 4) AS q
+        |  FROM documents
+        |), r AS (
+        |  SELECT source, doc_id, q, row_number() OVER (
+        |    PARTITION BY source ORDER BY q DESC, doc_id) AS rnk
+        |  FROM q
+        |)
+        |SELECT source, CAST(rnk AS BIGINT) AS rnk, doc_id,
+        |  q AS quality_score
+        |FROM r WHERE rnk <= 3 ORDER BY source, rnk""".stripMargin)),
 
     // T14 — PII redaction: the scrub pass before any text ships to
     // training. The synthetic corpus carries no PII, so each doc is
@@ -2558,7 +4490,7 @@ object TrainingQueries {
     // its id (both engines build the identical string), then scrubbed;
     // verified via match counts + md5 of the scrubbed text. Pure
     // codegen regexp ops, map-side only — no shuffle at any width.
-    "t14_pii_redact" -> ((s, d) => {
+    QuerySpec("t14_pii_redact", (s, d) => {
       val aug = concat(col("text"),
         lit(" contact user"), col("doc_id"), lit("@example.com from 10."),
         pmod(col("doc_id"), lit(256)), lit(".0.1 call +1-555-"),
@@ -2575,19 +4507,46 @@ object TrainingQueries {
           md5(TextAnalysis.redactPii(col("aug")).cast("binary"))
             .as("redacted_hash"))
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      // DuckDB regexes are RE2; the patterns use only syntax with
+      // identical semantics in Java regex ('g' = Spark's replace-all
+      // default).
+      """WITH aug AS (
+        |  SELECT doc_id, text || ' contact user' || doc_id
+        |    || '@example.com from 10.' || (doc_id % 256)
+        |    || '.0.1 call +1-555-'
+        |    || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS aug
+        |  FROM documents
+        |)
+        |SELECT doc_id,
+        |  CAST(len(regexp_extract_all(aug,
+        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT)
+        |    AS n_emails,
+        |  CAST(len(regexp_extract_all(aug,
+        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ips,
+        |  CAST(len(regexp_extract_all(aug, '\+1-555-\d{4}')) AS BIGINT)
+        |    AS n_phones,
+        |  md5(regexp_replace(regexp_replace(regexp_replace(aug,
+        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
+        |    '\+1-555-\d{4}', '<PHONE>', 'g')) AS redacted_hash
+        |FROM aug ORDER BY doc_id""".stripMargin)),
 
     // M2 — the multimodal DECODE path (mapPartitions batch decode +
     // frame sampling), verified on its deterministic outputs: the fake
     // codec's byte length and stride-sampled frame count are pure integer
     // functions of the payload, so the oracle can replay them in SQL.
-    "m2_decode_meta" -> ((s, d) => {
+    QuerySpec("m2_decode_meta", (s, d) => {
       val meta = Multimodal.decodeMeta(s,
         Multimodal.withBinaryPayload(Tables.documents(s, d)))
       Multimodal.frameSampleStub(meta, stride = 2).toDF()
         .select(col("doc_id"), col("n_bytes"), col("frames"))
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+        |CAST(greatest((CAST(octet_length(encode(text)) AS BIGINT) // 64 + 1) // 2, 1)
+        |  AS INTEGER) AS frames
+        |FROM documents WHERE text IS NOT NULL ORDER BY doc_id""".stripMargin)),
 
     // Q3 — TPC-H Q3 shipping-priority shape (the canonical
     // filter → join → join → agg → top-k analytical plan, completing
@@ -2601,7 +4560,7 @@ object TrainingQueries {
     // at 100 TB); the lineitem ⋈ orders join is the one shuffle pair.
     // Top-10 plans as TakeOrderedAndProject. Dates emitted as formatted
     // strings (oracle policy).
-    "q3_shipping_priority" -> ((s, d) => {
+    QuerySpec("q3_shipping_priority", (s, d) => {
       val cutoff = lit("1998-07-01").cast("timestamp")
       val cust = Tables.customer(s, d)
         .filter(col("c_mktsegment") === "BUILDING")
@@ -2626,7 +4585,19 @@ object TrainingQueries {
           col("o_orderpriority"), col("revenue"))
         .orderBy(col("revenue").desc, col("l_orderkey"))
         .limit(10)
-    }),
+    }, oracle = Some(
+      """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_date,
+        |  o_orderpriority,
+        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
+        |    AS DECIMAL(38,6))), 2) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |  AND o_orderdate < TIMESTAMP '1998-07-01'
+        |  AND l_shipdate > TIMESTAMP '1998-07-01'
+        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin)),
 
     // Q5 — TPC-H Q5 local-supplier-volume shape: the canonical 6-way
     // star join (fact ⋈ orders ⋈ customer ⋈ supplier ⋈ nation ⋈
@@ -2640,7 +4611,7 @@ object TrainingQueries {
     // after as a broadcast probe carrying the nationkey-equality
     // filter. Catalyst/AQE picks the broadcast sides from size stats —
     // no baked-in hints (the q3 rationale).
-    "q5_local_supplier" -> ((s, d) => {
+    QuerySpec("q5_local_supplier", (s, d) => {
       val lo = lit("1996-01-01").cast("timestamp")
       val hi = lit("1998-01-01").cast("timestamp")
       val nat = Tables.nation(s, d)
@@ -2668,7 +4639,20 @@ object TrainingQueries {
             col("l_extendedprice") * (lit(1) - col("l_discount")), 2)
             .as("revenue"))
         .orderBy(col("revenue").desc, col("n_name"))
-    }),
+    }, oracle = Some(
+      """SELECT n_name, count(*) AS n_items,
+        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
+        |    AS DECIMAL(38,6))), 2) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'ASIA'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1998-01-01'
+        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin)),
 
     // Q10 — TPC-H Q10 returned-item reporting shape: which customers
     // returned the most revenue this half-year — the
@@ -2680,7 +4664,7 @@ object TrainingQueries {
     // the fact scan first; orders date-prunes before joining; nation
     // broadcasts onto the grouped result (post-aggregation — |groups|
     // rows, not |lineitem|).
-    "q10_returned_items" -> ((s, d) => {
+    QuerySpec("q10_returned_items", (s, d) => {
       val lo = lit("1996-01-01").cast("timestamp")
       val hi = lit("1996-07-01").cast("timestamp")
       val ord = Tables.orders(s, d)
@@ -2708,7 +4692,19 @@ object TrainingQueries {
           col("n_items"), col("revenue"))
         .orderBy(col("revenue").desc, col("c_custkey"))
         .limit(20)
-    }),
+    }, oracle = Some(
+      """SELECT c_custkey, c_name, n_name, count(*) AS n_items,
+        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
+        |    AS DECIMAL(38,6))), 2) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |WHERE l_returnflag = 'R'
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1996-07-01'
+        |GROUP BY c_custkey, c_name, n_name
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin)),
 
     // D17 — corpus OVERLAP ESTIMATION via bottom-k sketches: how much
     // of corpus B is already in corpus A, WITHOUT joining the full
@@ -2724,7 +4720,7 @@ object TrainingQueries {
     // error, making the accuracy visible in the oracle output. B
     // derives from A deterministically (every 3rd doc shared, the rest
     // suffixed) so exact J ≈ 1/5 and both engines replay it.
-    "d17_overlap_bottomk" -> ((s, d) => {
+    QuerySpec("d17_overlap_bottomk", (s, d) => {
       val K = 128
       def hkey(c: Column): Column =
         conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
@@ -2760,7 +4756,39 @@ object TrainingQueries {
         .crossJoin(ku.agg(count(lit(1)).as("ku_n")))
         .select(lit(K.toLong).as("k"), est.as("est_jaccard"),
           exact.as("exact_jaccard"), abs(est - exact).as("abs_err"))
-    }),
+    }, oracle = Some(
+      // d17 replays the bottom-k sketches with the s13 md5→BIGINT idiom;
+      // the estimator, the exact Jaccard and the error all hash-compare
+      """WITH docs AS (SELECT doc_id, text FROM documents),
+        |a AS (
+        |  SELECT DISTINCT CAST('0x' || substr(md5(text), 1, 15) AS BIGINT)
+        |    AS h FROM docs
+        |), bsrc AS (
+        |  SELECT CASE WHEN doc_id % 3 = 0 THEN text
+        |    ELSE text || ' vB' END AS tb FROM docs
+        |), b AS (
+        |  SELECT DISTINCT CAST('0x' || substr(md5(tb), 1, 15) AS BIGINT)
+        |    AS h FROM bsrc
+        |), ka AS (SELECT h FROM a ORDER BY h LIMIT 128),
+        |kb AS (SELECT h FROM b ORDER BY h LIMIT 128),
+        |ku AS (
+        |  SELECT DISTINCT h FROM (
+        |    SELECT h FROM ka UNION ALL SELECT h FROM kb
+        |  ) ORDER BY h LIMIT 128
+        |), y AS (
+        |  SELECT count(*) AS y FROM ku
+        |  WHERE h IN (SELECT h FROM ka) AND h IN (SELECT h FROM kb)
+        |), i AS (
+        |  SELECT count(*) AS ni FROM a WHERE h IN (SELECT h FROM b)
+        |), na AS (SELECT count(*) AS na FROM a),
+        |nb AS (SELECT count(*) AS nb FROM b),
+        |kun AS (SELECT count(*) AS ku_n FROM ku)
+        |SELECT CAST(128 AS BIGINT) AS k,
+        |  y * 1.0 / ku_n AS est_jaccard,
+        |  ni * 1.0 / (na + nb - ni) AS exact_jaccard,
+        |  abs(y * 1.0 / ku_n
+        |    - ni * 1.0 / (na + nb - ni)) AS abs_err
+        |FROM y, i, na, nb, kun""".stripMargin)),
 
     // D18 — substring-level dedup at arbitrary length (the complement
     // to the fixed-grain d5/d8/d13 family): maximal spans in which
@@ -2777,14 +4805,52 @@ object TrainingQueries {
     // doc's own tail stay doc-unique and terminate the run — the
     // maximal-extraction property the fixture pins. Integer-exact
     // (counts + md5-derived hashes) → full hash oracle.
-    "d18_substring_dedup" -> ((s, d) => {
+    QuerySpec("d18_substring_dedup", (s, d) => {
       // injected corpus + shingle frame from the shared artifact: the
       // md5 explode is paid once for the d18/d20 pair
       val (injected, sh) = InjectedShingles(s, d)
       Dedup.substringRuns(injected, "doc_id", "text", width = 8,
           shingles = Some(sh))
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      // d18 replays the injection, the per-position 8-token shingles, the
+      // md5-hash duplicated-set, and the gaps-and-islands run extraction
+      // (1-based positions vs Spark's 0-based — the island arithmetic
+      // pos − row_number is offset-invariant)
+      ("""WITH injected AS (
+        |  SELECT doc_id, CASE WHEN doc_id % 7 = 0
+        |    THEN text || ' """ + DedupPassage + """' ELSE text END AS text
+        |  FROM documents
+        |), base AS (
+        |  SELECT doc_id, string_split(text, ' ') AS toks FROM injected
+        |  WHERE len(string_split(text, ' ')) >= 8
+        |), pos AS (
+        |  SELECT doc_id, toks, unnest(range(1, len(toks) - 6)) AS i FROM base
+        |), sh AS (
+        |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
+        |    CAST('0x' || substr(md5(array_to_string(
+        |      list_slice(toks, i, i + 7), ' ')), 1, 15) AS BIGINT) AS h
+        |  FROM pos
+        |), dup AS (
+        |  SELECT h FROM sh GROUP BY h HAVING count(*) >= 2
+        |), marked AS (
+        |  SELECT doc_id, pos,
+        |    row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS rn
+        |  FROM sh WHERE h IN (SELECT h FROM dup)
+        |), runs AS (
+        |  SELECT doc_id, pos - rn AS island, count(*) AS rs
+        |  FROM marked GROUP BY doc_id, pos - rn
+        |), agg AS (
+        |  SELECT doc_id, count(*) AS n_dup_runs,
+        |    CAST(max(rs) + 7 AS BIGINT) AS longest_dup_tokens,
+        |    CAST(sum(rs) AS BIGINT) AS dup_shingles
+        |  FROM runs GROUP BY doc_id
+        |)
+        |SELECT d.doc_id, coalesce(a.n_dup_runs, 0) AS n_dup_runs,
+        |  coalesce(a.longest_dup_tokens, 0) AS longest_dup_tokens,
+        |  coalesce(a.dup_shingles, 0) AS dup_shingles
+        |FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
+        |ORDER BY d.doc_id""").stripMargin)),
 
     // D20 — EXACT longest duplicated span (Lee et al. ExactSubstr
     // semantics) on the d18 injected corpus: where d18 reports the
@@ -2798,11 +4864,59 @@ object TrainingQueries {
     // same candidate-completeness lemma, stated in the scaladoc),
     // capped at the same 64-token depth. All-integer output → full
     // hash oracle.
-    "d20_exact_dup_span" -> ((s, d) => {
+    QuerySpec("d20_exact_dup_span", (s, d) => {
       val (injected, sh) = InjectedShingles(s, d)
       Dedup.exactDupSpan(injected, "doc_id", "text",
         width = 8, maxLen = 64, shingles = Some(sh))
-    }),
+    }, oracle = Some(
+      // d20 re-derives the exact answer by BRUTE FORCE over every
+      // candidate length 8..64 (no binary search — an independent
+      // algorithm agreeing on the value): same injection, same
+      // candidate-completeness lemma (an exact dup span's start must sit
+      // in a duplicated-shingle island with span_cap ≥ L), then actual
+      // substring grouping per length
+      ("""WITH injected AS (
+        |  SELECT doc_id, CASE WHEN doc_id % 7 = 0
+        |    THEN text || ' """ + DedupPassage + """' ELSE text END AS text
+        |  FROM documents
+        |), base AS (
+        |  SELECT doc_id, string_split(text, ' ') AS toks FROM injected
+        |  WHERE len(string_split(text, ' ')) >= 8
+        |), pos AS (
+        |  SELECT doc_id, toks, unnest(range(1, len(toks) - 6)) AS i FROM base
+        |), sh AS (
+        |  SELECT doc_id, toks, CAST(i AS BIGINT) AS pos,
+        |    CAST('0x' || substr(md5(array_to_string(
+        |      list_slice(toks, i, i + 7), ' ')), 1, 15) AS BIGINT) AS h
+        |  FROM pos
+        |), dup AS (
+        |  SELECT h FROM sh GROUP BY h HAVING count(*) >= 2
+        |), marked AS (
+        |  SELECT doc_id, toks, pos,
+        |    row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS rn
+        |  FROM sh WHERE h IN (SELECT h FROM dup)
+        |), cap AS (
+        |  SELECT doc_id, toks, pos,
+        |    max(pos) OVER (PARTITION BY doc_id, pos - rn) - pos + 8
+        |      AS span_cap
+        |  FROM marked
+        |), l AS (SELECT unnest(range(8, 65)) AS L
+        |), spans AS (
+        |  SELECT c.doc_id, l.L, array_to_string(list_slice(c.toks,
+        |    CAST(c.pos AS INT), CAST(c.pos + l.L - 1 AS INT)), ' ') AS s
+        |  FROM cap c JOIN l ON c.span_cap >= l.L
+        |), g AS (
+        |  SELECT L, s FROM spans GROUP BY L, s HAVING count(*) >= 2
+        |), best AS (SELECT max(L) AS L FROM g
+        |), hit AS (
+        |  SELECT sp.doc_id FROM spans sp JOIN g USING (L, s)
+        |  WHERE sp.L = (SELECT L FROM best)
+        |)
+        |SELECT CAST(coalesce((SELECT L FROM best), 0) AS BIGINT)
+        |    AS longest_exact_dup_tokens,
+        |  CAST((SELECT count(*) FROM hit) AS BIGINT) AS n_occurrences,
+        |  CAST((SELECT count(DISTINCT doc_id) FROM hit) AS BIGINT)
+        |    AS n_docs""").stripMargin)),
 
     // Q14 — TPC-H Q14 promo-revenue shape: what share of a quarter's
     // revenue came from promo-type parts — the conditional-aggregate
@@ -2811,7 +4925,7 @@ object TrainingQueries {
     // shipdate window prunes the fact scan; the |parts|-row dimension
     // broadcasts by stats. Ratio = one double division of two
     // decimal-exact sums, unrounded (the exactAvg rule).
-    "q14_promo_revenue" -> ((s, d) => {
+    QuerySpec("q14_promo_revenue", (s, d) => {
       val lo = lit("1997-01-01").cast("timestamp")
       val hi = lit("1997-04-01").cast("timestamp")
       Tables.lineitem(s, d)
@@ -2826,7 +4940,16 @@ object TrainingQueries {
               .otherwise(lit(0.0)).cast("decimal(38,6)")).cast("double")
             / sum(col("rev").cast("decimal(38,6)")).cast("double"))
             .as("promo_revenue_pct"))
-    }),
+    }, oracle = Some(
+      """SELECT count(*) AS n_items,
+        |  100.0 * CAST(sum(CAST(CASE WHEN p_type = 'PROMO'
+        |      THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END
+        |    AS DECIMAL(38,6))) AS DOUBLE)
+        |  / CAST(sum(CAST(l_extendedprice * (1 - l_discount)
+        |    AS DECIMAL(38,6))) AS DOUBLE) AS promo_revenue_pct
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+        |  AND l_shipdate < TIMESTAMP '1997-04-01'""".stripMargin)),
 
     // Q18 — TPC-H Q18 large-volume-order shape: aggregate-THEN-join —
     // the qualifying-order set (sum(qty) > 250) reduces on the fact
@@ -2834,7 +4957,7 @@ object TrainingQueries {
     // the join sides are |qualifying orders|-sized, not
     // |lineitem|-sized (the shape that matters when the fact table is
     // 10⁴× the qualifying set at 100 TB). Top-100 plans as the heap.
-    "q18_large_orders" -> ((s, d) => {
+    QuerySpec("q18_large_orders", (s, d) => {
       val big = Tables.lineitem(s, d)
         .groupBy(col("l_orderkey"))
         .agg(Summaries.exactSum(col("l_quantity"), 2).as("sum_qty"))
@@ -2848,7 +4971,19 @@ object TrainingQueries {
           col("o_totalprice"), col("sum_qty"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
         .limit(100)
-    }),
+    }, oracle = Some(
+      """WITH big AS (
+        |  SELECT l_orderkey,
+        |    CAST(round(sum(CAST(l_quantity AS DECIMAL(38,6))), 2)
+        |      AS DOUBLE) AS sum_qty
+        |  FROM lineitem GROUP BY l_orderkey
+        |  HAVING CAST(round(sum(CAST(l_quantity AS DECIMAL(38,6))), 2)
+        |    AS DOUBLE) > 250
+        |)
+        |SELECT c_custkey, c_name, o_orderkey, o_totalprice, sum_qty
+        |FROM orders JOIN big ON o_orderkey = l_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin)),
 
     // Q4/Q17/Q21/Q22 — the CORRELATED-SUBQUERY TPC-H shapes: the one
     // classic engine-capability class the q1–q18 spine never exercises.
@@ -2871,7 +5006,7 @@ object TrainingQueries {
     // least one late lineitem, counted per priority. EXISTS → left
     // semi join on l_orderkey with the o_orderdate comparison as the
     // join condition; the quarter filter prunes the orders scan first.
-    "q4_priority_check" -> ((s, d) => {
+    QuerySpec("q4_priority_check", (s, d) => {
       Tables.orders(s, d).createOrReplaceTempView("orders")
       Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
       s.sql("""
@@ -2884,7 +5019,19 @@ object TrainingQueries {
                         AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
         GROUP BY o_orderpriority
         ORDER BY o_orderpriority""")
-    }),
+    }, oracle = Some(
+      // q4/q17/q21/q22: DuckDB runs the SAME correlated-subquery text —
+      // the second formulation is the second ENGINE's decorrelation,
+      // which is exactly what's under test
+      """SELECT o_orderpriority, count(*) AS order_count
+        |FROM orders
+        |WHERE o_orderdate >= TIMESTAMP '1996-07-01'
+        |  AND o_orderdate < TIMESTAMP '1996-10-01'
+        |  AND EXISTS (SELECT 1 FROM lineitem
+        |              WHERE l_orderkey = o_orderkey
+        |                AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
+        |GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin)),
 
     // Q17 — small-quantity-order revenue: lineitems of one brand/size
     // slice whose quantity sits below 20% of that PART's own average —
@@ -2896,7 +5043,7 @@ object TrainingQueries {
     // (integral doubles sum exactly in any order); the yearly average
     // is a decimal-exact sum with one unrounded IEEE division (the
     // exactAvg policy).
-    "q17_small_qty_revenue" -> ((s, d) => {
+    QuerySpec("q17_small_qty_revenue", (s, d) => {
       Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
       Tables.part(s, d).createOrReplaceTempView("part")
       s.sql("""
@@ -2908,7 +5055,15 @@ object TrainingQueries {
           AND l_quantity < 0.2 * (SELECT avg(l_quantity)
                                   FROM lineitem l2
                                   WHERE l2.l_partkey = p_partkey)""")
-    }),
+    }, oracle = Some(
+      """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6)))
+        |    AS DOUBLE) / 7.0 AS avg_yearly,
+        |  count(*) AS n_items
+        |FROM lineitem JOIN part ON p_partkey = l_partkey
+        |WHERE p_brand = 'Brand#23' AND p_size < 15
+        |  AND l_quantity < 0.2 * (SELECT avg(l_quantity)
+        |                          FROM lineitem l2
+        |                          WHERE l2.l_partkey = p_partkey)""".stripMargin)),
 
     // Q21 — suppliers who kept orders waiting: the multi-EXISTS form —
     // for each late lineitem of a finished order from one nation's
@@ -2920,7 +5075,7 @@ object TrainingQueries {
     // PlanSpec bites on): Catalyst plans one semi and one anti join on
     // l_orderkey, and the NOT-EXISTS side ALSO carries the outer
     // o_orderdate comparison.
-    "q21_waiting_suppliers" -> ((s, d) => {
+    QuerySpec("q21_waiting_suppliers", (s, d) => {
       Tables.supplier(s, d).createOrReplaceTempView("supplier")
       Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
       Tables.orders(s, d).createOrReplaceTempView("orders")
@@ -2944,7 +5099,25 @@ object TrainingQueries {
         GROUP BY s_name
         ORDER BY numwait DESC, s_name
         LIMIT 100""")
-    }),
+    }, oracle = Some(
+      """SELECT s_name, count(*) AS numwait
+        |FROM supplier
+        |JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
+        |JOIN orders ON o_orderkey = l1.l_orderkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |WHERE o_orderstatus = 'F' AND n_name = 'NATION_5'
+        |  AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
+        |  AND EXISTS (SELECT 1 FROM lineitem l2
+        |              WHERE l2.l_orderkey = l1.l_orderkey
+        |                AND l2.l_suppkey <> l1.l_suppkey)
+        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
+        |                  WHERE l3.l_orderkey = l1.l_orderkey
+        |                    AND l3.l_suppkey <> l1.l_suppkey
+        |                    AND l3.l_shipdate >
+        |                      o_orderdate + INTERVAL 60 DAY)
+        |GROUP BY s_name
+        |ORDER BY numwait DESC, s_name
+        |LIMIT 100""".stripMargin)),
 
     // Q22 — dormant high-balance customers: account balance above the
     // positive-balance average (UNCORRELATED scalar subquery — one
@@ -2953,7 +5126,7 @@ object TrainingQueries {
     // pre-filtered orders side), grouped by country code. The scalar
     // average is decimal-exact-sum / count (exactAvg policy — a float
     // avg would drift cross-engine on these non-integral balances).
-    "q22_dormant_customers" -> ((s, d) => {
+    QuerySpec("q22_dormant_customers", (s, d) => {
       Tables.customer(s, d).createOrReplaceTempView("customer")
       Tables.orders(s, d).createOrReplaceTempView("orders")
       s.sql("""
@@ -2969,7 +5142,19 @@ object TrainingQueries {
                             AND o_orderdate >= TIMESTAMP '1999-01-01')
         GROUP BY c_nationkey
         ORDER BY cntrycode""")
-    }),
+    }, oracle = Some(
+      """SELECT c_nationkey AS cntrycode, count(*) AS numcust,
+        |  CAST(round(sum(CAST(c_acctbal AS DECIMAL(38,6))), 2) AS DOUBLE)
+        |    AS totacctbal
+        |FROM customer
+        |WHERE c_acctbal > (SELECT CAST(sum(CAST(c_acctbal
+        |        AS DECIMAL(38,6))) AS DOUBLE) / count(*)
+        |      FROM customer WHERE c_acctbal > 0)
+        |  AND NOT EXISTS (SELECT 1 FROM orders
+        |                  WHERE o_custkey = c_custkey
+        |                    AND o_orderdate >= TIMESTAMP '1999-01-01')
+        |GROUP BY c_nationkey
+        |ORDER BY cntrycode""".stripMargin)),
 
     // Q7 — TPC-H Q7 volume-shipping shape: trade volume between two
     // nations by direction and year — the symmetric-pair predicate
@@ -2978,7 +5163,7 @@ object TrainingQueries {
     // grouping key. The two nation joins reduce customer/supplier to
     // keyed (key, nation) frames BEFORE touching lineitem (the q5
     // dimension-first discipline).
-    "q7_nation_volume" -> ((s, d) => {
+    QuerySpec("q7_nation_volume", (s, d) => {
       val lo = lit("1996-01-01").cast("timestamp")
       val hi = lit("1998-01-01").cast("timestamp")
       val supN = Tables.supplier(s, d)
@@ -3009,7 +5194,25 @@ object TrainingQueries {
             col("l_extendedprice") * (lit(1) - col("l_discount")), 2)
             .as("revenue"))
         .orderBy(col("supp_nation"), col("cust_nation"), col("yr"))
-    }),
+    }, oracle = Some(
+      """SELECT supp_nation, cust_nation, yr, count(*) AS n_items,
+        |  CAST(round(sum(CAST(rev AS DECIMAL(38,6))), 2) AS DOUBLE)
+        |    AS revenue
+        |FROM (
+        |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+        |    CAST(year(l_shipdate) AS BIGINT) AS yr,
+        |    l_extendedprice * (1 - l_discount) AS rev
+        |  FROM supplier JOIN lineitem ON s_suppkey = l_suppkey
+        |  JOIN orders ON o_orderkey = l_orderkey
+        |  JOIN customer ON c_custkey = o_custkey
+        |  JOIN nation n1 ON s_nationkey = n1.n_nationkey
+        |  JOIN nation n2 ON c_nationkey = n2.n_nationkey
+        |  WHERE ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_8')
+        |      OR (n1.n_name = 'NATION_8' AND n2.n_name = 'NATION_3'))
+        |    AND l_shipdate >= TIMESTAMP '1996-01-01'
+        |    AND l_shipdate < TIMESTAMP '1998-01-01')
+        |GROUP BY supp_nation, cust_nation, yr
+        |ORDER BY supp_nation, cust_nation, yr""".stripMargin)),
 
     // Q9 — TPC-H Q9 product-profit shape: profit per supplier nation
     // per order year over a name-pattern part slice. The schema has no
@@ -3019,7 +5222,7 @@ object TrainingQueries {
     // profit term) is assembled map-side and immediately aggregated on
     // a LOW-cardinality (nation, year) key; nation broadcasts, part
     // prunes on the LIKE before joining.
-    "q9_product_profit" -> ((s, d) => {
+    QuerySpec("q9_product_profit", (s, d) => {
       val amount = col("l_extendedprice") * (lit(1) - col("l_discount")) -
         lit(0.8) * col("p_retailprice") * col("l_quantity")
       Tables.lineitem(s, d)
@@ -3042,7 +5245,20 @@ object TrainingQueries {
           year(col("o_orderdate")).cast("long").as("yr"))
         .agg(Summaries.exactSum(amount, 2).as("sum_profit"))
         .orderBy(col("n_name"), col("yr"))
-    }),
+    }, oracle = Some(
+      """SELECT n_name, yr,
+        |  CAST(round(sum(CAST(amount AS DECIMAL(38,6))), 2) AS DOUBLE)
+        |    AS sum_profit
+        |FROM (
+        |  SELECT n_name, CAST(year(o_orderdate) AS BIGINT) AS yr,
+        |    l_extendedprice * (1 - l_discount)
+        |      - 0.8 * p_retailprice * l_quantity AS amount
+        |  FROM lineitem JOIN part ON p_partkey = l_partkey
+        |  JOIN supplier ON s_suppkey = l_suppkey
+        |  JOIN orders ON o_orderkey = l_orderkey
+        |  JOIN nation ON s_nationkey = n_nationkey
+        |  WHERE p_name LIKE '%a%')
+        |GROUP BY n_name, yr ORDER BY n_name, yr""".stripMargin)),
 
     // Q16 — TPC-H Q16 supplier-count shape: distinct suppliers per
     // (brand, type, size) slice, EXCLUDING a supplier denylist via
@@ -3052,7 +5268,7 @@ object TrainingQueries {
     // the part scan; lineitem plays the part↔supplier relation the
     // schema's missing partsupp would provide; countDistinct exchanges
     // once on the 3-column group key.
-    "q16_supplier_count" -> ((s, d) => {
+    QuerySpec("q16_supplier_count", (s, d) => {
       val denylist = Tables.supplier(s, d)
         .filter(col("s_acctbal") < 0).select(col("s_suppkey"))
       Tables.lineitem(s, d)
@@ -3070,7 +5286,17 @@ object TrainingQueries {
         .orderBy(col("supplier_cnt").desc, col("p_brand"),
           col("p_type"), col("p_size"))
         .limit(20)
-    }),
+    }, oracle = Some(
+      """SELECT p_brand, p_type, p_size,
+        |  count(DISTINCT l_suppkey) AS supplier_cnt
+        |FROM lineitem JOIN part ON p_partkey = l_partkey
+        |WHERE p_brand <> 'Brand#45'
+        |  AND p_size IN (1, 4, 9, 16, 25, 36, 49)
+        |  AND l_suppkey NOT IN (
+        |    SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+        |GROUP BY p_brand, p_type, p_size
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
+        |LIMIT 20""".stripMargin)),
 
     // Q19 — TPC-H Q19 discounted-revenue shape: the OR-of-ANDs
     // predicate class — three (brand, size-band, quantity-band)
@@ -3079,7 +5305,7 @@ object TrainingQueries {
     // residual ((brand∧size) OR …) — pushed INTO the part scan — and
     // keeps only the cross-table conjuncts as the join residual, on
     // top of a plain partkey equi-join (no BNLJ; PlanSpec pins both).
-    "q19_disjunctive_revenue" -> ((s, d) => {
+    QuerySpec("q19_disjunctive_revenue", (s, d) => {
       val li = Tables.lineitem(s, d)
         .select(col("l_partkey"), col("l_quantity"),
           col("l_extendedprice"), col("l_discount"))
@@ -3099,7 +5325,17 @@ object TrainingQueries {
           Summaries.exactSum(
             col("l_extendedprice") * (lit(1) - col("l_discount")), 2)
             .as("revenue"))
-    }),
+    }, oracle = Some(
+      """SELECT count(*) AS n_items,
+        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
+        |    AS DECIMAL(38,6))), 2) AS DOUBLE) AS revenue
+        |FROM lineitem JOIN part ON p_partkey = l_partkey
+        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
+        |    AND l_quantity BETWEEN 1 AND 21)
+        |  OR (p_brand = 'Brand#23' AND p_size BETWEEN 10 AND 30
+        |    AND l_quantity BETWEEN 10 AND 30)
+        |  OR (p_brand = 'Brand#34' AND p_size BETWEEN 20 AND 50
+        |    AND l_quantity BETWEEN 20 AND 40)""".stripMargin)),
 
     // Q20 — TPC-H Q20 excess-stock shape: the nested IN + correlated
     // aggregate — suppliers who DOMINATE a meaningful part's flow
@@ -3110,7 +5346,7 @@ object TrainingQueries {
     // into a per-part total aggregate joined back on l_partkey, and
     // the IN into one left-semi join on s_suppkey — no per-row
     // re-aggregation, no BNLJ (PlanSpec).
-    "q20_dominant_suppliers" -> ((s, d) => {
+    QuerySpec("q20_dominant_suppliers", (s, d) => {
       Tables.supplier(s, d).createOrReplaceTempView("supplier")
       Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
       Tables.nation(s, d).createOrReplaceTempView("nation")
@@ -3125,7 +5361,17 @@ object TrainingQueries {
               SELECT sum(l_quantity) FROM lineitem l2
               WHERE l2.l_partkey = l1.l_partkey))
         ORDER BY s_name""")
-    }),
+    }, oracle = Some(
+      """SELECT s_name, n_name
+        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
+        |WHERE s_suppkey IN (
+        |  SELECT l_suppkey FROM lineitem l1
+        |  GROUP BY l_partkey, l_suppkey
+        |  HAVING sum(l_quantity) >= 60
+        |    AND sum(l_quantity) > 0.2 * (
+        |      SELECT sum(l_quantity) FROM lineitem l2
+        |      WHERE l2.l_partkey = l1.l_partkey))
+        |ORDER BY s_name""".stripMargin)),
 
     // D19 — INCREMENTAL span dedup (d18's production ingest form, the
     // d11/d12 discipline applied to spans): the first 400 doc_ids play
@@ -3139,7 +5385,7 @@ object TrainingQueries {
     // %9 — d16/d18 precedent) so cross-snapshot span hits provably
     // fire; batch docs that are verbatim copies of snapshot docs
     // surface as full-doc runs alongside.
-    "d19_incremental_span_dedup" -> ((s, d) => {
+    QuerySpec("d19_incremental_span_dedup", (s, d) => {
       val docs = Tables.documents(s, d)
       def withPassage(df: DataFrame, mod: Int) = df.select(col("doc_id"),
         when(col("doc_id") % mod === 0,
@@ -3151,7 +5397,53 @@ object TrainingQueries {
       Dedup.substringRunsAgainstIndex(batch, index, "doc_id", "text",
           width = 8)
         .orderBy(col("doc_id"))
-    }),
+    }, oracle = Some(
+      // d19 replays the two-sided injection, the snapshot's distinct
+      // shingle index, and the batch's index-hit island extraction
+      ("""WITH injected AS (
+        |  SELECT doc_id, CASE WHEN (doc_id < 400 AND doc_id % 5 = 0)
+        |      OR (doc_id >= 400 AND doc_id % 9 = 0)
+        |    THEN text || ' """ + DedupPassage + """' ELSE text END AS text
+        |  FROM documents
+        |), snapbase AS (
+        |  SELECT doc_id, string_split(text, ' ') AS toks FROM injected
+        |  WHERE doc_id < 400 AND len(string_split(text, ' ')) >= 8
+        |), snappos AS (
+        |  SELECT toks, unnest(range(1, len(toks) - 6)) AS i FROM snapbase
+        |), idx AS (
+        |  SELECT DISTINCT CAST('0x' || substr(md5(array_to_string(
+        |    list_slice(toks, i, i + 7), ' ')), 1, 15) AS BIGINT) AS h
+        |  FROM snappos
+        |), batchbase AS (
+        |  SELECT doc_id, string_split(text, ' ') AS toks FROM injected
+        |  WHERE doc_id >= 400 AND len(string_split(text, ' ')) >= 8
+        |), bpos AS (
+        |  SELECT doc_id, toks, unnest(range(1, len(toks) - 6)) AS i
+        |  FROM batchbase
+        |), sh AS (
+        |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
+        |    CAST('0x' || substr(md5(array_to_string(
+        |      list_slice(toks, i, i + 7), ' ')), 1, 15) AS BIGINT) AS h
+        |  FROM bpos
+        |), marked AS (
+        |  SELECT doc_id, pos,
+        |    row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS rn
+        |  FROM sh WHERE h IN (SELECT h FROM idx)
+        |), runs AS (
+        |  SELECT doc_id, pos - rn AS island, count(*) AS rs
+        |  FROM marked GROUP BY doc_id, pos - rn
+        |), agg AS (
+        |  SELECT doc_id, count(*) AS n_dup_runs,
+        |    CAST(max(rs) + 7 AS BIGINT) AS longest_dup_tokens,
+        |    CAST(sum(rs) AS BIGINT) AS dup_shingles
+        |  FROM runs GROUP BY doc_id
+        |)
+        |SELECT d.doc_id, coalesce(a.n_dup_runs, 0) AS n_dup_runs,
+        |  coalesce(a.longest_dup_tokens, 0) AS longest_dup_tokens,
+        |  coalesce(a.dup_shingles, 0) AS dup_shingles
+        |FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
+        |WHERE d.doc_id >= 400
+        |ORDER BY d.doc_id""").stripMargin)),
 
     // Q2 — TPC-H Q2 minimum-cost-supplier shape (q2_sql_surface is the
     // SQL-registration demo, THIS is the reference query): for a part
@@ -3164,7 +5456,7 @@ object TrainingQueries {
     // Catalyst plans the correlated subquery as a per-partkey
     // aggregate of that same frame joined back, never a per-row
     // re-scan (the q17/q20 discipline; covered by the no-BNLJ guard).
-    "q2_min_cost_supplier" -> ((s, d) => {
+    QuerySpec("q2_min_cost_supplier", (s, d) => {
       Tables.lineitem(s, d).createOrReplaceTempView("lineitem")
       Tables.supplier(s, d).createOrReplaceTempView("supplier")
       Tables.nation(s, d).createOrReplaceTempView("nation")
@@ -3185,7 +5477,21 @@ object TrainingQueries {
           AND c.unit_cost = (SELECT min(c2.unit_cost) FROM cost c2
                              WHERE c2.partkey = p_partkey)
         ORDER BY p_partkey, s_suppkey LIMIT 100""")
-    }),
+    }, oracle = Some(
+      """WITH cost AS (
+        |  SELECT l_partkey AS partkey, l_suppkey AS suppkey,
+        |    min(l_extendedprice / l_quantity) AS unit_cost
+        |  FROM lineitem GROUP BY l_partkey, l_suppkey)
+        |SELECT p_partkey, s_suppkey, s_name, n_name,
+        |  round(c.unit_cost, 2) AS best_cost
+        |FROM part JOIN cost c ON p_partkey = c.partkey
+        |JOIN supplier ON s_suppkey = c.suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE p_size = 25 AND r_name = 'ASIA'
+        |  AND c.unit_cost = (SELECT min(c2.unit_cost) FROM cost c2
+        |                     WHERE c2.partkey = p_partkey)
+        |ORDER BY p_partkey, s_suppkey LIMIT 100""".stripMargin)),
 
     // Q6 — TPC-H Q6 forecast-revenue shape: the pure scan query — every
     // predicate (date window, discount band, quantity cap) pushes into
@@ -3193,7 +5499,7 @@ object TrainingQueries {
     // shuffle beyond the 1-row final combine. The floor case of the
     // spine: at 100 TB this query IS the scan, so the plan must show
     // zero operators between scan and aggregate.
-    "q6_forecast_revenue" -> ((s, d) => {
+    QuerySpec("q6_forecast_revenue", (s, d) => {
       Tables.lineitem(s, d)
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp")
           && col("l_shipdate") < lit("1997-01-01").cast("timestamp")
@@ -3202,7 +5508,15 @@ object TrainingQueries {
         .agg(Summaries.exactSum(
             col("l_extendedprice") * col("l_discount"), 2).as("revenue"),
           count(lit(1)).as("n_items"))
-    }),
+    }, oracle = Some(
+      """SELECT CAST(round(sum(CAST(l_extendedprice * l_discount
+        |    AS DECIMAL(38,6))), 2) AS DOUBLE) AS revenue,
+        |  count(*) AS n_items
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01'
+        |  AND l_discount BETWEEN 0.03 AND 0.05
+        |  AND l_quantity < 24""".stripMargin)),
 
     // Q8 — TPC-H Q8 market-share shape: one nation's share of a
     // region's market for one part type, per year — the conditional
@@ -3211,7 +5525,7 @@ object TrainingQueries {
     // discipline on a 7-way join). Dimension-first: region→nation→
     // customer prunes before orders; the supplier-side nation tags the
     // numerator rows. Share = one unrounded double division.
-    "q8_market_share" -> ((s, d) => {
+    QuerySpec("q8_market_share", (s, d) => {
       val lo = lit("1996-01-01").cast("timestamp")
       val hi = lit("1998-01-01").cast("timestamp")
       val custAsia = Tables.customer(s, d)
@@ -3245,7 +5559,28 @@ object TrainingQueries {
             / sum(vol.cast("decimal(38,6)")).cast("double"))
           .as("mkt_share"))
         .orderBy(col("yr"))
-    }),
+    }, oracle = Some(
+      """WITH allrows AS (
+        |  SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
+        |    l_extendedprice * (1 - l_discount) AS volume,
+        |    n2.n_name AS supp_nation
+        |  FROM lineitem
+        |  JOIN part ON p_partkey = l_partkey
+        |  JOIN orders ON o_orderkey = l_orderkey
+        |  JOIN customer ON c_custkey = o_custkey
+        |  JOIN nation n1 ON c_nationkey = n1.n_nationkey
+        |  JOIN region ON n1.n_regionkey = r_regionkey
+        |  JOIN supplier ON s_suppkey = l_suppkey
+        |  JOIN nation n2 ON s_nationkey = n2.n_nationkey
+        |  WHERE r_name = 'ASIA' AND p_type = 'PROMO'
+        |    AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |    AND o_orderdate < TIMESTAMP '1998-01-01')
+        |SELECT yr,
+        |  CAST(sum(CAST(CASE WHEN supp_nation = 'NATION_5' THEN volume
+        |      ELSE 0 END AS DECIMAL(38,6))) AS DOUBLE)
+        |    / CAST(sum(CAST(volume AS DECIMAL(38,6))) AS DOUBLE)
+        |    AS mkt_share
+        |FROM allrows GROUP BY yr ORDER BY yr""".stripMargin)),
 
     // Q11 — TPC-H Q11 important-stock shape: per-part value held by one
     // nation's suppliers, kept only where it exceeds a FRACTION OF THE
@@ -3254,7 +5589,7 @@ object TrainingQueries {
     // |parts|-row frame (not the fact table) into a 1-row broadcast —
     // two aggregate grains, one fact scan. No partsupp in the schema,
     // so lineitem value plays stock value.
-    "q11_important_stock" -> ((s, d) => {
+    QuerySpec("q11_important_stock", (s, d) => {
       val natSupp = Tables.supplier(s, d)
         .join(Tables.nation(s, d).filter(col("n_name") === "NATION_5"),
           col("s_nationkey") === col("n_nationkey"))
@@ -3274,7 +5609,19 @@ object TrainingQueries {
         .select(col("l_partkey"), col("part_value"))
         .orderBy(col("part_value").desc, col("l_partkey"))
         .limit(20)
-    }),
+    }, oracle = Some(
+      """WITH val AS (
+        |  SELECT l_partkey,
+        |    CAST(round(sum(CAST(l_extendedprice AS DECIMAL(38,6))), 2)
+        |      AS DOUBLE) AS part_value
+        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+        |  JOIN nation ON s_nationkey = n_nationkey
+        |  WHERE n_name = 'NATION_5'
+        |  GROUP BY l_partkey)
+        |SELECT l_partkey, part_value FROM val
+        |WHERE part_value > (SELECT CAST(sum(CAST(part_value
+        |    AS DECIMAL(38,6))) AS DOUBLE) * 0.002 FROM val)
+        |ORDER BY part_value DESC, l_partkey LIMIT 20""".stripMargin)),
 
     // Q12 — TPC-H Q12 shipping-priority-by-mode shape: the two-level
     // conditional count (urgent vs non-urgent lines per shipping
@@ -3282,7 +5629,7 @@ object TrainingQueries {
     // aggregate as conditional sums. The schema has no l_shipmode;
     // l_returnflag plays the 3-class mode axis (the CASE machinery —
     // the capability under test — is identical).
-    "q12_priority_by_class" -> ((s, d) => {
+    QuerySpec("q12_priority_by_class", (s, d) => {
       val urgent = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
       Tables.orders(s, d).select(col("o_orderkey"), col("o_orderpriority"))
         .join(Tables.lineitem(s, d)
@@ -3294,7 +5641,16 @@ object TrainingQueries {
         .agg(sum(when(urgent, 1L).otherwise(0L)).as("high_line_count"),
           sum(when(!urgent, 1L).otherwise(0L)).as("low_line_count"))
         .orderBy(col("ship_class"))
-    }),
+    }, oracle = Some(
+      """SELECT l_returnflag AS ship_class,
+        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+        |  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01'
+        |GROUP BY l_returnflag ORDER BY ship_class""".stripMargin)),
 
     // Q13 — TPC-H Q13 customer-distribution shape: the outer join with
     // the predicate IN THE JOIN CONDITION (not a WHERE — customers
@@ -3302,7 +5658,7 @@ object TrainingQueries {
     // two-level aggregation: per-customer order count, then the
     // distribution over counts. The second grain aggregates a
     // |customers|-row frame, not the fact table.
-    "q13_customer_distribution" -> ((s, d) => {
+    QuerySpec("q13_customer_distribution", (s, d) => {
       val perCust = Tables.customer(s, d).select(col("c_custkey"))
         .join(Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_custkey"),
@@ -3316,7 +5672,14 @@ object TrainingQueries {
         .agg(count(lit(1)).as("custdist"))
         .orderBy(col("custdist").desc, col("c_count").desc)
         .limit(10)
-    }),
+    }, oracle = Some(
+      """SELECT c_count, count(*) AS custdist FROM (
+        |  SELECT c_custkey, count(o_orderkey) AS c_count
+        |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
+        |    AND o_orderpriority <> '1-URGENT'
+        |  GROUP BY c_custkey)
+        |GROUP BY c_count
+        |ORDER BY custdist DESC, c_count DESC LIMIT 10""".stripMargin)),
 
     // Q15 — TPC-H Q15 top-supplier shape: the aggregate-then-argmax —
     // quarterly revenue per supplier (one fact-table aggregate), then
@@ -3324,7 +5687,7 @@ object TrainingQueries {
     // over that |suppliers|-row frame (ties all surface — the
     // reference semantics). The name stitch joins AFTER the argmax, on
     // a frame of the winners only.
-    "q15_top_supplier" -> ((s, d) => {
+    QuerySpec("q15_top_supplier", (s, d) => {
       val rev = Tables.lineitem(s, d)
         .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp")
           && col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
@@ -3341,7 +5704,19 @@ object TrainingQueries {
           col("supplier_no") === col("s_suppkey"))
         .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
         .orderBy(col("s_suppkey"))
-    }),
+    }, oracle = Some(
+      """WITH rev AS (
+        |  SELECT l_suppkey AS supplier_no,
+        |    CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
+        |      AS DECIMAL(38,6))), 2) AS DOUBLE) AS total_revenue
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |    AND l_shipdate < TIMESTAMP '1996-04-01'
+        |  GROUP BY l_suppkey)
+        |SELECT s_suppkey, s_name, total_revenue
+        |FROM supplier JOIN rev ON s_suppkey = supplier_no
+        |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
+        |ORDER BY s_suppkey""".stripMargin)),
 
     // D16 — URL-level dedup (the crawl-frontier collapse that runs
     // BEFORE any document fetch at corpus scale — distinct from t20's
@@ -3357,7 +5732,7 @@ object TrainingQueries {
     // the preserved 'Asset' path case pins that only the HOST folds.
     // Scale: map-side explode + one bounded agg on the canonical key —
     // the same shape as exact dedup (d1), no other shuffle.
-    "d16_url_dedup" -> ((s, d) => {
+    QuerySpec("d16_url_dedup", (s, d) => {
       val k = pmod(col("doc_id"), lit(3)).cast("string")
       val b = pmod(col("doc_id"), lit(20)).cast("string")
       val variant = pmod(col("doc_id"), lit(4))
@@ -3381,7 +5756,35 @@ object TrainingQueries {
           countDistinct(col("doc_id")).as("n_docs"),
           min(col("doc_id")).as("keeper_doc_id"))
         .orderBy(col("canonical_url"))
-    }),
+    }, oracle = Some(
+      // d16's oracle replays the injection, extraction and
+      // canonicalization verbatim (t20 precedent)
+      """WITH injected AS (
+        |  SELECT doc_id, text || ' see ' ||
+        |    CASE CAST(doc_id % 4 AS INTEGER)
+        |      WHEN 0 THEN 'https://cdn' || (doc_id % 3) ||
+        |        '.example.com/Asset/' || (doc_id % 20)
+        |      WHEN 1 THEN 'http://CDN' || (doc_id % 3) ||
+        |        '.Example.COM/Asset/' || (doc_id % 20)
+        |      WHEN 2 THEN 'https://cdn' || (doc_id % 3) ||
+        |        '.example.com/Asset/' || (doc_id % 20) || '?utm_source=feed'
+        |      ELSE 'https://cdn' || (doc_id % 3) ||
+        |        '.example.com/Asset/' || (doc_id % 20) || '/#sec'
+        |    END AS text
+        |  FROM documents),
+        |urls AS (
+        |  SELECT doc_id, unnest(regexp_extract_all(text, 'https?://[^ ]+'))
+        |    AS url FROM injected),
+        |canon AS (
+        |  SELECT doc_id,
+        |    lower(regexp_extract(regexp_replace(url, '[?#].*$', ''),
+        |      '^https?://([^/]+)', 1)) ||
+        |    regexp_replace(regexp_extract(regexp_replace(url, '[?#].*$', ''),
+        |      '^https?://[^/]+(.*)$', 1), '/$', '') AS canonical_url
+        |  FROM urls)
+        |SELECT canonical_url, count(*) AS n_urls,
+        |  count(DISTINCT doc_id) AS n_docs, min(doc_id) AS keeper_doc_id
+        |FROM canon GROUP BY canonical_url ORDER BY canonical_url""".stripMargin)),
 
     // V14 — LINEAR interpolation over calendar gaps (the resample +
     // interpolate companion to v3's zero-fill densify): per-user daily
@@ -3391,13 +5794,48 @@ object TrainingQueries {
     // user), so the expression is total. Raw IEEE doubles out — the
     // engine-wide unrounded-average policy; the oracle replays the
     // identical fixed-order expression over IGNORE NULLS windows.
-    "v14_interpolate" -> ((s, d) => {
+    QuerySpec("v14_interpolate", (s, d) => {
       graft.extensions.EventWindows.interpolateDaily(Tables.events(s, d))
         .select(col("user_id"),
           date_format(col("day"), "yyyy-MM-dd").as("day"),
           col("observed"), col("v_interp"))
         .orderBy(col("user_id"), col("day"))
-    }),
+    }, oracle = Some(
+      // v14: identical fixed-order IEEE interpolation over IGNORE NULLS
+      // windows; date_diff('day', a, b) = Spark's datediff(b, a)
+      """WITH daily AS (
+        |  SELECT user_id, CAST(ts AS DATE) AS day,
+        |    CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) / count(*) AS v
+        |  FROM events GROUP BY user_id, CAST(ts AS DATE)),
+        |spans AS (
+        |  SELECT user_id, min(day) AS d0, max(day) AS d1
+        |  FROM daily GROUP BY user_id),
+        |calendar AS (
+        |  SELECT user_id,
+        |    CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day
+        |  FROM spans),
+        |dense AS (
+        |  SELECT c.user_id, c.day, d.v
+        |  FROM calendar c LEFT JOIN daily d USING (user_id, day)),
+        |w AS (
+        |  SELECT user_id, day, v,
+        |    last_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY day
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
+        |    last_value(CASE WHEN v IS NOT NULL THEN day END IGNORE NULLS)
+        |      OVER (PARTITION BY user_id ORDER BY day
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pd,
+        |    first_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY day
+        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
+        |    first_value(CASE WHEN v IS NOT NULL THEN day END IGNORE NULLS)
+        |      OVER (PARTITION BY user_id ORDER BY day
+        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nd
+        |  FROM dense)
+        |SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
+        |  v IS NOT NULL AS observed,
+        |  CASE WHEN v IS NOT NULL THEN v
+        |    ELSE pv + (nv - pv) * (CAST(date_diff('day', pd, day) AS DOUBLE) /
+        |      CAST(date_diff('day', pd, nd) AS DOUBLE)) END AS v_interp
+        |FROM w ORDER BY user_id, day""".stripMargin)),
 
     // W30 — Misra-Gries heavy hitters (bounded-state top-key sketch):
     // exact per-key counts over an unbounded key domain are O(distinct)
@@ -3423,7 +5861,7 @@ object TrainingQueries {
     // AND the exact percentiles; one more pass ranks the 5 approx
     // values via conditional counts against a 1-row broadcast (no
     // crossJoin amplification).
-    "w33_approx_quantiles" -> ((s, d) => {
+    QuerySpec("w33_approx_quantiles", (s, d) => {
       val probs = Seq(0.25, 0.5, 0.75, 0.95, 0.99)
       val acc = 1000
       val probsArr = array(probs.map(lit): _*)
@@ -3480,9 +5918,22 @@ object TrainingQueries {
               col("prob") * col("n") - col("n") / acc - 1))
             .as("within_rank_bound"))
         .orderBy(col("prob"))
-    }),
+    }, oracle = Some(
+      // w30: the four booleans are the MG guarantees (hold under any
+      // partitioning); n_true_hh / hh_exact_count are exact SQL values
+      // w33: exact side re-derived (the w6 quantile_cont convention);
+      // the rank-bound boolean is the w30 literal-true contract — the
+      // hash matches only if Spark's sketch actually met its guarantee
+      """WITH v AS (SELECT CAST(l_extendedprice AS DOUBLE) AS v
+        |  FROM lineitem),
+        |qq AS (SELECT quantile_cont(v, [0.25, 0.5, 0.75, 0.95, 0.99])
+        |    AS qs, CAST(count(*) AS BIGINT) AS n FROM v)
+        |SELECT [0.25, 0.5, 0.75, 0.95, 0.99][i] AS prob, n,
+        |  round(qs[i], 6) AS exact_q, true AS within_rank_bound
+        |FROM qq CROSS JOIN (SELECT unnest(range(1, 6)) AS i)
+        |ORDER BY prob""".stripMargin)),
 
-    "w30_heavy_hitters" -> ((s, d) => {
+    QuerySpec("w30_heavy_hitters", (s, d) => {
       val K = 16
       val mg = udaf(new graft.functions.MisraGriesAggregator(K))
       val skew = Tables.lineitem(s, d).select(
@@ -3511,7 +5962,15 @@ object TrainingQueries {
         .select((col("n_missed") === 0).as("hh_captured"),
           col("est_le_exact"), col("err_within_bound"), col("at_most_k"),
           col("n_true_hh"), col("hh_exact_count"))
-    }),
+    }, oracle = Some(
+      """WITH skew AS (SELECT CASE WHEN l_partkey % 5 = 0 THEN 0
+        |    ELSE l_partkey % 997 END AS key FROM lineitem),
+        |hh AS (SELECT key, count(*) AS exact FROM skew GROUP BY key
+        |  HAVING count(*) * 17 > (SELECT count(*) FROM skew))
+        |SELECT true AS hh_captured, true AS est_le_exact,
+        |  true AS err_within_bound, true AS at_most_k,
+        |  (SELECT count(*) FROM hh) AS n_true_hh,
+        |  (SELECT CAST(sum(exact) AS BIGINT) FROM hh) AS hh_exact_count""".stripMargin)),
 
     // V15 — first-order Markov transition matrix over each user's
     // time-ordered event stream (the behavioral model behind
@@ -3536,7 +5995,7 @@ object TrainingQueries {
     // normalizer counts only the lags that exist, so early rows get a
     // proper truncated-window mean. Scale: window state is 20 rows per
     // user regardless of stream length.
-    "v16_ewma_smoothing" -> ((s, d) => {
+    QuerySpec("v16_ewma_smoothing", (s, d) => {
       val quantized = Tables.events(s, d)
         .filter(col("value").isNotNull)
         .select(col("event_id"), col("user_id"),
@@ -3547,7 +6006,7 @@ object TrainingQueries {
           depth = 20, scale = 100.0, outCol = "ewma")
         .select(col("event_id"), col("user_id"), col("ewma"))
         .orderBy(col("event_id"))
-    }),
+    }, oracle = Some(ewmaOracleSql(20))),
 
     // V17 — last-touch attribution: each purchase attributes to the
     // user's LATEST preceding click within a 7-day window (the
@@ -3559,7 +6018,7 @@ object TrainingQueries {
     // purchases. Epoch-µs arithmetic throughout (the v9 convention);
     // simultaneous clicks dedupe to max event_id upstream so the
     // as-of match is deterministic; gap_s is exact integer division.
-    "v17_attribution" -> ((s, d) => {
+    QuerySpec("v17_attribution", (s, d) => {
       val W7 = 604800000000L // 7 days in µs
       val ev = Tables.events(s, d).select(col("event_id"), col("user_id"),
         unix_micros(col("ts")).as("us"), col("event_type"))
@@ -3580,7 +6039,36 @@ object TrainingQueries {
           when(col("us") - col("click_us") <= W7,
             expr("(us - click_us) div 1000000")).as("gap_s"))
         .orderBy(col("event_id"))
-    }),
+    }, oracle = Some(
+      // v17 replays the as-of union trick: clicks and purchases interleave
+      // in one per-user window ordered (us, side) with clicks first at
+      // ties (inclusive as-of, the Joins.asOfJoin convention); the
+      // IGNORE NULLS last_value carries the latest click forward. The two
+      // filled columns cannot blend rows: click_id/cus are never null on
+      // click rows, always null on purchase rows.
+      """WITH ev AS (
+        |  SELECT event_id, user_id, epoch_us(ts) AS us, event_type
+        |  FROM events),
+        |c AS (
+        |  SELECT user_id, us, max(event_id) AS click_id FROM ev
+        |  WHERE event_type = 'click' GROUP BY user_id, us),
+        |u AS (
+        |  SELECT user_id, us, NULL AS cid, NULL AS cus, 1 AS side,
+        |    event_id
+        |  FROM ev WHERE event_type = 'purchase'
+        |  UNION ALL
+        |  SELECT user_id, us, click_id, us, 0, NULL FROM c),
+        |f AS (
+        |  SELECT *,
+        |    last_value(cid IGNORE NULLS) OVER ww AS lc,
+        |    last_value(cus IGNORE NULLS) OVER ww AS lcus
+        |  FROM u WINDOW ww AS (PARTITION BY user_id ORDER BY us, side
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+        |SELECT event_id, user_id,
+        |  CASE WHEN us - lcus <= 604800000000 THEN lc END AS click_id,
+        |  CASE WHEN us - lcus <= 604800000000 THEN (us - lcus) // 1000000
+        |    END AS gap_s
+        |FROM f WHERE side = 1 ORDER BY event_id""".stripMargin)),
 
     // O11 — ANALYZE-style column statistics in ONE fact-table pass
     // (null count, exact distinct count, min/max per numeric column) —
@@ -3591,7 +6079,7 @@ object TrainingQueries {
     // exact input doubles (no float convention needed); distinct
     // counts are exact — swap in approx_count_distinct past the
     // memory budget (documented, not needed at oracle scale).
-    "o11_column_stats" -> ((s, d) => {
+    QuerySpec("o11_column_stats", (s, d) => {
       val cols = Seq("l_quantity", "l_extendedprice", "l_discount",
         "l_tax", "l_suppkey")
       // r15 (guide §2.3/§2.4): ONE aggregate carrying five
@@ -3614,7 +6102,24 @@ object TrainingQueries {
           .select(lit(c).as("col_name"), col("n_nulls"),
             col("n_distinct"), col("min_v"), col("max_v"))
       }.reduce(_.unionByName(_)).orderBy(col("col_name"))
-    }),
+    }, oracle = Some(
+      // o11: one aggregate pass unpivoted — min/max are exact input
+      // doubles, null/distinct counts exact integers; no float convention
+      {
+      val cols = Seq("l_quantity", "l_extendedprice", "l_discount",
+        "l_tax", "l_suppkey")
+      val aggs = cols.map { c =>
+        s"""    sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS ${c}_nn,
+           |    count(DISTINCT $c) AS ${c}_nd,
+           |    min(CAST($c AS DOUBLE)) AS ${c}_mn,
+           |    max(CAST($c AS DOUBLE)) AS ${c}_mx""".stripMargin
+      }.mkString(",\n")
+      val rows = cols.map { c =>
+        s"SELECT '$c' AS col_name, CAST(${c}_nn AS BIGINT) AS n_nulls, " +
+          s"${c}_nd AS n_distinct, ${c}_mn AS min_v, ${c}_mx AS max_v FROM a"
+      }.mkString("\n", "\nUNION ALL ", "")
+      s"WITH a AS (\n  SELECT\n$aggs\n  FROM lineitem)$rows\nORDER BY col_name"
+    })),
 
     // O12 — declarative DATA-QUALITY AUDIT (the Deequ-style constraint
     // suite every ingest gate runs before data reaches training): six
@@ -3632,7 +6137,7 @@ object TrainingQueries {
     // injected-missingness rule): a constant-zero audit would be
     // oracle-dead; the two control rows that DO pass stay green
     // against the same machinery.
-    "o12_integrity_audit" -> ((s, d) => {
+    QuerySpec("o12_integrity_audit", (s, d) => {
       val chk = (name: String, total: Column, bad: Column) =>
         struct(lit(name).as("check_name"), total.as("total_rows"),
           bad.as("violations"), (bad === 0L).as("passed"))
@@ -3696,9 +6201,62 @@ object TrainingQueries {
         .select(col("r.check_name"), col("r.total_rows"),
           col("r.violations"), col("r.passed"))
         .orderBy(col("check_name"))
-    }),
+    }, oracle = Some(
+      // o12 replays the injected-violation audit: the same 1-in-100 /
+      // 1-in-50 / 1-in-200 augmentation CTEs, each rule an integer
+      // conditional count, FK orphans via NOT EXISTS (the anti join)
+      """WITH cust_aug AS (
+        |  SELECT * FROM customer
+        |  UNION ALL SELECT * FROM customer WHERE c_custkey % 100 = 0
+        |), ord_aug AS (
+        |  SELECT o_orderkey, o_custkey FROM orders
+        |  UNION ALL SELECT o_orderkey + 10000000, o_custkey + 10000000
+        |  FROM orders WHERE o_orderkey % 50 = 0
+        |), li_aug AS (
+        |  SELECT l_quantity, l_discount FROM lineitem
+        |  UNION ALL SELECT l_quantity + 100.0, l_discount
+        |  FROM lineitem WHERE l_orderkey % 200 = 0 AND l_linenumber = 1
+        |)
+        |SELECT * FROM (
+        |  SELECT 'customer.c_custkey unique' AS check_name,
+        |    count(*) AS total_rows,
+        |    count(*) - count(DISTINCT c_custkey) AS violations,
+        |    count(*) - count(DISTINCT c_custkey) = 0 AS passed
+        |  FROM cust_aug
+        |  UNION ALL
+        |  SELECT 'orders.o_custkey in customer', count(*),
+        |    CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM customer c
+        |          WHERE c.c_custkey = o.o_custkey) THEN 1 ELSE 0 END) AS BIGINT),
+        |    sum(CASE WHEN NOT EXISTS (SELECT 1 FROM customer c
+        |          WHERE c.c_custkey = o.o_custkey) THEN 1 ELSE 0 END) = 0
+        |  FROM ord_aug o
+        |  UNION ALL
+        |  SELECT 'lineitem.l_quantity in [1,50]', count(*),
+        |    CAST(sum(CASE WHEN l_quantity < 1.0 OR l_quantity > 50.0
+        |          THEN 1 ELSE 0 END) AS BIGINT),
+        |    sum(CASE WHEN l_quantity < 1.0 OR l_quantity > 50.0
+        |          THEN 1 ELSE 0 END) = 0
+        |  FROM li_aug
+        |  UNION ALL
+        |  SELECT 'lineitem.l_discount in [0,0.1]', count(*),
+        |    CAST(sum(CASE WHEN l_discount < 0.0 OR l_discount > 0.1
+        |          THEN 1 ELSE 0 END) AS BIGINT),
+        |    sum(CASE WHEN l_discount < 0.0 OR l_discount > 0.1
+        |          THEN 1 ELSE 0 END) = 0
+        |  FROM li_aug
+        |  UNION ALL
+        |  SELECT 'documents.text non-empty', count(*),
+        |    CAST(sum(CASE WHEN text IS NULL OR text = '' THEN 1 ELSE 0 END) AS BIGINT),
+        |    sum(CASE WHEN text IS NULL OR text = '' THEN 1 ELSE 0 END) = 0
+        |  FROM documents
+        |  UNION ALL
+        |  SELECT 'documents.n_chars = len(text)', count(*),
+        |    CAST(sum(CASE WHEN n_chars <> len(text) THEN 1 ELSE 0 END) AS BIGINT),
+        |    sum(CASE WHEN n_chars <> len(text) THEN 1 ELSE 0 END) = 0
+        |  FROM documents
+        |) ORDER BY check_name""".stripMargin)),
 
-    "v15_markov_transitions" -> ((s, d) => {
+    QuerySpec("v15_markov_transitions", (s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id"))
         .orderBy(col("us"), col("event_id"))
@@ -3714,7 +6272,21 @@ object TrainingQueries {
         .withColumn("p",
           round(col("n") * lit(1.0) / sum(col("n")).over(wc), 6))
         .orderBy(col("cur_type"), col("next_type"))
-    }),
+    }, oracle = Some(
+      // v15 replays the lead window on epoch-µs longs (the v9
+      // convention); p is one double division of exact counts, round 6
+      """WITH t AS (
+        |  SELECT event_type AS cur_type,
+        |    lead(event_type) OVER (PARTITION BY user_id
+        |      ORDER BY epoch_us(ts), event_id) AS next_type
+        |  FROM events),
+        |c AS (
+        |  SELECT cur_type, next_type, count(*) AS n FROM t
+        |  WHERE next_type IS NOT NULL GROUP BY cur_type, next_type)
+        |SELECT cur_type, next_type, n,
+        |  round(CAST(n AS DOUBLE)
+        |    / CAST(sum(n) OVER (PARTITION BY cur_type) AS DOUBLE), 6) AS p
+        |FROM c ORDER BY cur_type, next_type""".stripMargin)),
 
     // G7 — label-propagation community detection (3 synchronous
     // iterations) on the shared trading graph: the cheap plurality-
@@ -3725,11 +6297,11 @@ object TrainingQueries {
     // identical window tie-break. Per iteration one edges⋈labels
     // broadcast join + one (node, label) count — the pageRank
     // superstep's cost shape with no decimal sum needed.
-    "g7_label_propagation" -> ((s, d) => {
+    QuerySpec("g7_label_propagation", (s, d) => {
       graft.operators.Graph
         .labelPropagation(tradingEdges(s, d), iterations = 3)
         .orderBy(col("node"))
-    }),
+    }, oracle = Some(labelPropagationOracleSql(3))),
 
     // S20 — temperature-balanced domain resampling (the multinomial
     // α-temperature mix every multi-source LM corpus is drawn with,
@@ -3743,7 +6315,7 @@ object TrainingQueries {
     // longs. Scale: two passes over (doc_id, source) — a grouped
     // count, then a broadcast rate join + filter; the corpus never
     // sorts and nothing non-combinable touches the fat frame.
-    "s20_temperature_resample" -> ((s, d) => {
+    QuerySpec("s20_temperature_resample", (s, d) => {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("source"))
       val counts = docs.groupBy(col("source"))
         .agg(count(lit(1)).as("n"))
@@ -3769,7 +6341,28 @@ object TrainingQueries {
         .select(col("source"), col("n").as("n_docs"),
           round(col("rate"), 6).as("rate"), col("n_sampled"))
         .orderBy(col("source"))
-    }),
+    }, oracle = Some(
+      // s20: sqrt is IEEE-identical per source, micro-unit quantized;
+      // the rate is exact-integer products divided once as double
+      """WITH docs AS (SELECT doc_id, source FROM documents),
+        |counts AS (
+        |  SELECT source, count(*) AS n,
+        |    CAST(round(sqrt(CAST(count(*) AS DOUBLE)) * 1e6) AS BIGINT) AS w
+        |  FROM docs GROUP BY source),
+        |totals AS (SELECT CAST(sum(w) AS BIGINT) AS sw,
+        |  CAST(sum(n) // 2 AS BIGINT) AS budget FROM counts),
+        |th AS (
+        |  SELECT source, n,
+        |    least(1.0, CAST(budget * w AS DOUBLE) / CAST(sw * n AS DOUBLE))
+        |      AS rate
+        |  FROM counts, totals)
+        |SELECT t.source, t.n AS n_docs, round(t.rate, 6) AS rate,
+        |  count(*) AS n_sampled
+        |FROM docs d JOIN th t ON d.source = t.source
+        |WHERE d.doc_id % 999983 * 2654435761 % 1048576
+        |  < CAST(floor(t.rate * 1048576) AS BIGINT)
+        |GROUP BY t.source, t.n, t.rate
+        |ORDER BY t.source""".stripMargin)),
 
     // W31 — count-min sketch frequency estimation
     // (Summaries.countMinEstimates) over the w30 skewed key stream,
@@ -3784,7 +6377,7 @@ object TrainingQueries {
     // full key set in ScaleSpec). Scale: the fat stream posexplodes
     // ×4 then map-side combines into ≤1024 cells; the probe side
     // joins the broadcast sketch.
-    "w31_count_min" -> ((s, d) => {
+    QuerySpec("w31_count_min", (s, d) => {
       val skew = Tables.lineitem(s, d).select(
         when(pmod(col("l_partkey"), lit(5)) === 0, lit(0L))
           .otherwise(pmod(col("l_partkey"), lit(997))).as("key"))
@@ -3795,7 +6388,32 @@ object TrainingQueries {
         .select(col("key"), col("exact"), col("est"),
           (col("est") - col("exact")).as("overest"))
         .orderBy(col("exact").desc, col("key"))
-    })
+    }, oracle = Some(
+      // w31: the whole sketch replays bit-for-bit (integer hash family —
+      // the large-multiplier decorrelated rows, Summaries.cmCell), so
+      // est/exact/overest are all value-checked
+      """WITH skew AS (
+        |  SELECT CASE WHEN l_partkey % 5 = 0 THEN 0
+        |    ELSE l_partkey % 997 END AS key FROM lineitem),
+        |rows4 AS (SELECT * FROM (VALUES (0, 2654435761, 7),
+        |  (1, 2246822519, 11), (2, 3266489917, 13),
+        |  (3, 668265263, 17)) AS t(j, a, b)),
+        |sketch AS (
+        |  SELECT j, (key * a + b) % 999983 % 256 AS cell,
+        |    count(*) AS cnt
+        |  FROM skew CROSS JOIN rows4 GROUP BY 1, 2),
+        |top AS (
+        |  SELECT key, count(*) AS exact FROM skew GROUP BY key
+        |  ORDER BY exact DESC, key LIMIT 20),
+        |probe AS (
+        |  SELECT key, exact, min(cnt) AS est FROM (
+        |    SELECT t.key, t.exact, r.j,
+        |      (t.key * r.a + r.b) % 999983 % 256 AS cell
+        |    FROM top t CROSS JOIN rows4 r) p
+        |  JOIN sketch s ON s.j = p.j AND s.cell = p.cell
+        |  GROUP BY key, exact)
+        |SELECT key, exact, est, est - exact AS overest
+        |FROM probe ORDER BY exact DESC, key""".stripMargin))
   )
 
   /** DuckDB replay of Graph.pageRank's rounded iteration system: one
@@ -3962,30 +6580,6 @@ object TrainingQueries {
     protected def build(s: SparkSession, d: String): graft.operators.Graph.Run =
       graft.operators.Graph.run(tradingEdges(s, d))
   }
-
-  /** Shared e1-replay CTE: the brute-force cosine top-10 ground truth
-    * the e5/e6/e12b/e14b contract oracles re-derive (round-4 cosine,
-    * (sim DESC, vec_id) tiebreak — bruteForceTopK's exact ordering).
-    * ONE copy: a drift in the rounding or tiebreak convention must hit
-    * all four oracles together or none. */
-  private val BruteForceTop10Cte: String =
-    """WITH q AS (
-      |  SELECT generate_subscripts(embedding, 1) AS i,
-      |    CAST(unnest(embedding) AS DOUBLE) AS qv
-      |  FROM embeddings WHERE vec_id = 0
-      |), v AS (
-      |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-      |    CAST(unnest(embedding) AS DOUBLE) AS ev
-      |  FROM embeddings WHERE vec_id <> 0
-      |), m AS (
-      |  SELECT v.vec_id, sum(v.ev * q.qv) AS dot,
-      |    sum(v.ev * v.ev) AS vv, sum(q.qv * q.qv) AS qq
-      |  FROM v JOIN q ON v.i = q.i GROUP BY v.vec_id
-      |), top10 AS (
-      |  SELECT vec_id FROM m
-      |  ORDER BY round(dot / (sqrt(vv) * sqrt(qq)), 4) DESC, vec_id
-      |  LIMIT 10
-      |)""".stripMargin
 
   /** Personalized-PageRank oracle: the g1 chained-CTE replay with the
     * per-node teleport (1/|seeds| on seeds, 0 elsewhere) re-attached
@@ -4330,13 +6924,6 @@ object TrainingQueries {
         |  rule_label
         |FROM scored ORDER BY doc_id""".stripMargin
 
-  /** t42's split predicate, the s18 convention verbatim: seeded md5 of
-    * the content fingerprint mod 10 — buckets 0–7 train. Applied to the
-    * SPAM-INJECTED text (corpus0), exactly what the Spark side hashes. */
-  private val SplitTrainPred =
-    "CAST('0x' || substr(md5('split42:' || md5(lower(trim(text)))), " +
-      "1, 15) AS BIGINT) % 10 <= 7"
-
   /** t42's replay: the GD chain restricted to the train slice
     * (`trainPred`), then BOTH scoring passes — train (for the median
     * cut; `tscored`) and held-out (`hscored`, whose feature CTEs mirror
@@ -4627,2865 +7214,6 @@ object TrainingQueries {
       |    CAST('0x' || substr(md5('epoch42:' || CAST(doc_id AS VARCHAR)),
       |      1, 15) AS BIGINT) AS key FROM cnt)
       |)""".stripMargin
-
-  val oracles: Map[String, String] = Map(
-
-    "t28_bpe_merges" -> bpeOracleSql(4),
-
-    // t31 replays the full train chain (t28's oracle) PLUS the k-th
-    // application, then the vocab→corpus word join and per-doc counts
-    "t31_bpe_apply" -> bpeApplyOracleSql(4),
-
-    // t37 replays the BATCHED learner itself (unrolled passes, greedy
-    // conflict-checked slot CTEs) — NOT the serial chain; see
-    // bpeBatchedOracleSql
-    "t37_bpe_batched" -> bpeBatchedOracleSql(16, 4),
-
-    "t40_classifier_training" -> (classifierTrainingOracleSql(4096, 3, 100.0) +
-      "\nSELECT bucket, w AS weight FROM w3 ORDER BY bucket"),
-
-    "t41_model_scored_corpus" -> modelScoredOracleSql(4096, 3, 100.0),
-
-    // t42 replays split → train-slice GD → both scoring passes →
-    // confusion sums; see classifierEvalOracleSql
-    "t42_classifier_eval" -> classifierEvalOracleSql(4096, 3, 100.0),
-
-    // t43 replays the exact half (n_docs, kept_exact); sketch booleans
-    // Spark-verified, oracle-pinned — see approxCutOracleSql
-    "t43_model_approx_cut" -> approxCutOracleSql(4096, 3, 100.0),
-
-    // t39's replay: the green t27 signal battery at source grain over
-    // the d1 clone injection; every rate a double division of exact
-    // ints, round 4
-    // t39: the card CTE replays the t27 battery at source grain; the
-    // near-dup rate replays the full d3 signature/banding/cap/pair
-    // chain over the SAME clone-injected fixture, the cross-source
-    // contamination rate the t36 shingle collapse at doc grain.
-    "t39_dataset_card" ->
-      s"""${bpeChainSql(4, applyAll = true)}
-        |, docs AS MATERIALIZED (
-        |  SELECT * FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text, lang, source, n_chars
-        |  FROM documents WHERE doc_id % 25 = 0
-        |), bpe_by AS MATERIALIZED (
-        |  SELECT d.source,
-        |    CAST(sum(len(string_split(v.rep, ' '))) AS BIGINT) AS n_bpe
-        |  FROM (SELECT source, unnest(string_split(text, ' ')) AS w
-        |        FROM docs) d
-        |  JOIN w4 v ON d.w = v.w
-        |  GROUP BY d.source
-        |), consts AS (SELECT $minhashA AS ca, $minhashB AS cb),
-        |sig AS MATERIALIZED (
-        |  SELECT doc_id, list_transform(range(1, 33), s ->
-        |    list_min(list_transform(hs, h -> (ca[s] * h + cb[s]) % 1000000007)))
-        |    AS sig
-        |  FROM (
-        |    SELECT doc_id, list_transform(list_distinct(list_transform(
-        |      range(1, greatest(len(string_split(text,' ')) - 3 + 2, 2)),
-        |      i -> array_to_string(list_slice(string_split(text,' '), i, i + 2), ' '))),
-        |      x -> CAST('0x' || substr(md5(x),1,15) AS BIGINT) % 1000000007) AS hs
-        |    FROM docs) CROSS JOIN consts
-        |), capped AS MATERIALIZED (
-        |  SELECT * FROM (
-        |    SELECT doc_id, sig, band,
-        |      array_to_string(list_slice(sig, band * 4 + 1, band * 4 + 4), ',')
-        |        AS bkey,
-        |      row_number() OVER (
-        |        PARTITION BY band,
-        |          array_to_string(list_slice(sig, band * 4 + 1, band * 4 + 4), ',')
-        |        ORDER BY doc_id) AS brank
-        |    FROM sig CROSS JOIN (SELECT unnest(range(0, 8)) AS band) b)
-        |  WHERE brank <= 100
-        |), nd AS MATERIALIZED (
-        |  SELECT DISTINCT doc_id FROM (
-        |    SELECT unnest(LIST_VALUE(a_id, b_id)) AS doc_id FROM (
-        |      SELECT a_id, b_id,
-        |        round(len(list_filter(range(1, 33), i -> a_sig[i] = b_sig[i]))
-        |          / 32.0, 4) AS ej
-        |      FROM (
-        |        SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
-        |          a.sig AS a_sig, b.sig AS b_sig
-        |        FROM capped a JOIN capped b
-        |          ON a.band = b.band AND a.bkey = b.bkey
-        |          AND a.doc_id < b.doc_id))
-        |    WHERE ej >= 0.3)
-        |), nd_by AS MATERIALIZED (
-        |  SELECT d.source, CAST(count(*) AS BIGINT) AS n_near
-        |  FROM nd JOIN docs d USING (doc_id) GROUP BY d.source
-        |), dh AS MATERIALIZED (
-        |  SELECT DISTINCT doc_id, source,
-        |    CAST('0x' || substr(md5(s), 1, 15) AS BIGINT) AS h
-        |  FROM (
-        |    SELECT doc_id, source, unnest(list_distinct(list_transform(
-        |      range(1, greatest(len(toks) - 7, 1) + 1),
-        |      i -> array_to_string(list_slice(toks, i, i + 7), ' ')))) AS s
-        |    FROM (SELECT doc_id, source, string_split(text, ' ') AS toks
-        |          FROM docs))
-        |), gsh AS MATERIALIZED (
-        |  SELECT DISTINCT source AS og, h FROM dh
-        |), ct_by AS MATERIALIZED (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_ct FROM (
-        |    SELECT DISTINCT d.doc_id, d.source
-        |    FROM dh d JOIN gsh g USING (h) WHERE g.og <> d.source)
-        |  GROUP BY source
-        |), flagged AS MATERIALIZED (
-        |  SELECT source, lang, md5(lower(trim(text))) AS fp, n_words,
-        |    CASE WHEN n_words NOT BETWEEN 50 AND 100000 THEN 'word_count'
-        |         WHEN mean_word_len NOT BETWEEN 3.0 AND 10.0
-        |           THEN 'mean_word_len'
-        |         WHEN symbol_ratio > 0.1 THEN 'symbol_ratio'
-        |         WHEN alpha_frac < 0.8 THEN 'alpha_frac'
-        |         WHEN n_stopword_hits < 2 THEN 'stopwords'
-        |         ELSE 'pass' END AS reject_reason
-        |  FROM (
-        |    SELECT source, lang, text,
-        |      CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-        |      round((len(text) - len(string_split(text, ' ')) + 1) * 1.0
-        |        / len(string_split(text, ' ')), 4) AS mean_word_len,
-        |      round(((len(text) - len(replace(text, '#', '')))
-        |          + (len(text) - len(replace(text, '...', ''))) / 3) * 1.0
-        |        / len(string_split(text, ' ')), 4) AS symbol_ratio,
-        |      round(len(list_filter(string_split(text, ' '),
-        |          x -> regexp_matches(x, '[A-Za-z]'))) * 1.0
-        |        / len(string_split(text, ' ')), 4) AS alpha_frac,
-        |      CAST(len(list_filter(string_split(text, ' '),
-        |        x -> x IN ('the','be','to','of','and','that','have','with')))
-        |        AS BIGINT) AS n_stopword_hits
-        |    FROM docs)
-        |), card AS MATERIALIZED (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(n_words) AS BIGINT) AS n_tokens,
-        |    round(sum(n_words) * 1.0 / count(*), 4) AS avg_doc_tokens,
-        |    round(sum(CASE WHEN reject_reason = 'pass' THEN 1 ELSE 0 END)
-        |      * 1.0 / count(*), 4) AS quality_pass_rate,
-        |    CAST(count(DISTINCT fp) AS BIGINT) AS n_distinct_fp,
-        |    round(1.0 - count(DISTINCT fp) * 1.0 / count(*), 4) AS dup_frac,
-        |    CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-        |  FROM flagged GROUP BY source
-        |)
-        |SELECT c.source, c.n_docs, c.n_tokens,
-        |  CAST(coalesce(bb.n_bpe, 0) AS BIGINT) AS n_bpe_tokens,
-        |  c.avg_doc_tokens,
-        |  c.quality_pass_rate, c.n_distinct_fp, c.dup_frac, c.n_langs,
-        |  round(coalesce(nb.n_near, 0) * 1.0 / c.n_docs, 4)
-        |    AS near_dup_frac,
-        |  round(coalesce(cb.n_ct, 0) * 1.0 / c.n_docs, 4)
-        |    AS cross_src_contam_frac
-        |FROM card c
-        |LEFT JOIN nd_by nb ON c.source = nb.source
-        |LEFT JOIN ct_by cb ON c.source = cb.source
-        |LEFT JOIN bpe_by bb ON c.source = bb.source
-        |ORDER BY c.source""".stripMargin,
-
-    // s21's replay: same integer boundary arithmetic ((hi−lo)·pct//100 —
-    // BIGINT-exact both engines), same fate CASE, same spanning audit.
-    "s21_temporal_split" ->
-      """WITH ev AS MATERIALIZED (
-        |  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec
-        |  FROM events
-        |), mm AS (
-        |  SELECT min(sec) AS lo, max(sec) AS hi FROM ev
-        |), tagged AS MATERIALIZED (
-        |  SELECT user_id,
-        |    CASE WHEN sec < lo + (hi - lo) * 60 // 100 THEN 'train'
-        |         WHEN sec < lo + (hi - lo) * 60 // 100
-        |           + (hi - lo) * 1 // 100 THEN 'embargo'
-        |         WHEN sec < lo + (hi - lo) * 80 // 100 THEN 'val'
-        |         WHEN sec < lo + (hi - lo) * 80 // 100
-        |           + (hi - lo) * 1 // 100 THEN 'embargo'
-        |         ELSE 'test' END AS split
-        |  FROM ev CROSS JOIN mm
-        |)
-        |SELECT split, n_events, n_users, n_spanning_users
-        |FROM (
-        |  SELECT split, CAST(count(*) AS BIGINT) AS n_events,
-        |    CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-        |  FROM tagged GROUP BY split)
-        |CROSS JOIN (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_spanning_users FROM (
-        |    SELECT user_id FROM tagged WHERE split <> 'embargo'
-        |    GROUP BY user_id HAVING count(DISTINCT split) > 1))
-        |ORDER BY split""".stripMargin,
-
-    // t38's replay: same feature bag (unigram occurrences + bigrams —
-    // range(1, len) is end-exclusive, matching Spark's zip_with/slice
-    // form), same md5→bucket and md5→milliweight derivations, integer
-    // sum, sigmoid at the end. kept re-derived from the integer sign.
-    "t38_quality_classifier" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-        |), feats AS (
-        |  SELECT doc_id, unnest(list_concat(t,
-        |    list_transform(range(1, len(t)),
-        |      i -> t[i] || ' ' || t[i + 1]))) AS f
-        |  FROM toks
-        |), bk AS (
-        |  SELECT doc_id,
-        |    CAST('0x' || substr(md5(f), 1, 15) AS BIGINT) % 4096 AS bucket
-        |  FROM feats
-        |), w AS (
-        |  SELECT range AS bucket,
-        |    CAST('0x' || substr(md5('w:' || range), 1, 15) AS BIGINT)
-        |      % 2001 - 1000 AS wm
-        |  FROM range(0, 4096)
-        |), sc AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_features,
-        |    CAST(sum(coalesce(wm, 0)) AS BIGINT) AS s
-        |  FROM bk LEFT JOIN w USING (bucket) GROUP BY doc_id
-        |)
-        |SELECT doc_id, n_features,
-        |  round(1.0 / (1.0 + exp(-(CAST(s AS DOUBLE)
-        |    / (1000.0 * n_features)))), 6) AS quality_score,
-        |  s >= 0 AS kept
-        |FROM sc ORDER BY doc_id""".stripMargin,
-
-    // t32 replays the map-only tf projection, the one-aggregate corpus
-    // stats and the fixed-order per-row BM25 arithmetic; identical
-    // operator associativity keeps the round-6 scores bit-aligned
-    "t32_bm25_topk" ->
-      """WITH base AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-        |), tf AS (
-        |  SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-        |    CAST(len(list_filter(toks, x -> x = 'hash')) AS BIGINT) AS tf0,
-        |    CAST(len(list_filter(toks, x -> x = 'join')) AS BIGINT) AS tf1,
-        |    CAST(len(list_filter(toks, x -> x = 'scan')) AS BIGINT) AS tf2
-        |  FROM base
-        |), st AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(n_tokens) AS BIGINT) AS sl,
-        |    CAST(sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df0,
-        |    CAST(sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df1,
-        |    CAST(sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df2
-        |  FROM tf
-        |)
-        |SELECT doc_id, n_tokens, bm25 FROM (
-        |  SELECT doc_id, n_tokens, round(
-        |    ln(1.0 + (n - df0 + 0.5) / (df0 + 0.5)) * (tf0 * 2.2)
-        |      / (tf0 + 1.2 * (1.0 - 0.75 + 0.75 * n_tokens / (sl * 1.0 / n)))
-        |    + ln(1.0 + (n - df1 + 0.5) / (df1 + 0.5)) * (tf1 * 2.2)
-        |      / (tf1 + 1.2 * (1.0 - 0.75 + 0.75 * n_tokens / (sl * 1.0 / n)))
-        |    + ln(1.0 + (n - df2 + 0.5) / (df2 + 0.5)) * (tf2 * 2.2)
-        |      / (tf2 + 1.2 * (1.0 - 0.75 + 0.75 * n_tokens / (sl * 1.0 / n))),
-        |    6) AS bm25
-        |  FROM tf, st)
-        |WHERE bm25 > 0
-        |ORDER BY bm25 DESC, doc_id
-        |LIMIT 15""".stripMargin,
-
-    // t34 replays the deterministic (source, doc_id) concat order, the
-    // cumulative window, the boundary-split predicate and the per-source
-    // window/padding arithmetic — all exact integer ops (// ≡ div)
-    "t34_sequence_packing" ->
-      """WITH cum AS (
-        |  SELECT source, doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |    CAST(sum(len(string_split(text, ' '))) OVER (
-        |      PARTITION BY source ORDER BY doc_id
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c
-        |  FROM documents
-        |)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-        |  ((max(c) - 1) // 256) + 1 AS n_windows,
-        |  CAST(sum(CASE WHEN (c - n_tokens) // 256 <> (c - 1) // 256
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS split_docs,
-        |  (256 - (max(c) % 256)) % 256 AS pad_tokens
-        |FROM cum
-        |GROUP BY source
-        |ORDER BY source""".stripMargin,
-
-    // t36 replays the shingle recipe (d5's list_slice form at n=8, md5
-    // hash), the (source, h) collapse, the pair join and the jaccard
-    "t36_source_overlap" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT source AS g,
-        |    CAST('0x' || substr(md5(s), 1, 15) AS BIGINT) AS h
-        |  FROM (
-        |    SELECT source, unnest(list_distinct(list_transform(
-        |      range(1, greatest(len(toks) - 7, 1) + 1),
-        |      i -> array_to_string(list_slice(toks, i, i + 7), ' ')))) AS s
-        |    FROM (SELECT source, string_split(text, ' ') AS toks
-        |          FROM documents))
-        |), per AS (
-        |  SELECT g, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY g
-        |), shared AS (
-        |  SELECT a.g AS a_group, b.g AS b_group,
-        |    CAST(count(*) AS BIGINT) AS shared_shingles
-        |  FROM sh a JOIN sh b ON a.h = b.h AND a.g < b.g
-        |  GROUP BY 1, 2
-        |)
-        |SELECT s.a_group, s.b_group, s.shared_shingles,
-        |  round(s.shared_shingles * 1.0
-        |    / (pa.n + pb.n - s.shared_shingles), 4) AS jaccard
-        |FROM shared s
-        |JOIN per pa ON s.a_group = pa.g
-        |JOIN per pb ON s.b_group = pb.g
-        |ORDER BY a_group, b_group""".stripMargin,
-
-    // t35 replays the deterministic PII injection, the regex counts and
-    // the global-flag scrub ('g' — DuckDB defaults to first-match-only,
-    // Spark replaces all)
-    "t35_pii_audit" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 0 THEN text || ' contact'
-        |        || CAST(doc_id AS VARCHAR) || '@example.com'
-        |      WHEN doc_id % 7 = 1 THEN text || ' call 555-'
-        |        || CAST(doc_id % 9000 + 1000 AS VARCHAR)
-        |      ELSE text END AS t
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(t, '[a-z0-9]+@[a-z0-9.]+'))
-        |    AS BIGINT) AS n_emails,
-        |  CAST(len(regexp_extract_all(t, '555-[0-9]+')) AS BIGINT)
-        |    AS n_phones,
-        |  CAST(length(regexp_replace(regexp_replace(t,
-        |    '[a-z0-9]+@[a-z0-9.]+', '<EMAIL>', 'g'),
-        |    '555-[0-9]+', '<PHONE>', 'g')) AS BIGINT) AS n_chars_clean,
-        |  (len(regexp_extract_all(t, '[a-z0-9]+@[a-z0-9.]+'))
-        |    + len(regexp_extract_all(t, '555-[0-9]+'))) > 0 AS has_pii
-        |FROM d
-        |ORDER BY doc_id""".stripMargin,
-
-    // t33 replays the source-grain aggregates, the round-6 pow, the
-    // DECIMAL denominator sum and the exact-input ratios
-    "t33_mix_weights" ->
-      """WITH per AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-        |  FROM documents GROUP BY source
-        |), tot AS (
-        |  SELECT CAST(sum(n_tokens) AS BIGINT) AS tot_tokens,
-        |    sum(CAST(round(power(n_tokens, 0.3), 6) AS DECIMAL(38,6)))
-        |      AS tot_pw
-        |  FROM per
-        |)
-        |SELECT source, n_docs, n_tokens,
-        |  n_tokens * 1.0 / tot_tokens AS p_raw,
-        |  round(round(power(n_tokens, 0.3), 6) / CAST(tot_pw AS DOUBLE), 6)
-        |    AS p_alpha,
-        |  round(2.0 * tot_tokens
-        |    * (round(power(n_tokens, 0.3), 6) / CAST(tot_pw AS DOUBLE))
-        |    / n_tokens, 4) AS epochs_at_2x
-        |FROM per, tot
-        |ORDER BY source""".stripMargin,
-
-    // t29 replays DSIR end-to-end: unigram+bigram explode, md5 bucket
-    // hash, Laplace-smoothed bucket distributions, round-6 ln pair,
-    // exact-decimal Σ c·lr, unrounded per-gram division, top-100 by
-    // (avg desc, doc_id) — the same system t23/t26 proved hash-exact.
-    "t29_dsir_select" ->
-      """WITH base AS (
-        |  SELECT doc_id, lang = 'en' AS is_target,
-        |    string_split(text, ' ') AS toks
-        |  FROM documents
-        |), grams AS (
-        |  SELECT doc_id, is_target, unnest(list_concat(toks,
-        |    list_transform(range(1, len(toks)),
-        |      i -> toks[i] || ' ' || toks[i + 1]))) AS g
-        |  FROM base
-        |), docf AS (
-        |  SELECT doc_id, is_target,
-        |    CAST('0x' || substr(md5(g), 1, 15) AS BIGINT) % 512 AS f,
-        |    count(*) AS c
-        |  FROM grams GROUP BY 1, 2, 3
-        |), bucket AS (
-        |  SELECT f, sum(CASE WHEN is_target THEN c ELSE 0 END) AS ct,
-        |    sum(c) AS cr
-        |  FROM docf GROUP BY f
-        |), tot AS (SELECT sum(ct) AS nt, sum(cr) AS nr FROM bucket),
-        |lr AS (
-        |  SELECT f, round(ln((ct + 1) * 1.0 / (nt + 512)), 6)
-        |    - round(ln((cr + 1) * 1.0 / (nr + 512)), 6) AS lr
-        |  FROM bucket, tot
-        |), scored AS (
-        |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_grams,
-        |    CAST(sum(CAST(lr AS DECIMAL(38,6)) * c) AS DOUBLE) / sum(c)
-        |      AS avg_logratio
-        |  FROM docf JOIN lr USING (f) GROUP BY doc_id
-        |), kept AS (
-        |  SELECT doc_id FROM scored
-        |  ORDER BY avg_logratio DESC, doc_id LIMIT 100
-        |)
-        |SELECT s.doc_id, s.n_grams, s.avg_logratio,
-        |  k.doc_id IS NOT NULL AS selected
-        |FROM scored s LEFT JOIN kept k ON s.doc_id = k.doc_id
-        |ORDER BY s.doc_id""".stripMargin,
-
-    // t30 replays the clean-slice per-lang bigram LM (t26's arithmetic
-    // with COALESCE-0 unseen counts), then the tercile banding against
-    // quantile_cont bounds (percentile ≡ quantile_cont proven by w20;
-    // the two literals are the exact doubles of Scala's 1.0/3, 2.0/3).
-    "t30_ccnet_buckets" ->
-      """WITH base AS (
-        |  SELECT doc_id, lang, source, string_split(text, ' ') AS toks
-        |  FROM documents
-        |), bg AS (
-        |  SELECT doc_id, lang, source, g, count(*) AS c FROM (
-        |    SELECT doc_id, lang, source, unnest(list_transform(
-        |      range(1, len(toks)), i -> toks[i] || ' ' || toks[i + 1])) AS g
-        |    FROM base)
-        |  GROUP BY 1, 2, 3, 4
-        |), cbg AS (
-        |  SELECT lang, g, sum(c) AS cbg FROM bg
-        |  WHERE source IN ('src0','src1','src2','src3','src4')
-        |  GROUP BY 1, 2
-        |), uni AS (
-        |  SELECT lang, w1, count(*) AS cw1 FROM (
-        |    SELECT lang, unnest(toks) AS w1 FROM base
-        |    WHERE source IN ('src0','src1','src2','src3','src4'))
-        |  GROUP BY 1, 2
-        |), v AS (SELECT lang, count(*) AS v FROM uni GROUP BY lang),
-        |scored AS (
-        |  SELECT b.doc_id, b.lang, CAST(sum(b.c) AS BIGINT) AS nb,
-        |    -CAST(sum(CAST(round(ln((COALESCE(cb.cbg, 0) + 1) * 1.0
-        |        / (COALESCE(u.cw1, 0) + v.v)), 6) AS DECIMAL(38,6)) * b.c)
-        |      AS DOUBLE) / sum(b.c) AS ce
-        |  FROM bg b
-        |  LEFT JOIN cbg cb ON b.lang = cb.lang AND b.g = cb.g
-        |  LEFT JOIN uni u
-        |    ON b.lang = u.lang AND string_split(b.g, ' ')[1] = u.w1
-        |  LEFT JOIN v ON b.lang = v.lang
-        |  GROUP BY b.doc_id, b.lang
-        |), bounds AS (
-        |  SELECT lang, quantile_cont(ce, 0.3333333333333333) AS b1,
-        |    quantile_cont(ce, 0.6666666666666666) AS b2
-        |  FROM scored GROUP BY lang
-        |)
-        |SELECT s.doc_id, s.lang, s.nb, s.ce,
-        |  CASE WHEN s.ce IS NULL THEN 'no_lm'
-        |    WHEN s.ce <= b.b1 THEN 'head'
-        |    WHEN s.ce <= b.b2 THEN 'middle' ELSE 'tail' END AS bucket
-        |FROM scored s JOIN bounds b ON s.lang = b.lang
-        |ORDER BY s.doc_id""".stripMargin,
-
-    "g1_pagerank" -> pageRankOracleSql(5, weighted = false),
-    "g2_weighted_pagerank" -> pageRankOracleSql(5, weighted = true),
-
-    // g11 replays min-label components via the d9 transitive-closure
-    // recursive CTE — a second formulation of the same closure on the
-    // co-purchase graph
-    "g11_connected_components" ->
-      """WITH RECURSIVE cp AS (
-        |  SELECT x.l_partkey AS src, y.l_partkey AS dst
-        |  FROM lineitem x JOIN lineitem y ON x.l_orderkey = y.l_orderkey
-        |  WHERE x.l_partkey < y.l_partkey
-        |  GROUP BY 1, 2 HAVING count(*) >= 2
-        |), nodes AS (
-        |  SELECT src AS node FROM cp UNION SELECT dst FROM cp
-        |), edges AS (
-        |  SELECT src AS s, dst AS t FROM cp UNION ALL SELECT dst, src FROM cp
-        |), reach(id, r) AS (
-        |  SELECT node, node FROM nodes
-        |  UNION
-        |  SELECT e.t, r.r FROM reach r JOIN edges e ON e.s = r.id
-        |), lbl AS (SELECT id, min(r) AS component_id FROM reach GROUP BY id)
-        |SELECT component_id, count(*) AS n_parts, max(id) AS max_part
-        |FROM lbl GROUP BY component_id
-        |ORDER BY n_parts DESC, component_id""".stripMargin,
-
-    "g12_khop_aggregation" ->
-      """WITH ce AS (
-        |  SELECT 'c' || CAST(o_custkey AS VARCHAR) AS c,
-        |    's' || CAST(l_suppkey AS VARCHAR) AS s, count(*) AS w
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |  GROUP BY 1, 2
-        |), seeds AS (
-        |  SELECT 'c' || CAST(c_custkey AS VARCHAR) AS seed FROM customer
-        |  WHERE c_custkey % 100 = 0
-        |), h1 AS (SELECT seed, s, w FROM seeds JOIN ce ON seed = c),
-        |h1agg AS (
-        |  SELECT seed, count(DISTINCT s) AS n_suppliers_1hop,
-        |    CAST(sum(w) AS BIGINT) AS w_1hop FROM h1 GROUP BY seed
-        |), h2 AS (
-        |  SELECT DISTINCT h.seed, ce.c AS c2
-        |  FROM (SELECT DISTINCT seed, s FROM h1) h JOIN ce ON h.s = ce.s
-        |  WHERE ce.c <> h.seed
-        |), h2agg AS (
-        |  SELECT seed, count(*) AS n_customers_2hop FROM h2 GROUP BY seed
-        |)
-        |SELECT sd.seed, coalesce(a.n_suppliers_1hop, 0) AS n_suppliers_1hop,
-        |  coalesce(a.w_1hop, 0) AS w_1hop,
-        |  coalesce(b.n_customers_2hop, 0) AS n_customers_2hop
-        |FROM seeds sd LEFT JOIN h1agg a ON sd.seed = a.seed
-        |LEFT JOIN h2agg b ON sd.seed = b.seed
-        |ORDER BY sd.seed""".stripMargin,
-    "g8_hits" -> hitsOracleSql(3),
-    // the ε = 1.0 L1-stop deterministically selects 4 supersteps on this
-    // graph at EVERY scale factor (SF-invariant residual sequence — see
-    // the g3 query comment); the oracle pins that selected count
-    "g3_pagerank_converged" -> pageRankOracleSql(4, weighted = false),
-    "g4_personalized_pagerank" -> personalizedPageRankOracleSql(5),
-    // g5 replays the oriented-wedge system: same (deg, id) orientation,
-    // same wedge ordering, EXISTS for the closing semi-join — exact
-    // integer counts end to end
-    "g5_triangle_count" ->
-      """WITH und AS (
-        |  SELECT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM lineitem x JOIN lineitem y ON x.l_orderkey = y.l_orderkey
-        |    AND x.l_partkey < y.l_partkey
-        |  GROUP BY a, b HAVING count(*) >= 2
-        |), deg AS (
-        |  SELECT node, count(*) AS deg FROM (
-        |    SELECT a AS node FROM und UNION ALL SELECT b FROM und
-        |  ) GROUP BY node
-        |), o AS (
-        |  SELECT
-        |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
-        |         THEN u.a ELSE u.b END AS src,
-        |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
-        |         THEN u.b ELSE u.a END AS dst,
-        |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
-        |         THEN db.deg ELSE da.deg END AS ddeg
-        |  FROM und u
-        |  JOIN deg da ON u.a = da.node
-        |  JOIN deg db ON u.b = db.node
-        |), tri AS (
-        |  SELECT e1.src AS u, e1.dst AS v, e2.dst AS w
-        |  FROM o e1 JOIN o e2 ON e1.src = e2.src
-        |    AND (e1.ddeg < e2.ddeg
-        |      OR (e1.ddeg = e2.ddeg AND e1.dst < e2.dst))
-        |  WHERE EXISTS (
-        |    SELECT 1 FROM o e3 WHERE e3.src = e1.dst AND e3.dst = e2.dst)
-        |)
-        |SELECT node, count(*) AS triangles FROM (
-        |  SELECT u AS node FROM tri
-        |  UNION ALL SELECT v FROM tri
-        |  UNION ALL SELECT w FROM tri
-        |) GROUP BY node ORDER BY node""".stripMargin,
-
-    "t12_pack_sequences" ->
-      """WITH docs AS (
-        |  SELECT doc_id, doc_id % 8 AS shard,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS nt
-        |  FROM documents
-        |), pos AS (
-        |  SELECT doc_id, shard, nt,
-        |    CAST(COALESCE(sum(nt) OVER (PARTITION BY shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS start
-        |  FROM docs
-        |)
-        |SELECT doc_id, shard, nt,
-        |  CAST(floor(start / 512) AS BIGINT) AS seq_id,
-        |  start % 512 AS seq_offset,
-        |  CAST(floor((start + nt - 1) / 512) - floor(start / 512) + 1
-        |    AS BIGINT) AS n_seqs_spanned
-        |FROM pos ORDER BY doc_id""".stripMargin,
-
-    "t13_unigram_quality" ->
-      """WITH tokc AS (
-        |  SELECT doc_id, word, count(*) AS c FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS word
-        |    FROM documents)
-        |  GROUP BY doc_id, word
-        |), vocab AS (
-        |  SELECT word, CAST(sum(c) AS BIGINT) AS freq FROM tokc GROUP BY word
-        |), top AS (
-        |  SELECT word, 1 AS in_top FROM vocab
-        |  ORDER BY freq DESC, word LIMIT 20
-        |)
-        |SELECT t.doc_id,
-        |  CAST(sum(t.c * v.freq) AS BIGINT) * 1.0
-        |    / CAST(sum(t.c) AS BIGINT) AS mean_word_freq,
-        |  CAST(sum(t.c * COALESCE(p.in_top, 0)) AS BIGINT) * 1.0
-        |    / CAST(sum(t.c) AS BIGINT) AS top20_frac
-        |FROM tokc t JOIN vocab v USING (word) LEFT JOIN top p USING (word)
-        |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin,
-
-    // Same quality-score formula as the t1 oracle; row_number replays
-    // the aggregator's (score DESC, doc_id) tie order.
-    "t16_topk_docs" ->
-      """WITH q AS (
-        |  SELECT source, doc_id,
-        |    round((CASE WHEN n_chars BETWEEN 100 AND 5000
-        |        THEN 1.0 ELSE 0.5 END) * 0.4
-        |      + least(len(list_distinct(string_split(text, ' '))) * 1.0
-        |        / len(string_split(text, ' ')) * 2, 1.0) * 0.6, 4) AS q
-        |  FROM documents
-        |), r AS (
-        |  SELECT source, doc_id, q, row_number() OVER (
-        |    PARTITION BY source ORDER BY q DESC, doc_id) AS rnk
-        |  FROM q
-        |)
-        |SELECT source, CAST(rnk AS BIGINT) AS rnk, doc_id,
-        |  q AS quality_score
-        |FROM r WHERE rnk <= 3 ORDER BY source, rnk""".stripMargin,
-
-    // DuckDB regexes are RE2; the patterns use only syntax with
-    // identical semantics in Java regex ('g' = Spark's replace-all
-    // default).
-    "t14_pii_redact" ->
-      """WITH aug AS (
-        |  SELECT doc_id, text || ' contact user' || doc_id
-        |    || '@example.com from 10.' || (doc_id % 256)
-        |    || '.0.1 call +1-555-'
-        |    || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS aug
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(aug,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT)
-        |    AS n_emails,
-        |  CAST(len(regexp_extract_all(aug,
-        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ips,
-        |  CAST(len(regexp_extract_all(aug, '\+1-555-\d{4}')) AS BIGINT)
-        |    AS n_phones,
-        |  md5(regexp_replace(regexp_replace(regexp_replace(aug,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-        |    '\+1-555-\d{4}', '<PHONE>', 'g')) AS redacted_hash
-        |FROM aug ORDER BY doc_id""".stripMargin,
-
-    "s8_hash_sample" ->
-      """SELECT l_returnflag, count(*) AS n_sampled,
-        |CAST(round(sum(CAST(l_quantity AS DECIMAL(38,6))), 2) AS DOUBLE) AS sum_qty
-        |FROM (SELECT *,
-        |  ((l_orderkey * 7 + l_linenumber) % 999983) * 2654435761 % 1000 AS h
-        |  FROM lineitem)
-        |WHERE h < CASE l_returnflag WHEN 'A' THEN 50 WHEN 'R' THEN 100 ELSE 20 END
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "s18_leakage_split" ->
-      """WITH d AS (
-        |  SELECT * FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text, lang, source, n_chars
-        |  FROM documents WHERE doc_id % 25 = 0
-        |), a AS (
-        |  SELECT doc_id, md5(lower(trim(text))) AS fp,
-        |    CAST('0x' || substr(md5('split42:' || md5(lower(trim(text)))),
-        |      1, 15) AS BIGINT) % 10 AS b_fp,
-        |    CAST('0x' || substr(md5('split42:' || CAST(doc_id AS VARCHAR)),
-        |      1, 15) AS BIGINT) % 10 AS b_doc
-        |  FROM d
-        |), v AS (
-        |  SELECT 'by_doc_id' AS variant,
-        |    count(CASE WHEN b_doc <= 7 THEN 1 END) AS n_train,
-        |    count(CASE WHEN b_doc = 8 THEN 1 END) AS n_val,
-        |    count(CASE WHEN b_doc = 9 THEN 1 END) AS n_test,
-        |    (SELECT count(*) FROM (SELECT fp FROM a GROUP BY fp
-        |      HAVING count(DISTINCT b_doc) > 1)) AS n_leaking_fps
-        |  FROM a
-        |  UNION ALL
-        |  SELECT 'by_fingerprint',
-        |    count(CASE WHEN b_fp <= 7 THEN 1 END),
-        |    count(CASE WHEN b_fp = 8 THEN 1 END),
-        |    count(CASE WHEN b_fp = 9 THEN 1 END),
-        |    (SELECT count(*) FROM (SELECT fp FROM a GROUP BY fp
-        |      HAVING count(DISTINCT b_fp) > 1))
-        |  FROM a
-        |)
-        |SELECT variant, n_train, n_val, n_test, n_leaking_fps
-        |FROM v ORDER BY variant""".stripMargin,
-
-    "s13_shuffle_shard" ->
-      """WITH k AS (
-        |  SELECT doc_id, CAST('0x' || substr(
-        |    md5('epoch42:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-        |    AS key
-        |  FROM documents
-        |)
-        |SELECT doc_id, key % 8 AS shard_id,
-        |  CAST(row_number() OVER (PARTITION BY key % 8
-        |    ORDER BY key, doc_id) AS BIGINT) AS pos_in_shard
-        |FROM k ORDER BY shard_id, pos_in_shard""".stripMargin,
-
-    "s10_mixture_upsample" ->
-      """WITH rep AS (
-        |  SELECT doc_id, source,
-        |    CAST(floor(w) AS BIGINT) +
-        |      CASE WHEN (doc_id % 999983) * 2654435761 % 1000 < (w - floor(w)) * 1000
-        |        THEN 1 ELSE 0 END AS repeats
-        |  FROM (SELECT doc_id, source,
-        |    CASE source WHEN 'src0' THEN 2.5 WHEN 'src1' THEN 1.0
-        |      WHEN 'src2' THEN 0.25 ELSE 0.5 END AS w
-        |    FROM documents)
-        |)
-        |SELECT source, count(*) AS n_rows,
-        |  count(DISTINCT doc_id) AS n_docs
-        |FROM (SELECT doc_id, source,
-        |  unnest(generate_series(1, repeats)) AS epoch FROM rep)
-        |GROUP BY source ORDER BY source""".stripMargin,
-
-    "d6_dedup_apply" ->
-      """WITH dwd AS (
-        |  SELECT * FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text, lang, source, n_chars
-        |  FROM documents WHERE doc_id % 25 = 0
-        |)
-        |SELECT doc_id, n_chars FROM dwd
-        |WHERE doc_id IN (SELECT min(doc_id) FROM dwd
-        |                 GROUP BY md5(lower(trim(text))))
-        |ORDER BY doc_id""".stripMargin,
-
-    "w20_percentiles" ->
-      """SELECT l_returnflag,
-        |quantile_cont(l_quantity, 0.25) AS p25,
-        |quantile_cont(l_quantity, 0.5) AS p50,
-        |quantile_cont(l_quantity, 0.9) AS p90
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "w26_incremental_agg_merge" ->
-      """SELECT l_returnflag, count(*) AS n_rows,
-        |CAST(round(sum(CAST(l_quantity AS DECIMAL(38,6))), 2) AS DOUBLE)
-        |  AS sum_qty,
-        |CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) / count(*)
-        |  AS avg_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    // v11 replays the lead-window form on epoch_us longs; the numerator
-    // is integer-exact (centi-unit value × µs duration in HUGEINT —
-    // the operator's decimal(38,0) twin), final division unrounded
-    "v11_time_weighted_avg" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us,
-        |    CAST(round(value * 100.0) AS HUGEINT) AS vu
-        |  FROM events WHERE value IS NOT NULL
-        |), d AS (
-        |  SELECT user_id, vu,
-        |    lead(us) OVER (PARTITION BY user_id ORDER BY us, event_id)
-        |      - us AS dt
-        |  FROM e
-        |)
-        |SELECT user_id, count(*) AS n_events,
-        |  CASE WHEN sum(dt) > 0
-        |    THEN CAST(sum(vu * dt) AS DOUBLE)
-        |      / (CAST(sum(dt) AS DOUBLE) * 100.0) END AS twa
-        |FROM d GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // w27 replays olsFit's exact-decimal moments and the identical
-    // double expression tree (same parenthesization — a different op
-    // order could ulp-shift within round-6's tie window)
-    "w27_ols_trend" ->
-      """WITH m AS (
-        |  SELECT event_type,
-        |    CAST(count(*) AS DOUBLE) AS n,
-        |    CAST(sum(CAST(day AS DECIMAL(38,10))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(value AS DECIMAL(38,10))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(day * value AS DECIMAL(38,10))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(day * day AS DECIMAL(38,10))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(value * value AS DECIMAL(38,10))) AS DOUBLE) AS syy
-        |  FROM (
-        |    SELECT event_type, epoch_us(ts) // 86400000000 AS day, value
-        |    FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-        |  ) GROUP BY event_type
-        |)
-        |SELECT event_type, CAST(n AS BIGINT) AS n_obs,
-        |  round(CASE WHEN n * sxx - sx * sx > 0.0
-        |    THEN (n * sxy - sx * sy) / (n * sxx - sx * sx) END, 6) AS slope,
-        |  round(CASE WHEN n * sxx - sx * sx > 0.0
-        |    THEN (sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n
-        |    END, 6) AS intercept,
-        |  round(CASE WHEN n * sxx - sx * sx > 0.0 AND n * syy - sy * sy > 0.0
-        |    THEN ((n * sxy - sx * sy) * (n * sxy - sx * sy))
-        |      / ((n * sxx - sx * sx) * (n * syy - sy * sy)) END, 6) AS r2
-        |FROM m ORDER BY event_type""".stripMargin,
-
-    // w32 replays pearsonMatrix: one complete-case moment CTE, then
-    // each cell's five scalars combine in the IDENTICAL double tree
-    // (cab / sqrt(va * vb), same parenthesization as the Spark
-    // Column expression) and the six cells stack via UNION ALL
-    "w32_correlation_matrix" -> {
-      val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      val moments =
-        (cols.map(c =>
-          s"CAST(sum(CAST($c AS DECIMAL(38,10))) AS DOUBLE) AS s_$c") ++
-         cols.map(c =>
-           s"CAST(sum(CAST($c * $c AS DECIMAL(38,10))) AS DOUBLE) AS ss_$c") ++
-         (for { i <- cols.indices; j <- cols.indices if i < j }
-           yield {
-             val (a, b) = (cols(i), cols(j))
-             s"CAST(sum(CAST($a * $b AS DECIMAL(38,10))) AS DOUBLE) AS x_${a}_$b"
-           })).mkString(",\n        |    ")
-      val cells = (for { i <- cols.indices; j <- cols.indices if i < j }
-        yield {
-          val (a, b) = (cols(i), cols(j))
-          s"""SELECT '$a' AS col_a, '$b' AS col_b,
-             |  round(CASE WHEN n * ss_$a - s_$a * s_$a > 0.0
-             |         AND n * ss_$b - s_$b * s_$b > 0.0
-             |    THEN (n * x_${a}_$b - s_$a * s_$b)
-             |      / sqrt((n * ss_$a - s_$a * s_$a)
-             |             * (n * ss_$b - s_$b * s_$b)) END, 6) AS corr,
-             |  CAST(n AS BIGINT) AS n_obs FROM m""".stripMargin
-        }).mkString("\n        |  UNION ALL\n        |  ")
-      s"""WITH m AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    $moments
-        |  FROM lineitem
-        |  WHERE ${cols.map(c => s"$c IS NOT NULL").mkString(" AND ")}
-        |)
-        |SELECT * FROM (
-        |  $cells
-        |) ORDER BY col_a, col_b""".stripMargin
-    },
-
-    // w28 replays the rollup lattice; GROUPING(a, b) carries the same
-    // bitmask (first column = MSB) in both engines, and the '(all)'
-    // coalesce keeps NULLs out of the ORDER BY (Spark NULLS FIRST vs
-    // DuckDB NULLS LAST would otherwise reorder subtotal rows)
-    "w28_rollup" ->
-      """SELECT CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-        |  coalesce(l_returnflag, '(all)') AS returnflag,
-        |  coalesce(l_linestatus, '(all)') AS linestatus,
-        |  count(*) AS n_rows,
-        |  CAST(round(sum(CAST(l_quantity AS DECIMAL(38,6))), 2) AS DOUBLE)
-        |    AS sum_qty,
-        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(38,6))), 2)
-        |    AS DOUBLE) AS sum_price
-        |FROM lineitem
-        |GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY gid, returnflag, linestatus""".stripMargin,
-
-    // t21 replays bm25 with the identical expression tree: ln once per
-    // (doc, term), round-6, decimal sum; constants pre-folded to
-    // (k1+1)=2.2 and (1-b)=0.25 in BOTH engines so the parse trees
-    // agree literal-for-literal
-    "t21_bm25" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-        |), tf AS (
-        |  SELECT doc_id, term, count(*) AS cnt FROM tok GROUP BY doc_id, term
-        |), dl AS (
-        |  SELECT doc_id, sum(cnt) AS dl FROM tf GROUP BY doc_id
-        |), st AS (
-        |  SELECT count(*) AS n, CAST(sum(dl) AS DOUBLE) AS sumdl FROM dl
-        |), df AS (
-        |  SELECT term, count(*) AS df FROM tf
-        |  WHERE term IN ('vector', 'stream', 'window') GROUP BY term
-        |), w AS (
-        |  SELECT tf.doc_id,
-        |    round(ln(1.0 + (st.n - df.df + 0.5) / (df.df + 0.5))
-        |      * (tf.cnt * 2.2)
-        |      / (tf.cnt + 1.2 * (0.25 + (0.75 * dl.dl) / (st.sumdl / st.n))),
-        |      6) AS w
-        |  FROM tf JOIN df USING (term) JOIN dl USING (doc_id) CROSS JOIN st
-        |)
-        |SELECT doc_id, CAST(sum(CAST(w AS DECIMAL(38,6))) AS DOUBLE) AS score,
-        |  count(*) AS n_terms_hit
-        |FROM w GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-
-    // x17's oracle uses the single-task window DuckDB runs happily;
-    // the Spark side must NOT (globalRowNumber — the o7 argument). The
-    // bin formula is pure BIGINT arithmetic: div in Spark, // here.
-    "x17_equal_freq_binning" ->
-      """WITH r AS (
-        |  SELECT l_extendedprice AS v,
-        |    row_number() OVER
-        |      (ORDER BY l_extendedprice, l_orderkey, l_linenumber) AS rn,
-        |    count(*) OVER () AS n
-        |  FROM lineitem
-        |)
-        |SELECT ((rn - 1) * 8) // n AS bin, count(*) AS n_rows,
-        |  min(v) AS lo, max(v) AS hi
-        |FROM r GROUP BY bin ORDER BY bin""".stripMargin,
-
-    // t22 replays t2's prediction SQL then stitches the three class
-    // counts exactly like the Spark side; ratios are single divisions
-    // of exact integers (identical IEEE result), unrounded
-    "t22_langid_eval" ->
-      """WITH preds AS (
-        |  SELECT lang AS actual,
-        |    CASE WHEN s_en + s_es + s_de + s_fr > 0 THEN
-        |      CASE
-        |        WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-        |        WHEN s_es >= s_en AND s_es >= s_de AND s_es >= s_fr THEN 'es'
-        |        WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr THEN 'de'
-        |        WHEN s_fr >= s_en AND s_fr >= s_es AND s_fr >= s_de THEN 'fr'
-        |        ELSE 'unknown' END
-        |    ELSE 'unknown' END AS predicted
-        |  FROM (SELECT lang,
-        |    CAST(len(list_filter(string_split(text, ' '),
-        |      x -> x IN ('the','a','of','and','to','in','is'))) AS BIGINT) AS s_en,
-        |    CAST(len(list_filter(string_split(text, ' '),
-        |      x -> x IN ('el','la','de','y','que','en','un'))) AS BIGINT) AS s_es,
-        |    CAST(len(list_filter(string_split(text, ' '),
-        |      x -> x IN ('der','die','das','und','ist','ein','zu'))) AS BIGINT) AS s_de,
-        |    CAST(len(list_filter(string_split(text, ' '),
-        |      x -> x IN ('le','la','de','et','est','un','dans'))) AS BIGINT) AS s_fr
-        |  FROM documents)
-        |), na AS (SELECT actual AS cls, count(*) AS n_actual FROM preds GROUP BY 1),
-        |np AS (SELECT predicted AS cls, count(*) AS n_predicted FROM preds GROUP BY 1),
-        |tp AS (SELECT actual AS cls, count(*) AS tp FROM preds
-        |       WHERE actual = predicted GROUP BY 1),
-        |base AS (
-        |  SELECT cls, coalesce(n_actual, 0) AS n_actual,
-        |    coalesce(n_predicted, 0) AS n_predicted, coalesce(tp, 0) AS tp
-        |  FROM na FULL OUTER JOIN np USING (cls) FULL OUTER JOIN tp USING (cls)
-        |), m AS (
-        |  SELECT cls, n_actual, n_predicted, tp,
-        |    CASE WHEN n_predicted > 0
-        |      THEN CAST(tp AS DOUBLE) / n_predicted END AS precision,
-        |    CASE WHEN n_actual > 0
-        |      THEN CAST(tp AS DOUBLE) / n_actual END AS recall
-        |  FROM base
-        |)
-        |SELECT cls, n_actual, n_predicted, tp, precision, recall,
-        |  CASE WHEN coalesce(precision, 0.0) + coalesce(recall, 0.0) > 0
-        |    THEN 2.0 * precision * recall / (precision + recall)
-        |    ELSE 0.0 END AS f1
-        |FROM m ORDER BY cls""".stripMargin,
-
-    // v13 replays the same rows-frame on centi-unit integers; windowed
-    // integer sums are association-free, so DuckDB's segment-tree
-    // window and Spark's running accumulation agree bit-for-bit, and
-    // the z expression is one shared double tree
-    "v13_rolling_zscore" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS us,
-        |    CAST(round(value * 100.0) AS BIGINT) AS vu
-        |  FROM events
-        |), s AS (
-        |  SELECT event_id, user_id, vu,
-        |    count(vu) OVER w AS n, sum(vu) OVER w AS s1,
-        |    sum(vu * vu) OVER w AS s2
-        |  FROM e
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id
-        |    ROWS BETWEEN 8 PRECEDING AND 1 PRECEDING)
-        |), z AS (
-        |  SELECT event_id, user_id,
-        |    CASE WHEN n = 8 AND CAST(n * s2 - s1 * s1 AS DOUBLE)
-        |        / CAST(n * (n - 1) AS DOUBLE) > 0
-        |      THEN round((CAST(vu AS DOUBLE) - CAST(s1 AS DOUBLE) / n)
-        |        / sqrt(CAST(n * s2 - s1 * s1 AS DOUBLE)
-        |          / CAST(n * (n - 1) AS DOUBLE)), 6) END AS z
-        |  FROM s
-        |)
-        |SELECT event_id, user_id, z,
-        |  coalesce(abs(z) > 3.0, false) AS is_anomaly
-        |FROM z ORDER BY event_id""".stripMargin,
-
-    // w29: quantile_cont is DuckDB's (n−1)p linear interpolation —
-    // the same rank formula as Spark's exact percentile (the w6
-    // median convention, at two more quantiles)
-    // v18 replays the µs lag window, the integer-second div, the
-    // exactAvg mean and quantile_cont (≡ the Hive interpolation
-    // sortedPercentiles reproduces bit-for-bit — the w29 pairing)
-    "v18_interarrival" ->
-      """WITH g AS (
-        |  SELECT event_type,
-        |    (epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts), event_id)) // 1000000 AS gap_s
-        |  FROM events
-        |)
-        |SELECT event_type, count(*) AS n_gaps,
-        |  CAST(sum(CAST(CAST(gap_s AS DOUBLE) AS DECIMAL(38,6)))
-        |    AS DOUBLE) / count(*) AS mean_gap_s,
-        |  CAST(quantile_cont(CAST(gap_s AS DOUBLE), 0.5) AS DOUBLE)
-        |    AS p50_gap_s,
-        |  CAST(quantile_cont(CAST(gap_s AS DOUBLE), 0.95) AS DOUBLE)
-        |    AS p95_gap_s
-        |FROM g WHERE gap_s IS NOT NULL
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // g10 replays the degree frame + double edge join and the w8
-    // exact-moment correlation tree
-    "g10_assortativity" ->
-      """WITH ce AS (
-        |  SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS c,
-        |    's' || CAST(l_suppkey AS VARCHAR) AS s
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |), e AS (
-        |  SELECT c AS src, s AS dst FROM ce
-        |  UNION ALL SELECT s, c FROM ce
-        |), deg AS (
-        |  SELECT src, count(*) AS deg FROM e GROUP BY src
-        |), xy AS (
-        |  SELECT 'trading' AS graph, CAST(a.deg AS DOUBLE) AS x,
-        |    CAST(b.deg AS DOUBLE) AS y
-        |  FROM e JOIN deg a ON e.src = a.src JOIN deg b ON e.dst = b.src
-        |), m AS (
-        |  SELECT graph, CAST(count(*) AS DOUBLE) AS n,
-        |    CAST(sum(CAST(x AS DECIMAL(38,10))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(y AS DECIMAL(38,10))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(x * y AS DECIMAL(38,10))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(x * x AS DECIMAL(38,10))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(y * y AS DECIMAL(38,10))) AS DOUBLE) AS syy
-        |  FROM xy GROUP BY graph
-        |)
-        |SELECT graph,
-        |  round((n * sxy - sx * sy)
-        |    / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
-        |    AS corr_xy
-        |FROM m ORDER BY graph""".stripMargin,
-
-    // x18 replays the moment CTE and the identical (x−μ)/σ tree
-    "x18_standardize" ->
-      """WITH m AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(38,10))) AS DOUBLE)
-        |      AS sx,
-        |    CAST(sum(CAST(l_extendedprice * l_extendedprice
-        |      AS DECIMAL(38,10))) AS DOUBLE) AS sxx
-        |  FROM lineitem
-        |)
-        |SELECT l_orderkey, l_extendedprice,
-        |  round((l_extendedprice - sx / n)
-        |    / sqrt(sxx / n - (sx / n) * (sx / n)), 6) AS z
-        |FROM lineitem CROSS JOIN m
-        |WHERE l_orderkey % 200 = 0 AND l_linenumber = 1
-        |ORDER BY l_orderkey""".stripMargin,
-
-    // o13 replays the augmentation and counts both sides of the
-    // semi/anti partition
-    "o13_integrity_repair" ->
-      """WITH ord_aug AS (
-        |  SELECT o_orderkey, o_custkey FROM orders
-        |  UNION ALL SELECT o_orderkey + 10000000, o_custkey + 10000000
-        |  FROM orders WHERE o_orderkey % 50 = 0
-        |)
-        |SELECT count(*) AS n_input,
-        |  CAST(sum(CASE WHEN EXISTS (SELECT 1 FROM customer c
-        |    WHERE c.c_custkey = o.o_custkey) THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_clean,
-        |  CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM customer c
-        |    WHERE c.c_custkey = o.o_custkey) THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_quarantined,
-        |  true AS partitioned
-        |FROM ord_aug o""".stripMargin,
-
-    // w36 replays the ordered cumulative-weight frame and the integer
-    // threshold
-    "w36_weighted_median" ->
-      """WITH f AS (
-        |  SELECT l_returnflag, l_extendedprice AS v,
-        |    CAST(floor(l_quantity) AS BIGINT) AS w, l_orderkey, l_linenumber
-        |  FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL
-        |    AND CAST(floor(l_quantity) AS BIGINT) > 0
-        |), c AS (
-        |  SELECT l_returnflag, v, w,
-        |    sum(w) OVER (PARTITION BY l_returnflag
-        |      ORDER BY v, l_orderkey, l_linenumber
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumw,
-        |    sum(w) OVER (PARTITION BY l_returnflag) AS tot
-        |  FROM f
-        |)
-        |SELECT l_returnflag, CAST(max(tot) AS BIGINT) AS total_weight,
-        |  min(CASE WHEN cumw * 2 >= tot THEN v END) AS weighted_median
-        |FROM c GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    // w35 replays the integer-cent quantization, the identical
-    // per-nation rank window and the same Gini double tree
-    "w35_gini_spend" ->
-      """WITH spend AS (
-        |  SELECT c.c_custkey, c.c_nationkey,
-        |    CAST(coalesce(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)),
-        |      0) AS BIGINT) AS cents
-        |  FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-        |  GROUP BY c.c_custkey, c.c_nationkey
-        |), ranked AS (
-        |  SELECT c_nationkey, cents,
-        |    row_number() OVER (PARTITION BY c_nationkey
-        |      ORDER BY cents, c_custkey) AS rnk
-        |  FROM spend
-        |), agg AS (
-        |  SELECT c_nationkey, CAST(count(*) AS DOUBLE) AS n,
-        |    CAST(sum(CAST(cents AS DECIMAL(38,0))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(rnk * cents AS DECIMAL(38,0))) AS DOUBLE) AS sxi
-        |  FROM ranked GROUP BY c_nationkey
-        |)
-        |SELECT n_name, CAST(n AS BIGINT) AS n_customers,
-        |  round(CASE WHEN sx > 0.0
-        |    THEN (2.0 * sxi - (n + 1.0) * sx) / (n * sx) END, 6) AS gini
-        |FROM agg JOIN nation ON c_nationkey = n_nationkey
-        |ORDER BY n_name""".stripMargin,
-
-    // w33 replays the diversity profile: same (source,lang) counts,
-    // same per-source window total (one partition), the t23 round-6-ln
-    // entropy system and the exact-integer/double-denominator ratios
-    "w33_diversity_profile" ->
-      """WITH c AS (
-        |  SELECT source, lang, count(*) AS cnt
-        |  FROM documents GROUP BY source, lang
-        |), t AS (
-        |  SELECT source, lang, cnt,
-        |    sum(cnt) OVER (PARTITION BY source) AS n FROM c
-        |), l AS (
-        |  SELECT source, cnt, n, round(ln(cnt * 1.0 / n), 6) AS lp FROM t
-        |)
-        |SELECT source, CAST(max(n) AS BIGINT) AS n_docs,
-        |  count(*) AS n_langs,
-        |  -CAST(sum(CAST(lp AS DECIMAL(38,6)) * cnt) AS DOUBLE) / max(n)
-        |    AS lang_entropy,
-        |  CAST(sum(CAST(cnt AS DECIMAL(38,0)) * cnt) AS DOUBLE)
-        |    / (CAST(max(n) AS DOUBLE) * CAST(max(n) AS DOUBLE)) AS hhi,
-        |  max(cnt) * 1.0 / max(n) AS top_share
-        |FROM l GROUP BY source ORDER BY source""".stripMargin,
-
-    // s19 replays the stratified fold assignment via the s13 seeded-md5
-    // order and the identical per-lang rank window
-    "s19_stratified_kfold" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang, n_chars,
-        |    md5('fold42:' || CAST(doc_id AS VARCHAR)) AS h
-        |  FROM documents
-        |), f AS (
-        |  SELECT lang, n_chars,
-        |    (row_number() OVER (PARTITION BY lang ORDER BY h, doc_id) - 1) % 5
-        |      AS fold
-        |  FROM h
-        |)
-        |SELECT fold, lang, count(*) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS n_chars
-        |FROM f GROUP BY fold, lang ORDER BY fold, lang""".stripMargin,
-
-    "w29_key_skew_profile" ->
-      """WITH fp AS (SELECT l_partkey AS k, count(*) AS f FROM lineitem GROUP BY 1),
-        |fs AS (SELECT l_suppkey AS k, count(*) AS f FROM lineitem GROUP BY 1),
-        |fo AS (SELECT l_orderkey AS k, count(*) AS f FROM lineitem GROUP BY 1),
-        |p AS (
-        |  SELECT 'l_partkey' AS key, count(*) AS n_keys, sum(f) AS n_rows,
-        |    max(f) AS max_freq,
-        |    CAST(quantile_cont(f, 0.5) AS DOUBLE) AS p50_freq,
-        |    CAST(quantile_cont(f, 0.99) AS DOUBLE) AS p99_freq
-        |  FROM fp
-        |  UNION ALL
-        |  SELECT 'l_suppkey', count(*), sum(f), max(f),
-        |    CAST(quantile_cont(f, 0.5) AS DOUBLE),
-        |    CAST(quantile_cont(f, 0.99) AS DOUBLE) FROM fs
-        |  UNION ALL
-        |  SELECT 'l_orderkey', count(*), sum(f), max(f),
-        |    CAST(quantile_cont(f, 0.5) AS DOUBLE),
-        |    CAST(quantile_cont(f, 0.99) AS DOUBLE) FROM fo
-        |)
-        |SELECT key, n_keys, CAST(n_rows AS BIGINT) AS n_rows, max_freq,
-        |  CAST(max_freq AS DOUBLE)
-        |    / (CAST(n_rows AS DOUBLE) / n_keys) AS skew_ratio,
-        |  p50_freq, p99_freq
-        |FROM p ORDER BY key""".stripMargin,
-
-    "v14_cumulative_uniques" ->
-      """WITH f AS (
-        |  SELECT user_id, min(epoch_us(ts) // 86400000000) AS day
-        |  FROM events GROUP BY user_id
-        |), dd AS (
-        |  SELECT day, count(*) AS new_users FROM f GROUP BY day
-        |)
-        |SELECT day, new_users,
-        |  CAST(sum(new_users) OVER (ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS cum_users
-        |FROM dd ORDER BY day""".stripMargin,
-
-    // t24 replays the ranked vocabulary and w27's exact-decimal moment
-    // system over round-6 ln values
-    "t24_zipf_fit" ->
-      """WITH tok AS (
-        |  SELECT unnest(string_split(text, ' ')) AS word FROM documents
-        |), v AS (
-        |  SELECT word, count(*) AS freq FROM tok GROUP BY word
-        |), r AS (
-        |  SELECT freq, row_number() OVER (ORDER BY freq DESC, word) AS rank
-        |  FROM v
-        |), xy AS (
-        |  SELECT round(ln(CAST(rank AS DOUBLE)), 6) AS x,
-        |    round(ln(CAST(freq AS DOUBLE)), 6) AS y
-        |  FROM r
-        |), m AS (
-        |  SELECT 'vocab' AS corpus, CAST(count(*) AS DOUBLE) AS n,
-        |    CAST(sum(CAST(x AS DECIMAL(38,10))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(y AS DECIMAL(38,10))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(x * y AS DECIMAL(38,10))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(x * x AS DECIMAL(38,10))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(y * y AS DECIMAL(38,10))) AS DOUBLE) AS syy
-        |  FROM xy
-        |)
-        |SELECT corpus, CAST(n AS BIGINT) AS n_obs,
-        |  round(CASE WHEN n * sxx - sx * sx > 0.0
-        |    THEN (n * sxy - sx * sy) / (n * sxx - sx * sx) END, 6) AS slope,
-        |  round(CASE WHEN n * sxx - sx * sx > 0.0
-        |    THEN (sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n
-        |    END, 6) AS intercept,
-        |  round(CASE WHEN n * sxx - sx * sx > 0.0 AND n * syy - sy * sy > 0.0
-        |    THEN ((n * sxy - sx * sy) * (n * sxy - sx * sy))
-        |      / ((n * sxx - sx * sx) * (n * syy - sy * sy)) END, 6) AS r2
-        |FROM m ORDER BY corpus""".stripMargin,
-
-    // t26 replays the smoothed bigram LM: positional bigram assembly
-    // via range(1, len), the identical (cbg+1)/(cw1+V) round-6 ln,
-    // c·lp in exact decimal, per-bigram division unrounded
-    "t26_bigram_lm" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-        |), b AS (
-        |  SELECT doc_id, toks[i] || ' ' || toks[i + 1] AS bg
-        |  FROM (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i FROM t)
-        |), bgc AS (
-        |  SELECT doc_id, bg, count(*) AS c FROM b GROUP BY doc_id, bg
-        |), cbg AS (
-        |  SELECT bg, sum(c) AS cbg FROM bgc GROUP BY bg
-        |), uni AS (
-        |  SELECT word, count(*) AS cw1 FROM (
-        |    SELECT unnest(string_split(text, ' ')) AS word FROM documents
-        |  ) GROUP BY word
-        |), v AS (SELECT count(*) AS v FROM uni),
-        |sc AS (
-        |  SELECT bgc.doc_id, bgc.c,
-        |    round(ln((cbg.cbg + 1) * 1.0 / (uni.cw1 + v.v)), 6) AS lp
-        |  FROM bgc JOIN cbg USING (bg)
-        |  JOIN uni ON string_split(bgc.bg, ' ')[1] = uni.word
-        |  CROSS JOIN v
-        |)
-        |SELECT doc_id, CAST(sum(c) AS BIGINT) AS nb,
-        |  -CAST(sum(CAST(lp AS DECIMAL(38,6)) * c) AS DOUBLE) / sum(c)
-        |    AS bigram_ce
-        |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // g9 replays the degree histogram and the t24-style ln-ln moment
-    // fit, cross-joined back onto every histogram row
-    "g9_degree_dist" ->
-      """WITH ce AS (
-        |  SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS c,
-        |    's' || CAST(l_suppkey AS VARCHAR) AS s
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |), e AS (
-        |  SELECT c AS src FROM ce UNION ALL SELECT s FROM ce
-        |), deg AS (
-        |  SELECT src, count(*) AS degree FROM e GROUP BY src
-        |), h AS (
-        |  SELECT degree, count(*) AS n_nodes FROM deg GROUP BY degree
-        |), xy AS (
-        |  SELECT degree, n_nodes,
-        |    round(ln(CAST(degree AS DOUBLE)), 6) AS x,
-        |    round(ln(CAST(n_nodes AS DOUBLE)), 6) AS y
-        |  FROM h
-        |), m AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS n,
-        |    CAST(sum(CAST(x AS DECIMAL(38,10))) AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(y AS DECIMAL(38,10))) AS DOUBLE) AS sy,
-        |    CAST(sum(CAST(x * y AS DECIMAL(38,10))) AS DOUBLE) AS sxy,
-        |    CAST(sum(CAST(x * x AS DECIMAL(38,10))) AS DOUBLE) AS sxx,
-        |    CAST(sum(CAST(y * y AS DECIMAL(38,10))) AS DOUBLE) AS syy
-        |  FROM xy
-        |)
-        |SELECT h.degree, h.n_nodes,
-        |  round(CASE WHEN n * sxx - sx * sx > 0.0
-        |    THEN (n * sxy - sx * sy) / (n * sxx - sx * sx) END, 6) AS slope,
-        |  round(CASE WHEN n * sxx - sx * sx > 0.0 AND n * syy - sy * sy > 0.0
-        |    THEN ((n * sxy - sx * sy) * (n * sxy - sx * sy))
-        |      / ((n * sxx - sx * sx) * (n * syy - sy * sy)) END, 6) AS r2
-        |FROM h CROSS JOIN m ORDER BY h.degree""".stripMargin,
-
-    // t23 replays the LM with the shared rounded system: one ln per
-    // vocabulary term rounded to 6 dp, c·lp in exact decimal, final
-    // per-token division unrounded
-    "t23_unigram_logprob" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
-        |), tf AS (
-        |  SELECT doc_id, word, count(*) AS c FROM tok GROUP BY doc_id, word
-        |), vocab AS (
-        |  SELECT word, sum(c) AS freq FROM tf GROUP BY word
-        |), tot AS (SELECT sum(freq) AS tot FROM vocab),
-        |w AS (
-        |  SELECT doc_id, c, round(ln(freq * 1.0 / tot), 6) AS lp
-        |  FROM tf JOIN vocab USING (word) CROSS JOIN tot
-        |)
-        |SELECT doc_id, CAST(sum(c) AS BIGINT) AS nt,
-        |  -CAST(sum(CAST(lp AS DECIMAL(38,6)) * c) AS DOUBLE) / sum(c)
-        |    AS cross_entropy
-        |FROM w GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // g6 reuses g5's oriented-triangle CTE chain; each triangle
-    // witnesses its three edges, the count left-joins back to the
-    // canonical edge set (no-common edges score 0.0), and the Jaccard
-    // is the same single integer division as the Spark side
-    "g6_edge_jaccard" ->
-      """WITH und AS (
-        |  SELECT x.l_partkey AS a, y.l_partkey AS b
-        |  FROM lineitem x JOIN lineitem y ON x.l_orderkey = y.l_orderkey
-        |    AND x.l_partkey < y.l_partkey
-        |  GROUP BY a, b HAVING count(*) >= 2
-        |), deg AS (
-        |  SELECT node, count(*) AS deg FROM (
-        |    SELECT a AS node FROM und UNION ALL SELECT b FROM und
-        |  ) GROUP BY node
-        |), o AS (
-        |  SELECT
-        |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
-        |         THEN u.a ELSE u.b END AS src,
-        |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
-        |         THEN u.b ELSE u.a END AS dst,
-        |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
-        |         THEN db.deg ELSE da.deg END AS ddeg
-        |  FROM und u
-        |  JOIN deg da ON u.a = da.node
-        |  JOIN deg db ON u.b = db.node
-        |), tri AS (
-        |  SELECT e1.src AS u, e1.dst AS v, e2.dst AS w
-        |  FROM o e1 JOIN o e2 ON e1.src = e2.src
-        |    AND (e1.ddeg < e2.ddeg
-        |      OR (e1.ddeg = e2.ddeg AND e1.dst < e2.dst))
-        |  WHERE EXISTS (
-        |    SELECT 1 FROM o e3 WHERE e3.src = e1.dst AND e3.dst = e2.dst)
-        |), wit AS (
-        |  SELECT least(x, y) AS a, greatest(x, y) AS b, count(*) AS common
-        |  FROM (
-        |    SELECT v AS x, w AS y FROM tri
-        |    UNION ALL SELECT u, w FROM tri
-        |    UNION ALL SELECT u, v FROM tri
-        |  ) GROUP BY 1, 2
-        |)
-        |SELECT u.a, u.b, coalesce(wit.common, 0) AS common,
-        |  CAST(coalesce(wit.common, 0) AS DOUBLE)
-        |    / (da.deg + db.deg - coalesce(wit.common, 0)) AS jaccard
-        |FROM und u
-        |LEFT JOIN wit ON u.a = wit.a AND u.b = wit.b
-        |JOIN deg da ON u.a = da.node
-        |JOIN deg db ON u.b = db.node
-        |ORDER BY u.a, u.b""".stripMargin,
-
-    "o9_scd2_history" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, ts, event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) AS secs
-        |  FROM events
-        |), m AS (
-        |  SELECT *, CASE WHEN lag(1) OVER w IS NULL OR lag(event_type)
-        |    OVER w IS DISTINCT FROM event_type THEN 1 ELSE 0 END AS chg
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-        |), r AS (
-        |  SELECT *, CAST(sum(chg) OVER (PARTITION BY user_id
-        |    ORDER BY epoch_us(ts), event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS version
-        |  FROM m
-        |), runs AS (
-        |  SELECT user_id, version, event_type, min(secs) AS valid_from,
-        |    count(*) AS n_events
-        |  FROM r GROUP BY user_id, version, event_type
-        |)
-        |SELECT user_id, version, event_type, valid_from,
-        |  lead(valid_from) OVER wv AS valid_to, n_events,
-        |  lead(valid_from) OVER wv IS NULL AS is_current
-        |FROM runs WINDOW wv AS (PARTITION BY user_id ORDER BY version)
-        |ORDER BY user_id, version""".stripMargin,
-
-    // j11 replays the non-purchase SCD2 dim (o9's CTE chain at µs
-    // grain) and does the PIT lookup with DuckDB's native ASOF LEFT
-    // JOIN — an independent formulation of the as-of-union semantics
-    "j11_pit_join" ->
-      """WITH np AS (
-        |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us
-        |  FROM events WHERE event_type <> 'purchase'
-        |), m AS (
-        |  SELECT *, CASE WHEN lag(1) OVER w IS NULL OR lag(event_type)
-        |    OVER w IS DISTINCT FROM event_type THEN 1 ELSE 0 END AS chg
-        |  FROM np WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-        |), r AS (
-        |  SELECT *, CAST(sum(chg) OVER (PARTITION BY user_id
-        |    ORDER BY us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |    AS version
-        |  FROM m
-        |), dim0 AS (
-        |  SELECT user_id, version, event_type AS state_type,
-        |    min(us) AS valid_from
-        |  FROM r GROUP BY user_id, version, event_type
-        |), dim AS (
-        |  SELECT * FROM dim0
-        |  QUALIFY row_number() OVER (PARTITION BY user_id, valid_from
-        |    ORDER BY version DESC) = 1
-        |), purch AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS us
-        |  FROM events WHERE event_type = 'purchase'
-        |)
-        |SELECT p.event_id, p.user_id, d.state_type, d.version,
-        |  (p.us - d.valid_from) // 1000000 AS state_age_s
-        |FROM purch p ASOF LEFT JOIN dim d
-        |  ON p.user_id = d.user_id AND p.us >= d.valid_from
-        |ORDER BY p.event_id""".stripMargin,
-
-    "o10_snapshot_diff" ->
-      """WITH v1 AS (
-        |  SELECT doc_id, text FROM documents
-        |), v2 AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 17 = 3 THEN text || ' v2' ELSE text END AS text
-        |  FROM documents WHERE doc_id % 23 <> 5
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 25 = 0
-        |), a AS (
-        |  SELECT doc_id, md5(text) AS fp_old FROM v1
-        |), b AS (
-        |  SELECT doc_id, md5(text) AS fp_new FROM v2
-        |)
-        |SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
-        |  CASE WHEN a.doc_id IS NULL THEN 'added'
-        |       WHEN b.doc_id IS NULL THEN 'removed'
-        |       WHEN fp_old <> fp_new THEN 'changed'
-        |       ELSE 'unchanged' END AS status,
-        |  fp_old, fp_new
-        |FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    "o8_cdc_merge" ->
-      """WITH ch AS (
-        |  SELECT o_custkey AS key, o_orderkey AS seq,
-        |    o_orderstatus = 'F' AS tombstone, o_totalprice AS new_value
-        |  FROM orders
-        |), latest AS (
-        |  SELECT key, tombstone, new_value FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY key ORDER BY seq DESC)
-        |      AS rn FROM ch)
-        |  WHERE rn = 1
-        |)
-        |SELECT COALESCE(c.c_custkey, l.key) AS key,
-        |  COALESCE(l.new_value, c.c_acctbal) AS value
-        |FROM customer c FULL OUTER JOIN latest l ON c.c_custkey = l.key
-        |WHERE NOT COALESCE(l.tombstone, false)
-        |ORDER BY key""".stripMargin,
-
-    "o7_global_rownum" ->
-      """SELECT c_custkey,
-        |CAST(row_number() OVER (ORDER BY c_acctbal DESC, c_custkey) AS BIGINT)
-        |  AS global_rank
-        |FROM customer ORDER BY global_rank""".stripMargin,
-
-    "t18_quality_deciles" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |    round((CASE WHEN n_chars BETWEEN 100 AND 5000 THEN 1.0 ELSE 0.5 END)
-        |        * 0.4
-        |      + least(len(list_distinct(string_split(text, ' '))) * 1.0
-        |          / len(string_split(text, ' ')) * 2, 1.0) * 0.6, 4) AS q
-        |  FROM documents
-        |), b AS (
-        |  SELECT quantile_cont(q, [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]) AS bs
-        |  FROM s
-        |)
-        |SELECT CAST(len(list_filter(b.bs, x -> s.q > x)) + 1 AS BIGINT)
-        |    AS decile,
-        |  count(*) AS n_docs, min(s.q) AS min_q, max(s.q) AS max_q
-        |FROM s CROSS JOIN b GROUP BY 1 ORDER BY decile""".stripMargin,
-
-    "t6_normalize" ->
-      """SELECT doc_id,
-        |md5(regexp_replace(regexp_replace(lower(trim(text)), '[^a-z0-9 ]', '', 'g'),
-        |    ' +', ' ', 'g')) AS norm_hash,
-        |CAST(length(regexp_replace(regexp_replace(lower(trim(text)),
-        |    '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS BIGINT) AS n_norm_chars
-        |FROM documents ORDER BY doc_id LIMIT 500""".stripMargin,
-
-    "t8_tfidf" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-        |), tf AS (
-        |  SELECT doc_id, term, count(*) AS cnt FROM tok GROUP BY doc_id, term
-        |), dl AS (
-        |  SELECT doc_id, sum(cnt) AS total FROM tf GROUP BY doc_id
-        |), df AS (
-        |  SELECT term, count(*) AS df FROM tf GROUP BY term
-        |), n AS (SELECT count(*) AS n FROM documents)
-        |SELECT tf.doc_id, tf.term,
-        |  round((tf.cnt * 1.0 / dl.total) * ln(n.n * 1.0 / df.df), 6) AS tfidf
-        |FROM tf JOIN dl USING (doc_id) JOIN df USING (term) CROSS JOIN n
-        |ORDER BY tfidf DESC, tf.doc_id, tf.term LIMIT 20""".stripMargin,
-
-    // t25 ranks the identical t8 scored frame per doc
-    "t25_doc_keywords" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-        |), tf AS (
-        |  SELECT doc_id, term, count(*) AS cnt FROM tok GROUP BY doc_id, term
-        |), dl AS (
-        |  SELECT doc_id, sum(cnt) AS total FROM tf GROUP BY doc_id
-        |), df AS (
-        |  SELECT term, count(*) AS df FROM tf GROUP BY term
-        |), n AS (SELECT count(*) AS n FROM documents),
-        |sc AS (
-        |  SELECT tf.doc_id, tf.term,
-        |    round((tf.cnt * 1.0 / dl.total) * ln(n.n * 1.0 / df.df), 6)
-        |      AS tfidf
-        |  FROM tf JOIN dl USING (doc_id) JOIN df USING (term) CROSS JOIN n
-        |), r AS (
-        |  SELECT doc_id, term, tfidf,
-        |    row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY tfidf DESC, term) AS rnk
-        |  FROM sc
-        |)
-        |SELECT doc_id, rnk, term, tfidf FROM r WHERE rnk <= 3
-        |ORDER BY doc_id, rnk""".stripMargin,
-
-    "j8_flagship_join" ->
-      """SELECT l_orderkey,
-        |CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))),
-        |  2) AS DOUBLE) AS revenue,
-        |strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01'
-        |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-
-    "v4_sliding_window" ->
-      """SELECT (CAST(floor(epoch(ts)) AS BIGINT) // 900 - gs.i) * 900
-        |  AS bucket_start_s, event_type, count(*) AS n_events,
-        |CAST(round(sum(CAST(value AS DECIMAL(38,6))), 2) AS DOUBLE) AS sum_value
-        |FROM events CROSS JOIN (SELECT unnest([0,1,2,3]) AS i) gs
-        |GROUP BY 1, 2 ORDER BY bucket_start_s, event_type""".stripMargin,
-
-    "w21_grouping_sets" ->
-      """SELECT
-        |CASE WHEN GROUPING(r_name) = 1 THEN 'ALL'
-        |  ELSE COALESCE(r_name,'(null)') END AS r_name,
-        |CASE WHEN GROUPING(n_name) = 1 THEN 'ALL'
-        |  ELSE COALESCE(n_name,'(null)') END AS n_name,
-        |count(*) AS n_customers,
-        |CAST(round(sum(CAST(c_acctbal AS DECIMAL(38,6))), 2) AS DOUBLE)
-        |  AS sum_acctbal
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY GROUPING SETS ((r_name, n_name), (n_name), ())
-        |ORDER BY r_name, n_name""".stripMargin,
-
-    "w22_window_suite" ->
-      """SELECT * FROM (
-        |  SELECT o_orderkey, o_orderpriority,
-        |  percent_rank() OVER w AS pct_rank,
-        |  cume_dist() OVER w AS cdist,
-        |  CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-        |  lead(o_orderkey, 1) OVER w AS next_key,
-        |  nth_value(o_orderkey, 2) OVER w AS second_key
-        |  FROM orders
-        |  WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)
-        |)
-        |WHERE o_orderkey % 7 = 0
-        |ORDER BY o_orderpriority, o_orderkey""".stripMargin,
-
-    "j9_salted_join" ->
-      """SELECT o_orderpriority, count(*) AS n_items,
-        |CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,6))),
-        |  2) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "d7_decontaminate_exact" ->
-      """SELECT doc_id, source FROM documents a
-        |WHERE doc_id % 20 <> 0 AND NOT EXISTS (
-        |  SELECT 1 FROM documents b WHERE b.doc_id % 20 = 0
-        |  AND md5(lower(trim(b.text))) = md5(lower(trim(a.text))))
-        |ORDER BY doc_id""".stripMargin,
-
-    "d8_decontaminate_ngram" ->
-      """WITH csh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    range(1, greatest(len(string_split(text,' ')) - 8 + 2, 2)),
-        |    i -> array_to_string(list_slice(string_split(text,' '), i, i + 7), ' '))))
-        |    AS sh
-        |  FROM documents WHERE doc_id % 20 <> 0
-        |), bsh AS (
-        |  SELECT DISTINCT unnest(list_distinct(list_transform(
-        |    range(1, greatest(len(string_split(text,' ')) - 8 + 2, 2)),
-        |    i -> array_to_string(list_slice(string_split(text,' '), i, i + 7), ' '))))
-        |    AS sh
-        |  FROM documents WHERE doc_id % 20 = 0
-        |)
-        |SELECT doc_id FROM documents WHERE doc_id % 20 <> 0 AND doc_id NOT IN
-        |  (SELECT DISTINCT c.doc_id FROM csh c JOIN bsh USING (sh))
-        |ORDER BY doc_id""".stripMargin,
-
-    "d13_contamination_frac" ->
-      """WITH csh AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    range(1, greatest(len(string_split(text,' ')) - 8 + 2, 2)),
-        |    i -> array_to_string(list_slice(string_split(text,' '), i, i + 7), ' '))))
-        |    AS sh
-        |  FROM documents WHERE doc_id % 20 <> 0
-        |), bsh AS (
-        |  SELECT DISTINCT unnest(list_distinct(list_transform(
-        |    range(1, greatest(len(string_split(text,' ')) - 8 + 2, 2)),
-        |    i -> array_to_string(list_slice(string_split(text,' '), i, i + 7), ' '))))
-        |    AS sh
-        |  FROM documents WHERE doc_id % 20 = 0
-        |)
-        |SELECT c.doc_id, count(*) AS n_shingles,
-        |  count(b.sh) AS n_contaminated,
-        |  count(b.sh) * 1.0 / count(*) AS contamination_frac
-        |FROM csh c LEFT JOIN bsh b ON c.sh = b.sh
-        |GROUP BY c.doc_id ORDER BY doc_id""".stripMargin,
-
-    "v7_watermark_audit" ->
-      """WITH r AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) AS ts_s,
-        |    (event_id + CAST('0x' || substr(md5(CAST(event_id AS VARCHAR)),
-        |      1, 15) AS BIGINT) % 5) * 1048576 + event_id AS arr
-        |  FROM events
-        |), w AS (
-        |  SELECT event_type, ts_s,
-        |    max(ts_s) OVER (ORDER BY arr
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) - 600 AS wm_s
-        |  FROM r)
-        |SELECT event_type, count(*) AS n_events,
-        |  count(CASE WHEN ts_s < wm_s THEN 1 END) AS n_late,
-        |  count(CASE WHEN ts_s < wm_s THEN 1 END) * 1.0 / count(*) AS late_frac
-        |FROM w GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "t9_quality_filter" ->
-      """WITH sig AS (
-        |  SELECT doc_id, n_chars,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS nt,
-        |    CAST(len(list_filter(string_split(text, ' '),
-        |      x -> x IN ('the','a','of','and','to','in','is'))) AS BIGINT) AS s_en,
-        |    CAST(len(list_filter(string_split(text, ' '),
-        |      x -> x IN ('el','la','de','y','que','en','un'))) AS BIGINT) AS s_es,
-        |    CAST(len(list_filter(string_split(text, ' '),
-        |      x -> x IN ('der','die','das','und','ist','ein','zu'))) AS BIGINT) AS s_de,
-        |    CAST(len(list_filter(string_split(text, ' '),
-        |      x -> x IN ('le','la','de','et','est','un','dans'))) AS BIGINT) AS s_fr,
-        |    round(1.0 - len(list_distinct(list_transform(
-        |        range(1, greatest(len(string_split(text,' ')) - 3 + 2, 2)),
-        |        i -> array_to_string(list_slice(string_split(text,' '), i, i + 2),
-        |          ' ')))) * 1.0
-        |      / greatest(len(string_split(text,' ')) - 3 + 1, 1), 4) AS dup3,
-        |    round((CASE WHEN n_chars BETWEEN 100 AND 5000 THEN 1.0 ELSE 0.5 END)
-        |        * 0.4
-        |      + least(len(list_distinct(string_split(text, ' '))) * 1.0 /
-        |          len(string_split(text, ' ')) * 2, 1.0) * 0.6, 4) AS q
-        |  FROM documents
-        |)
-        |SELECT doc_id, q AS quality_score, dup3 AS dup_3gram_ratio, nt AS n_tokens
-        |FROM sig
-        |WHERE s_en + s_es + s_de + s_fr > 0
-        |  AND s_en >= s_es AND s_en >= s_de AND s_en >= s_fr
-        |  AND q >= 0.5 AND nt BETWEEN 20 AND 1000 AND dup3 <= 0.3
-        |ORDER BY doc_id""".stripMargin,
-
-    // Replays every Gopher rule signal: replace() is leftmost
-    // non-overlapping in both engines, the ellipsis delta is an exact
-    // multiple of 3, and the CASE precedence mirrors the Spark
-    // when-chain verbatim.
-    "t27_gopher_rules" ->
-      """WITH sig AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-        |    round((n_chars - len(string_split(text, ' ')) + 1) * 1.0
-        |      / len(string_split(text, ' ')), 4) AS mean_word_len,
-        |    round(((len(text) - len(replace(text, '#', '')))
-        |        + (len(text) - len(replace(text, '...', ''))) / 3) * 1.0
-        |      / len(string_split(text, ' ')), 4) AS symbol_ratio,
-        |    round(len(list_filter(string_split(text, ' '),
-        |        x -> regexp_matches(x, '[A-Za-z]'))) * 1.0
-        |      / len(string_split(text, ' ')), 4) AS alpha_frac,
-        |    CAST(len(list_filter(string_split(text, ' '),
-        |      x -> x IN ('the','be','to','of','and','that','have','with')))
-        |      AS BIGINT) AS n_stopword_hits
-        |  FROM documents)
-        |SELECT doc_id, n_words, mean_word_len, symbol_ratio, alpha_frac,
-        |  n_stopword_hits,
-        |  CASE WHEN n_words NOT BETWEEN 50 AND 100000 THEN 'word_count'
-        |       WHEN mean_word_len NOT BETWEEN 3.0 AND 10.0
-        |         THEN 'mean_word_len'
-        |       WHEN symbol_ratio > 0.1 THEN 'symbol_ratio'
-        |       WHEN alpha_frac < 0.8 THEN 'alpha_frac'
-        |       WHEN n_stopword_hits < 2 THEN 'stopwords'
-        |       ELSE 'pass' END AS reject_reason
-        |FROM sig ORDER BY doc_id""".stripMargin,
-
-    // Replays the full three-stage recipe: t9's signal formulas over the
-    // cloned corpus, keeper election per fingerprint among
-    // quality-passing docs, d8's shingle replay for contamination, and
-    // the same CASE precedence as Curation.curate.
-    "d21_corpus_curation" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text, n_chars FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text, n_chars
-        |  FROM documents WHERE doc_id % 25 = 0
-        |), sig AS (
-        |  SELECT doc_id, text, md5(lower(trim(text))) AS fp,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS nt,
-        |    CAST(len(list_filter(string_split(text, ' '),
-        |      x -> x IN ('the','a','of','and','to','in','is'))) AS BIGINT) AS s_en,
-        |    CAST(len(list_filter(string_split(text, ' '),
-        |      x -> x IN ('el','la','de','y','que','en','un'))) AS BIGINT) AS s_es,
-        |    CAST(len(list_filter(string_split(text, ' '),
-        |      x -> x IN ('der','die','das','und','ist','ein','zu'))) AS BIGINT) AS s_de,
-        |    CAST(len(list_filter(string_split(text, ' '),
-        |      x -> x IN ('le','la','de','et','est','un','dans'))) AS BIGINT) AS s_fr,
-        |    round(1.0 - len(list_distinct(list_transform(
-        |        range(1, greatest(len(string_split(text,' ')) - 3 + 2, 2)),
-        |        i -> array_to_string(list_slice(string_split(text,' '), i, i + 2),
-        |          ' ')))) * 1.0
-        |      / greatest(len(string_split(text,' ')) - 3 + 1, 1), 4) AS dup3,
-        |    round((CASE WHEN n_chars BETWEEN 100 AND 5000 THEN 1.0 ELSE 0.5 END)
-        |        * 0.4
-        |      + least(len(list_distinct(string_split(text, ' '))) * 1.0 /
-        |          len(string_split(text, ' ')) * 2, 1.0) * 0.6, 4) AS q
-        |  FROM corpus
-        |), flagged AS (
-        |  SELECT *, (s_en + s_es + s_de + s_fr > 0
-        |    AND s_en >= s_es AND s_en >= s_de AND s_en >= s_fr
-        |    AND q >= 0.5 AND nt BETWEEN 20 AND 1000 AND dup3 <= 0.3)
-        |    AS quality_ok
-        |  FROM sig
-        |), keep AS (
-        |  SELECT fp, min(doc_id) AS keep_id FROM flagged
-        |  WHERE quality_ok GROUP BY fp
-        |), bsh AS (
-        |  SELECT DISTINCT unnest(list_distinct(list_transform(
-        |    range(1, greatest(len(string_split(text,' ')) - 8 + 2, 2)),
-        |    i -> array_to_string(list_slice(string_split(text,' '), i, i + 7), ' '))))
-        |    AS sh
-        |  FROM documents WHERE doc_id % 20 = 0
-        |), contam AS (
-        |  SELECT DISTINCT c.doc_id FROM (
-        |    SELECT doc_id, unnest(list_distinct(list_transform(
-        |      range(1, greatest(len(string_split(text,' ')) - 8 + 2, 2)),
-        |      i -> array_to_string(list_slice(string_split(text,' '), i, i + 7), ' '))))
-        |      AS sh
-        |    FROM flagged WHERE quality_ok) c JOIN bsh USING (sh)
-        |)
-        |SELECT f.doc_id,
-        |  CASE WHEN NOT f.quality_ok THEN 'low_quality'
-        |       WHEN f.doc_id <> k.keep_id THEN 'exact_dup'
-        |       WHEN f.doc_id IN (SELECT doc_id FROM contam)
-        |         THEN 'contaminated'
-        |       ELSE 'kept' END AS status,
-        |  f.nt AS n_tokens
-        |FROM flagged f LEFT JOIN keep k ON f.fp = k.fp
-        |ORDER BY f.doc_id""".stripMargin,
-
-    // x2 replays the whole export: the t28/t31 BPE chain (w0..w4 over
-    // the reference corpus — the frozen tokenizer), the d21 curation
-    // CTEs with source carried through, kept-slice BPE counts via the
-    // vocab join, the s13 seeded-md5 shard key, the t34 cumulative
-    // window per shard, and the t33 pow-round-6/decimal-sum mixture.
-    // The chain through `cum` is shared with x3 (exportCumCteSql).
-    "x2_training_export" ->
-      s"""$exportCumCteSql
-        |, g1 AS MATERIALIZED (
-        |  SELECT shard_id, source, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(n_bpe) AS BIGINT) AS n_tokens,
-        |    CAST(count(CASE WHEN (cum - n_bpe) // 256 <> (cum - 1) // 256
-        |      THEN 1 END) AS BIGINT) AS split_src
-        |  FROM cum GROUP BY shard_id, source
-        |), shd AS (
-        |  SELECT shard_id, CAST(sum(n_tokens) AS BIGINT) AS sh_tokens,
-        |    CAST(sum(split_src) AS BIGINT) AS split_docs
-        |  FROM g1 GROUP BY shard_id
-        |), srcw AS (
-        |  SELECT source, round(pow(CAST(sum(n_tokens) AS DOUBLE), 0.3), 6)
-        |    AS pw
-        |  FROM g1 GROUP BY source
-        |), tpw AS (SELECT sum(CAST(pw AS DECIMAL(38,6))) AS tpw FROM srcw)
-        |SELECT g1.shard_id, g1.source, g1.n_docs, g1.n_tokens,
-        |  g1.n_tokens * 1.0 / shd.sh_tokens AS tok_frac,
-        |  CAST((shd.sh_tokens - 1) // 256 + 1 AS BIGINT) AS n_sequences,
-        |  CAST((256 - (shd.sh_tokens % 256)) % 256 AS BIGINT) AS pad_tokens,
-        |  shd.split_docs,
-        |  round(srcw.pw / CAST(t.tpw AS DOUBLE), 6) AS p_alpha
-        |FROM g1 JOIN shd USING (shard_id) JOIN srcw USING (source)
-        |CROSS JOIN tpw t
-        |ORDER BY shard_id, source""".stripMargin,
-
-    // x3: the shared export chain, then one generate-range explode of
-    // each doc's spanned window interval and the (shard, seq)
-    // membership aggregate; arg_min/arg_max over the strictly
-    // increasing cumulative position mirror Spark's min_by/max_by
-    // (unique within a shard — no tie to break).
-    "x3_packed_windows" ->
-      s"""$exportCumCteSql
-        |, wins AS MATERIALIZED (
-        |  SELECT shard_id, doc_id, n_bpe, cum,
-        |    unnest(range(CAST((cum - n_bpe) // 256 AS BIGINT),
-        |      CAST((cum - 1) // 256 + 1 AS BIGINT))) AS seq_id
-        |  FROM cum
-        |)
-        |SELECT shard_id, CAST(seq_id AS BIGINT) AS seq_id,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(arg_min(doc_id, cum) AS BIGINT) AS first_doc,
-        |  CAST(arg_max(doc_id, cum) AS BIGINT) AS last_doc,
-        |  CAST(sum(least(cum, (seq_id + 1) * 256)
-        |    - greatest(cum - n_bpe, seq_id * 256)) AS BIGINT) AS n_tokens,
-        |  CAST(256 - sum(least(cum, (seq_id + 1) * 256)
-        |    - greatest(cum - n_bpe, seq_id * 256)) AS BIGINT) AS n_pad
-        |FROM wins GROUP BY shard_id, seq_id
-        |ORDER BY shard_id, seq_id""".stripMargin,
-
-    // x4: the shared export chain, the doc_id % 13 probe cut AFTER the
-    // cumulative window (position is a corpus-order fact), then the
-    // same generate-range explode at probe-doc grain — no regroup; the
-    // in-window offsets are the least/greatest clamp arithmetic x3
-    // sums, kept per row instead.
-    "x4_doc_windows" ->
-      s"""$exportCumCteSql
-        |SELECT doc_id, shard_id, CAST(seq_id AS BIGINT) AS seq_id,
-        |  CAST(greatest(cum - n_bpe, seq_id * 256) - seq_id * 256
-        |    AS BIGINT) AS tok_start,
-        |  CAST(least(cum, (seq_id + 1) * 256) - seq_id * 256
-        |    AS BIGINT) AS tok_end,
-        |  CAST(least(cum, (seq_id + 1) * 256)
-        |    - greatest(cum - n_bpe, seq_id * 256) AS BIGINT) AS n_tokens
-        |FROM (
-        |  SELECT shard_id, doc_id, n_bpe, cum,
-        |    unnest(range(CAST((cum - n_bpe) // 256 AS BIGINT),
-        |      CAST((cum - 1) // 256 + 1 AS BIGINT))) AS seq_id
-        |  FROM cum WHERE doc_id % 13 = 0
-        |)
-        |ORDER BY doc_id, seq_id""".stripMargin,
-
-    // v7's running-max CTE with the delay magnitude kept instead of one
-    // candidate verdict; quantile_cont over the positive delays matches
-    // sortedPercentiles (the x16/w20-proven bit-compatible pair) and
-    // skips NULLs, mirroring the Spark left join.
-    "v19_disorder_profile" ->
-      """WITH r AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) AS ts_s,
-        |    (event_id + CAST('0x' || substr(md5(CAST(event_id AS VARCHAR)),
-        |      1, 15) AS BIGINT) % 5) * 1048576 + event_id AS arr
-        |  FROM events
-        |), w AS (
-        |  SELECT event_type,
-        |    greatest(coalesce(max(ts_s) OVER (ORDER BY arr
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) - ts_s,
-        |      0), 0) AS delay_s
-        |  FROM r)
-        |SELECT event_type, count(*) AS n_events,
-        |  count(CASE WHEN delay_s > 0 THEN 1 END) AS n_disordered,
-        |  count(CASE WHEN delay_s > 0 THEN 1 END) * 1.0 / count(*)
-        |    AS disorder_frac,
-        |  quantile_cont(CASE WHEN delay_s > 0 THEN delay_s END, 0.5)
-        |    AS p50_delay_s,
-        |  quantile_cont(CASE WHEN delay_s > 0 THEN delay_s END, 0.95)
-        |    AS p95_delay_s,
-        |  quantile_cont(CASE WHEN delay_s > 0 THEN delay_s END, 1.0)
-        |    AS max_delay_s
-        |FROM w GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // w15b's exact sides re-derive INDEPENDENTLY (the d17 pattern):
-    // count(DISTINCT) and quantile_cont replay the countDistinct /
-    // sortedPercentiles ground truth (the x16-proven bit-compatible
-    // pair); only the sketch-accuracy booleans stay engine-asserted
-    "w15b_sketch_bounds" ->
-      """WITH med AS (
-        |  SELECT l_returnflag, quantile_cont(l_extendedprice, 0.5)
-        |    AS exact_median
-        |  FROM lineitem GROUP BY l_returnflag
-        |)
-        |SELECT l.l_returnflag,
-        |  count(DISTINCT l.l_partkey) AS exact_parts,
-        |  max(m.exact_median) AS exact_median,
-        |  true AS hll_within_5pct, true AS median_within_5pct
-        |FROM lineitem l JOIN med m ON l.l_returnflag = m.l_returnflag
-        |GROUP BY l.l_returnflag ORDER BY l.l_returnflag""".stripMargin,
-
-    // d10's exact side re-derives via the d7 replay (the d17 pattern)
-    "d10_bloom_decontaminate" ->
-      """SELECT true AS bloom_subset_of_exact,
-        |  true AS fp_rate_le_1pct,
-        |  (SELECT count(*) FROM documents a
-        |   WHERE doc_id % 20 <> 0 AND NOT EXISTS (
-        |     SELECT 1 FROM documents b WHERE b.doc_id % 20 = 0
-        |     AND md5(lower(trim(b.text))) = md5(lower(trim(a.text)))))
-        |    AS n_exact_kept,
-        |  (SELECT count(*) FROM documents WHERE doc_id % 20 <> 0)
-        |    AS n_corpus""".stripMargin,
-
-    "d11_incremental_dedup" ->
-      """WITH idx AS (
-        |  SELECT DISTINCT md5(lower(trim(text))) AS fp
-        |  FROM documents WHERE doc_id < 400
-        |), batch AS (
-        |  SELECT doc_id, source, md5(lower(trim(text))) AS fp
-        |  FROM documents WHERE doc_id >= 400
-        |), firstb AS (
-        |  SELECT fp, min(doc_id) AS doc_id FROM batch GROUP BY fp
-        |)
-        |SELECT b.doc_id, b.source FROM batch b
-        |JOIN firstb f ON b.fp = f.fp AND b.doc_id = f.doc_id
-        |WHERE b.fp NOT IN (SELECT fp FROM idx)
-        |ORDER BY b.doc_id""".stripMargin,
-
-    "v5_interval_join" ->
-      """SELECT v.event_id AS view_id, c.event_id AS click_id,
-        |  CAST(floor(epoch(c.ts)) AS BIGINT)
-        |    - CAST(floor(epoch(v.ts)) AS BIGINT) AS lag_s
-        |FROM events v JOIN events c
-        |  ON v.user_id = c.user_id
-        |  AND v.event_type = 'view' AND c.event_type = 'click'
-        |  AND epoch_us(c.ts) >= epoch_us(v.ts)
-        |  AND epoch_us(c.ts) < epoch_us(v.ts) + 7200000000
-        |ORDER BY view_id, click_id""".stripMargin,
-
-    "v6_stream_static_join" ->
-      """SELECT c.c_mktsegment, e.event_type, count(*) AS n_events,
-        |  CAST(round(sum(CAST(e.value AS DECIMAL(38,6))), 2) AS DOUBLE)
-        |    AS sum_value
-        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-        |GROUP BY c.c_mktsegment, e.event_type
-        |ORDER BY c.c_mktsegment, e.event_type""".stripMargin,
-
-    // e5/e6/e12b/e14b re-derive the brute-force top-10 ground truth
-    // via e1's replay CTE (the d17 pattern) — the recall booleans stay
-    // engine-asserted, but the exact id set they are measured against
-    // is now independently recomputed by the oracle
-    "e5_ann_recall" ->
-      (BruteForceTop10Cte + """
-        |SELECT true AS recall_at_10_ge_half,
-        |  (SELECT array_to_string(list_sort(list(vec_id)), ',') FROM top10) AS exact_top10_ids""".stripMargin),
-
-    // j10's oracle is the plain BETWEEN join — bucket-decomposition
-    // invariance of the result IS the correctness contract
-    "j10_band_join" ->
-      """WITH tiers(tier, lo_c, hi_c) AS (VALUES
-        |  ('t1_budget', 0, 2500000), ('t2_mid', 2500000, 5000000),
-        |  ('t3_high', 5000000, 7500000), ('t4_premium', 7500000, 11000000))
-        |SELECT tier, count(*) AS n_items,
-        |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(38,6))), 2)
-        |    AS DOUBLE) AS sum_price
-        |FROM lineitem JOIN tiers
-        |  ON CAST(round(l_extendedprice * 100) AS BIGINT) >= lo_c
-        |  AND CAST(round(l_extendedprice * 100) AS BIGINT) < hi_c
-        |GROUP BY tier ORDER BY tier""".stripMargin,
-
-    // d15 itself is rows-only (SRP buckets + float cosine have no SQL
-    // replay); this contract twin pins its semantics
-    "d15b_semantic_dedup_contract" ->
-      """WITH pl AS (
-        |  SELECT count(*) AS n_planted FROM embeddings WHERE vec_id % 50 = 0
-        |), tot AS (SELECT count(*) AS n FROM embeddings)
-        |SELECT true AS planted_pairs_exist,
-        |  true AS clones_cluster_with_original, true AS no_clone_survives,
-        |  true AS kept_plus_collapsed_conserves,
-        |  pl.n_planted, tot.n + pl.n_planted AS n_input
-        |FROM pl, tot""".stripMargin,
-
-    // e14 itself is rows-only (greedy float selection has no SQL
-    // replay); this contract twin pins its semantics
-    "e14b_mmr_contract" ->
-      (BruteForceTop10Cte + """
-        |SELECT true AS k_selected, true AS first_is_top1,
-        |  true AS subset_of_shortlist, true AS lambda1_equals_topk,
-        |  true AS diversity_not_worse,
-        |  (SELECT array_to_string(list_sort(list(vec_id)), ',') FROM top10) AS exact_top10_ids""".stripMargin),
-
-    // e16 replays the e10 exact-centroid CTE, the e1 unnest cosine per
-    // (vector, candidate-label) pair, the identical round-4 + (sim
-    // desc, cand) argmax window, and the exact-integer accuracy
-    "e16_centroid_eval" ->
-      """WITH x AS (
-        |  SELECT vec_id, CAST(label AS BIGINT) AS actual,
-        |    generate_subscripts(embedding, 1) AS i,
-        |    CAST(unnest(embedding) AS DOUBLE) AS v
-        |  FROM embeddings
-        |), nz AS (
-        |  SELECT vec_id FROM x GROUP BY vec_id HAVING sum(v * v) > 0
-        |), cent AS (
-        |  SELECT actual AS cand, i,
-        |    CAST(sum(CAST(v AS DECIMAL(38,12))) AS DOUBLE) / count(*) AS c
-        |  FROM x WHERE vec_id IN (SELECT vec_id FROM nz)
-        |  GROUP BY actual, i
-        |), s AS (
-        |  SELECT x.vec_id, x.actual, cent.cand,
-        |    sum(x.v * cent.c) AS dot, sum(x.v * x.v) AS vv,
-        |    sum(cent.c * cent.c) AS cc
-        |  FROM x JOIN cent ON x.i = cent.i
-        |  WHERE x.vec_id IN (SELECT vec_id FROM nz)
-        |  GROUP BY x.vec_id, x.actual, cent.cand
-        |), p AS (
-        |  SELECT vec_id, actual, cand,
-        |    row_number() OVER (PARTITION BY vec_id
-        |      ORDER BY round(dot / (sqrt(vv) * sqrt(cc)), 4) DESC, cand)
-        |      AS rn
-        |  FROM s
-        |)
-        |SELECT actual AS label, count(*) AS n_vecs,
-        |  CAST(sum(CASE WHEN cand = actual THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_correct,
-        |  CAST(sum(CASE WHEN cand = actual THEN 1 ELSE 0 END) AS BIGINT)
-        |    * 1.0 / count(*) AS accuracy
-        |FROM p WHERE rn = 1 GROUP BY actual ORDER BY label""".stripMargin,
-
-    // e15 stitches the t21 BM25 replay and the e1 unnest/rejoin cosine
-    // replay into the same two 50-row shortlists, ranks each with the
-    // identical total-order window, and fuses with the same
-    // round-9 reciprocal terms + one IEEE add
-    "e15_rrf_fusion" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-        |), tf AS (
-        |  SELECT doc_id, term, count(*) AS cnt FROM tok GROUP BY doc_id, term
-        |), dl AS (
-        |  SELECT doc_id, sum(cnt) AS dl FROM tf GROUP BY doc_id
-        |), st AS (
-        |  SELECT count(*) AS n, CAST(sum(dl) AS DOUBLE) AS sumdl FROM dl
-        |), df AS (
-        |  SELECT term, count(*) AS df FROM tf
-        |  WHERE term IN ('vector', 'stream', 'window') GROUP BY term
-        |), w AS (
-        |  SELECT tf.doc_id,
-        |    round(ln(1.0 + (st.n - df.df + 0.5) / (df.df + 0.5))
-        |      * (tf.cnt * 2.2)
-        |      / (tf.cnt + 1.2 * (0.25 + (0.75 * dl.dl) / (st.sumdl / st.n))),
-        |      6) AS w
-        |  FROM tf JOIN df USING (term) JOIN dl USING (doc_id) CROSS JOIN st
-        |), lexs AS (
-        |  SELECT doc_id, CAST(sum(CAST(w AS DECIMAL(38,6))) AS DOUBLE) AS score
-        |  FROM w GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 50
-        |), lexr AS (
-        |  SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS r_lex
-        |  FROM lexs
-        |), q AS (
-        |  SELECT generate_subscripts(embedding, 1) AS i,
-        |    CAST(unnest(embedding) AS DOUBLE) AS qv
-        |  FROM embeddings WHERE vec_id = 0
-        |), v AS (
-        |  SELECT vec_id, generate_subscripts(embedding, 1) AS i,
-        |    CAST(unnest(embedding) AS DOUBLE) AS ev
-        |  FROM embeddings WHERE vec_id <> 0
-        |), m AS (
-        |  SELECT v.vec_id, sum(v.ev * q.qv) AS dot, sum(v.ev * v.ev) AS vv,
-        |    sum(q.qv * q.qv) AS qq
-        |  FROM v JOIN q ON v.i = q.i GROUP BY v.vec_id
-        |), dens AS (
-        |  SELECT vec_id AS doc_id, round(dot / (sqrt(vv) * sqrt(qq)), 4) AS cos
-        |  FROM m ORDER BY cos DESC, vec_id LIMIT 50
-        |), denr AS (
-        |  SELECT doc_id, row_number() OVER (ORDER BY cos DESC, doc_id) AS r_dense
-        |  FROM dens
-        |)
-        |SELECT COALESCE(l.doc_id, r.doc_id) AS doc_id, l.r_lex, r.r_dense,
-        |  coalesce(round(1.0 / (60 + l.r_lex), 9), 0.0)
-        |    + coalesce(round(1.0 / (60 + r.r_dense), 9), 0.0) AS rrf
-        |FROM lexr l FULL OUTER JOIN denr r ON l.doc_id = r.doc_id
-        |ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin,
-
-    "e6_ivf_recall" ->
-      (BruteForceTop10Cte + """
-        |SELECT true AS recall_at_10_ge_08,
-        |  (SELECT array_to_string(list_sort(list(vec_id)), ',') FROM top10) AS exact_top10_ids""".stripMargin),
-
-    "e12b_pq_recall" ->
-      (BruteForceTop10Cte + """
-        |SELECT true AS ok_recall, true AS ok_codes,
-        |  (SELECT array_to_string(list_sort(list(vec_id)), ',') FROM top10) AS exact_top10_ids""".stripMargin),
-
-    "e17b_ivfpq_recall" ->
-      (BruteForceTop10Cte + """
-        |SELECT true AS ok_recall,
-        |  (SELECT array_to_string(list_sort(list(vec_id)), ',') FROM top10) AS exact_top10_ids""".stripMargin),
-
-    "o6_union_by_name" ->
-      """SELECT c_custkey, c_name,
-        |  CAST(round(CAST(c_acctbal AS DECIMAL(38,6)), 2) AS DOUBLE) AS c_acctbal
-        |FROM (
-        |  SELECT c_custkey, c_name, c_acctbal FROM customer
-        |  UNION ALL BY NAME
-        |  SELECT c_acctbal, c_custkey FROM customer
-        |  WHERE c_mktsegment = 'BUILDING'
-        |)
-        |ORDER BY c_custkey, c_name NULLS FIRST LIMIT 1000""".stripMargin,
-
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |CAST(round(sum(CAST(l_quantity AS DECIMAL(38,6))), 2) AS DOUBLE)
-        |  AS sum_qty,
-        |CAST(round(sum(CAST(l_extendedprice AS DECIMAL(38,6))), 2) AS DOUBLE)
-        |  AS sum_base_price,
-        |CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-        |  AS DECIMAL(38,6))), 2) AS DOUBLE) AS sum_disc_price,
-        |CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax)
-        |  AS DECIMAL(38,6))), 2) AS DOUBLE) AS sum_charge,
-        |CAST(sum(CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE)
-        |  / count(l_quantity) AS avg_qty,
-        |CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6))) AS DOUBLE)
-        |  / count(l_extendedprice) AS avg_price,
-        |CAST(sum(CAST(l_discount AS DECIMAL(38,6))) AS DOUBLE)
-        |  / count(l_discount) AS avg_disc,
-        |count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '2001-09-01'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "w23_range_frame" ->
-      """SELECT o_custkey, CAST(floor(epoch(o_orderdate)) AS BIGINT) AS od_s,
-        |  o_orderkey,
-        |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(38,6))) OVER (
-        |    PARTITION BY o_custkey ORDER BY o_orderdate
-        |    RANGE BETWEEN INTERVAL 7 DAY PRECEDING AND CURRENT ROW), 2)
-        |    AS DOUBLE) AS trailing_7d_total
-        |FROM orders
-        |ORDER BY o_custkey, od_s, o_orderkey LIMIT 2000""".stripMargin,
-
-    "d9_dedup_clusters" ->
-      """WITH RECURSIVE prepared AS (
-        |  SELECT doc_id, source, CAST(floor(n_chars / 32.0) AS BIGINT) AS bkt,
-        |    list_distinct(string_split(text, ' ')) AS toks
-        |  FROM documents
-        |), pairs AS (
-        |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-        |  FROM prepared a JOIN prepared b
-        |    ON a.source = b.source AND abs(a.bkt - b.bkt) <= 1
-        |    AND a.doc_id < b.doc_id
-        |  WHERE round(len(list_intersect(a.toks, b.toks)) * 1.0 /
-        |    (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))), 4)
-        |    >= 0.5
-        |), edges AS (
-        |  SELECT a_id AS s, b_id AS t FROM pairs
-        |  UNION ALL SELECT b_id, a_id FROM pairs
-        |), reach(id, r) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.t, r.r FROM reach r JOIN edges e ON e.s = r.id
-        |)
-        |SELECT id AS doc_id, min(r) AS cluster_id,
-        |  CASE WHEN id = min(r) THEN true ELSE false END AS is_canonical
-        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
-
-    "t10_chunking" ->
-      """WITH t AS (SELECT doc_id, string_split(text,' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, toks, unnest(range(1, len(toks)+1, 48)) AS st FROM t)
-        |SELECT doc_id, (st-1)//48 AS chunk_id,
-        |  CAST(least(64, len(toks)-st+1) AS BIGINT) AS n_chunk_tokens,
-        |  md5(array_to_string(list_slice(toks, st, st+63), ' ')) AS chunk_hash
-        |FROM s WHERE st = 1 OR st + 16 <= len(toks)
-        |ORDER BY doc_id, chunk_id""".stripMargin,
-
-    "m2_decode_meta" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |CAST(greatest((CAST(octet_length(encode(text)) AS BIGINT) // 64 + 1) // 2, 1)
-        |  AS INTEGER) AS frames
-        |FROM documents WHERE text IS NOT NULL ORDER BY doc_id""".stripMargin,
-
-    "q3_shipping_priority" ->
-      """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_date,
-        |  o_orderpriority,
-        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-        |    AS DECIMAL(38,6))), 2) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-07-01'
-        |  AND l_shipdate > TIMESTAMP '1998-07-01'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-
-    // d17 replays the bottom-k sketches with the s13 md5→BIGINT idiom;
-    // the estimator, the exact Jaccard and the error all hash-compare
-    "d17_overlap_bottomk" ->
-      """WITH docs AS (SELECT doc_id, text FROM documents),
-        |a AS (
-        |  SELECT DISTINCT CAST('0x' || substr(md5(text), 1, 15) AS BIGINT)
-        |    AS h FROM docs
-        |), bsrc AS (
-        |  SELECT CASE WHEN doc_id % 3 = 0 THEN text
-        |    ELSE text || ' vB' END AS tb FROM docs
-        |), b AS (
-        |  SELECT DISTINCT CAST('0x' || substr(md5(tb), 1, 15) AS BIGINT)
-        |    AS h FROM bsrc
-        |), ka AS (SELECT h FROM a ORDER BY h LIMIT 128),
-        |kb AS (SELECT h FROM b ORDER BY h LIMIT 128),
-        |ku AS (
-        |  SELECT DISTINCT h FROM (
-        |    SELECT h FROM ka UNION ALL SELECT h FROM kb
-        |  ) ORDER BY h LIMIT 128
-        |), y AS (
-        |  SELECT count(*) AS y FROM ku
-        |  WHERE h IN (SELECT h FROM ka) AND h IN (SELECT h FROM kb)
-        |), i AS (
-        |  SELECT count(*) AS ni FROM a WHERE h IN (SELECT h FROM b)
-        |), na AS (SELECT count(*) AS na FROM a),
-        |nb AS (SELECT count(*) AS nb FROM b),
-        |kun AS (SELECT count(*) AS ku_n FROM ku)
-        |SELECT CAST(128 AS BIGINT) AS k,
-        |  y * 1.0 / ku_n AS est_jaccard,
-        |  ni * 1.0 / (na + nb - ni) AS exact_jaccard,
-        |  abs(y * 1.0 / ku_n
-        |    - ni * 1.0 / (na + nb - ni)) AS abs_err
-        |FROM y, i, na, nb, kun""".stripMargin,
-
-    "q14_promo_revenue" ->
-      """SELECT count(*) AS n_items,
-        |  100.0 * CAST(sum(CAST(CASE WHEN p_type = 'PROMO'
-        |      THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END
-        |    AS DECIMAL(38,6))) AS DOUBLE)
-        |  / CAST(sum(CAST(l_extendedprice * (1 - l_discount)
-        |    AS DECIMAL(38,6))) AS DOUBLE) AS promo_revenue_pct
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-04-01'""".stripMargin,
-
-    "q18_large_orders" ->
-      """WITH big AS (
-        |  SELECT l_orderkey,
-        |    CAST(round(sum(CAST(l_quantity AS DECIMAL(38,6))), 2)
-        |      AS DOUBLE) AS sum_qty
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING CAST(round(sum(CAST(l_quantity AS DECIMAL(38,6))), 2)
-        |    AS DOUBLE) > 250
-        |)
-        |SELECT c_custkey, c_name, o_orderkey, o_totalprice, sum_qty
-        |FROM orders JOIN big ON o_orderkey = l_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-
-    // d18 replays the injection, the per-position 8-token shingles, the
-    // md5-hash duplicated-set, and the gaps-and-islands run extraction
-    // (1-based positions vs Spark's 0-based — the island arithmetic
-    // pos − row_number is offset-invariant)
-    "d18_substring_dedup" ->
-      ("""WITH injected AS (
-        |  SELECT doc_id, CASE WHEN doc_id % 7 = 0
-        |    THEN text || ' """ + DedupPassage + """' ELSE text END AS text
-        |  FROM documents
-        |), base AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks FROM injected
-        |  WHERE len(string_split(text, ' ')) >= 8
-        |), pos AS (
-        |  SELECT doc_id, toks, unnest(range(1, len(toks) - 6)) AS i FROM base
-        |), sh AS (
-        |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-        |    CAST('0x' || substr(md5(array_to_string(
-        |      list_slice(toks, i, i + 7), ' ')), 1, 15) AS BIGINT) AS h
-        |  FROM pos
-        |), dup AS (
-        |  SELECT h FROM sh GROUP BY h HAVING count(*) >= 2
-        |), marked AS (
-        |  SELECT doc_id, pos,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS rn
-        |  FROM sh WHERE h IN (SELECT h FROM dup)
-        |), runs AS (
-        |  SELECT doc_id, pos - rn AS island, count(*) AS rs
-        |  FROM marked GROUP BY doc_id, pos - rn
-        |), agg AS (
-        |  SELECT doc_id, count(*) AS n_dup_runs,
-        |    CAST(max(rs) + 7 AS BIGINT) AS longest_dup_tokens,
-        |    CAST(sum(rs) AS BIGINT) AS dup_shingles
-        |  FROM runs GROUP BY doc_id
-        |)
-        |SELECT d.doc_id, coalesce(a.n_dup_runs, 0) AS n_dup_runs,
-        |  coalesce(a.longest_dup_tokens, 0) AS longest_dup_tokens,
-        |  coalesce(a.dup_shingles, 0) AS dup_shingles
-        |FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-        |ORDER BY d.doc_id""").stripMargin,
-
-    // d19 replays the two-sided injection, the snapshot's distinct
-    // shingle index, and the batch's index-hit island extraction
-    "d19_incremental_span_dedup" ->
-      ("""WITH injected AS (
-        |  SELECT doc_id, CASE WHEN (doc_id < 400 AND doc_id % 5 = 0)
-        |      OR (doc_id >= 400 AND doc_id % 9 = 0)
-        |    THEN text || ' """ + DedupPassage + """' ELSE text END AS text
-        |  FROM documents
-        |), snapbase AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks FROM injected
-        |  WHERE doc_id < 400 AND len(string_split(text, ' ')) >= 8
-        |), snappos AS (
-        |  SELECT toks, unnest(range(1, len(toks) - 6)) AS i FROM snapbase
-        |), idx AS (
-        |  SELECT DISTINCT CAST('0x' || substr(md5(array_to_string(
-        |    list_slice(toks, i, i + 7), ' ')), 1, 15) AS BIGINT) AS h
-        |  FROM snappos
-        |), batchbase AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks FROM injected
-        |  WHERE doc_id >= 400 AND len(string_split(text, ' ')) >= 8
-        |), bpos AS (
-        |  SELECT doc_id, toks, unnest(range(1, len(toks) - 6)) AS i
-        |  FROM batchbase
-        |), sh AS (
-        |  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-        |    CAST('0x' || substr(md5(array_to_string(
-        |      list_slice(toks, i, i + 7), ' ')), 1, 15) AS BIGINT) AS h
-        |  FROM bpos
-        |), marked AS (
-        |  SELECT doc_id, pos,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS rn
-        |  FROM sh WHERE h IN (SELECT h FROM idx)
-        |), runs AS (
-        |  SELECT doc_id, pos - rn AS island, count(*) AS rs
-        |  FROM marked GROUP BY doc_id, pos - rn
-        |), agg AS (
-        |  SELECT doc_id, count(*) AS n_dup_runs,
-        |    CAST(max(rs) + 7 AS BIGINT) AS longest_dup_tokens,
-        |    CAST(sum(rs) AS BIGINT) AS dup_shingles
-        |  FROM runs GROUP BY doc_id
-        |)
-        |SELECT d.doc_id, coalesce(a.n_dup_runs, 0) AS n_dup_runs,
-        |  coalesce(a.longest_dup_tokens, 0) AS longest_dup_tokens,
-        |  coalesce(a.dup_shingles, 0) AS dup_shingles
-        |FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-        |WHERE d.doc_id >= 400
-        |ORDER BY d.doc_id""").stripMargin,
-
-    // d20 re-derives the exact answer by BRUTE FORCE over every
-    // candidate length 8..64 (no binary search — an independent
-    // algorithm agreeing on the value): same injection, same
-    // candidate-completeness lemma (an exact dup span's start must sit
-    // in a duplicated-shingle island with span_cap ≥ L), then actual
-    // substring grouping per length
-    "d20_exact_dup_span" ->
-      ("""WITH injected AS (
-        |  SELECT doc_id, CASE WHEN doc_id % 7 = 0
-        |    THEN text || ' """ + DedupPassage + """' ELSE text END AS text
-        |  FROM documents
-        |), base AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks FROM injected
-        |  WHERE len(string_split(text, ' ')) >= 8
-        |), pos AS (
-        |  SELECT doc_id, toks, unnest(range(1, len(toks) - 6)) AS i FROM base
-        |), sh AS (
-        |  SELECT doc_id, toks, CAST(i AS BIGINT) AS pos,
-        |    CAST('0x' || substr(md5(array_to_string(
-        |      list_slice(toks, i, i + 7), ' ')), 1, 15) AS BIGINT) AS h
-        |  FROM pos
-        |), dup AS (
-        |  SELECT h FROM sh GROUP BY h HAVING count(*) >= 2
-        |), marked AS (
-        |  SELECT doc_id, toks, pos,
-        |    row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS rn
-        |  FROM sh WHERE h IN (SELECT h FROM dup)
-        |), cap AS (
-        |  SELECT doc_id, toks, pos,
-        |    max(pos) OVER (PARTITION BY doc_id, pos - rn) - pos + 8
-        |      AS span_cap
-        |  FROM marked
-        |), l AS (SELECT unnest(range(8, 65)) AS L
-        |), spans AS (
-        |  SELECT c.doc_id, l.L, array_to_string(list_slice(c.toks,
-        |    CAST(c.pos AS INT), CAST(c.pos + l.L - 1 AS INT)), ' ') AS s
-        |  FROM cap c JOIN l ON c.span_cap >= l.L
-        |), g AS (
-        |  SELECT L, s FROM spans GROUP BY L, s HAVING count(*) >= 2
-        |), best AS (SELECT max(L) AS L FROM g
-        |), hit AS (
-        |  SELECT sp.doc_id FROM spans sp JOIN g USING (L, s)
-        |  WHERE sp.L = (SELECT L FROM best)
-        |)
-        |SELECT CAST(coalesce((SELECT L FROM best), 0) AS BIGINT)
-        |    AS longest_exact_dup_tokens,
-        |  CAST((SELECT count(*) FROM hit) AS BIGINT) AS n_occurrences,
-        |  CAST((SELECT count(DISTINCT doc_id) FROM hit) AS BIGINT)
-        |    AS n_docs""").stripMargin,
-
-    "q2_min_cost_supplier" ->
-      """WITH cost AS (
-        |  SELECT l_partkey AS partkey, l_suppkey AS suppkey,
-        |    min(l_extendedprice / l_quantity) AS unit_cost
-        |  FROM lineitem GROUP BY l_partkey, l_suppkey)
-        |SELECT p_partkey, s_suppkey, s_name, n_name,
-        |  round(c.unit_cost, 2) AS best_cost
-        |FROM part JOIN cost c ON p_partkey = c.partkey
-        |JOIN supplier ON s_suppkey = c.suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE p_size = 25 AND r_name = 'ASIA'
-        |  AND c.unit_cost = (SELECT min(c2.unit_cost) FROM cost c2
-        |                     WHERE c2.partkey = p_partkey)
-        |ORDER BY p_partkey, s_suppkey LIMIT 100""".stripMargin,
-
-    "q6_forecast_revenue" ->
-      """SELECT CAST(round(sum(CAST(l_extendedprice * l_discount
-        |    AS DECIMAL(38,6))), 2) AS DOUBLE) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.03 AND 0.05
-        |  AND l_quantity < 24""".stripMargin,
-
-    "q8_market_share" ->
-      """WITH allrows AS (
-        |  SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
-        |    l_extendedprice * (1 - l_discount) AS volume,
-        |    n2.n_name AS supp_nation
-        |  FROM lineitem
-        |  JOIN part ON p_partkey = l_partkey
-        |  JOIN orders ON o_orderkey = l_orderkey
-        |  JOIN customer ON c_custkey = o_custkey
-        |  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |  JOIN region ON n1.n_regionkey = r_regionkey
-        |  JOIN supplier ON s_suppkey = l_suppkey
-        |  JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |  WHERE r_name = 'ASIA' AND p_type = 'PROMO'
-        |    AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |    AND o_orderdate < TIMESTAMP '1998-01-01')
-        |SELECT yr,
-        |  CAST(sum(CAST(CASE WHEN supp_nation = 'NATION_5' THEN volume
-        |      ELSE 0 END AS DECIMAL(38,6))) AS DOUBLE)
-        |    / CAST(sum(CAST(volume AS DECIMAL(38,6))) AS DOUBLE)
-        |    AS mkt_share
-        |FROM allrows GROUP BY yr ORDER BY yr""".stripMargin,
-
-    "q11_important_stock" ->
-      """WITH val AS (
-        |  SELECT l_partkey,
-        |    CAST(round(sum(CAST(l_extendedprice AS DECIMAL(38,6))), 2)
-        |      AS DOUBLE) AS part_value
-        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  WHERE n_name = 'NATION_5'
-        |  GROUP BY l_partkey)
-        |SELECT l_partkey, part_value FROM val
-        |WHERE part_value > (SELECT CAST(sum(CAST(part_value
-        |    AS DECIMAL(38,6))) AS DOUBLE) * 0.002 FROM val)
-        |ORDER BY part_value DESC, l_partkey LIMIT 20""".stripMargin,
-
-    "q12_priority_by_class" ->
-      """SELECT l_returnflag AS ship_class,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |GROUP BY l_returnflag ORDER BY ship_class""".stripMargin,
-
-    "q13_customer_distribution" ->
-      """SELECT c_count, count(*) AS custdist FROM (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |    AND o_orderpriority <> '1-URGENT'
-        |  GROUP BY c_custkey)
-        |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC LIMIT 10""".stripMargin,
-
-    "q15_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey AS supplier_no,
-        |    CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-        |      AS DECIMAL(38,6))), 2) AS DOUBLE) AS total_revenue
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name, total_revenue
-        |FROM supplier JOIN rev ON s_suppkey = supplier_no
-        |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q7_nation_volume" ->
-      """SELECT supp_nation, cust_nation, yr, count(*) AS n_items,
-        |  CAST(round(sum(CAST(rev AS DECIMAL(38,6))), 2) AS DOUBLE)
-        |    AS revenue
-        |FROM (
-        |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |    CAST(year(l_shipdate) AS BIGINT) AS yr,
-        |    l_extendedprice * (1 - l_discount) AS rev
-        |  FROM supplier JOIN lineitem ON s_suppkey = l_suppkey
-        |  JOIN orders ON o_orderkey = l_orderkey
-        |  JOIN customer ON c_custkey = o_custkey
-        |  JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |  JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |  WHERE ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_8')
-        |      OR (n1.n_name = 'NATION_8' AND n2.n_name = 'NATION_3'))
-        |    AND l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1998-01-01')
-        |GROUP BY supp_nation, cust_nation, yr
-        |ORDER BY supp_nation, cust_nation, yr""".stripMargin,
-
-    "q9_product_profit" ->
-      """SELECT n_name, yr,
-        |  CAST(round(sum(CAST(amount AS DECIMAL(38,6))), 2) AS DOUBLE)
-        |    AS sum_profit
-        |FROM (
-        |  SELECT n_name, CAST(year(o_orderdate) AS BIGINT) AS yr,
-        |    l_extendedprice * (1 - l_discount)
-        |      - 0.8 * p_retailprice * l_quantity AS amount
-        |  FROM lineitem JOIN part ON p_partkey = l_partkey
-        |  JOIN supplier ON s_suppkey = l_suppkey
-        |  JOIN orders ON o_orderkey = l_orderkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  WHERE p_name LIKE '%a%')
-        |GROUP BY n_name, yr ORDER BY n_name, yr""".stripMargin,
-
-    "q16_supplier_count" ->
-      """SELECT p_brand, p_type, p_size,
-        |  count(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE p_brand <> 'Brand#45'
-        |  AND p_size IN (1, 4, 9, 16, 25, 36, 49)
-        |  AND l_suppkey NOT IN (
-        |    SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-        |LIMIT 20""".stripMargin,
-
-    "q19_disjunctive_revenue" ->
-      """SELECT count(*) AS n_items,
-        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-        |    AS DECIMAL(38,6))), 2) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-        |    AND l_quantity BETWEEN 1 AND 21)
-        |  OR (p_brand = 'Brand#23' AND p_size BETWEEN 10 AND 30
-        |    AND l_quantity BETWEEN 10 AND 30)
-        |  OR (p_brand = 'Brand#34' AND p_size BETWEEN 20 AND 50
-        |    AND l_quantity BETWEEN 20 AND 40)""".stripMargin,
-
-    "q20_dominant_suppliers" ->
-      """SELECT s_name, n_name
-        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |WHERE s_suppkey IN (
-        |  SELECT l_suppkey FROM lineitem l1
-        |  GROUP BY l_partkey, l_suppkey
-        |  HAVING sum(l_quantity) >= 60
-        |    AND sum(l_quantity) > 0.2 * (
-        |      SELECT sum(l_quantity) FROM lineitem l2
-        |      WHERE l2.l_partkey = l1.l_partkey))
-        |ORDER BY s_name""".stripMargin,
-
-    // q4/q17/q21/q22: DuckDB runs the SAME correlated-subquery text —
-    // the second formulation is the second ENGINE's decorrelation,
-    // which is exactly what's under test
-    "q4_priority_check" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-07-01'
-        |  AND o_orderdate < TIMESTAMP '1996-10-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey
-        |                AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    "q17_small_qty_revenue" ->
-      """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(38,6)))
-        |    AS DOUBLE) / 7.0 AS avg_yearly,
-        |  count(*) AS n_items
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE p_brand = 'Brand#23' AND p_size < 15
-        |  AND l_quantity < 0.2 * (SELECT avg(l_quantity)
-        |                          FROM lineitem l2
-        |                          WHERE l2.l_partkey = p_partkey)""".stripMargin,
-
-    "q21_waiting_suppliers" ->
-      """SELECT s_name, count(*) AS numwait
-        |FROM supplier
-        |JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-        |JOIN orders ON o_orderkey = l1.l_orderkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE o_orderstatus = 'F' AND n_name = 'NATION_5'
-        |  AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey
-        |                    AND l3.l_shipdate >
-        |                      o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 100""".stripMargin,
-
-    "q22_dormant_customers" ->
-      """SELECT c_nationkey AS cntrycode, count(*) AS numcust,
-        |  CAST(round(sum(CAST(c_acctbal AS DECIMAL(38,6))), 2) AS DOUBLE)
-        |    AS totacctbal
-        |FROM customer
-        |WHERE c_acctbal > (SELECT CAST(sum(CAST(c_acctbal
-        |        AS DECIMAL(38,6))) AS DOUBLE) / count(*)
-        |      FROM customer WHERE c_acctbal > 0)
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey
-        |                    AND o_orderdate >= TIMESTAMP '1999-01-01')
-        |GROUP BY c_nationkey
-        |ORDER BY cntrycode""".stripMargin,
-
-    "q10_returned_items" ->
-      """SELECT c_custkey, c_name, n_name, count(*) AS n_items,
-        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-        |    AS DECIMAL(38,6))), 2) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1996-07-01'
-        |GROUP BY c_custkey, c_name, n_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-
-    "q5_local_supplier" ->
-      """SELECT n_name, count(*) AS n_items,
-        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-        |    AS DECIMAL(38,6))), 2) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-
-    // d16's oracle replays the injection, extraction and
-    // canonicalization verbatim (t20 precedent)
-    "d16_url_dedup" ->
-      """WITH injected AS (
-        |  SELECT doc_id, text || ' see ' ||
-        |    CASE CAST(doc_id % 4 AS INTEGER)
-        |      WHEN 0 THEN 'https://cdn' || (doc_id % 3) ||
-        |        '.example.com/Asset/' || (doc_id % 20)
-        |      WHEN 1 THEN 'http://CDN' || (doc_id % 3) ||
-        |        '.Example.COM/Asset/' || (doc_id % 20)
-        |      WHEN 2 THEN 'https://cdn' || (doc_id % 3) ||
-        |        '.example.com/Asset/' || (doc_id % 20) || '?utm_source=feed'
-        |      ELSE 'https://cdn' || (doc_id % 3) ||
-        |        '.example.com/Asset/' || (doc_id % 20) || '/#sec'
-        |    END AS text
-        |  FROM documents),
-        |urls AS (
-        |  SELECT doc_id, unnest(regexp_extract_all(text, 'https?://[^ ]+'))
-        |    AS url FROM injected),
-        |canon AS (
-        |  SELECT doc_id,
-        |    lower(regexp_extract(regexp_replace(url, '[?#].*$', ''),
-        |      '^https?://([^/]+)', 1)) ||
-        |    regexp_replace(regexp_extract(regexp_replace(url, '[?#].*$', ''),
-        |      '^https?://[^/]+(.*)$', 1), '/$', '') AS canonical_url
-        |  FROM urls)
-        |SELECT canonical_url, count(*) AS n_urls,
-        |  count(DISTINCT doc_id) AS n_docs, min(doc_id) AS keeper_doc_id
-        |FROM canon GROUP BY canonical_url ORDER BY canonical_url""".stripMargin,
-
-    // v14: identical fixed-order IEEE interpolation over IGNORE NULLS
-    // windows; date_diff('day', a, b) = Spark's datediff(b, a)
-    "v14_interpolate" ->
-      """WITH daily AS (
-        |  SELECT user_id, CAST(ts AS DATE) AS day,
-        |    CAST(sum(CAST(value AS DECIMAL(38,6))) AS DOUBLE) / count(*) AS v
-        |  FROM events GROUP BY user_id, CAST(ts AS DATE)),
-        |spans AS (
-        |  SELECT user_id, min(day) AS d0, max(day) AS d1
-        |  FROM daily GROUP BY user_id),
-        |calendar AS (
-        |  SELECT user_id,
-        |    CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day
-        |  FROM spans),
-        |dense AS (
-        |  SELECT c.user_id, c.day, d.v
-        |  FROM calendar c LEFT JOIN daily d USING (user_id, day)),
-        |w AS (
-        |  SELECT user_id, day, v,
-        |    last_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY day
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
-        |    last_value(CASE WHEN v IS NOT NULL THEN day END IGNORE NULLS)
-        |      OVER (PARTITION BY user_id ORDER BY day
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pd,
-        |    first_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY day
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
-        |    first_value(CASE WHEN v IS NOT NULL THEN day END IGNORE NULLS)
-        |      OVER (PARTITION BY user_id ORDER BY day
-        |      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nd
-        |  FROM dense)
-        |SELECT user_id, strftime(day, '%Y-%m-%d') AS day,
-        |  v IS NOT NULL AS observed,
-        |  CASE WHEN v IS NOT NULL THEN v
-        |    ELSE pv + (nv - pv) * (CAST(date_diff('day', pd, day) AS DOUBLE) /
-        |      CAST(date_diff('day', pd, nd) AS DOUBLE)) END AS v_interp
-        |FROM w ORDER BY user_id, day""".stripMargin,
-
-    // w30: the four booleans are the MG guarantees (hold under any
-    // partitioning); n_true_hh / hh_exact_count are exact SQL values
-    // w33: exact side re-derived (the w6 quantile_cont convention);
-    // the rank-bound boolean is the w30 literal-true contract — the
-    // hash matches only if Spark's sketch actually met its guarantee
-    "w33_approx_quantiles" ->
-      """WITH v AS (SELECT CAST(l_extendedprice AS DOUBLE) AS v
-        |  FROM lineitem),
-        |qq AS (SELECT quantile_cont(v, [0.25, 0.5, 0.75, 0.95, 0.99])
-        |    AS qs, CAST(count(*) AS BIGINT) AS n FROM v)
-        |SELECT [0.25, 0.5, 0.75, 0.95, 0.99][i] AS prob, n,
-        |  round(qs[i], 6) AS exact_q, true AS within_rank_bound
-        |FROM qq CROSS JOIN (SELECT unnest(range(1, 6)) AS i)
-        |ORDER BY prob""".stripMargin,
-
-    "w30_heavy_hitters" ->
-      """WITH skew AS (SELECT CASE WHEN l_partkey % 5 = 0 THEN 0
-        |    ELSE l_partkey % 997 END AS key FROM lineitem),
-        |hh AS (SELECT key, count(*) AS exact FROM skew GROUP BY key
-        |  HAVING count(*) * 17 > (SELECT count(*) FROM skew))
-        |SELECT true AS hh_captured, true AS est_le_exact,
-        |  true AS err_within_bound, true AS at_most_k,
-        |  (SELECT count(*) FROM hh) AS n_true_hh,
-        |  (SELECT CAST(sum(exact) AS BIGINT) FROM hh) AS hh_exact_count""".stripMargin,
-
-    // v15 replays the lead window on epoch-µs longs (the v9
-    // convention); p is one double division of exact counts, round 6
-    "v15_markov_transitions" ->
-      """WITH t AS (
-        |  SELECT event_type AS cur_type,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts), event_id) AS next_type
-        |  FROM events),
-        |c AS (
-        |  SELECT cur_type, next_type, count(*) AS n FROM t
-        |  WHERE next_type IS NOT NULL GROUP BY cur_type, next_type)
-        |SELECT cur_type, next_type, n,
-        |  round(CAST(n AS DOUBLE)
-        |    / CAST(sum(n) OVER (PARTITION BY cur_type) AS DOUBLE), 6) AS p
-        |FROM c ORDER BY cur_type, next_type""".stripMargin,
-
-    "g7_label_propagation" -> labelPropagationOracleSql(3),
-
-    "v16_ewma_smoothing" -> ewmaOracleSql(20),
-
-    // v17 replays the as-of union trick: clicks and purchases interleave
-    // in one per-user window ordered (us, side) with clicks first at
-    // ties (inclusive as-of, the Joins.asOfJoin convention); the
-    // IGNORE NULLS last_value carries the latest click forward. The two
-    // filled columns cannot blend rows: click_id/cus are never null on
-    // click rows, always null on purchase rows.
-    "v17_attribution" ->
-      """WITH ev AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS us, event_type
-        |  FROM events),
-        |c AS (
-        |  SELECT user_id, us, max(event_id) AS click_id FROM ev
-        |  WHERE event_type = 'click' GROUP BY user_id, us),
-        |u AS (
-        |  SELECT user_id, us, NULL AS cid, NULL AS cus, 1 AS side,
-        |    event_id
-        |  FROM ev WHERE event_type = 'purchase'
-        |  UNION ALL
-        |  SELECT user_id, us, click_id, us, 0, NULL FROM c),
-        |f AS (
-        |  SELECT *,
-        |    last_value(cid IGNORE NULLS) OVER ww AS lc,
-        |    last_value(cus IGNORE NULLS) OVER ww AS lcus
-        |  FROM u WINDOW ww AS (PARTITION BY user_id ORDER BY us, side
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT event_id, user_id,
-        |  CASE WHEN us - lcus <= 604800000000 THEN lc END AS click_id,
-        |  CASE WHEN us - lcus <= 604800000000 THEN (us - lcus) // 1000000
-        |    END AS gap_s
-        |FROM f WHERE side = 1 ORDER BY event_id""".stripMargin,
-
-    // o11: one aggregate pass unpivoted — min/max are exact input
-    // doubles, null/distinct counts exact integers; no float convention
-    "o11_column_stats" -> {
-      val cols = Seq("l_quantity", "l_extendedprice", "l_discount",
-        "l_tax", "l_suppkey")
-      val aggs = cols.map { c =>
-        s"""    sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS ${c}_nn,
-           |    count(DISTINCT $c) AS ${c}_nd,
-           |    min(CAST($c AS DOUBLE)) AS ${c}_mn,
-           |    max(CAST($c AS DOUBLE)) AS ${c}_mx""".stripMargin
-      }.mkString(",\n")
-      val rows = cols.map { c =>
-        s"SELECT '$c' AS col_name, CAST(${c}_nn AS BIGINT) AS n_nulls, " +
-          s"${c}_nd AS n_distinct, ${c}_mn AS min_v, ${c}_mx AS max_v FROM a"
-      }.mkString("\n", "\nUNION ALL ", "")
-      s"WITH a AS (\n  SELECT\n$aggs\n  FROM lineitem)$rows\nORDER BY col_name"
-    },
-
-    // o12 replays the injected-violation audit: the same 1-in-100 /
-    // 1-in-50 / 1-in-200 augmentation CTEs, each rule an integer
-    // conditional count, FK orphans via NOT EXISTS (the anti join)
-    "o12_integrity_audit" ->
-      """WITH cust_aug AS (
-        |  SELECT * FROM customer
-        |  UNION ALL SELECT * FROM customer WHERE c_custkey % 100 = 0
-        |), ord_aug AS (
-        |  SELECT o_orderkey, o_custkey FROM orders
-        |  UNION ALL SELECT o_orderkey + 10000000, o_custkey + 10000000
-        |  FROM orders WHERE o_orderkey % 50 = 0
-        |), li_aug AS (
-        |  SELECT l_quantity, l_discount FROM lineitem
-        |  UNION ALL SELECT l_quantity + 100.0, l_discount
-        |  FROM lineitem WHERE l_orderkey % 200 = 0 AND l_linenumber = 1
-        |)
-        |SELECT * FROM (
-        |  SELECT 'customer.c_custkey unique' AS check_name,
-        |    count(*) AS total_rows,
-        |    count(*) - count(DISTINCT c_custkey) AS violations,
-        |    count(*) - count(DISTINCT c_custkey) = 0 AS passed
-        |  FROM cust_aug
-        |  UNION ALL
-        |  SELECT 'orders.o_custkey in customer', count(*),
-        |    CAST(sum(CASE WHEN NOT EXISTS (SELECT 1 FROM customer c
-        |          WHERE c.c_custkey = o.o_custkey) THEN 1 ELSE 0 END) AS BIGINT),
-        |    sum(CASE WHEN NOT EXISTS (SELECT 1 FROM customer c
-        |          WHERE c.c_custkey = o.o_custkey) THEN 1 ELSE 0 END) = 0
-        |  FROM ord_aug o
-        |  UNION ALL
-        |  SELECT 'lineitem.l_quantity in [1,50]', count(*),
-        |    CAST(sum(CASE WHEN l_quantity < 1.0 OR l_quantity > 50.0
-        |          THEN 1 ELSE 0 END) AS BIGINT),
-        |    sum(CASE WHEN l_quantity < 1.0 OR l_quantity > 50.0
-        |          THEN 1 ELSE 0 END) = 0
-        |  FROM li_aug
-        |  UNION ALL
-        |  SELECT 'lineitem.l_discount in [0,0.1]', count(*),
-        |    CAST(sum(CASE WHEN l_discount < 0.0 OR l_discount > 0.1
-        |          THEN 1 ELSE 0 END) AS BIGINT),
-        |    sum(CASE WHEN l_discount < 0.0 OR l_discount > 0.1
-        |          THEN 1 ELSE 0 END) = 0
-        |  FROM li_aug
-        |  UNION ALL
-        |  SELECT 'documents.text non-empty', count(*),
-        |    CAST(sum(CASE WHEN text IS NULL OR text = '' THEN 1 ELSE 0 END) AS BIGINT),
-        |    sum(CASE WHEN text IS NULL OR text = '' THEN 1 ELSE 0 END) = 0
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT 'documents.n_chars = len(text)', count(*),
-        |    CAST(sum(CASE WHEN n_chars <> len(text) THEN 1 ELSE 0 END) AS BIGINT),
-        |    sum(CASE WHEN n_chars <> len(text) THEN 1 ELSE 0 END) = 0
-        |  FROM documents
-        |) ORDER BY check_name""".stripMargin,
-
-    // s20: sqrt is IEEE-identical per source, micro-unit quantized;
-    // the rate is exact-integer products divided once as double
-    "s20_temperature_resample" ->
-      """WITH docs AS (SELECT doc_id, source FROM documents),
-        |counts AS (
-        |  SELECT source, count(*) AS n,
-        |    CAST(round(sqrt(CAST(count(*) AS DOUBLE)) * 1e6) AS BIGINT) AS w
-        |  FROM docs GROUP BY source),
-        |totals AS (SELECT CAST(sum(w) AS BIGINT) AS sw,
-        |  CAST(sum(n) // 2 AS BIGINT) AS budget FROM counts),
-        |th AS (
-        |  SELECT source, n,
-        |    least(1.0, CAST(budget * w AS DOUBLE) / CAST(sw * n AS DOUBLE))
-        |      AS rate
-        |  FROM counts, totals)
-        |SELECT t.source, t.n AS n_docs, round(t.rate, 6) AS rate,
-        |  count(*) AS n_sampled
-        |FROM docs d JOIN th t ON d.source = t.source
-        |WHERE d.doc_id % 999983 * 2654435761 % 1048576
-        |  < CAST(floor(t.rate * 1048576) AS BIGINT)
-        |GROUP BY t.source, t.n, t.rate
-        |ORDER BY t.source""".stripMargin,
-
-    // w31: the whole sketch replays bit-for-bit (integer hash family —
-    // the large-multiplier decorrelated rows, Summaries.cmCell), so
-    // est/exact/overest are all value-checked
-    "w31_count_min" ->
-      """WITH skew AS (
-        |  SELECT CASE WHEN l_partkey % 5 = 0 THEN 0
-        |    ELSE l_partkey % 997 END AS key FROM lineitem),
-        |rows4 AS (SELECT * FROM (VALUES (0, 2654435761, 7),
-        |  (1, 2246822519, 11), (2, 3266489917, 13),
-        |  (3, 668265263, 17)) AS t(j, a, b)),
-        |sketch AS (
-        |  SELECT j, (key * a + b) % 999983 % 256 AS cell,
-        |    count(*) AS cnt
-        |  FROM skew CROSS JOIN rows4 GROUP BY 1, 2),
-        |top AS (
-        |  SELECT key, count(*) AS exact FROM skew GROUP BY key
-        |  ORDER BY exact DESC, key LIMIT 20),
-        |probe AS (
-        |  SELECT key, exact, min(cnt) AS est FROM (
-        |    SELECT t.key, t.exact, r.j,
-        |      (t.key * r.a + r.b) % 999983 % 256 AS cell
-        |    FROM top t CROSS JOIN rows4 r) p
-        |  JOIN sketch s ON s.j = p.j AND s.cell = p.cell
-        |  GROUP BY key, exact)
-        |SELECT key, exact, est, est - exact AS overest
-        |FROM probe ORDER BY exact DESC, key""".stripMargin
-  )
 
   /** DuckDB replay of v16's truncated EWMA: the same `depth` lag()
     * terms over one named window, each weight an exact power-of-two

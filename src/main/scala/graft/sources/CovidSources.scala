@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.util.Try
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -90,27 +88,26 @@ object CovidSources {
 
   /** Empty OWID-shaped frame — the fallback value when a source is
     * unreachable (the analogue of the reference returning `None` from a
-    * failed fetch and every consumer short-circuiting on it). */
-  def emptyOwid(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], owidSchema)
-
-  /** S1/S2 error surface. The reference fetches each source over HTTP
+    * failed fetch and every consumer short-circuiting on it).
+    *
+    * S1/S2 error surface. The reference fetches each source over HTTP
     * with a 30 s timeout and degrades to `None` plus a logged error
     * (data_loader.py:32-69 and :124-163; timeout constants.py:66; the
     * failure mode is mocked in tests/test_integration.py:115-147).
     * Transport itself is out of scope (SURVEY.md §1.1 — at 100 TB the
     * fetch is an upstream ingest job, not a query-time HTTP call); the
     * query-engine-visible error semantics are mirrored exactly:
-    *   - unreachable/missing source → `Failure` here, and callers fall
-    *     back to [[emptyOwid]] (the `None` short-circuit);
+    *   - unreachable/missing source → `Try(readOwidCsv(...))` (or
+    *     `readDiseaseShJson`) is a `Failure`, and callers fall back to
+    *     this frame (the `None` short-circuit);
     *   - malformed records → PERMISSIVE quarantine
     *     ([[readOwidCsvQuarantine]]) or strict FAILFAST
     *     ([[readOwidCsvStrict]]).
-    * `spark.read.csv` resolves the path eagerly, so the `Try` captures
+    * Both readers resolve the path eagerly, so the `Try` captures
     * missing-source failures at call time, not at first action. */
-  def readOwidCsvSafe(spark: SparkSession, path: String): Try[DataFrame] =
-    Try(readOwidCsv(spark, path))
+  def emptyOwid(spark: SparkSession): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], owidSchema)
 
   /** Strict ingestion: any row that fails to parse against
     * [[owidSchema]] aborts the scan (reference: an unparseable payload
@@ -140,10 +137,6 @@ object CovidSources {
       withCorrupt.filter(col("_corrupt_record").isNotNull)
         .select(col("_corrupt_record")))
   }
-
-  /** JSON twin of [[readOwidCsvSafe]] (data_loader.py:124-163). */
-  def readDiseaseShJsonSafe(spark: SparkSession, path: String): Try[DataFrame] =
-    Try(readDiseaseShJson(spark, path))
 
   /** Resilient acquisition — the retry/timeout/fallback policy the
     * reference wraps around every fetch (`requests.get(..., timeout=30)`

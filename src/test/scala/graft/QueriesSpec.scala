@@ -1,14 +1,13 @@
 package graft
 
-/** Smoke: every registered query executes at sf0.001 and every oracle
-  * key refers to a registered query (column-name parity with the oracle
-  * is covered by tools/oracle_check.py against DuckDB at sf0.01). */
-class QueriesSpec extends SparkSpec {
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-  test("every oracle key has a matching query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle without query: $missing")
-  }
+import graft.queries.QuerySpec
+
+/** Smoke: every registered query executes at sf0.001 (column-name
+  * parity with the oracle is covered by tools/oracle_check.py against
+  * DuckDB at sf0.01). */
+class QueriesSpec extends SparkSpec {
 
   test("entry flagship returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
@@ -29,30 +28,13 @@ class QueriesSpec extends SparkSpec {
       SparkEntry.queries("w6_group_aggregates")(spark, sf0001)) > 0L)
   }
 
-  test("no duplicate query keys across or within the query files") {
-    // Map literals and ++ both swallow duplicate keys silently — a new
-    // query reusing an existing name would SHADOW the old one and its
-    // oracle (caught here, not at the driver's gate where the survivor
-    // still passes). Cross-map: sizes must add up. Within-file: count
-    // the `"name" -> ((s, d)` registration sites in source.
-    val maps = Seq(
-      graft.queries.ParityQueries.queries,
-      graft.queries.ExtensionQueries.queries,
-      graft.queries.TrainingQueries.queries)
-    assert(maps.map(_.size).sum == SparkEntry.queries.size,
-      "a query key is registered in more than one queries file")
-    val reg = """"([a-z0-9_]+)" -> \(\(s, [d_]\)""".r
-    val files = Seq("ParityQueries", "ExtensionQueries", "TrainingQueries")
-      .map(f => s"src/main/scala/graft/queries/$f.scala")
-    val names = files.flatMap { f =>
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try reg.findAllMatchIn(src.mkString).map(_.group(1)).toList
-      finally src.close()
-    }
-    val dups = names.groupBy(identity).filter(_._2.size > 1).keys
-    assert(dups.isEmpty, s"duplicate query registrations: $dups")
-    assert(names.size == SparkEntry.queries.size,
-      "registration-site count and merged map size disagree")
+  test("QuerySpec.index rejects repeated query names and names each") {
+    // a Map would keep the last spec and silently drop the first plan
+    // and its oracle; the registry refuses instead
+    val plan: (SparkSession, String) => DataFrame = (s, _) => s.range(1).toDF()
+    val specs = Seq("a", "y", "x", "y", "x").map(QuerySpec(_, plan, None))
+    val e = intercept[IllegalArgumentException](QuerySpec.index(specs))
+    assert(e.getMessage.contains("duplicate query names: x, y"), e.getMessage)
   }
 
   test("every query is documented in OPERATORS.md (doc-rot guard)") {
@@ -69,19 +51,19 @@ class QueriesSpec extends SparkSpec {
     // the Totals line is DERIVED state — hand-maintained counts rotted
     // once (r5 verdict: the line said 154/147 against an actual
     // 188/181 while every per-query row was present). Parse it and
-    // pin it to the code: total = queries.size, oracled =
-    // oracleSql.size, rows-only = the difference.
+    // pin it to the registry: total = specs.size, oracled = specs
+    // with an oracle, rows-only = the difference.
+    val total = SparkEntry.specs.size
+    val oracled = SparkEntry.specs.count(_.oracle.isDefined)
     val totals = """\*\*Totals: (\d+) queries — (\d+) DuckDB-oracled, (\d+) rows-only""".r
     totals.findFirstMatchIn(docs) match {
       case Some(m) =>
         val (t, o, r) = (m.group(1).toInt, m.group(2).toInt, m.group(3).toInt)
-        assert(t == SparkEntry.queries.size && o == SparkEntry.oracleSql.size
-            && r == SparkEntry.queries.size - SparkEntry.oracleSql.size,
-          s"OPERATORS.md Totals line says $t/$o/$r but the code has " +
-            s"${SparkEntry.queries.size}/${SparkEntry.oracleSql.size}/" +
-            s"${SparkEntry.queries.size - SparkEntry.oracleSql.size} — " +
-            "update the line (it must state queries.size, oracleSql.size " +
-            "and their difference)")
+        assert(t == total && o == oracled && r == total - oracled,
+          s"OPERATORS.md Totals line says $t/$o/$r but the registry has " +
+            s"$total/$oracled/${total - oracled} — update the line (it " +
+            "must state the spec count, the oracled count and their " +
+            "difference)")
       case None =>
         fail("OPERATORS.md Totals line missing or no longer matches " +
           "'**Totals: N queries — M DuckDB-oracled, K rows-only'")
@@ -94,11 +76,9 @@ class QueriesSpec extends SparkSpec {
     val rm = """\((\d+) queries, (\d+) oracled""".r
     rm.findFirstMatchIn(readme) match {
       case Some(m) =>
-        assert(m.group(1).toInt == SparkEntry.queries.size
-            && m.group(2).toInt == SparkEntry.oracleSql.size,
+        assert(m.group(1).toInt == total && m.group(2).toInt == oracled,
           s"README.md says ${m.group(1)}/${m.group(2)} queries/oracled " +
-            s"but the code has ${SparkEntry.queries.size}/" +
-            s"${SparkEntry.oracleSql.size}")
+            s"but the registry has $total/$oracled")
       case None => fail("README.md '(N queries, M oracled' line missing")
     }
   }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.Try
+
 import org.apache.spark.SparkException
 
 import graft.sources.CovidSources
@@ -21,7 +23,7 @@ class SourceErrorSpec extends SparkSpec {
   }
 
   test("missing CSV source fails the Try; fallback is the empty typed frame") {
-    val r = CovidSources.readOwidCsvSafe(spark, "/nonexistent/owid.csv")
+    val r = Try(CovidSources.readOwidCsv(spark, "/nonexistent/owid.csv"))
     assert(r.isFailure, "a missing source must surface as Failure, not defer")
     val fallback = r.getOrElse(CovidSources.emptyOwid(spark))
     assert(fallback.schema == CovidSources.owidSchema)
@@ -29,7 +31,7 @@ class SourceErrorSpec extends SparkSpec {
   }
 
   test("missing JSON source fails the Try") {
-    assert(CovidSources.readDiseaseShJsonSafe(spark, "/nonexistent/api.json").isFailure)
+    assert(Try(CovidSources.readDiseaseShJson(spark, "/nonexistent/api.json")).isFailure)
   }
 
   test("permissive read quarantines malformed rows and keeps clean ones") {
