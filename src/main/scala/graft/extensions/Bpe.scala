@@ -89,8 +89,9 @@ object Bpe {
     * is solved by the word-type collapse, but the k merges are k
     * strictly SERIAL driver-sequenced rounds (pair count → argmax →
     * rewrite), a fixed handful of Spark jobs each over the bounded
-    * vocab table. Per-merge cost is flat in k (measured: the
-    * `t28_bpe_k_axis` ScaleHeadroom leg at k=4/16/64), so a
+    * vocab table. Per-merge cost is flat in k (measured at k=4/16/64:
+    * EXPLAIN.md "Round 9 (1)" table, by a scale harness last present
+    * at commit c6c1c21), so a
     * production-size merge table (k ≈ 30 000, cf. GPT-2's 50k) is
     * wall-clock-bound by ROUND COUNT × fixed job latency, not by data.
     * That is exactly the axis [[learnMergesBatched]] compresses. */

@@ -467,8 +467,9 @@ object Curation {
     * fingerprint anti-join and both probes hash-join against the
     * persisted artifacts on uniformly-distributed keys (fingerprint /
     * (band, bhash) / shingle-hash), so per-ingest cost is O(|batch|),
-    * FLAT in snapshot size — measured: the d22 ScaleHeadroom leg probes
-    * the same fixed batch against 1×/10×/25× state indexes (with the
+    * FLAT in snapshot size — measured by probing the same fixed batch
+    * against 1×/10×/25× state indexes (EXPLAIN.md "Round 10 (1)" table,
+    * by a scale harness last present at commit c6c1c21; with the
     * d19 lesson that flatness of the span probe against an UNBUCKETED
     * index is restored by persisting it `bucketBy(h)`). Both near-dup
     * probes read only the KEEPER slice behind its own barrier — a

@@ -1145,9 +1145,10 @@ object Dedup {
     * position whose shingle is ALREADY IN the snapshot index, extract
     * maximal hit runs, report per batch doc. The snapshot corpus is
     * never re-read — the batch probes the (distinct-hash) index with
-    * one semi join. MEASURED scale shape (ScaleHeadroom runs the
-    * probe both ways; numbers live in ONE place — EXPLAIN.md's
-    * round-6 d18/d19 table): batch cost is flat, but probing an
+    * one semi join. MEASURED scale shape (the probe both ways; numbers
+    * live in ONE place — EXPLAIN.md's "Round-6 (6)" d18/d19 table,
+    * measured by a scale harness last present at commit c6c1c21):
+    * batch cost is flat, but probing an
     * UNBUCKETED index re-shuffles the whole index per ingest, so
     * probe time grows with snapshot size; persisting the index
     * BUCKETED BY h (the s12 layout) restores measured flatness —

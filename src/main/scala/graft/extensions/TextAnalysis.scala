@@ -319,9 +319,10 @@ object TextAnalysis {
       if (ngram == 1) tokens(col("text"))
       else Dedup.ngramShingles(col("text"), ngram)
     // Cache placement is MEASURED, not assumed (VERDICT r12 item 2's
-    // falsification path, closed r13 by the ScaleHeadroom e13x
-    // controlled experiment — three cache regimes interleaved on the
-    // same 10×/25×/50× salted fixtures in one session): this
+    // falsification path, closed r13 by a controlled experiment — three
+    // cache regimes interleaved on the same 10×/25×/50× salted fixtures
+    // in one session; table in EXPLAIN.md "Round 13 (4)", measured by
+    // a scale harness last present at commit c6c1c21): this
     // double-checkpoint form (tf + weighted) is the FASTEST at every
     // scale (17.5/38.7/99.4 s vs 24.0/41.4/127.2 for weighted-only —
     // dropping tf's cache re-runs the heaviest pass, the shingle

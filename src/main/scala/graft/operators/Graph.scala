@@ -80,8 +80,10 @@ object Graph {
     *
     * `broadcastRanks` (default true): the rank state is |nodes|-sized —
     * orders of magnitude below |edges| on real graphs — and the
-    * checkpoint that cuts each superstep's lineage also erases size
-    * stats, so Catalyst would otherwise plan a sort-merge join that
+    * checkpoint that cuts each superstep's lineage freezes the
+    * optimizer's pre-execution size guess (Spark 4.1.2 keeps it as
+    * the LogicalRDD's `originStats`) instead of measuring the data,
+    * so Catalyst would otherwise plan a sort-merge join that
     * re-shuffles the EDGE side every superstep. Broadcasting the state
     * keeps edges streaming from their dst-partitioned checkpoint with
     * zero per-superstep edge movement — and since r15 the contribution
@@ -664,9 +666,10 @@ object Graph {
     // Without it, groupBy(dst) would smuggle never-a-source nodes into
     // the state with an inconsistent teleport share.
     // `deg` is |nodes|-row state exactly like the ranks — broadcast it
-    // under the same gate (r15, guide §3.1: the checkpoint erased e's
-    // size stats, so Catalyst planned a sort-merge join that exchanged
-    // the full EDGE frame just to attach out-weights).
+    // under the same gate (r15, guide §3.1: the checkpoint froze a
+    // pre-execution size guess for e, so Catalyst planned a sort-merge
+    // join that exchanged the full EDGE frame just to attach
+    // out-weights).
     val nodesAsDst = nodes.select(col("src").as("dst"))
     val ewd0 = e.join(if (bc) broadcast(deg) else deg, Seq("src"))
       .join(if (bc) broadcast(nodesAsDst) else nodesAsDst,

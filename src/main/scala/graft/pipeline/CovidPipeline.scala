@@ -22,10 +22,10 @@ import graft.operators._
   */
 object CovidPipeline {
 
-  case class Config(
-      trendWindowDays: Int = 30,            // config/constants.py:64
-      asOf: LocalDate = LocalDate.parse("2024-01-01"),
-      wallClock: Boolean = false)           // true → real current_timestamp (X9)
+  /** Trend window length in days (config/constants.py:64). */
+  val TrendWindowDays = 30
+
+  case class Config(asOf: LocalDate = LocalDate.parse("2024-01-01"))
 
   /** Clean OWID historical frame (reference clean pipeline:
     * data_loader.py:72-121 + data_cleaner.py:154-203):
@@ -115,7 +115,7 @@ object CovidPipeline {
 
   /** W4 — 30-day trend metrics (calculate_trend_metrics,
     * data_merger.py:122-223). */
-  def trendMetrics(cleanedOwid: DataFrame, cfg: Config): DataFrame = {
+  def trendMetrics(cleanedOwid: DataFrame): DataFrame = {
     val t = WindowOps.trendMetrics(
       cleanedOwid,
       partCol = "country_standardized",
@@ -123,7 +123,7 @@ object CovidPipeline {
       tieBreak = Seq(col("country")),
       firstLastCols = Seq("total_cases", "total_deaths"),
       avgCols = Seq("new_cases", "new_deaths"),
-      windowDays = cfg.trendWindowDays)
+      windowDays = TrendWindowDays)
     t.select(
       col("country_standardized"),
       RowOps.percentChange(col("first_total_cases"), col("last_total_cases"))
@@ -147,14 +147,14 @@ object CovidPipeline {
     * consumed, not a second cleaning that could drift. NOTE on cost:
     * the frames stay LAZY here (the pipeline's documented
     * one-Catalyst-plan contract), so a caller running MULTIPLE actions
-    * over them (merge + report, like Demo) should
+    * over them (merge + report, like perfbench's covid workload) should
     * `localCheckpoint(eager = false)` the cleaned frames to make the
     * window-heavy cleaning stage physically run once. */
   def integrateCleaned(cleanedOwid: DataFrame, cleanedApi: DataFrame,
       cfg: Config): DataFrame = {
     val merged = alignOwid(cleanedOwid)
       .join(alignApi(cleanedApi), Seq("country_standardized"), "inner")
-      .join(trendMetrics(cleanedOwid, cfg), Seq("country_standardized"), "left")
+      .join(trendMetrics(cleanedOwid), Seq("country_standardized"), "left")
     merged
       .withColumn("cases_data_gap",
         RowOps.gap(col("api_current_cases"), col("owid_total_cases")))
@@ -176,12 +176,9 @@ object CovidPipeline {
         RowOps.dataAgeDays(col("owid_date"), lit(cfg.asOf.toString).cast("date")))
       // X9 — reference stamps `merge_timestamp = datetime.now()`
       // (data_merger.py:272). The clock is injected (cfg.asOf) so runs
-      // are reproducible and oracle-safe; pass `wallClock = true` only
-      // for operational lineage stamps that are excluded from verified
-      // outputs (SURVEY.md §7.5.4).
+      // are reproducible and oracle-safe (SURVEY.md §7.5.4).
       .withColumn("merge_timestamp",
-        if (cfg.wallClock) current_timestamp()
-        else lit(cfg.asOf.toString + " 00:00:00").cast("timestamp"))
+        lit(cfg.asOf.toString + " 00:00:00").cast("timestamp"))
   }
 
   /** Stable record shape of the trend output — the one place SURVEY.md
@@ -198,11 +195,11 @@ object CovidPipeline {
       data_points_available: Long)
 
   /** Typed view of [[trendMetrics]]. */
-  def trendMetricsTyped(cleanedOwid: DataFrame, cfg: Config)
+  def trendMetricsTyped(cleanedOwid: DataFrame)
       : org.apache.spark.sql.Dataset[TrendRow] = {
     val spark = cleanedOwid.sparkSession
     import spark.implicits._
-    trendMetrics(cleanedOwid, cfg).as[TrendRow]
+    trendMetrics(cleanedOwid).as[TrendRow]
   }
 
   /** §3.2 dashboard equivalence: the reference memoizes the integrated

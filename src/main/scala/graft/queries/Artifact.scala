@@ -20,11 +20,9 @@ import org.apache.spark.sql.SparkSession
   * An entry pins its checkpointed blocks for the session: per-query
   * checkpoints die with their query and the ContextCleaner unpersists
   * them after GC, but an entry's references live in the cache.
-  * [[invalidate]] drops one; a process that sweeps several dirs
-  * through one session (ScaleHeadroom's 1×/10×/25× legs) must evict
-  * each dir before building the next, then `System.gc()` so the
-  * cleaner's weak refs enqueue promptly — with 1×+10× artifacts
-  * pinned, the 25× classifier build measured 6.9× the 10× one. */
+  * [[invalidate]] drops one. Entries pinned for two dirs slowed a
+  * third dir's classifier build 6.9× (EXPLAIN.md "Round 11 (11)",
+  * measured by a scale harness last present at commit c6c1c21). */
 private[graft] abstract class Artifact[A <: AnyRef](
     val forces: (String, A => Unit)*) {
   protected def build(s: SparkSession, d: String): A

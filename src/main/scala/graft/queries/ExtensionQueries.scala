@@ -252,7 +252,8 @@ object ExtensionQueries {
     // docs within the batch (keeper election). The snapshot corpus is
     // never re-read — only its three indexes are probed; see
     // Curation.curateIncremental for the flat-ingest scale contract
-    // (measured: the d22 ScaleHeadroom leg).
+    // (measured: EXPLAIN.md "Round 10 (1)" table, by a scale harness
+    // last present at commit c6c1c21).
     QuerySpec("d22_incremental_curation", (s, d) => {
       val docs = Tables.documents(s, d)
       val passage = lit(" " + TrainingQueries.DedupPassage)

@@ -3598,10 +3598,11 @@ object TrainingQueries {
     // commerce graphs, positive on social graphs). Composes g9's
     // degree frame with w8's exact-moment pearson over the edge list:
     // the |nodes|-row degree frame BROADCASTS onto the edges twice —
-    // explicitly (r14 opt round): the checkpoint erases size stats, so
-    // Catalyst defaulted to TWO sort-merge joins that each shuffled
-    // the full EDGE list just to attach a |nodes|-sized state — the
-    // pageRank broadcastRanks situation exactly, same bounded-state
+    // explicitly (r14 opt round): the checkpoint freezes the
+    // optimizer's pre-execution size guess instead of measuring the
+    // data, so Catalyst defaulted to TWO sort-merge joins that each
+    // shuffled the full EDGE list just to attach a |nodes|-sized
+    // state — the pageRank broadcastRanks situation exactly, same bounded-state
     // contract (plan diff: 2 SortMergeJoin + 2 edge exchanges →
     // 2 BroadcastHashJoin, edges never move; plans/r14/
     // g10_assortativity_*.txt). Then one five-moment hash aggregate.
@@ -4241,11 +4242,12 @@ object TrainingQueries {
       val h1 = seeds.join(ce, col("seed") === col("c"))
         .select(col("seed"), col("s"), col("w"))
         .localCheckpoint(eager = false) // 1-hop agg + 2-hop frontier share it
-      // r15 (guide §3.1): the checkpoint erases h1's size stats, so
-      // Catalyst planned the 2-hop expansion AND both final join-backs
-      // as sort-merge joins — exchanging the FULL pair table to attach
-      // a 1%-of-customers frontier, and exchanging seeds twice to
-      // attach two ≤|seeds|-row aggregates (18 exchanges total). The
+      // r15 (guide §3.1): the checkpoint freezes a pre-execution size
+      // guess for h1 instead of measuring it, so Catalyst planned the
+      // 2-hop expansion AND both final join-backs as sort-merge joins —
+      // exchanging the FULL pair table to attach a 1%-of-customers
+      // frontier, and exchanging seeds twice to attach two
+      // ≤|seeds|-row aggregates (18 exchanges total). The
       // frontier and the per-seed aggregates are the small side by
       // construction; broadcast them under the same state-broadcast
       // budget gate as g10/Graph (the count is a bounded 1-value read
@@ -6809,9 +6811,10 @@ object TrainingQueries {
   /** [[ClassifierModel]]'s parts are LAZY per consumer: a query that
     * only reads `evalRow` never triggers the full-corpus GD run (whose
     * `docs.count()` is eager inside trainAndScoreParts), and vice versa
-    * — so filtered Verify/Bench slices and the ScaleHeadroom cost split
-    * (build vs probe, the e12 train_encode/probe convention) each pay
-    * exactly the construction they use. */
+    * — so filtered Verify/Bench slices and a build-vs-probe cost split
+    * (EXPLAIN.md "Round 11 (11)" table, measured by a scale harness
+    * last present at commit c6c1c21) each pay exactly the
+    * construction they use. */
   private[graft] final class ClassifierParts(full: () => (DataFrame, DataFrame),
       eval: () => DataFrame) {
     private lazy val f = full()

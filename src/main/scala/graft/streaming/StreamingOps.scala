@@ -236,61 +236,6 @@ object StreamingOps {
       }
   }
 
-  /** The [[statefulUserStats]] state machine on the MODERN typed-state
-    * API (`transformWithState`, Spark 4's successor to the legacy
-    * `flatMapGroupsWithState`): per-key state lives in a named
-    * [[org.apache.spark.sql.streaming.ValueState]] slot managed by the
-    * StatefulProcessorHandle — one column family per state variable in
-    * the RocksDB store (the provider this API requires), which is what
-    * unlocks independent TTL, timers, and schema evolution per variable
-    * at scale. Identical semantics to the legacy form by construction
-    * (same fold, same exact-decimal accumulator, same HALF_UP rounding);
-    * StatefulStreamingSpec asserts batch-by-batch output parity between
-    * the two. */
-  class UserStatsProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, Event, UserStats] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    @transient private var state: ValueState[UserState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[UserState]("userState",
-        org.apache.spark.sql.Encoders.product[UserState], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[UserStats] = {
-      val prev =
-        if (state.exists()) state.get() else UserState(0L, BigDecimal(0), 0L)
-      val evs = rows.toSeq
-      // exact-decimal accumulation: iterator order varies run-to-run
-      // (same policy as the legacy form)
-      val next = UserState(
-        prev.nEvents + evs.size,
-        prev.totalValue + evs.map(e => BigDecimal(e.value)).sum,
-        math.max(prev.lastSeenSec,
-          evs.map(_.ts.getTime / 1000).foldLeft(0L)(math.max)))
-      state.update(next)
-      Iterator(UserStats(userId, next.nEvents,
-        next.totalValue
-          .setScale(2, scala.math.BigDecimal.RoundingMode.HALF_UP)
-          .toDouble))
-    }
-  }
-
-  /** [[statefulUserStats]] via `transformWithState` — see
-    * [[UserStatsProcessor]]. Requires
-    * `spark.sql.streaming.stateStore.providerClass` =
-    * RocksDBStateStoreProvider. */
-  def statefulUserStatsTws(events: org.apache.spark.sql.Dataset[Event])
-      : org.apache.spark.sql.Dataset[UserStats] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(new UserStatsProcessor,
-        TimeMode.None(), OutputMode.Update())
-  }
-
   /** One Misra-Gries sketch per shard: bounded-state streaming heavy
     * hitters. `n_processed` carries the shard's stream size so the
     * consumer can evaluate the n/(k+1) error bound per shard. The
@@ -557,8 +502,9 @@ object StreamingOps {
     * EXPLAIN round 10); against the bucketed tables the index sides
     * scan IN PLACE — only the fixed-size batch exchanges, so per-ingest
     * cost is O(|batch|), flat in snapshot size (CurationIngestSpec pins
-    * the no-index-side-exchange plan; the d22s ScaleHeadroom leg
-    * measures the executed loop's probe flat vs 25× state).
+    * the no-index-side-exchange plan; the executed loop's probe
+    * measured flat vs 25× state: EXPLAIN.md "Round 11 (1)" table, by a
+    * scale harness last present at commit c6c1c21).
     *
     * Replay safety, three times over: each advance is a
     * dynamic-partition-overwrite `insertInto` of the batch's OWN

@@ -867,50 +867,8 @@ class StatefulStreamingSpec extends SparkSpec {
       assert(user1.contains((1L, 2L, 4.0)))   // after batch 1
       assert(user1.contains((1L, 3L, 10.0)))  // after batch 2 (state carried)
       assert(rows.contains((2L, 1L, 4.0)))
-    } finally q.stop()
-  }
-
-  test("transformWithState twin produces batch-identical output to the legacy API") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamingOps
-    import graft.streaming.StreamingOps.Event
-
-    implicit val sqlCtx = spark.sqlContext
-    // transformWithState needs the RocksDB provider (one column family
-    // per state variable); scope it to this query and restore after
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[Event]
-    val q = StreamingOps.statefulUserStatsTws(input.toDS())
-      .writeStream.format("memory").queryName("tws_out")
-      .outputMode("update").start()
-    try {
-      def ts(s: Long) = new java.sql.Timestamp(s * 1000)
-      // the exact micro-batch script the legacy-API test runs
-      input.addData(Event(1, ts(10), 1L, "view", 1.5),
-        Event(2, ts(20), 1L, "click", 2.5), Event(3, ts(30), 2L, "view", 4.0))
-      q.processAllAvailable()
-      input.addData(Event(4, ts(40), 1L, "view", 6.0))
-      q.processAllAvailable()
-      val rows = spark.table("tws_out")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      // parity with the flatMapGroupsWithState form: same per-key rows
-      // per micro-batch, same carried state, same rounded totals
-      val user1 = rows.filter(_._1 == 1L)
-      assert(user1.contains((1L, 2L, 4.0)))
-      assert(user1.contains((1L, 3L, 10.0)))
-      assert(rows.contains((2L, 1L, 4.0)))
       assert(rows.length == 3, s"one row per key per batch, got $rows")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    } finally q.stop()
   }
 
   test("streamed rolling z-score reproduces the batch v13 query bit-for-bit on an in-order feed") {

@@ -41,8 +41,7 @@ class PipelineSpec extends SparkSpec {
 
   private lazy val merged =
     CovidPipeline.integrate(owidFixture, apiFixture,
-      CovidPipeline.Config(trendWindowDays = 30,
-        asOf = java.time.LocalDate.parse("2024-01-05")))
+      CovidPipeline.Config(asOf = java.time.LocalDate.parse("2024-01-05")))
 
   test("integrates exactly the mergeable countries; aggregates excluded") {
     val countries = merged.select("country_standardized").as[String]
@@ -73,6 +72,10 @@ class PipelineSpec extends SparkSpec {
   test("data age vs injected as-of date") {
     val usa = merged.filter(col("country_standardized") === "USA").collect()(0)
     assert(usa.getAs[Int]("owid_data_age_days") == 3)
+    // X9: merge_timestamp is the same injected clock, never now()
+    val stamp = merged.select(org.apache.spark.sql.functions.date_format(
+      col("merge_timestamp"), "yyyy-MM-dd HH:mm:ss")).distinct().collect()
+    assert(stamp.map(_.getString(0)).toSeq == Seq("2024-01-05 00:00:00"))
   }
 
   test("trend metrics attach via left join with guarded pct change") {
@@ -239,8 +242,7 @@ class TypedPipelineSpec extends SparkSpec {
     val cleaned = rows.toDF("country_standardized", "date", "total_cases",
       "total_deaths", "new_cases", "new_deaths", "population", "iso_code")
       .withColumn("country", org.apache.spark.sql.functions.col("country_standardized"))
-    val ds = CovidPipeline.trendMetricsTyped(cleaned,
-      CovidPipeline.Config(trendWindowDays = 30))
+    val ds = CovidPipeline.trendMetricsTyped(cleaned)
     val t = ds.collect()(0)
     assert(t.country_standardized == "Testland")
     assert(t.avg_daily_new_cases.contains(1.0))

@@ -9,6 +9,11 @@ import graft.queries.QuerySpec
   * DuckDB at sf0.01). */
 class QueriesSpec extends SparkSpec {
 
+  private def repoFile(name: String): String = {
+    val src = scala.io.Source.fromFile(name, "UTF-8")
+    try src.mkString finally src.close()
+  }
+
   test("entry flagship returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
@@ -38,10 +43,7 @@ class QueriesSpec extends SparkSpec {
   }
 
   test("every query is documented in OPERATORS.md (doc-rot guard)") {
-    val docs = {
-      val src = scala.io.Source.fromFile("OPERATORS.md", "UTF-8")
-      try src.mkString finally src.close()
-    }
+    val docs = repoFile("OPERATORS.md")
     // anchored on the backticked code span a doc row uses — bare
     // substring containment would be satisfied by prose mentions or a
     // longer name containing this one
@@ -69,10 +71,7 @@ class QueriesSpec extends SparkSpec {
           "'**Totals: N queries — M DuckDB-oracled, K rows-only'")
     }
     // README.md carries the same derived counts — same rot risk, same pin
-    val readme = {
-      val src = scala.io.Source.fromFile("README.md", "UTF-8")
-      try src.mkString finally src.close()
-    }
+    val readme = repoFile("README.md")
     val rm = """\((\d+) queries, (\d+) oracled""".r
     rm.findFirstMatchIn(readme) match {
       case Some(m) =>
@@ -81,6 +80,19 @@ class QueriesSpec extends SparkSpec {
             s"but the registry has $total/$oracled")
       case None => fail("README.md '(N queries, M oracled' line missing")
     }
+  }
+
+  test("every README `runMain graft.X` names an object with a main (doc-rot guard)") {
+    val readme = repoFile("README.md")
+    val mains = """runMain graft\.(\w+)""".r
+      .findAllMatchIn(readme).map(_.group(1)).toSeq.distinct
+    assert(mains.nonEmpty, "README.md lists no `runMain graft.X` line")
+    val broken = mains.filterNot { x =>
+      scala.util.Try(Class.forName(s"graft.$x$$")
+        .getMethod("main", classOf[Array[String]])).isSuccess
+    }
+    assert(broken.isEmpty,
+      s"README.md advertises mains that do not exist: ${broken.mkString(", ")}")
   }
 
   SparkEntry.queries.foreach { case (name, fn) =>
