@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** The one local SparkSession configuration every main and the test
@@ -33,6 +35,11 @@ object GraftSession {
       .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // The board's unpartitioned windows are deliberate (the allowlist
+    // UnpartitionedWindowSpec guards); their per-plan "No Partition
+    // Defined" WARN would only bury real errors in the log.
+    Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
     spark
   }
 }

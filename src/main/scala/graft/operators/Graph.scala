@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftBridge.{fitsBroadcast, measuredCut, measuredRows}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph computation on DataFrames — the Pregel-as-relational
@@ -9,50 +10,22 @@ import org.apache.spark.sql.functions._
   * state (edges, contributions, ranks) lives in executors, partitioned
   * by the join key; the per-superstep cost is one edge-sized probe plus
   * one |nodes|-sized aggregate — the unit GraphX/Pregel pays — and the
-  * edge frame is checkpointed once and reused by every iteration (no
-  * rescans, no exponential plan growth). The one deliberate driver
-  * touch-point is the rank-state broadcast (see `broadcastRanks`).
+  * edge frame is cut once and reused by every iteration (no
+  * rescans, no exponential plan growth). Every lineage cut is a
+  * [[org.apache.spark.sql.GraftBridge.measuredCut]], so Catalyst plans
+  * each join from MEASURED sizes: a |nodes|-row state that fits
+  * `spark.sql.autoBroadcastJoinThreshold` broadcasts, a larger one
+  * shuffle-joins, and no caller picks the strategy.
   */
 object Graph {
 
-  /** Broadcast budget for |nodes|-row STATE frames (ranks, degrees,
-    * labels): the forced broadcast hints below are bounded-but-O(nodes)
-    * — fine at every tested SF, but a forced hint on a frame past
-    * executor/driver memory would fail hard where stats-driven planning
-    * degrades gracefully to a shuffle join (r14 verdict item 2). Gated:
-    * a run whose node count exceeds this budget silently demotes to the
-    * shuffle-join path (`broadcastRanks = false` semantics — values are
-    * identical either way, GraphPropsSpec pins that). The default is
-    * the ~100M-node escape-hatch boundary the broadcast contract has
-    * documented since r9; env-overridable for smaller executors, and a
-    * `private[graft]` var so the gating spec can exercise the
-    * over-budget path without a 100M-node fixture. */
-  private[graft] var stateBroadcastMaxRows: Long =
-    sys.env.getOrElse("SPARK_GRAFT_STATE_BROADCAST_MAX_ROWS",
-      "100000000").toLong
-
-  /** repartition-by-key + localCheckpoint whose PARTITIONING STAYS
-    * VISIBLE to the planner (r15, guide §2.4). Under AQE a
-    * checkpoint's LogicalRDD captures `UnknownPartitioning` — the
-    * adaptive plan's layout isn't final at capture time — so every
-    * downstream same-key aggregate/join re-exchanges data that is
-    * already laid out correctly (measured: the r15 pre-partitioned
-    * edge checkpoints bought nothing until this). Creating the
-    * checkpoint with AQE briefly OFF pins `hashpartitioning(key, N)`
-    * in the LogicalRDD; consumers (planned with AQE back on) then
-    * satisfy ClusteredDistribution(key ⊆ keys) with ZERO exchanges —
-    * probed for the same-key aggregate, the (key, x) aggregate and the
-    * key-partitioned window. The partition count is the session's
-    * shuffle-partition conf — the scale knob a cluster sizes anyway;
-    * only the one repartition exchange runs non-adaptively. */
-  private def keyedCheckpoint(df: DataFrame, key: String): DataFrame = {
-    val spark = df.sparkSession
-    val k = "spark.sql.adaptive.enabled"
-    val saved = spark.conf.getOption(k)
-    spark.conf.set(k, "false")
-    try df.repartition(col(key)).localCheckpoint(eager = false)
-    finally saved.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-  }
+  /** Hint an in-plan frame that is |state|-sized but estimated as a
+    * join product (a contribution sum, a vote) from a MEASURED state
+    * with at least its rows and at least its row width: broadcast iff
+    * that state fits Spark's own broadcast-by-size rule, so the hint
+    * never forces a frame past the threshold. */
+  private def broadcastIfFits(state: DataFrame, df: DataFrame): DataFrame =
+    if (fitsBroadcast(state)) broadcast(df) else df
 
   /** Damped PageRank, fixed iteration count.
     *
@@ -78,24 +51,19 @@ object Graph {
     * (NULL → exact decimal 0), so the state's node set is invariant
     * across supersteps.
     *
-    * `broadcastRanks` (default true): the rank state is |nodes|-sized —
-    * orders of magnitude below |edges| on real graphs — and the
-    * checkpoint that cuts each superstep's lineage freezes the
-    * optimizer's pre-execution size guess (Spark 4.1.2 keeps it as
-    * the LogicalRDD's `originStats`) instead of measuring the data,
-    * so Catalyst would otherwise plan a sort-merge join that
-    * re-shuffles the EDGE side every superstep. Broadcasting the state
-    * keeps edges streaming from their dst-partitioned checkpoint with
-    * zero per-superstep edge movement — and since r15 the contribution
-    * aggregate reuses that partitioning too, so a superstep runs with NO
-    * hash exchange at all. The cost: each superstep's broadcast BUILDs
-    * (rank state in, contribution sums back) collect |nodes|-row frames
-    * to the driver — bounded and explicit, the e8 bounded-broadcast
-    * contract, and GATED: past [[stateBroadcastMaxRows]] nodes the run
-    * demotes itself to the shuffle path. Set the flag false to force
-    * that path — the shuffle join keeps the driver out entirely, and the
-    * src-partitioned edge checkpoint is then the zero-edge-movement
-    * layout.
+    * Join strategy: the rank state is |nodes|-sized — orders of
+    * magnitude below |edges| on real graphs — and every iterate is a
+    * measured cut, so Catalyst sees its true size. The edge cut is
+    * dst-partitioned. While the state fits the broadcast threshold it
+    * broadcasts onto that cut: zero per-superstep edge movement, and
+    * the contribution aggregate reuses the partitioning, so a
+    * superstep runs with NO hash exchange at all (each superstep's
+    * broadcast builds collect |nodes|-row frames to the driver —
+    * bounded, the e8 bounded-broadcast contract). Past the threshold
+    * the planner shuffle-joins the state onto the edges by src, which
+    * re-exchanges the edge cut every superstep; no benchmark workload
+    * reaches that regime, so its cost is unmeasured. Values are
+    * identical either way (PlanSpec, ScaleSpec).
     *
     * `weightCol`: optional LONG edge weight — contributions become
     * rank·w/Σw instead of rank/outdeg (weighted PageRank, e.g. trading
@@ -113,9 +81,8 @@ object Graph {
   def pageRank(
       edges: DataFrame, iterations: Int, damping: Double = 0.85,
       contribScale: Int = 12, rankScale: Int = 9,
-      broadcastRanks: Boolean = true,
       weightCol: Option[String] = None): DataFrame =
-    run(edges, damping, contribScale, rankScale, broadcastRanks, weightCol)
+    run(edges, damping, contribScale, rankScale, weightCol)
       .ranks(iterations)
 
   /** A PREPARED PageRank system whose iterate prefix is computed once and
@@ -128,19 +95,14 @@ object Graph {
     * rounded-system states. At 100 TB that sharing is the difference
     * between k and 2k edge-sized join passes for a workload that asks
     * both "5 supersteps" and "to convergence" of one graph; the cached
-    * iterates are |nodes|-sized checkpoints — bounded state, never a
+    * iterates are |nodes|-sized cuts — bounded state, never a
     * data copy. */
   final class Run private[Graph] (
       edges: DataFrame, damping: Double, contribScale: Int, rankScale: Int,
-      broadcastRanks: Boolean, weightCol: Option[String]) {
-    // bcState = the EFFECTIVE broadcast decision: the caller's flag
-    // demoted to the shuffle path when the node count exceeds the
-    // stateBroadcastMaxRows budget (r15: the forced hint keeps its
-    // safety valve; values are identical on either path)
-    private val (ewd, init, bcState) =
-      prepare(edges, broadcastRanks, weightCol)
+      weightCol: Option[String]) {
+    private val (ewd, init) = prepare(edges, weightCol)
     private val nodes = init.select(col("src"))
-    // states(k) = the k-th iterate of the rounded system, checkpointed;
+    // states(k) = the k-th iterate of the rounded system, a measured cut;
     // states(0) = the uniform initial state
     private val states = scala.collection.mutable.ArrayBuffer[DataFrame](init)
 
@@ -149,25 +111,25 @@ object Graph {
       * chain rather than building its own. */
     def cachedIterates: Int = synchronized { states.size - 1 }
 
-    /** The k-th CHECKPOINTED iterate (k = 0 is the initial state),
-      * computing and caching any missing prefix. */
+    /** The k-th CUT iterate (k = 0 is the initial state), computing
+      * and caching any missing prefix. */
     def iterate(k: Int): DataFrame = synchronized {
       while (states.size <= k)
-        states += superstep(ewd, states.last, damping, contribScale,
-          rankScale, bcState).localCheckpoint(eager = false)
+        states += measuredCut(superstep(ewd, states.last, damping,
+          contribScale, rankScale))
       states(k)
     }
 
     /** Fixed-iteration ranks ([[Graph.pageRank]] semantics). The FINAL
       * superstep stays raw, off the cached prefix: the consumer's plan
       * IS one superstep (the PlanSpec g1 pin — broadcast rank state,
-      * single contribution exchange), and a later deeper consumer
+      * no hash exchange), and a later deeper consumer
       * re-derives from the cached prefix rather than re-paying the
       * whole chain. */
     def ranks(iterations: Int): DataFrame = {
       require(iterations >= 1, "need at least one iteration")
       superstep(ewd, iterate(iterations - 1), damping, contribScale,
-          rankScale, bcState)
+          rankScale)
         .select(col("src").as("node"), col("rank"))
     }
 
@@ -183,7 +145,7 @@ object Graph {
       while (iters < maxIterations && !done) {
         val prev = iterate(iters).select(col("src"), col("rank").as("__prev"))
         val residual = iterate(iters + 1).select(col("src"), col("rank"))
-          .join(if (bcState) broadcast(prev) else prev, Seq("src"))
+          .join(prev, Seq("src"))
           .agg(sum(abs(col("rank") - col("__prev"))
             .cast("decimal(38,12)")).cast("double").as("d"))
           .head.getDouble(0)
@@ -207,20 +169,19 @@ object Graph {
       // teleport into NaNs — fail loudly instead (pqCodebooks precedent)
       val nSeeds = inGraph.count()
       require(nSeeds > 0, "no seed intersects the graph's node set")
-      val seedFlag = inGraph.withColumn("__seed", lit(1))
-      var ranks = nodes
-        .join(if (bcState) broadcast(seedFlag) else seedFlag,
-          Seq("src"), "left")
+      // the teleport state is cut like every iterate, so the first
+      // superstep also plans from its measured size
+      var ranks = measuredCut(nodes
+        .join(inGraph.withColumn("__seed", lit(1)), Seq("src"), "left")
         .select(col("src"),
           when(col("__seed").isNotNull, lit(1.0) / nSeeds)
             .otherwise(lit(0.0)).as("__tele"))
         .withColumn("rank", col("__tele"))
-        .select(col("src"), col("rank"), col("__tele"))
+        .select(col("src"), col("rank"), col("__tele")))
       for (k <- 1 to iterations) {
         val next = personalizedSuperstep(ewd, ranks, damping, contribScale,
-          rankScale, bcState)
-        ranks = if (k < iterations) next.localCheckpoint(eager = false)
-                else next
+          rankScale)
+        ranks = if (k < iterations) measuredCut(next) else next
       }
       ranks.select(col("src").as("node"), col("rank"))
     }
@@ -231,9 +192,8 @@ object Graph {
     * wrappers over a fresh run. */
   def run(edges: DataFrame, damping: Double = 0.85,
       contribScale: Int = 12, rankScale: Int = 9,
-      broadcastRanks: Boolean = true,
       weightCol: Option[String] = None): Run =
-    new Run(edges, damping, contribScale, rankScale, broadcastRanks, weightCol)
+    new Run(edges, damping, contribScale, rankScale, weightCol)
 
   /** Convergence-terminated damped PageRank: iterates the SAME rounded
     * system as [[pageRank]] and stops after the first superstep whose
@@ -246,10 +206,9 @@ object Graph {
     * max-|Δ| threshold shrinks like 1/n and silently stops ever
     * triggering (or always triggering) as the graph grows. The residual
     * is ONE extra bounded aggregate per superstep: a |nodes|-row
-    * equi-join of the new state onto the old (rank-side broadcast under
-    * `broadcastRanks`, like the superstep itself) reduced to a single
-    * driver-read row — the same bounded-driver-touch class as the rank
-    * broadcast build.
+    * equi-join of the new state onto the old (both measured cuts, so
+    * planned like the superstep's own state join) reduced to a single
+    * driver-read row.
     *
     * Returns (final state, supersteps executed). The stop is
     * DETERMINISTIC: ranks are decimal-rounded to `rankScale` every
@@ -265,9 +224,8 @@ object Graph {
       edges: DataFrame, maxIterations: Int, epsilon: Double,
       damping: Double = 0.85,
       contribScale: Int = 12, rankScale: Int = 9,
-      broadcastRanks: Boolean = true,
       weightCol: Option[String] = None): (DataFrame, Int) =
-    run(edges, damping, contribScale, rankScale, broadcastRanks, weightCol)
+    run(edges, damping, contribScale, rankScale, weightCol)
       .converged(maxIterations, epsilon)
 
   /** PERSONALIZED PageRank: teleport mass (1−d) returns only to the
@@ -292,9 +250,8 @@ object Graph {
       edges: DataFrame, seeds: DataFrame, iterations: Int,
       damping: Double = 0.85,
       contribScale: Int = 12, rankScale: Int = 9,
-      broadcastRanks: Boolean = true,
       weightCol: Option[String] = None): DataFrame =
-    run(edges, damping, contribScale, rankScale, broadcastRanks, weightCol)
+    run(edges, damping, contribScale, rankScale, weightCol)
       .personalized(seeds, iterations)
 
   /** One superstep of the personalized system: like [[superstep]], but
@@ -304,10 +261,9 @@ object Graph {
     * per-node zero rows because contribution rows carried a NULL tele). */
   private def personalizedSuperstep(
       ewd: DataFrame, ranks: DataFrame, damping: Double,
-      contribScale: Int, rankScale: Int,
-      broadcastRanks: Boolean): DataFrame = {
+      contribScale: Int, rankScale: Int): DataFrame = {
     val csums = ewd
-      .join(if (broadcastRanks) broadcast(ranks) else ranks, Seq("src"))
+      .join(ranks, Seq("src"))
       .select(col("dst"),
         round((col("rank") * col("__w")) / col("outw"), contribScale)
           .cast("decimal(38,12)").as("contrib"))
@@ -315,8 +271,7 @@ object Graph {
       .agg(sum(col("contrib")).as("csum"))
       .select(col("dst").as("src"), col("csum"))
     ranks.select(col("src"), col("__tele"))
-      .join(if (broadcastRanks) broadcast(csums) else csums,
-        Seq("src"), "left")
+      .join(broadcastIfFits(ranks, csums), Seq("src"), "left")
       .select(col("src"),
         round(lit(1.0 - damping) * col("__tele")
           + lit(damping) * coalesce(col("csum"),
@@ -344,16 +299,13 @@ object Graph {
     *
     * Input edges are canonicalized here: self-loops dropped, direction
     * and duplicates collapsed — callers pass any (src, dst) pair list.
-    * `broadcastDegrees` (default true) broadcasts the |nodes|-row degree
-    * frame into the two orientation joins — the bounded node-sized
-    * broadcast contract shared with [[pageRank]]'s rank state; set it
-    * false past the broadcast budget (~100M+ nodes) and the orientation
-    * becomes two ordinary shuffle equi-joins.
+    * The |nodes|-row degree frame is a measured cut, so the two
+    * orientation joins broadcast it while it fits the broadcast
+    * threshold and become ordinary shuffle equi-joins past it.
     *
     * Returns (node, triangles) for every node in ≥ 1 triangle. */
-  def triangleCount(
-      edges: DataFrame, broadcastDegrees: Boolean = true): DataFrame = {
-    val (_, _, tri) = triangles(edges, broadcastDegrees)
+  def triangleCount(edges: DataFrame): DataFrame = {
+    val (_, _, tri) = triangles(edges)
     tri.select(explode(array(col("src"), col("v"), col("w"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("triangles"))
   }
@@ -363,26 +315,25 @@ object Graph {
     * with `a < b`, per-node degrees `(node, deg)`, enumerated triangles
     * `(src, v, w)` — each triangle exactly once, `src` its
     * (degree, id)-smallest corner). */
-  private def triangles(edges: DataFrame, broadcastDegrees: Boolean)
-      : (DataFrame, DataFrame, DataFrame) = {
-    def bc(df: DataFrame): DataFrame =
-      if (broadcastDegrees) broadcast(df) else df
+  private def triangles(edges: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     // canonical undirected edge set; feeds the degree count AND the
     // orientation join — one materialization (t8 convention)
-    val und = edges
+    val und = measuredCut(edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(eager = false)
-    val deg = und.select(col("a").as("node"))
+      .distinct())
+    // the |nodes|-row degree state, read by both orientation joins (and
+    // edgeJaccard's two stitches): cut so its measured size plans them
+    val deg = measuredCut(und.select(col("a").as("node"))
       .unionByName(und.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg")))
     // orient a—b from the (deg, id)-smaller endpoint; carry the HEAD's
-    // degree so the wedge join can order neighbors without re-joining
-    val o = und
-      .join(bc(deg.select(col("node").as("a"), col("deg").as("da"))), Seq("a"))
-      .join(bc(deg.select(col("node").as("b"), col("deg").as("db"))), Seq("b"))
+    // degree so the wedge join can order neighbors without re-joining.
+    // Cut: reused by BOTH wedge sides and the closing join.
+    val o = measuredCut(und
+      .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
+      .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
       .select(
         when(col("da") < col("db")
             || (col("da") === col("db") && col("a") < col("b")),
@@ -391,9 +342,7 @@ object Graph {
           struct(col("b").as("s"), col("a").as("t"), col("da").as("dt")))
         .as("e"))
       .select(col("e.s").as("src"), col("e.t").as("dst"),
-        col("e.dt").as("ddeg"))
-      // reused by BOTH wedge sides and the closing join — materialize
-      .localCheckpoint(eager = false)
+        col("e.dt").as("ddeg")))
     // wedges u→v, u→w with (deg, id)(v) < (deg, id)(w): an equi-join on
     // the wedge center plus the ordering filter (no cartesian — the
     // join key is u)
@@ -424,14 +373,11 @@ object Graph {
     * found once under the degeneracy bound) plus one explode — a
     * triangle (u, v, w) contributes its third corner as a common
     * neighbor to each of its three edges — one count aggregate on the
-    * canonical edge key, and one broadcast-degree stitch. The Jaccard
+    * canonical edge key, and one degree stitch. The Jaccard
     * is a single division of exact integers (identical IEEE result in
     * any engine, unrounded — the exactAvg rule). */
-  def edgeJaccard(
-      edges: DataFrame, broadcastDegrees: Boolean = true): DataFrame = {
-    def bc(df: DataFrame): DataFrame =
-      if (broadcastDegrees) broadcast(df) else df
-    val (und, deg, tri) = triangles(edges, broadcastDegrees)
+  def edgeJaccard(edges: DataFrame): DataFrame = {
+    val (und, deg, tri) = triangles(edges)
     // three (edge, witness) emissions per triangle, edges re-canonicalized
     val witnessed = tri.select(explode(array(
         struct(col("v").as("x"), col("w").as("y")),
@@ -442,8 +388,8 @@ object Graph {
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("common"))
     und.join(witnessed, Seq("a", "b"), "left")
       .withColumn("common", coalesce(col("common"), lit(0L)))
-      .join(bc(deg.select(col("node").as("a"), col("deg").as("da"))), Seq("a"))
-      .join(bc(deg.select(col("node").as("b"), col("deg").as("db"))), Seq("b"))
+      .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
+      .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
       .select(col("a"), col("b"), col("common"),
         (col("common").cast("double")
           / (col("da") + col("db") - col("common")).cast("double"))
@@ -469,50 +415,39 @@ object Graph {
     * dropping out of the state — the crawled-subgraph semantics
     * [[pageRank]]'s closure handling established; votes for/from
     * out-of-set destinations are ignored. Per iteration: one
-    * edges⋈labels equi-join (label state is |nodes|-row and broadcast
-    * under `broadcastLabels`, the pageRank rank-state contract; set it
-    * false past the broadcast budget and every state join becomes an
-    * ordinary shuffle equi-join), one (node, label) grouped count, one
+    * edges⋈labels equi-join (the |nodes|-row label state is a measured
+    * cut: broadcast while it fits the broadcast threshold, an ordinary
+    * shuffle equi-join past it — the pageRank rank-state rule), one
+    * (node, label) grouped count, one
     * per-node ordered top-1, and one |nodes|-row keep-label join — the
-    * label frame re-checkpoints each iteration so lineage stays flat.
+    * label frame is re-cut each iteration so lineage stays flat. The
+    * edge cut is src-partitioned: while the label state broadcasts, the
+    * plurality count and the per-src top-1 window both reuse that
+    * layout, so an iteration plans zero hash exchanges.
     *
     * Returns (node, label) — nodes sharing a label share a community. */
-  def labelPropagation(
-      edges: DataFrame, iterations: Int,
-      broadcastLabels: Boolean = true): DataFrame = {
+  def labelPropagation(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    def bc(df: DataFrame): DataFrame =
-      if (broadcastLabels) broadcast(df) else df
     // r15 (guide §2.4): every iteration's vote pass clusters on src
     // TWICE — the (src, label) plurality count and the per-src top-1
-    // window — and the old un-partitioned checkpoint paid both
-    // exchanges every iteration. A src-partitioned checkpoint lets the
-    // grouped count and the window reuse one layout: an iteration now
-    // plans zero hash exchanges (was 2). Broadcast regime only — on
-    // the shuffle path the labels join re-keys by dst anyway.
-    val e = if (broadcastLabels)
-        keyedCheckpoint(edges.select(col("src"), col("dst")), "src")
-      else edges.select(col("src"), col("dst"))
-        .localCheckpoint(eager = false)
-    val nodes = e.select(col("src")).distinct()
-      .localCheckpoint(eager = false)
+    // window — so a src-partitioned edge cut lets both reuse one layout
+    val e = measuredCut(edges.select(col("src"), col("dst")), Some("src"))
+    val nodes = measuredCut(e.select(col("src")).distinct())
     var labels = nodes.select(col("src").as("node"), col("src").as("label"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("src")).orderBy(col("c").desc, col("label"))
     for (_ <- 1 to iterations) {
       val voted = e
-        .join(bc(labels.select(col("node").as("dst"), col("label"))),
-          Seq("dst"))
+        .join(labels.select(col("node").as("dst"), col("label")), Seq("dst"))
         .groupBy(col("src"), col("label")).agg(count(lit(1)).as("c"))
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
         .select(col("src").as("node"), col("label").as("__voted"))
       // totality: un-voted nodes keep their label (no silent dropout)
-      labels = labels
-        .join(bc(voted), Seq("node"), "left")
+      labels = measuredCut(labels
+        .join(broadcastIfFits(labels, voted), Seq("node"), "left")
         .select(col("node"),
-          coalesce(col("__voted"), col("label")).as("label"))
-        .localCheckpoint(eager = false)
+          coalesce(col("__voted"), col("label")).as("label")))
     }
     labels
   }
@@ -534,75 +469,74 @@ object Graph {
     * normalization is ONE double division rounded once — both engines
     * iterate the identical system (the pageRank convention).
     *
-    * Scale shape: the edge frame checkpoints ONCE and never
-    * re-shuffles — each half-step is one broadcast probe of the
-    * |side|-row state onto the edges plus one map-side-combined
-    * grouped sum (|side| rows out), and each L1 total is a bounded
-    * 1-row aggregate riding a broadcast cross join (never a driver
-    * collect). `broadcastState=false` is the same escape hatch as
-    * pageRank's `broadcastRanks` for state past the broadcast budget.
-    * Node-set totality needs no zero-union: every distinct src gets a
-    * hub score and every distinct dst an auth score by construction
-    * (each has at least the edge that defined it).
+    * Scale shape: the edge frame is cut ONCE per half-step layout and
+    * never re-shuffles while the state broadcasts — each half-step is
+    * one broadcast probe of the |side|-row state onto the edges plus
+    * one map-side-combined grouped sum (|side| rows out), and each L1
+    * total is a bounded 1-row aggregate riding a broadcast cross join
+    * (never a driver collect). Each side's state is measured (a cut, or
+    * hinted from its measured raw sums), so past the broadcast
+    * threshold it shuffle-joins instead, pageRank's rule. Node-set
+    * totality needs no zero-union: every
+    * distinct src gets a hub score and every distinct dst an auth score
+    * by construction (each has at least the edge that defined it).
     *
     * `edges` must be pre-deduplicated (src, dst) pairs (the pageRank
     * contract); returns (side ∈ {hub, auth}, node, score). */
   def hits(edges: DataFrame, iterations: Int,
-      sumScale: Int = 12, scoreScale: Int = 9,
-      broadcastState: Boolean = true): DataFrame = {
+      sumScale: Int = 12, scoreScale: Int = 9): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
-    def bc(df: DataFrame): DataFrame =
-      if (broadcastState) broadcast(df) else df
     val dec = s"decimal(38,$sumScale)"
     // r15 (guide §2.4): the two half-steps cluster on OPPOSITE keys —
     // auth sums group by dst (probing the hub state by src), hub sums
-    // group by src (probing the auth state by dst) — so ONE edge
-    // checkpoint cannot serve both exchange-free. Under the broadcast
-    // regime the edge list is checkpointed TWICE, once per
-    // partitioning; each half-step's aggregate then reuses its copy's
-    // layout and a full iteration plans ZERO hash exchanges (was 2).
-    // The cost is checkpoint bytes (2× the edge list), not a semantic
-    // copy; under broadcastState=false the single un-partitioned
-    // checkpoint stays (those joins shuffle regardless).
+    // group by src (probing the auth state by dst) — so ONE edge cut
+    // cannot serve both exchange-free. The edge list is cut TWICE, once
+    // per partitioning; while the state broadcasts, each half-step's
+    // aggregate reuses its copy's layout and a full iteration plans ZERO
+    // hash exchanges (was 2). The cost is cut bytes (2× the edge list),
+    // not a semantic copy.
     val e0 = edges.select(col("src"), col("dst"))
-    val (eAuth, eHub) =
-      if (broadcastState) {
-        (keyedCheckpoint(e0, "dst"), keyedCheckpoint(e0, "src"))
-      } else {
-        val e = e0.localCheckpoint(eager = false)
-        (e, e)
-      }
-    val hubNodes = eHub.select(col("src")).distinct()
-    val nH = hubNodes.agg(count(lit(1)).as("n"))
-    def normalize(raw: DataFrame, key: String): DataFrame = {
+    val eAuth = measuredCut(e0, Some("dst"))
+    val eHub = measuredCut(e0, Some("src"))
+    val hubNodes = measuredCut(eHub.select(col("src")).distinct())
+    // Returns the normalized state and whether it fits the broadcast
+    // threshold: the cross join makes the state's estimate a product,
+    // so the decision is read from the measured raw sums (same rows,
+    // wider row).
+    def normalize(raw: DataFrame, key: String): (DataFrame, Boolean) = {
       // raw feeds both its own L1 total and the normalized state —
-      // checkpoint so the half-step join doesn't run twice
-      val r = raw.localCheckpoint(eager = false)
+      // cut so the half-step join doesn't run twice
+      val r = measuredCut(raw)
       val tot = r.agg(sum(col("raw")).as("tot"))
-      r.crossJoin(broadcast(tot))
+      (r.crossJoin(broadcast(tot))
         .select(col(key),
           round(col("raw").cast("double") / col("tot").cast("double"),
-            scoreScale).as("score"))
+            scoreScale).as("score")),
+        fitsBroadcast(r))
     }
-    var hubs = hubNodes.crossJoin(broadcast(nH))
-      .select(col("src"), (lit(1.0) / col("n")).as("score"))
+    // uniform 1/|hubs| start: a projection of the measured node set, so
+    // the first auth half-step plans from a measured size too
+    var hubs = hubNodes
+      .select(col("src"), lit(1.0 / measuredRows(hubNodes)).as("score"))
     var auths: DataFrame = null
     for (k <- 1 to iterations) {
       // explicit round-then-cast (the pageRank contribution pattern):
       // after the first normalize scores are already at scoreScale, but
       // the 1/n init is a raw double whose decimal conversion must be
       // the same HALF_UP step in both engines
-      auths = normalize(
-        eAuth.join(bc(hubs), Seq("src")).groupBy(col("dst"))
+      val (authState, authFits) = normalize(
+        eAuth.join(hubs, Seq("src"))
+          .groupBy(col("dst"))
           .agg(sum(round(col("score"), sumScale).cast(dec)).as("raw")),
         "dst")
-      val nextHubs = normalize(
-        eHub.join(bc(auths), Seq("dst")).groupBy(col("src"))
+      auths = authState
+      val (nextHubs, _) = normalize(
+        eHub.join(if (authFits) broadcast(auths) else auths, Seq("dst"))
+          .groupBy(col("src"))
           .agg(sum(round(col("score"), sumScale).cast(dec)).as("raw")),
         "src")
       // barrier BETWEEN iterations keeps plans linear (pageRank rule)
-      hubs = if (k < iterations) nextHubs.localCheckpoint(eager = false)
-             else nextHubs
+      hubs = if (k < iterations) measuredCut(nextHubs) else nextHubs
     }
     hubs.select(lit("hub").as("side"), col("src").as("node"), col("score"))
       .unionByName(auths.select(lit("auth").as("side"),
@@ -633,59 +567,43 @@ object Graph {
       .select(col("node"), col("cluster_id").as("component_id"))
   }
 
-  /** Shared graph preparation: checkpointed (edge ⋈ out-weight ⋈ closed
+  /** Shared graph preparation: the cut (edge ⋈ out-weight ⋈ closed
     * node set) frame plus the uniform initial state. One materialization
     * serves every superstep (positive-weight contract enforced up front
     * — see [[pageRank]]'s scaladoc). */
   private def prepare(
-      edges: DataFrame, broadcastRanks: Boolean,
-      weightCol: Option[String]): (DataFrame, DataFrame, Boolean) = {
-    val e = (weightCol match {
+      edges: DataFrame, weightCol: Option[String]): (DataFrame, DataFrame) = {
+    val e = measuredCut(weightCol match {
       case Some(w) => edges.select(col("src"), col("dst"),
           col(w).cast("long").as("__w"))
         .filter(col("__w") > 0)
       case None => edges.select(col("src"), col("dst"), lit(1L).as("__w"))
-    }).localCheckpoint(eager = false)
+    })
     val deg = e.groupBy(col("src")).agg(sum(col("__w")).as("outw"))
     // the node frame feeds the count, the init state and every
     // superstep's re-attach join — materialize it once
-    val nodes = e.select(col("src")).distinct().localCheckpoint(eager = false)
-    // Bounded 1-row driver read (the converged()/personalized() class):
-    // the node count feeds the uniform init rank — where it previously
-    // rode a broadcast crossJoin of a 1-row aggregate, i.e. the same
-    // job run inside the first broadcast build — AND the broadcast-
-    // budget gate (r15: the forced |nodes|-row hints demote to the
-    // shuffle path past stateBroadcastMaxRows instead of OOMing where
-    // stats-driven planning would have degraded gracefully).
-    val n = nodes.count()
-    val bc = broadcastRanks && n <= stateBroadcastMaxRows
+    val nodes = measuredCut(e.select(col("src")).distinct())
+    // the node count feeds the uniform init rank
+    val n = measuredRows(nodes)
+    val init = nodes
+      .select(col("src"), lit(1.0 / n).as("rank"), lit(n).as("n"))
     // closed node set: drop edges whose dst never appears as a source
-    // ONCE, before the checkpoint — the filter is loop-invariant, and
+    // ONCE, before the cut — the filter is loop-invariant, and
     // applying it after `deg` keeps outw counting out-of-set links
     // (crawled-subgraph semantics: that mass leaves the ranked set).
     // Without it, groupBy(dst) would smuggle never-a-source nodes into
-    // the state with an inconsistent teleport share.
-    // `deg` is |nodes|-row state exactly like the ranks — broadcast it
-    // under the same gate (r15, guide §3.1: the checkpoint froze a
-    // pre-execution size guess for e, so Catalyst planned a sort-merge
-    // join that exchanged the full EDGE frame just to attach
-    // out-weights).
-    val nodesAsDst = nodes.select(col("src").as("dst"))
-    val ewd0 = e.join(if (bc) broadcast(deg) else deg, Seq("src"))
-      .join(if (bc) broadcast(nodesAsDst) else nodesAsDst,
-        Seq("dst"), "left_semi")
-    // Pre-partition the prepared edge frame ONCE by the key its
-    // per-superstep consumer clusters on (r15, guide §2.4): under the
-    // broadcast regime every superstep's contribution aggregate groups
-    // by dst — a dst-partitioned checkpoint lets all k aggregates reuse
-    // this one exchange (plan: zero hash exchanges per superstep);
-    // under the shuffle regime the per-superstep rank join keys by src
-    // — a src-partitioned checkpoint keeps the edge side in place and
-    // only the |nodes|-row state moves per superstep.
-    val ewd = keyedCheckpoint(ewd0, if (bc) "dst" else "src")
-    val init = nodes
-      .select(col("src"), lit(1.0 / n).as("rank"), lit(n).as("n"))
-    (ewd, init, bc)
+    // the state with an inconsistent teleport share. `deg` is
+    // |nodes|-row state like the ranks, but its estimate is scaled from
+    // the EDGE cut — hint it from the initial rank state (a projection
+    // of the measured node set, same rows, wider row).
+    val ewd0 = e.join(broadcastIfFits(init, deg), Seq("src"))
+      .join(nodes.select(col("src").as("dst")), Seq("dst"), "left_semi")
+    // Pre-partition the prepared edge frame ONCE by dst (r15, guide
+    // §2.4): while the rank state broadcasts, every superstep's
+    // contribution aggregate groups by dst, so all k aggregates reuse
+    // this one exchange (plan: zero hash exchanges per superstep).
+    val ewd = measuredCut(ewd0, Some("dst"))
+    (ewd, init)
   }
 
   /** One superstep of the rounded system: contributions rank·w/Σw
@@ -695,17 +613,16 @@ object Graph {
     * a Union whose output partitioning is unknown, so EVERY superstep
     * re-exchanged its partial aggregates even though ewd is already
     * dst-partitioned. Now the contribution aggregate rides ewd's
-    * checkpointed dst-partitioning exchange-free, and in-degree-0 nodes
+    * cut dst-partitioning exchange-free, and in-degree-0 nodes
     * re-enter via a |nodes|-row left join back onto the rank state
     * (csum NULL → exact decimal 0 — bit-identical to summing the old
     * zero row, since adding decimal 0 never changes a sum; node-set
     * invariance now comes from joining FROM the state). */
   private def superstep(
       ewd: DataFrame, ranks: DataFrame, damping: Double,
-      contribScale: Int, rankScale: Int,
-      broadcastRanks: Boolean): DataFrame = {
+      contribScale: Int, rankScale: Int): DataFrame = {
     val csums = ewd
-      .join(if (broadcastRanks) broadcast(ranks) else ranks, Seq("src"))
+      .join(ranks, Seq("src"))
       .select(col("dst"),
         round((col("rank") * col("__w")) / col("outw"), contribScale)
           .cast("decimal(38,12)").as("contrib"))
@@ -713,8 +630,7 @@ object Graph {
       .agg(sum(col("contrib")).as("csum"))
       .select(col("dst").as("src"), col("csum"))
     ranks.select(col("src"), col("n"))
-      .join(if (broadcastRanks) broadcast(csums) else csums,
-        Seq("src"), "left")
+      .join(broadcastIfFits(ranks, csums), Seq("src"), "left")
       .select(col("src"),
         round(lit(1.0 - damping) / col("n")
           + lit(damping) * coalesce(col("csum"),

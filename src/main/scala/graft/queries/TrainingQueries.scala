@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftBridge.{fitsBroadcast, measuredCut}
 import org.apache.spark.sql.functions._
 
 import graft.extensions.{Bpe, Curation, Dedup, Multimodal, Similarity, TextAnalysis}
@@ -3597,34 +3598,21 @@ object TrainingQueries {
     // hubs, or to leaves? — negative on bipartite hub-and-spoke
     // commerce graphs, positive on social graphs). Composes g9's
     // degree frame with w8's exact-moment pearson over the edge list:
-    // the |nodes|-row degree frame BROADCASTS onto the edges twice —
-    // explicitly (r14 opt round): the checkpoint freezes the
-    // optimizer's pre-execution size guess instead of measuring the
-    // data, so Catalyst defaulted to TWO sort-merge joins that each
-    // shuffled the full EDGE list just to attach a |nodes|-sized
-    // state — the pageRank broadcastRanks situation exactly, same bounded-state
-    // contract (plan diff: 2 SortMergeJoin + 2 edge exchanges →
-    // 2 BroadcastHashJoin, edges never move; plans/r14/
-    // g10_assortativity_*.txt). Then one five-moment hash aggregate.
+    // the |nodes|-row degree frame is a measured cut, so Catalyst
+    // broadcasts it onto the edges twice while it fits the broadcast
+    // threshold — edges never move, where two sort-merge joins would
+    // each shuffle the full edge list (plans/r14/g10_assortativity_*.txt)
+    // — and shuffle-joins past it. Then one five-moment hash aggregate.
     // Integer degrees make every decimal moment exact; the closed form
     // is w8's rounded double tree.
     QuerySpec("g10_assortativity", (s, d) => {
       val edges = tradingEdges(s, d)
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint(eager = false) // joins both endpoints
-      // r15 gate (verdict item 3): the forced hint is O(nodes), not
-      // O(1) — past the state-broadcast budget fall back to the
-      // stats/SMJ path instead of OOMing the executors. The count is a
-      // bounded 1-value read that forces the checkpoint both joins
-      // were about to materialize anyway.
-      val hint: DataFrame => DataFrame =
-        if (deg.count() <= graft.operators.Graph.stateBroadcastMaxRows)
-          df => broadcast(df) else df => df
+      val deg = measuredCut( // joins both endpoints
+        edges.groupBy(col("src")).agg(count(lit(1)).as("deg")))
       edges
-        .join(hint(deg.select(col("src"), col("deg").as("deg_src"))),
-          "src")
-        .join(hint(deg.select(col("src").as("dst"),
-          col("deg").as("deg_dst"))), "dst")
+        .join(deg.select(col("src"), col("deg").as("deg_src")), "src")
+        .join(deg.select(col("src").as("dst"), col("deg").as("deg_dst")),
+          "dst")
         .withColumn("graph", lit("trading"))
         .transform(df => Summaries.pearson(df, Seq(col("graph")),
           col("deg_src").cast("double"), col("deg_dst").cast("double")))
@@ -4239,33 +4227,26 @@ object TrainingQueries {
       // unique data" accidental exchange (r14 opt round: 9 → 6
       // exchanges, plan diff in plans/r14/g12_khop_aggregation_*.txt;
       // value-identical, oracle re-verified).
-      val h1 = seeds.join(ce, col("seed") === col("c"))
-        .select(col("seed"), col("s"), col("w"))
-        .localCheckpoint(eager = false) // 1-hop agg + 2-hop frontier share it
-      // r15 (guide §3.1): the checkpoint freezes a pre-execution size
-      // guess for h1 instead of measuring it, so Catalyst planned the
-      // 2-hop expansion AND both final join-backs as sort-merge joins —
-      // exchanging the FULL pair table to attach a 1%-of-customers
-      // frontier, and exchanging seeds twice to attach two
-      // ≤|seeds|-row aggregates (18 exchanges total). The
-      // frontier and the per-seed aggregates are the small side by
-      // construction; broadcast them under the same state-broadcast
-      // budget gate as g10/Graph (the count is a bounded 1-value read
-      // that forces the checkpoint both consumers were about to
-      // materialize anyway; past the budget the stats/SMJ path stays).
-      val hint: DataFrame => DataFrame =
-        if (h1.count() <= graft.operators.Graph.stateBroadcastMaxRows)
-          df => broadcast(df) else df => df
+      // 1-hop agg + 2-hop frontier share it. Its measured size lets
+      // Catalyst broadcast the 1%-of-customers frontier into the 2-hop
+      // expansion and the 1-hop aggregate into its join-back, where
+      // sort-merge joins would exchange the FULL pair table (18
+      // exchanges, r15). The 2-hop aggregate is estimated as a join
+      // product, so its join-back is hinted from h1's measured size
+      // (it has at most one row per seed).
+      val h1 = measuredCut(seeds.join(ce, col("seed") === col("c"))
+        .select(col("seed"), col("s"), col("w")))
       val h1agg = h1.groupBy(col("seed"))
         .agg(count(col("s")).as("n_suppliers_1hop"),
           sum(col("w")).as("w_1hop"))
-      val h2agg = hint(h1.select(col("seed"), col("s")))
+      val h2agg = h1.select(col("seed"), col("s"))
         .join(ce.select(col("s"), col("c").as("c2")), Seq("s"))
         .filter(col("c2") =!= col("seed"))
         .groupBy(col("seed"))
         .agg(countDistinct(col("c2")).as("n_customers_2hop"))
-      seeds.join(hint(h1agg), Seq("seed"), "left")
-        .join(hint(h2agg), Seq("seed"), "left")
+      seeds.join(h1agg, Seq("seed"), "left")
+        .join(if (fitsBroadcast(h1)) broadcast(h2agg) else h2agg,
+          Seq("seed"), "left")
         .select(col("seed"),
           coalesce(col("n_suppliers_1hop"), lit(0L)).as("n_suppliers_1hop"),
           coalesce(col("w_1hop"), lit(0L)).as("w_1hop"),

@@ -218,14 +218,16 @@ object GraphPropsSpec extends Properties("graft.graph") {
       }
     }
 
-  property("hits: broadcastState=false is score-identical") =
+  property("hits: the shuffle-join plan (broadcast off) is score-identical") =
     forAll(edgesGen) { es =>
       val edges = es.map { case (a, b) => (a, b + "$") }
       val df = edges.toDF("src", "dst")
       val a = Graph.hits(df, iterations = 2)
         .as[(String, String, Double)].collect().toSet
-      val b = Graph.hits(df, iterations = 2, broadcastState = false)
-        .as[(String, String, Double)].collect().toSet
+      val b = SparkTestSession.withBroadcastOff {
+        Graph.hits(df, iterations = 2)
+          .as[(String, String, Double)].collect().toSet
+      }
       a == b
     }
 

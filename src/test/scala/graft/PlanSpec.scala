@@ -213,8 +213,8 @@ class PlanSpec extends SparkSpec {
     val p = finalPlan(df)
     // lineage is cut at each superstep's checkpoint, so the final plan IS
     // the last superstep: rank state must ride a broadcast join, and
-    // since r15 the contribution aggregate reuses the edge checkpoint's
-    // visible dst-partitioning (Graph.keyedCheckpoint) — a superstep
+    // since r15 the contribution aggregate reuses the edge cut's
+    // declared dst-partitioning (GraftBridge.measuredCut) — a superstep
     // plans ZERO hash exchanges; the only exchange left is the output
     // sort's range partition
     assert(p.contains("BroadcastHashJoin"),
@@ -224,73 +224,27 @@ class PlanSpec extends SparkSpec {
       s"expected no hash exchange in a superstep, got $n in\n$p")
   }
 
-  test("g1 fallback: broadcastRanks=false joins rank state by shuffle, never the driver") {
-    // the scale leg for node sets past the broadcast budget: the rank
-    // join must plan WITHOUT any broadcast (no per-superstep driver
-    // collect). At sf0.001 AQE would helpfully re-broadcast the tiny
-    // state, masking the shape — disable broadcast thresholds so the
-    // test sees the at-scale plan; the broadcast FORM's explicit hint
-    // survives the same conf, proving the flag (not the threshold) is
-    // what switches legs.
-    val thresholds = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val saved = thresholds.map(k => k -> spark.conf.getOption(k))
-    thresholds.foreach(k => spark.conf.set(k, "-1"))
-    try {
-      val edges = graft.queries.TrainingQueries.tradingEdges(spark, sf0001)
-      val p = finalPlan(graft.operators.Graph
-        .pageRank(edges, iterations = 2, broadcastRanks = false))
-      assert(!p.contains("BroadcastHashJoin"),
-        s"fallback superstep must not broadcast the rank state\n$p")
-      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
-        s"expected a shuffle join of ranks onto edges\n$p")
-      val pb = finalPlan(graft.operators.Graph
-        .pageRank(edges, iterations = 2))
-      assert(pb.contains("BroadcastHashJoin"),
-        s"explicit broadcast hint must survive a -1 threshold\n$pb")
-    } finally saved.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  test("g1 over the broadcast threshold: shuffle-joined rank state, same values") {
+    // the plan a node set past the broadcast threshold gets: with
+    // size-driven broadcasts off the measured rank state no longer
+    // fits, so the superstep must plan a shuffle join WITHOUT any
+    // broadcast (no per-superstep driver collect) — with no flag or
+    // budget involved — and iterate the same rounded system. At
+    // sf0.001 with default thresholds AQE would re-broadcast the tiny
+    // state at runtime, so only the conf scope reaches this plan.
+    val edges = graft.queries.TrainingQueries.tradingEdges(spark, sf0001)
+    val (p, shuffled) = SparkTestSession.withBroadcastOff {
+      val df = graft.operators.Graph.pageRank(edges, iterations = 2)
+      (finalPlan(df), df.orderBy("node").collect())
     }
-  }
-
-  test("pageRank: an over-budget node set demotes the broadcast hint to " +
-      "the shuffle plan, value-identically") {
-    // r15 (verdict item 3): the forced |nodes|-row broadcast hints are
-    // O(data), not O(1) — past the stateBroadcastMaxRows budget the run
-    // must plan the shuffle join (graceful degradation instead of an
-    // executor OOM), without the caller flipping any flag. Exercise the
-    // over-budget path by shrinking the budget to 0 rather than
-    // building a 100M-node fixture.
-    val saved = graft.operators.Graph.stateBroadcastMaxRows
-    // as in the broadcastRanks=false test above: at sf0.001 AQE would
-    // helpfully re-broadcast the tiny state at runtime, masking the
-    // demotion — disable the auto thresholds so the test sees the
-    // at-scale plan shape (an explicit hint would survive this conf,
-    // so its absence proves the GATE removed it)
-    val thresholds = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val savedConf = thresholds.map(k => k -> spark.conf.getOption(k))
-    thresholds.foreach(k => spark.conf.set(k, "-1"))
-    try {
-      val edges = graft.queries.TrainingQueries.tradingEdges(spark, sf0001)
-      graft.operators.Graph.stateBroadcastMaxRows = 0L
-      val demoted = graft.operators.Graph.pageRank(edges, iterations = 2)
-      val p = finalPlan(demoted)
-      assert(!p.contains("BroadcastHashJoin"),
-        s"over-budget run must not broadcast the rank state\n$p")
-      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
-        s"expected the demoted shuffle join of ranks onto edges\n$p")
-      val demotedRows = demoted.orderBy("node").collect()
-      graft.operators.Graph.stateBroadcastMaxRows = saved
-      val broadcastRows = graft.operators.Graph.pageRank(edges, iterations = 2)
-        .orderBy("node").collect()
-      assert(demotedRows.sameElements(broadcastRows),
-        "gate demotion changed values")
-    } finally {
-      graft.operators.Graph.stateBroadcastMaxRows = saved
-      savedConf.foreach { case (k, v) =>
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-    }
+    assert(!p.contains("BroadcastHashJoin"),
+      s"over-threshold superstep must not broadcast the rank state\n$p")
+    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
+      s"expected a shuffle join of ranks onto edges\n$p")
+    val default = graft.operators.Graph.pageRank(edges, iterations = 2)
+      .orderBy("node").collect()
+    assert(shuffled.nonEmpty && shuffled.sameElements(default),
+      "the shuffle-join plan changed values")
   }
 
   test("d20: the exact-span result plan has no nested-loop/cartesian stage") {

@@ -240,15 +240,16 @@ class ScaleSpec extends SparkSpec {
       .as[(String, String)].collect().toMap
     assert(out == Map("a" -> "a", "b" -> "a", "c" -> "a",
       "d" -> "d", "e" -> "d", "f" -> "d"))
-    // the broadcastLabels=false scale escape (node sets past the
-    // broadcast budget) must vote the SAME all-integer system — exact
-    // equality, the broadcastRanks=false lesson
+    // the shuffle-join plans of a node set past the broadcast threshold
+    // (shuffle-joined label state, no broadcast) must vote the SAME
+    // all-integer system — exact equality
     val trade = graft.queries.TrainingQueries.tradingEdges(spark, sf0001)
     val viaB = graft.operators.Graph.labelPropagation(trade, 3)
       .as[(String, String)].collect().toMap
-    val viaS = graft.operators.Graph
-      .labelPropagation(trade, 3, broadcastLabels = false)
-      .as[(String, String)].collect().toMap
+    val viaS = SparkTestSession.withBroadcastOff {
+      graft.operators.Graph.labelPropagation(trade, 3)
+        .as[(String, String)].collect().toMap
+    }
     assert(viaS.nonEmpty && viaS == viaB)
     // UNSYMMETRIZED input (dst never a source): the node set stays
     // total — un-voted nodes keep their own label instead of silently
@@ -289,32 +290,35 @@ class ScaleSpec extends SparkSpec {
       r.getAs[Long]("n_sampled") <= r.getAs[Long]("n_docs")))
   }
 
-  test("pageRank broadcastRanks=false fallback is rank-identical on the g1 graph") {
+  test("pageRank's shuffle-join plan (broadcast off) is rank-identical on the g1 graph") {
     import spark.implicits._
-    // the documented scale escape for node sets past the broadcast
-    // budget (~100M+ nodes): the shuffle-join leg must iterate the SAME
-    // rounded system — decimal-summed contributions are order-exact, so
-    // the two join strategies are bit-identical, not merely close.
-    // Plan shape of this leg is pinned in PlanSpec.
+    // the plan a node set past the broadcast threshold gets (shuffle-
+    // joined rank state, no broadcast) must iterate the SAME rounded
+    // system — decimal-summed contributions are order-exact, so the two
+    // join strategies are bit-identical, not merely close. Plan shape of
+    // this leg is pinned in PlanSpec.
     val edges = graft.queries.TrainingQueries.tradingEdges(spark, sf0001)
     val viaBroadcast = graft.operators.Graph
       .pageRank(edges, iterations = 3)
       .as[(String, Double)].collect().toMap
-    val viaShuffle = graft.operators.Graph
-      .pageRank(edges, iterations = 3, broadcastRanks = false)
-      .as[(String, Double)].collect().toMap
+    val viaShuffle = SparkTestSession.withBroadcastOff {
+      graft.operators.Graph.pageRank(edges, iterations = 3)
+        .as[(String, Double)].collect().toMap
+    }
     assert(viaShuffle.nonEmpty && viaShuffle == viaBroadcast)
-    // the ε-stop runs its residual aggregate through the same fallback:
-    // both legs must select the same superstep count AND the same ranks
+    // the ε-stop runs its residual aggregate under the same plans: both
+    // must select the same superstep count AND the same ranks
     val (cb, kb) = graft.operators.Graph
       .pageRankConverged(edges, maxIterations = 10, epsilon = 1.0)
-    val (cs, ks) = graft.operators.Graph
-      .pageRankConverged(edges, maxIterations = 10, epsilon = 1.0,
-        broadcastRanks = false)
+    val cbRows = cb.as[(String, Double)].collect().toMap
+    val (csRows, ks) = SparkTestSession.withBroadcastOff {
+      val (cs, k) = graft.operators.Graph
+        .pageRankConverged(edges, maxIterations = 10, epsilon = 1.0)
+      (cs.as[(String, Double)].collect().toMap, k)
+    }
     assert(kb == 4 && ks == 4,
       "the g3 ε = 1.0 L1-stop must select 4 supersteps on this graph")
-    assert(cs.as[(String, Double)].collect().toMap
-      == cb.as[(String, Double)].collect().toMap)
+    assert(csRows == cbRows)
   }
 
   test("IVF ANN returns true cosine scores; probing more cells only helps") {
