@@ -1016,7 +1016,7 @@ object ParityQueries {
         .repartition(32)
         .write.mode("overwrite").parquet(frag)
       Tables.compact(s, frag, out, targetFiles = 2)
-      s.read.parquet(out).orderBy(col("o_orderkey"))
+      Tables.parquet(s, out).orderBy(col("o_orderkey"))
     }, oracle = Some(
       """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
         |FROM orders ORDER BY o_orderkey""".stripMargin)),
@@ -1033,7 +1033,7 @@ object ParityQueries {
       Tables.events(s, d)
         .withColumn("day", to_date(col("ts")))
         .write.partitionBy("day").mode("overwrite").parquet(out)
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .filter(col("day") === lit("2024-01-05").cast("date"))
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), date_format(col("day"), "yyyy-MM-dd").as("day"))

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -13,12 +14,27 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * `PushedFilters`, `ReadSchema`). At 100 TB these would be
   * partitioned/bucketed tables behind a catalog; the API shape
   * (`DataFrame` per logical table) is unchanged.
+  *
+  * Every parquet read here goes through [[parquet]]: the schema comes
+  * from the file footer on the driver, with no Spark job and no cache.
   */
 object Tables {
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
 
-  /** Timestamp normalization at the reader boundary. The driver's
+  /** `spark.read.parquet(path)`, with the schema Spark would infer read
+    * from the footer on the driver by `GraftParquet.footerSchema`
+    * (Spark's converter under the session's flags, Spark's error
+    * conditions) instead of by Spark's one-task inference job. Each call
+    * re-reads the footer. Spark still makes the data schema nullable and
+    * discovers partition columns, so frames and plans are the ones
+    * `spark.read.parquet(path)` gives. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(GraftParquet.footerSchema(spark, path)).parquet(path)
+
+  /** Timestamp normalization at the reader boundary. The types it
+    * branches on come from the file footer through Spark's converter and
+    * the session's flags, with no job (see [[parquet]]). The driver's
     * parquet has carried two physical encodings across regenerations:
     * TIMESTAMP(NANOS) (arrives as a raw ns LONG under
     * `spark.sql.legacy.parquet.nanosAsLong=true`) and TIMESTAMP(MICROS,
@@ -118,7 +134,7 @@ object Tables {
       s"compact() output $out inside the input $in — the next read of " +
         "the table would pick up originals plus the compacted copy and " +
         "double-count every row")
-    val df = spark.read.parquet(inDir).coalesce(targetFiles)
+    val df = parquet(spark, inDir).coalesce(targetFiles)
     val w = df.write.mode("overwrite")
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(outDir)

@@ -5,8 +5,9 @@ import java.nio.file.{Files, Paths}
 import scala.util.Try
 
 import org.apache.spark.SparkException
+import org.apache.spark.sql.AnalysisException
 
-import graft.sources.CovidSources
+import graft.sources.{CovidSources, Tables}
 
 /** S1/S2 error-path semantics (reference: HTTP fetch failures degrade to
   * None + logged error, data_loader.py:32-69/:124-163, mocked in
@@ -28,6 +29,37 @@ class SourceErrorSpec extends SparkSpec {
     val fallback = r.getOrElse(CovidSources.emptyOwid(spark))
     assert(fallback.schema == CovidSources.owidSchema)
     assert(fallback.count() == 0)
+  }
+
+  /** `Tables.read` raises the condition and message of Spark's own
+    * parquet read on the same path. */
+  private def sameParquetError(sfDir: String, name: String, condition: String): Unit = {
+    val ours = intercept[AnalysisException](Tables.read(spark, sfDir, name))
+    val sparks = intercept[AnalysisException](
+      spark.read.parquet(s"$sfDir/$name.parquet"))
+    assert(ours.getCondition == condition)
+    assert(ours.getMessage == sparks.getMessage)
+  }
+
+  test("missing parquet table fails with PATH_NOT_FOUND") {
+    sameParquetError("/nonexistent", "lineitem", "PATH_NOT_FOUND")
+  }
+
+  test("parquet directory with no data file fails with UNABLE_TO_INFER_SCHEMA") {
+    val dir = Files.createTempDirectory("graft_srcerr_")
+    val table = Files.createDirectory(dir.resolve("empty.parquet"))
+    Files.write(table.resolve("_SUCCESS"), Array.emptyByteArray)
+    Files.write(table.resolve(".hidden.parquet"), Array.emptyByteArray)
+    sameParquetError(dir.toString, "empty", "UNABLE_TO_INFER_SCHEMA")
+  }
+
+  test("unreadable parquet footer fails with CANNOT_READ_FILE_FOOTER, unwrapped") {
+    val dir = Files.createTempDirectory("graft_srcerr_")
+    Files.write(dir.resolve("bad.parquet"), "not parquet".getBytes("UTF-8"))
+    val ours = intercept[SparkException](Tables.read(spark, dir.toString, "bad"))
+    // Spark's inference job raises the same condition two causes down,
+    // under a job abort (and logs the task failure)
+    assert(ours.getCondition == "FAILED_READ_FILE.CANNOT_READ_FILE_FOOTER")
   }
 
   test("missing JSON source fails the Try") {
