@@ -66,13 +66,10 @@ object Bench {
     * no canary precisely because r12 emitted calibration first. Pinned by
     * BenchFormatSpec ("calibration fields survive tail truncation"). */
   def formatLine(results: Seq[QueryResult], sfDir: String,
-      medianQueries: Option[Seq[(String, Double)]] = None,
-      warmupS: Option[Double] = None,
-      canaryS: Option[Double] = None,
-      builds: Option[Seq[(String, Double)]] = None,
-      canaryRef: Option[Double] = None,
-      canaryProbes: Option[Seq[Double]] = None,
-      canarySeries: Option[Seq[Double]] = None): String = {
+      medianQueries: Option[Seq[(String, Double)]], warmupS: Double,
+      canaryS: Double, builds: Option[Seq[(String, Double)]],
+      canaryRef: Double, canaryProbes: Seq[Double],
+      canarySeries: Seq[Double]): String = {
     // sfDir comes from the environment and error classes from arbitrary
     // throwables — escape the two JSON-string interpolations (a quote
     // or backslash in a path must not make the whole line unparseable)
@@ -125,15 +122,13 @@ object Bench {
     // non-uniform 0.3×–2.2× pattern — is visible from the artifact
     // alone instead of being inferable only from a single pre-run
     // canary.
-    val cal = warmupS.fold("")(w => s""","warmup_s":${fmt(w)}""") +
+    val cal = s""","warmup_s":${fmt(warmupS)}""" +
       medianQueries.fold("")(ms =>
         s""","median_total":${fmt(ms.map(_._2).sum)}""") +
-      canaryRef.fold("")(r => s""","canary_ref":${fmt(r)}""") +
-      canaryProbes.fold("")(ps =>
-        ps.map(fmt).mkString(""","canary_probes":[""", ",", "]")) +
-      canarySeries.fold("")(ss =>
-        ss.map(fmt).mkString(""","canary_series":[""", ",", "]")) +
-      canaryS.fold("")(c => s""","canary_s":${fmt(c)}""")
+      s""","canary_ref":${fmt(canaryRef)}""" +
+      canaryProbes.map(fmt).mkString(""","canary_probes":[""", ",", "]") +
+      canarySeries.map(fmt).mkString(""","canary_series":[""", ",", "]") +
+      s""","canary_s":${fmt(canaryS)}"""
     // eval:all_columns — round 4 switched the timed pass from count()
     // to evalAll (full-column evaluation); totals are not directly
     // comparable to the count()-based rounds 1-3 for queries whose
@@ -335,10 +330,8 @@ object Bench {
       else Some(passes.head.map(_.name).map { n =>
         n -> median(passes.map(_.find(_.name == n).get.seconds))
       })
-    println(formatLine(passes.head, sfDir, medians,
-      warmupS = Some(warmupS), canaryS = Some(canaryS), builds = builds,
-      canaryRef = Some(canaryRef), canaryProbes = Some(canaryProbes),
-      canarySeries = Some(canarySeries.toSeq)))
+    println(formatLine(passes.head, sfDir, medians, warmupS, canaryS,
+      builds, canaryRef, canaryProbes, canarySeries.toSeq))
     spark.stop()
   }
 }

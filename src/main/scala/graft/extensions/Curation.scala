@@ -31,10 +31,10 @@ object Curation {
     * the engine's t9 contract (English by stopword argmax, composite
     * score ≥ 0.5, 20–1000 tokens, ≤ 0.3 repeated-3-gram ratio); dedup =
     * exact normalized-text fingerprint keeping the min id; contamination
-    * = any shared word `ngram` with `bench`. */
+    * = any shared word 8-gram with `bench`. */
   def curate(corpus: DataFrame, bench: DataFrame, textCol: String,
-      idCol: String, nCharsCol: String, ngram: Int = 8): DataFrame =
-    curateKeeping(corpus, bench, textCol, idCol, nCharsCol, ngram, Nil)
+      idCol: String, nCharsCol: String): DataFrame =
+    curateKeeping(corpus, bench, textCol, idCol, nCharsCol, Nil)
 
   /** [[curate]] with pass-through columns: `keepCols` ride the signal
     * checkpoint into the fate frame, so a consumer that needs the kept
@@ -43,8 +43,7 @@ object Curation {
     * the one-scan-per-stage-tier contract. Empty `keepCols` is
     * plan-identical to the d21 form. */
   def curateKeeping(corpus: DataFrame, bench: DataFrame, textCol: String,
-      idCol: String, nCharsCol: String, ngram: Int,
-      keepCols: Seq[String]): DataFrame = {
+      idCol: String, nCharsCol: String, keepCols: Seq[String]): DataFrame = {
     val id = col(idCol)
     val extra = keepCols.filterNot(_ == textCol).map(col)
     val sig = corpus
@@ -75,7 +74,7 @@ object Curation {
       .join(keepers.select(col("__keep_id").as(idCol)), Seq(idCol),
         "left_semi")
     val contaminated = Dedup.contaminatedIdsNgram(
-        keeperSlice, bench, textCol, idCol, ngram)
+        keeperSlice, bench, textCol, idCol, 8)
       .withColumn("__contaminated", lit(true))
     flagged
       .join(keepers, Seq("__fp"), "left")
@@ -132,13 +131,17 @@ object Curation {
     *     totals broadcast back (the t33 plan). */
   def exportManifest(corpus: DataFrame, bench: DataFrame,
       merges: Seq[(String, String)], textCol: String, idCol: String,
-      srcCol: String, nCharsCol: String, contextLen: Int = 256,
-      numShards: Int = 8, seed: String = "epoch42",
-      alpha: Double = 0.3): DataFrame =
+      srcCol: String, nCharsCol: String, contextLen: Int,
+      numShards: Int): DataFrame =
     manifestFromDocGrain(
       exportDocGrain(corpus, bench, merges, textCol, idCol, srcCol,
-        nCharsCol, numShards, seed, keepText = false),
-      idCol, contextLen, alpha)
+        nCharsCol, numShards, ExportSeed, keepText = false),
+      idCol, contextLen, MixAlpha)
+
+  /** The export's shard-key seed and its t33 mixture exponent — the
+    * values the x2/x3/x4 queries and their oracles spell out. */
+  val ExportSeed = "epoch42"
+  val MixAlpha = 0.3
 
   /** The export's doc-grain rows — `(idCol, source, n_bpe, __key,
     * shard_id [, textCol])`: curate, checkpoint the kept slice once,
@@ -153,7 +156,7 @@ object Curation {
       srcCol: String, nCharsCol: String, numShards: Int, seed: String,
       keepText: Boolean): DataFrame = {
     val kept = curateKeeping(corpus, bench, textCol, idCol, nCharsCol,
-        ngram = 8, keepCols = Seq(textCol, srcCol))
+        keepCols = Seq(textCol, srcCol))
       .filter(col("status") === "kept")
       .select(col(idCol), col(textCol), col(srcCol))
       // the curate→tokenize materialization point: tokenize's word
@@ -302,11 +305,11 @@ object Curation {
     * unique — no tie to break). */
   def packedWindows(corpus: DataFrame, bench: DataFrame,
       merges: Seq[(String, String)], textCol: String, idCol: String,
-      srcCol: String, nCharsCol: String, contextLen: Int = 256,
-      numShards: Int = 8, seed: String = "epoch42"): DataFrame =
+      srcCol: String, nCharsCol: String, contextLen: Int,
+      numShards: Int): DataFrame =
     packedWindowsFromDocGrain(
       exportDocGrain(corpus, bench, merges, textCol, idCol, srcCol,
-        nCharsCol, numShards, seed, keepText = false),
+        nCharsCol, numShards, ExportSeed, keepText = false),
       idCol, contextLen)
 
   /** [[packedWindows]] over an already-built doc-grain tier — the form
@@ -314,7 +317,7 @@ object Curation {
     * checkpointed ONCE; this adds only the packing window, the
     * windows/contextLen-grain explode and one (shard, seq) exchange). */
   def packedWindowsFromDocGrain(docGrain: DataFrame, idCol: String,
-      contextLen: Int = 256): DataFrame = {
+      contextLen: Int): DataFrame = {
     val c = contextLen
     windowMembership(
       docGrain
@@ -371,11 +374,10 @@ object Curation {
   def docWindows(corpus: DataFrame, bench: DataFrame,
       merges: Seq[(String, String)], textCol: String, idCol: String,
       srcCol: String, nCharsCol: String, probe: Column,
-      contextLen: Int = 256, numShards: Int = 8,
-      seed: String = "epoch42"): DataFrame =
+      contextLen: Int, numShards: Int): DataFrame =
     docWindowsFromDocGrain(
       exportDocGrain(corpus, bench, merges, textCol, idCol, srcCol,
-        nCharsCol, numShards, seed, keepText = false),
+        nCharsCol, numShards, ExportSeed, keepText = false),
       idCol, probe, contextLen)
 
   /** [[docWindows]] over an already-built doc-grain tier (the x2/x3/x4
@@ -384,7 +386,7 @@ object Curation {
     * cut happens right after it, before the explode, and no exchange
     * is added at all. */
   def docWindowsFromDocGrain(docGrain: DataFrame, idCol: String,
-      probe: Column, contextLen: Int = 256): DataFrame = {
+      probe: Column, contextLen: Int): DataFrame = {
     val id = col(idCol)
     val c = contextLen
     docGrain
@@ -420,10 +422,9 @@ object Curation {
   def writeExport(corpus: DataFrame, bench: DataFrame,
       merges: Seq[(String, String)], textCol: String, idCol: String,
       srcCol: String, nCharsCol: String, outDir: String,
-      contextLen: Int = 256, numShards: Int = 8,
-      seed: String = "epoch42", alpha: Double = 0.3): DataFrame = {
+      contextLen: Int, numShards: Int): DataFrame = {
     val dg = exportDocGrain(corpus, bench, merges, textCol, idCol,
-      srcCol, nCharsCol, numShards, seed, keepText = true)
+      srcCol, nCharsCol, numShards, ExportSeed, keepText = true)
     dg.repartition(col("shard_id"))
       .sortWithinPartitions(col("shard_id"), col("__key"), col(idCol))
       .write.mode("overwrite").partitionBy("shard_id").parquet(outDir)
@@ -432,7 +433,7 @@ object Curation {
         .select(col(idCol), col("source"), col("n_bpe"), col("__key"),
           // partition-value inference reads shard_id back as int
           col("shard_id").cast("long").as("shard_id")),
-      idCol, contextLen, alpha)
+      idCol, contextLen, MixAlpha)
   }
 
   /** INCREMENTAL end-to-end curation — the production ingest form of
@@ -455,10 +456,10 @@ object Curation {
     * `exact_dup_state` (fingerprint already in the snapshot) →
     * `exact_dup_batch` (within-batch keeper election, min id per
     * fingerprint) → `near_dup_state` (MinHash band probe against the
-    * persisted index, est. Jaccard ≥ `nearThreshold`) →
-    * `span_dup_state` (shingle runs against the span index with a
-    * maximal run of ≥ `minSpanTokens` tokens — Lee-et-al-style span
-    * memorization risk) → `kept`.
+    * persisted index, est. Jaccard ≥ [[Dedup.LshThreshold]]) →
+    * `span_dup_state` (width-8 shingle runs against the span index with
+    * a maximal run of ≥ 16 tokens — Lee-et-al-style span memorization
+    * risk) → `kept`.
     *
     * Scale shape at 100 TB: every stage is BATCH-grain — the snapshot
     * corpus is never re-read, re-hashed, or re-shingled. One signal
@@ -479,11 +480,7 @@ object Curation {
     * sequential anti-join chain serializes them. */
   def curateIncremental(batch: DataFrame, exactIndex: DataFrame,
       bandIndex: DataFrame, spanIndex: DataFrame, textCol: String,
-      idCol: String, nCharsCol: String,
-      numHashes: Int = Dedup.LshNumHashes,
-      bands: Int = Dedup.LshBands, nearThreshold: Double = 0.3,
-      hashFn: Column => Column = Dedup.md5Hash60,
-      spanWidth: Int = 8, minSpanTokens: Int = 16): DataFrame = {
+      idCol: String, nCharsCol: String): DataFrame = {
     val id = col(idCol)
     val flagged = TextAnalysis.gopherProfile(batch, textCol, idCol,
         nCharsCol, TextAnalysis.normHash(col(textCol)).as("__fp"),
@@ -499,13 +496,12 @@ object Curation {
         "left_semi")
       .select(id.as("doc_id"), col("__text").as("text"))
       .localCheckpoint(eager = false) // BOTH probes read the slice
-    val nearIds = Dedup.incrementalMinHashPairs(keeperSlice, bandIndex,
-        numHashes, bands, nearThreshold, hashFn)
+    val nearIds = Dedup.incrementalMinHashPairs(keeperSlice, bandIndex)
       .select(col("new_id").as(idCol)).distinct()
       .withColumn("__near", lit(true))
     val spanIds = Dedup.substringRunsAgainstIndex(keeperSlice, spanIndex,
-        "doc_id", "text", spanWidth)
-      .filter(col("longest_dup_tokens") >= minSpanTokens)
+        "doc_id", "text", 8)
+      .filter(col("longest_dup_tokens") >= 16)
       .select(col("doc_id").as(idCol))
       .withColumn("__span", lit(true))
     flagged

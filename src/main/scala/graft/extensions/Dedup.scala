@@ -246,15 +246,15 @@ object Dedup {
     * keeps the assignment epoch-stable and replayable in any engine
     * (the s13 shuffle-shard convention). Pure map pass, no shuffle.
     *
-    * Returns `split_bucket` in [0, nBuckets); callers map bucket
-    * ranges to named splits (e.g. 0–7 train / 8 val / 9 test). */
+    * Returns `split_bucket` in [0, 10); callers map bucket ranges to
+    * named splits (e.g. 0–7 train / 8 val / 9 test). */
   def assignSplitByFingerprint(docs: DataFrame, textCol: String,
-      seed: String, nBuckets: Int = 10): DataFrame =
+      seed: String): DataFrame =
     docs
       .withColumn("fingerprint", TextAnalysis.normHash(col(textCol)))
       .withColumn("split_bucket",
         pmod(md5Hash60(concat(lit(s"$seed:"), col("fingerprint"))),
-          lit(nBuckets)))
+          lit(10)))
 
   /** Prime modulus of the universal-hash family used by MinHash. Products
     * stay under 2⁶³: (P−1)² < 10¹⁸ < Long.MaxValue. */
@@ -272,8 +272,7 @@ object Dedup {
 
   /** 60-bit hash from the md5 hex prefix — an order of magnitude slower
     * than xxhash64, but REPLAYABLE in any engine with md5 (DuckDB oracle
-    * parity). Production dedup keeps xxhash64; pass this when the result
-    * must be cross-engine verifiable. */
+    * parity): the base hash of the MinHash and SimHash families. */
   def md5Hash60(c: Column): Column =
     conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
 
@@ -298,8 +297,8 @@ object Dedup {
     * primitive loop, bit-identical values (parity pinned in
     * FunctionsSpec). */
   def withMinHashSignature(
-      docs: DataFrame, textCol: String, numHashes: Int, shingleWidth: Int,
-      hashFn: Column => Column = xxhash64(_)): DataFrame = {
+      docs: DataFrame, textCol: String, numHashes: Int,
+      shingleWidth: Int): DataFrame = {
     val staged = docs
       .withColumn("__mh_toks", TextAnalysis.tokens(col(textCol)))
       // the array_distinct inside ngramShinglesFromTokens is harmless
@@ -307,7 +306,7 @@ object Dedup {
       // one place
       .withColumn("__mh_base", transform(
         ngramShinglesFromTokens(col("__mh_toks"), shingleWidth),
-        sh => pmod(hashFn(sh), lit(MinHashP))))
+        sh => pmod(md5Hash60(sh), lit(MinHashP))))
     val seedsA = Array.tabulate(numHashes)(s => seedConst("a", s))
     val seedsB = Array.tabulate(numHashes)(s => seedConst("b", s))
     staged.withColumn("minhash_sig",
@@ -322,7 +321,7 @@ object Dedup {
     * partitioned by `band`): ingest batches join against it
     * ([[incrementalMinHashPairs]]) without the corpus text ever being
     * re-read or re-shingled, and [[minHashLshPairs]] self-joins it for
-    * the one-shot form. The band explode is bounded (~`bands`×) and
+    * the one-shot form. The band explode is bounded (~`LshBands`×) and
     * map-side.
     *
     * `maxBucket` is the skew guard: a degenerate bucket
@@ -341,27 +340,22 @@ object Dedup {
     * ≈ 0.54) vs the fp+fn-mass-optimal b=16/r=2 (crossover ≈ 0.21,
     * which floods a 0.3-threshold run with low-similarity candidates —
     * candidate VOLUME, not miss rate, is what hurts at 100 TB). Every
-    * banded operator defaults to these constants so the calibration
+    * banded operator uses these constants so the calibration
     * table and the operators it configures cannot drift apart:
     * re-calibrating means changing THIS pair, and LshCalibrationSpec
     * pins the documented frontier placement. */
   val LshNumHashes: Int = 32
   val LshBands: Int = 8
+  /** Estimated-Jaccard cut of every MinHash-LSH pair operator. */
+  val LshThreshold: Double = 0.3
 
   def minHashBandIndex(
-      docs: DataFrame,
-      numHashes: Int = LshNumHashes,
-      bands: Int = LshBands,
-      hashFn: Column => Column = xxhash64(_),
-      maxBucket: Int = Int.MaxValue): DataFrame = {
-    require(numHashes % bands == 0,
-      s"bands ($bands) must divide numHashes ($numHashes) — trailing " +
-        "signature slots would silently drop out of banding")
-    val rows = numHashes / bands
+      docs: DataFrame, maxBucket: Int = Int.MaxValue): DataFrame = {
+    val rows = LshNumHashes / LshBands
     val banded = withMinHashSignature(parallelizeSmallScan(docs), "text",
-        numHashes, 3, hashFn)
+        LshNumHashes, 3)
       .select(col("doc_id"), col("minhash_sig"),
-        explode(array((0 until bands).map { bi =>
+        explode(array((0 until LshBands).map { bi =>
           struct(lit(bi).as("band"),
             xxhash64(slice(col("minhash_sig"), bi * rows + 1, rows))
               .as("bhash"))
@@ -387,26 +381,24 @@ object Dedup {
     * re-applying the bucket cap to the UNION. Cap maintenance lives
     * HERE — on the advance job, which is already rewriting the index —
     * never on the ingest probe ([[incrementalMinHashPairs]] reads the
-    * index as-is). Pass the SAME `maxBucket` used at build time: the
-    * default matches [[minHashBandIndex]]'s (uncapped), so advancing
-    * never silently tightens a cap the builder didn't set. Because the
+    * index as-is). Pass the SAME `maxBucket` used at build time. Because the
     * cap retains min-id exemplars, repeated advances are stable — an
     * over-cap bucket keeps its original exemplars and simply stops
     * admitting new members. */
   def advanceBandIndex(index: DataFrame, batchBands: DataFrame,
-      maxBucket: Int = Int.MaxValue): DataFrame =
+      maxBucket: Int): DataFrame =
     capBuckets(index.unionByName(batchBands), maxBucket)
 
   /** Signature-agreement Jaccard estimate — the verification step shared
     * by the one-shot and incremental LSH paths (and replayed verbatim by
     * the DuckDB oracle). */
-  private def estJaccard(sigA: Column, sigB: Column, numHashes: Int): Column =
+  private def estJaccard(sigA: Column, sigB: Column): Column =
     round(size(filter(zip_with(sigA, sigB, (x, y) => x === y), m => m))
-      .cast("double") / numHashes, 4)
+      .cast("double") / LshNumHashes, 4)
 
   /** Incremental (cross-snapshot) near-dup candidates: each incoming
     * batch doc is matched against the persisted corpus band index —
-    * `(new_id, old_id, est_jaccard)` pairs above `threshold`. The
+    * `(new_id, old_id, est_jaccard)` pairs at or above `LshThreshold`. The
     * streaming-ingest twin of [[minHashLshPairs]], and the near-dup
     * analogue of [[incrementalDedup]]: per-ingest cost is
     * O(|batch| · bands) probe rows hash-joined against the index on
@@ -417,49 +409,38 @@ object Dedup {
     * advance ([[advanceBandIndex]], which folds the batch's rows in and
     * re-caps the union so buckets can't grow unbounded across batches).
     * This function trusts the index it is given. */
-  def incrementalMinHashPairs(
-      batch: DataFrame,
-      index: DataFrame,
-      numHashes: Int = LshNumHashes,
-      bands: Int = LshBands,
-      threshold: Double = 0.5,
-      hashFn: Column => Column = xxhash64(_)): DataFrame = {
+  def incrementalMinHashPairs(batch: DataFrame, index: DataFrame)
+      : DataFrame = {
     val idx = index.select(col("band"), col("bhash"),
       col("doc_id").as("old_id"), col("minhash_sig").as("old_sig"))
-    minHashBandIndex(batch, numHashes, bands, hashFn)
+    minHashBandIndex(batch)
       .select(col("band"), col("bhash"),
         col("doc_id").as("new_id"), col("minhash_sig").as("new_sig"))
       .join(idx, Seq("band", "bhash"))
       .select(col("new_id"), col("old_id"), col("new_sig"), col("old_sig"))
       .distinct()
-      .withColumn("est_jaccard",
-        estJaccard(col("new_sig"), col("old_sig"), numHashes))
-      .filter(col("est_jaccard") >= threshold)
+      .withColumn("est_jaccard", estJaccard(col("new_sig"), col("old_sig")))
+      .filter(col("est_jaccard") >= LshThreshold)
       .select(col("new_id"), col("old_id"), col("est_jaccard"))
   }
 
-  /** MinHash-LSH candidate pairs: split the signature into `bands` bands
-    * of rows, bucket-join on (band index, band hash), then estimate
-    * Jaccard from signature agreement and threshold.
+  /** MinHash-LSH candidate pairs: split the signature into `LshBands`
+    * bands of rows, bucket-join on (band index, band hash), then
+    * estimate Jaccard from signature agreement and keep pairs at or
+    * above `LshThreshold`. Buckets are capped at 100 min-id members.
     *
-    * The band explode multiplies rows by `bands` (bounded, ~8×), the
+    * The band explode multiplies rows by `LshBands` (8×), the
     * join is an equi-join on the band bucket — the classic scale-out LSH
     * plan (shuffle keys are uniformly distributed hash values, no skew).
     */
-  def minHashLshPairs(
-      docs: DataFrame,
-      numHashes: Int = LshNumHashes,
-      bands: Int = LshBands,
-      threshold: Double = 0.5,
-      maxBucket: Int = 100,
-      hashFn: Column => Column = xxhash64(_)): DataFrame = {
+  def minHashLshPairs(docs: DataFrame): DataFrame = {
     // materialize the signed+banded frame ONCE before the self-join:
     // without the barrier both join sides re-run the whole signature
-    // chain (numHashes hashes per shingle — the dominant cost) — the
+    // chain (LshNumHashes hashes per shingle — the dominant cost) — the
     // d2/e3 double-eval pattern. The persisted-index path
     // (incrementalMinHashPairs) doesn't need this: its index side is
     // already parquet.
-    val banded = minHashBandIndex(docs, numHashes, bands, hashFn, maxBucket)
+    val banded = minHashBandIndex(docs, maxBucket = 100)
       .localCheckpoint(eager = false)
     val a = banded.select(col("band"), col("bhash"),
       col("doc_id").as("a_id"), col("minhash_sig").as("a_sig"))
@@ -469,9 +450,8 @@ object Dedup {
       .filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"), col("a_sig"), col("b_sig"))
       .distinct()
-      .withColumn("est_jaccard",
-        estJaccard(col("a_sig"), col("b_sig"), numHashes))
-      .filter(col("est_jaccard") >= threshold)
+      .withColumn("est_jaccard", estJaccard(col("a_sig"), col("b_sig")))
+      .filter(col("est_jaccard") >= LshThreshold)
       .select(col("a_id"), col("b_id"), col("est_jaccard"))
   }
 
@@ -483,13 +463,12 @@ object Dedup {
     * Algorithm: min-label propagation with pointer jumping (label(id) ←
     * label(label(id)) each round) — a round extends reach ~2×, so long
     * chains resolve in O(log diameter) rounds. Rounds are built LAZILY
-    * in batches of `checkEvery`; one convergence count per batch (not
-    * per round) keeps driver-synchronous actions to a handful, and the
-    * tiny label frame is coalesced so each materialization is a few
-    * tasks, not shuffle-partition-many. Runs until a batch changes
-    * nothing or `maxRounds`. */
+    * in batches of 4; one convergence count per batch (not per round)
+    * keeps driver-synchronous actions to a handful, and the tiny label
+    * frame is coalesced so each materialization is a few tasks, not
+    * shuffle-partition-many. Runs until a batch changes nothing or 32
+    * rounds. */
   def nearDupClusters(docs: DataFrame, pairs: DataFrame, idCol: String,
-      maxRounds: Int = 32, checkEvery: Int = 4,
       driverEdgeLimit: Long = 5000000L): DataFrame = {
     // Hybrid strategy. The pair list is the OUTPUT of blocked near-dup
     // detection — orders of magnitude smaller than the corpus (it plays
@@ -527,13 +506,14 @@ object Dedup {
           coalesce(col("__cc_lbl"), col(idCol)).as("cluster_id"))
         .withColumn("is_canonical", col(idCol) === col("cluster_id"))
     }
-    distributedClusters(docs, edgeList, idCol, maxRounds, checkEvery)
+    distributedClusters(docs, edgeList, idCol)
   }
 
   /** Distributed connected-components path of [[nearDupClusters]];
     * `pairs` arrives checkpointed with columns (a_id, b_id). */
   private def distributedClusters(docs: DataFrame, pairs: DataFrame,
-      idCol: String, maxRounds: Int, checkEvery: Int): DataFrame = {
+      idCol: String): DataFrame = {
+    val (maxRounds, checkEvery) = (32, 4)
     // Adaptive width for the iterated frames: ~1 task per 50k label rows,
     // capped at cluster parallelism. A graph iteration runs dozens of
     // tiny stages — at shuffle-partition width each stage pays
@@ -613,7 +593,7 @@ object Dedup {
     * sources/splits/snapshots leak into which (near-identical mirrors,
     * shared boilerplate, benchmark text syndicated across crawls).
     * Returns one row per group pair with ≥1 shared width-`n` word
-    * shingle: (a_group, b_group, shared_shingles, jaccard).
+    * shingle (`n` = 8): (a_group, b_group, shared_shingles, jaccard).
     *
     * Scale shape: the corpus collapses to DISTINCT (group, shingle-hash)
     * FIRST — the whole trick: after that collapse a shingle fans out at
@@ -623,12 +603,12 @@ object Dedup {
     * (window-free: per-group counts and the pair join share the
     * checkpointed collapse), one on the bounded (a, b) pair key. The
     * hash is the md5 recipe so the oracle re-derives identical counts. */
-  def crossGroupOverlap(docs: DataFrame, groupCol: String, textCol: String,
-      n: Int = 8): DataFrame = {
+  def crossGroupOverlap(docs: DataFrame, groupCol: String, textCol: String)
+      : DataFrame = {
     val sh = docs
       .withColumn("__toks", TextAnalysis.tokens(col(textCol)))
       .select(col(groupCol).as("__g"),
-        explode(ngramShinglesFromTokens(col("__toks"), n)).as("__s"))
+        explode(ngramShinglesFromTokens(col("__toks"), 8)).as("__s"))
       .select(col("__g"), md5Hash60(col("__s")).as("h"))
       .distinct()
       .localCheckpoint(eager = false) // per-group counts + pair join
@@ -649,7 +629,7 @@ object Dedup {
           .as("jaccard"))
   }
 
-  /** Ids of docs sharing ≥1 width-`n` word shingle with a DIFFERENT
+  /** Ids of docs sharing ≥1 width-8 word shingle with a DIFFERENT
     * group — [[crossGroupOverlap]]'s matrix brought down to doc grain
     * (which documents carry the cross-source leak, not just which
     * source pairs leak): the per-doc column a dataset card (t39)
@@ -662,11 +642,11 @@ object Dedup {
     * size), on uniformly-distributed h. One shared shingle projection
     * behind a barrier feeds both sides. */
   def crossGroupContaminatedIds(docs: DataFrame, groupCol: String,
-      idCol: String, textCol: String, n: Int = 8): DataFrame = {
+      idCol: String, textCol: String): DataFrame = {
     val docSh = docs
       .withColumn("__toks", TextAnalysis.tokens(col(textCol)))
       .select(col(idCol), col(groupCol).as("__g"),
-        explode(ngramShinglesFromTokens(col("__toks"), n)).as("__s"))
+        explode(ngramShinglesFromTokens(col("__toks"), 8)).as("__s"))
       .select(col(idCol), col("__g"), md5Hash60(col("__s")).as("h"))
       .localCheckpoint(eager = false) // group collapse + doc-grain probe
     val grpSh = docSh.select(col("__g").as("__og"), col("h")).distinct()
@@ -759,7 +739,7 @@ object Dedup {
     * collects only the distinct BIT POSITIONS (≤ k per benchmark doc,
     * bounded by construction exactly like the d7 broadcast; the corpus
     * side never leaves the executors) — and embedded as a literal
-    * Array[Long]. The corpus-side membership test is k independently
+    * Array[Long]. The corpus-side membership test is k = 4 independently
     * seeded xxhash64 probes expressed as
     * pure column arithmetic over the literal words array, so the whole
     * filter stays inside whole-stage codegen: no UDF, no join, no
@@ -769,7 +749,8 @@ object Dedup {
     * survivors — the d10 contract query asserts both properties.
     */
   def bloomDecontaminate(corpus: DataFrame, bench: DataFrame,
-      textCol: String, mBitsOverride: Int = 0, k: Int = 4): DataFrame = {
+      textCol: String): DataFrame = {
+    val k = 4
     // Size the filter to the benchmark: a fixed m saturates once
     // n ≈ m/(4·k) and the "safe" false positives silently eat the
     // corpus. 16 bits/entry at k=4 keeps fill ≈ 22% and the per-doc FP
@@ -777,15 +758,11 @@ object Dedup {
     // count() runs on the small side only. (Beyond ~10^8 entries the
     // literal bitset itself outgrows a task binary — shard the
     // benchmark and intersect survivor sets at that point.)
-    val mBits =
-      if (mBitsOverride > 0) mBitsOverride
-      else {
-        val n = bench.select(TextAnalysis.normHash(col(textCol)))
-          .distinct().count()
-        val next = java.lang.Long.highestOneBit(math.max(1L, 16L * n - 1L)) << 1
-        math.max(1L << 14, math.min(next, 1L << 30)).toInt
-      }
-    require(mBits % 64 == 0, s"mBits ($mBits) must be a multiple of 64")
+    val n = bench.select(TextAnalysis.normHash(col(textCol)))
+      .distinct().count()
+    // a power of two in [2^14, 2^30], so always a multiple of 64
+    val next = java.lang.Long.highestOneBit(math.max(1L, 16L * n - 1L)) << 1
+    val mBits = math.max(1L << 14, math.min(next, 1L << 30)).toInt
     // both sides derive probe positions from the SAME column expressions,
     // so the driver never needs to re-implement the hash; one xxhash64
     // per probe with a distinct literal seed column keeps the probes
@@ -809,8 +786,8 @@ object Dedup {
   }
 
   /** Per-bit majority vote over an array-of-hashes column — the SimHash
-    * core shared by the token ([[withSimHash]]) and byte-shingle
-    * ([[withPayloadSimHash]]) forms: bit j of the fingerprint is the
+    * core shared by the token ([[signedSimHashFrame]]) and byte-shingle
+    * ([[signedPayloadSimHashFrame]]) forms: bit j of the fingerprint is the
     * sign of Σ_elements (bit_j(h) ? +1 : −1).
     *
     * r15: the per-bit `aggregate(hashes, …)` column form walked the
@@ -821,121 +798,75 @@ object Dedup {
     * bit-for-bit parity with the old form — including the null-element
     * −1 vote and the null/empty-array → 0 fingerprint — is pinned in
     * FunctionsSpec. */
-  private def simHashOf(hashes: Column, bits: Int): Column =
-    graft.functions.SimHashSignature.simhash_signature(hashes, bits)
+  private def simHashOf(hashes: Column): Column =
+    graft.functions.SimHashSignature.simhash_signature(hashes, SimHashBits)
 
-  /** SimHash over token hashes: bit j of the fingerprint is the sign of
-    * Σ_tokens (bit_j(h(token)) ? +1 : −1). Near-dup docs differ in few
-    * bits (small Hamming distance). Default 64 bits of xxhash64; pass
-    * `md5Hash60`/60 for a cross-engine-replayable fingerprint. */
-  def withSimHash(docs: DataFrame, textCol: String,
-      hashFn: Column => Column = xxhash64(_), bits: Int = 64): DataFrame = {
+  /** Fingerprint width of the SimHash family: 60, the width of its
+    * [[md5Hash60]] base hash, in 4 equal 15-bit chunks. */
+  private val SimHashBits = 60
+
+  /** SimHash near-dup signatures over text, as a lazily-checkpointed
+    * (doc_id, simhash) frame — build ONCE and share between candidate
+    * generation ([[simHashPairsFromSigned]]) and signature emission: the
+    * vote pass (per-token hash + one sign vote per bit) is the SimHash
+    * family's dominant cost, and a query that both emits signatures and
+    * counts candidates must not pay it twice. Bit j of the fingerprint is
+    * the sign of Σ_tokens (bit_j(h(token)) ? +1 : −1); near-dup docs
+    * differ in few bits (small Hamming distance). The token hash is
+    * [[md5Hash60]] and the fingerprint has its 60 bits, so the oracle
+    * replays it. */
+  def signedSimHashFrame(docs: DataFrame): DataFrame = {
     // per-token hashes staged in their own projection: the per-bit vote
-    // aggregates reference them `bits` times, and inlined they would be
+    // aggregates reference them once per bit, and inlined they would be
     // recomputed per bit (same interpreted-lambda pitfall as
     // withMinHashSignature — see that Scaladoc)
-    val staged = docs.withColumn("__sh_hashes",
-      transform(TextAnalysis.tokens(col(textCol)), t => hashFn(t)))
-    staged.withColumn("simhash", simHashOf(col("__sh_hashes"), bits))
+    val staged = parallelizeSmallScan(docs).withColumn("__sh_hashes",
+      transform(TextAnalysis.tokens(col("text")), t => md5Hash60(t)))
+    staged.withColumn("simhash", simHashOf(col("__sh_hashes")))
       .drop("__sh_hashes")
-  }
-
-  /** SimHash over fixed-width BYTE shingles of a binary payload — the
-    * token-free form for media blobs, where there is no tokenizer to
-    * lean on (VERDICT r7 item 3: the d4-for-bytes analog). Shingle i is
-    * `substr(payload, i, width)` for i = 1, 1+stride, … — with
-    * `stride = 1` every byte offset contributes, so an insertion that
-    * shifts the byte stream still leaves the two payloads sharing all
-    * shingles outside the edit (the alignment-robustness a stride > 1
-    * sample forfeits: a shifted copy's sampled offsets land between the
-    * original's and the shingle sets decorrelate). Payloads shorter
-    * than `width` are dropped (no shingle to vote; also keeps
-    * `sequence()` ascending — Spark counts DOWN on an empty range).
-    * Map-side only: the explode-free `transform` keeps the whole
-    * signature one projection, no shuffle until a consumer asks. */
-  def withPayloadSimHash(docs: DataFrame, payloadCol: String,
-      width: Int, stride: Int = 1,
-      hashFn: Column => Column = xxhash64(_), bits: Int = 64): DataFrame = {
-    require(width > 0 && stride > 0, "width and stride must be positive")
-    val n = length(col(payloadCol))
-    val staged = docs
-      .filter(col(payloadCol).isNotNull && n >= width)
-      .withColumn("__sh_hashes",
-        transform(sequence(lit(1), n - (width - 1), lit(stride)),
-          i => hashFn(col(payloadCol).substr(i, lit(width)))))
-    staged.withColumn("simhash", simHashOf(col("__sh_hashes"), bits))
-      .drop("__sh_hashes")
-  }
-
-  /** SimHash near-dup pairs: block on 4×16-bit chunks (any chunk equal →
-    * candidate), verify with bit_count(xor).
-    *
-    * Recall contract: the pigeonhole guarantee only covers
-    * `maxHamming <= 3` (4 chunks ⇒ any pair within Hamming 3 shares a
-    * chunk). Larger thresholds are best-effort — pairs whose differing
-    * bits spread across all 4 chunks are never generated. Raise the
-    * chunk count if a complete guarantee at a larger radius is needed. */
-  def simHashPairs(docs: DataFrame, maxHamming: Int = 3,
-      maxBucket: Int = 100,
-      hashFn: Column => Column = xxhash64(_), bits: Int = 64): DataFrame =
-    bandedSimHashPairs(
-      withSimHash(parallelizeSmallScan(docs), "text", hashFn, bits)
-        .select(col("doc_id"), col("simhash")),
-      maxHamming, maxBucket, bits)
-
-  /** Lazily-checkpointed (doc_id, simhash) frame over text — build ONCE
-    * and share between candidate generation
-    * ([[simHashPairsFromSigned]]) and signature emission: the vote pass
-    * (per-unit hash + `bits` sign votes) is the SimHash family's
-    * dominant cost, and a query that both emits signatures and counts
-    * candidates must not pay it twice. */
-  def signedSimHashFrame(docs: DataFrame, textCol: String,
-      hashFn: Column => Column = xxhash64(_), bits: Int = 64): DataFrame =
-    withSimHash(parallelizeSmallScan(docs), textCol, hashFn, bits)
       .select(col("doc_id"), col("simhash"))
       .localCheckpoint(eager = false)
+  }
 
   /** [[signedSimHashFrame]]'s byte-payload twin (the m6 shape, where the
     * stride-1 shingle explode makes the double-compute ~charsPerDoc×
-    * heavier than the word-grain case). */
-  def signedPayloadSimHashFrame(docs: DataFrame, payloadCol: String,
-      width: Int, stride: Int = 1,
-      hashFn: Column => Column = xxhash64(_), bits: Int = 64): DataFrame =
-    withPayloadSimHash(parallelizeSmallScan(docs), payloadCol, width,
-      stride, hashFn, bits)
+    * heavier than the word-grain case): SimHash over 16-byte shingles
+    * of the binary `payload` column — the token-free form for media
+    * blobs, where there is no tokenizer to lean on (VERDICT r7 item 3:
+    * the d4-for-bytes analog). Shingle i is `substr(payload, i, 16)` for
+    * every byte offset i = 1, 2, …, so an insertion that shifts the byte
+    * stream still leaves the two payloads sharing all shingles outside
+    * the edit (the alignment-robustness a stride > 1 sample forfeits: a
+    * shifted copy's sampled offsets land between the original's and the
+    * shingle sets decorrelate). Payloads shorter than 16 bytes are
+    * dropped (no shingle to vote; also keeps `sequence()` ascending —
+    * Spark counts DOWN on an empty range). The explode-free `transform`
+    * keeps the signature one projection. */
+  def signedPayloadSimHashFrame(docs: DataFrame): DataFrame = {
+    val (width, stride) = (16, 1)
+    val n = length(col("payload"))
+    val staged = parallelizeSmallScan(docs)
+      .filter(col("payload").isNotNull && n >= width)
+      .withColumn("__sh_hashes",
+        transform(sequence(lit(1), n - (width - 1), lit(stride)),
+          i => md5Hash60(col("payload").substr(i, lit(width)))))
+    staged.withColumn("simhash", simHashOf(col("__sh_hashes")))
+      .drop("__sh_hashes")
       .select(col("doc_id"), col("simhash"))
       .localCheckpoint(eager = false)
+  }
 
-  /** Banded candidate pairs over a pre-signed (doc_id, simhash) frame —
-    * the pairs half for callers sharing a [[signedSimHashFrame]] /
-    * [[signedPayloadSimHashFrame]]. Same 4-chunk pigeonhole recall
-    * contract and `maxBucket` skew cap as [[simHashPairs]]. */
-  def simHashPairsFromSigned(signed: DataFrame, maxHamming: Int = 3,
-      maxBucket: Int = 100, bits: Int = 64): DataFrame =
-    bandedSimHashPairs(signed, maxHamming, maxBucket, bits)
-
-  /** SimHash near-dup pairs over binary payloads — [[simHashPairs]]'s
-    * banding applied to the [[withPayloadSimHash]] signature. Same
-    * 4-chunk pigeonhole recall contract, same `maxBucket` skew cap,
-    * never all-pairs: candidates come only from equal 15/16-bit chunk
-    * buckets, so a 100 TB media corpus pays one bounded bucket join —
-    * the byte-level twin of the text near-dup family. */
-  def payloadSimHashPairs(docs: DataFrame, payloadCol: String,
-      width: Int, stride: Int = 1, maxHamming: Int = 3, maxBucket: Int = 100,
-      hashFn: Column => Column = xxhash64(_), bits: Int = 64): DataFrame =
-    bandedSimHashPairs(
-      withPayloadSimHash(parallelizeSmallScan(docs), payloadCol, width,
-        stride, hashFn, bits)
-        .select(col("doc_id"), col("simhash")),
-      maxHamming, maxBucket, bits)
-
-  /** Chunk-banded candidate generation + Hamming verify over a
-    * (doc_id, simhash) frame — the shared back half of the SimHash
-    * family. */
-  private def bandedSimHashPairs(signed: DataFrame, maxHamming: Int,
-      maxBucket: Int, bits: Int): DataFrame = {
-    require(bits % 4 == 0, s"bits ($bits) must split into 4 equal chunks")
-    val chunkWidth = bits / 4
+  /** SimHash near-dup pairs over a pre-signed (doc_id, simhash) frame
+    * ([[signedSimHashFrame]] / [[signedPayloadSimHashFrame]]): block on
+    * 4×15-bit chunks (any chunk equal → candidate), verify
+    * bit_count(xor) ≤ 3.
+    *
+    * Recall contract: 4 chunks ⇒ any pair within Hamming 3 shares a
+    * chunk (the pigeonhole guarantee) — never all-pairs: candidates come
+    * only from equal chunk buckets, each capped at 100 members (the
+    * skew guard), so a 100 TB corpus pays one bounded bucket join. */
+  def simHashPairsFromSigned(signed: DataFrame): DataFrame = {
+    val chunkWidth = SimHashBits / 4
     val chunkMask = (1L << chunkWidth) - 1
     val chunked = signed.select(col("doc_id"), col("simhash"),
       explode(array((0 until 4).map { ci =>
@@ -946,10 +877,10 @@ object Dedup {
       .select(col("doc_id"), col("simhash"),
         col("cc.chunk").as("chunk"), col("cc.ckey").as("ckey"))
       // same skew guard as MinHash-LSH: near-uniform corpora can
-      // collapse a 16-bit chunk into one giant bucket.
+      // collapse a chunk into one giant bucket.
       .withColumn("__bsize", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("chunk", "ckey")))
-      .filter(col("__bsize") <= maxBucket)
+      .filter(col("__bsize") <= 100)
       .drop("__bsize")
       // barrier before the self-join (same as minHashLshPairs): both
       // sides would otherwise re-run the per-token simhash signature
@@ -964,7 +895,7 @@ object Dedup {
       .distinct()
       .withColumn("hamming",
         bit_count(col("a_sim").bitwiseXOR(col("b_sim"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= 3)
       .select(col("a_id"), col("b_id"), col("hamming"))
   }
 
@@ -973,8 +904,8 @@ object Dedup {
     * express. Semantics (state them precisely — they are the
     * Bloom-filter span-removal semantics of production LLM-corpus
     * dedup à la Dolma's BFF, not Lee et al.'s suffix-array exactness):
-    * a run is a maximal span in which EVERY width-shingle occurs ≥
-    * minOccurrences times corpus-wide. Every true duplicated substring
+    * a run is a maximal span in which EVERY width-shingle occurs ≥ 2
+    * times corpus-wide. Every true duplicated substring
     * of L ≥ width tokens yields a run of length ≥ L (completeness: all
     * its L−width+1 shingles are duplicated), and a run from a SINGLE
     * duplication source has exactly the duplicated substring's length
@@ -988,7 +919,7 @@ object Dedup {
     * Stages, all integer-exact (oracles like d17):
     *  1. per-position width-token shingles (map-side explode:
     *     |tokens| rows, narrow);
-    *  2. duplicated-shingle set = md5-hash group with ≥ minOccurrences
+    *  2. duplicated-shingle set = md5-hash group with ≥ 2
     *     occurrences (within- OR cross-document — one map-side-
     *     combinable hash aggregate);
     *  3. mark positions via a LEFT SEMI join on the hash — the
@@ -1008,23 +939,18 @@ object Dedup {
     * Docs shorter than `width` tokens contribute no shingles and
     * report zeros via the corpus left join. */
   def substringRuns(docs: DataFrame, idCol: String, textCol: String,
-      width: Int = 8, minOccurrences: Int = 2,
-      shingles: Option[DataFrame] = None): DataFrame = {
-    // `shingles`: a pre-built (already materialization-barriered)
-    // [[positionedShingleFrame]] of the SAME docs/width — lets callers
-    // that run several span operators over one corpus (d18 + d20) pay
-    // the md5 shingle explode once (the TradingRank sharing pattern)
-    shingles.foreach(requireShingleFrame(_, width, docs, idCol, textCol))
-    val sh = shingles.getOrElse(positionedShingles(docs, idCol, textCol, width)
-      // barrier: the dup aggregate and the semi-join probe both read
-      // this frame — without it the tokenize+shingle+hash projection
-      // runs twice (the minHashLshPairs precedent)
-      .localCheckpoint(eager = false))
-    val dup = sh.groupBy(col("h"))
+      width: Int, shingles: DataFrame): DataFrame = {
+    // `shingles`: a pre-built [[positionedShingleFrame]] of the SAME
+    // docs/width behind a materialization barrier (the dup aggregate and
+    // the semi-join probe both read it) — lets callers that run several
+    // span operators over one corpus (d18 + d20) pay the md5 shingle
+    // explode once (the TradingRank sharing pattern)
+    requireShingleFrame(shingles, width, docs, idCol, textCol)
+    val dup = shingles.groupBy(col("h"))
       .agg(count(lit(1)).as("occ"))
-      .filter(col("occ") >= minOccurrences)
+      .filter(col("occ") >= 2)
       .select(col("h"))
-    runProfile(sh.join(dup, Seq("h"), "left_semi"), docs, idCol, width)
+    runProfile(shingles.join(dup, Seq("h"), "left_semi"), docs, idCol, width)
   }
 
   /** Canonical-plan identity of the (id, text) projection a shingle
@@ -1038,16 +964,17 @@ object Dedup {
     docs.select(col(idCol), col(textCol))
       .queryExecution.analyzed.semanticHash().toLong
 
-  /** Public form of [[positionedShingles]] for callers composing
-    * several span operators over one corpus (see [[substringRuns]]'
-    * `shingles` param). The caller owns the materialization barrier.
+  /** Per-position width-token shingle hashes (doc_id, pos, h) — the
+    * frame [[substringRuns]] and [[exactDupSpan]] consume, built once by
+    * callers composing several span operators over one corpus. The
+    * caller owns the materialization barrier.
     * The shingle width AND a corpus-identity stamp ([[docsStamp]]) are
     * stamped into the `h` column's metadata, so a consumer built for a
     * DIFFERENT width — or joining the frame against different docs or
     * a different id/text projection, which would silently yield wrong
     * span caps — fails loudly instead. */
   def positionedShingleFrame(docs: DataFrame, idCol: String,
-      textCol: String, width: Int = 8): DataFrame =
+      textCol: String, width: Int): DataFrame =
     positionedShingles(docs, idCol, textCol, width)
       .withColumn("h", col("h").as("h",
         new org.apache.spark.sql.types.MetadataBuilder()
@@ -1076,10 +1003,19 @@ object Dedup {
 
   /** Per-position width-token shingle hashes: (doc_id, pos, h) —
     * the shared front half of [[substringRuns]] /
-    * [[substringRunsAgainstIndex]] / [[shingleIndex]]. */
+    * [[substringRunsAgainstIndex]] / [[shingleIndex]], and the ONE copy
+    * of the shingle-hash recipe (md5 → 15 hex digits → 60-bit long). */
   private def positionedShingles(docs: DataFrame, idCol: String,
-      textCol: String, width: Int): DataFrame =
-    shinglesFromToks(tokenized(docs, idCol, textCol, width), width)
+      textCol: String, width: Int): DataFrame = {
+    require(width >= 2, "width must be at least 2 tokens")
+    tokenized(docs, idCol, textCol, width)
+      .select(col("doc_id"), posexplode(expr(
+        s"transform(sequence(1, size(toks) - ${width - 1}), " +
+          s"i -> array_join(slice(toks, i, $width), ' '))")))
+      .select(col("doc_id"), col("pos").cast("long").as("pos"),
+        conv(substring(md5(col("col").cast("binary")), 1, 15), 16, 10)
+          .cast("long").as("h"))
+  }
 
   /** (doc_id, toks) with sub-width docs dropped — the filter, not
     * greatest(): Spark's sequence(1, 0) counts DOWN ([1, 0]) instead
@@ -1089,21 +1025,6 @@ object Dedup {
     parallelizeSmallScan(docs)
       .select(col(idCol).as("doc_id"), split(col(textCol), " ").as("toks"))
       .filter(size(col("toks")) >= width)
-
-  /** The ONE copy of the shingle-hash recipe (md5 → 15 hex digits →
-    * 60-bit long), consumed by [[positionedShingles]] and
-    * [[exactDupSpan]]'s fallback — a drift between those paths would
-    * silently desynchronize h values across the span family. */
-  private def shinglesFromToks(toksF: DataFrame, width: Int): DataFrame = {
-    require(width >= 2, "width must be at least 2 tokens")
-    toksF
-      .select(col("doc_id"), posexplode(expr(
-        s"transform(sequence(1, size(toks) - ${width - 1}), " +
-          s"i -> array_join(slice(toks, i, $width), ' '))")))
-      .select(col("doc_id"), col("pos").cast("long").as("pos"),
-        conv(substring(md5(col("col").cast("binary")), 1, 15), 16, 10)
-          .cast("long").as("h"))
-  }
 
   /** Gaps-and-islands run extraction + per-doc rollup over a frame of
     * MARKED (duplicated / index-hit) shingle positions — the shared
@@ -1135,7 +1056,7 @@ object Dedup {
     * incremental-ingest discipline: build once at snapshot time, write
     * to the warehouse, probe per batch). */
   def shingleIndex(docs: DataFrame, idCol: String, textCol: String,
-      width: Int = 8): DataFrame =
+      width: Int): DataFrame =
     positionedShingles(docs, idCol, textCol, width)
       .select(col("h")).distinct()
 
@@ -1160,7 +1081,7 @@ object Dedup {
     * the batch) — this operator answers "which spans has the corpus
     * already seen". */
   def substringRunsAgainstIndex(batch: DataFrame, index: DataFrame,
-      idCol: String, textCol: String, width: Int = 8): DataFrame = {
+      idCol: String, textCol: String, width: Int): DataFrame = {
     val sh = positionedShingles(batch, idCol, textCol, width)
     runProfile(sh.join(index.select(col("h")), Seq("h"), "left_semi"),
       batch, idCol, width)
@@ -1198,25 +1119,21 @@ object Dedup {
     * (longest_exact_dup_tokens, n_occurrences, n_docs), zeros when no
     * span of ≥ width tokens repeats. */
   def exactDupSpan(docs: DataFrame, idCol: String, textCol: String,
-      width: Int = 8, maxLen: Int = 64,
-      shingles: Option[DataFrame] = None): DataFrame = {
+      width: Int, maxLen: Int, shingles: DataFrame): DataFrame = {
     require(width >= 2, "width must be at least 2 tokens")
     require(maxLen >= width, "maxLen must be at least the shingle width")
     import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
-    shingles.foreach(requireShingleFrame(_, width, docs, idCol, textCol))
+    // `shingles`: [[substringRuns]]' materialized shingle frame of the
+    // same docs/width (the dup agg and the semi probe share it)
+    requireShingleFrame(shingles, width, docs, idCol, textCol)
     val toksF = tokenized(docs, idCol, textCol, width)
       .localCheckpoint(eager = false) // every probe slices from it
-    // fallback builds the explode off the CHECKPOINTED toksF (the
-    // corpus is scanned+tokenized once, the hash recipe is the one
-    // shared copy in shinglesFromToks)
-    val sh = shingles.getOrElse(shinglesFromToks(toksF, width)
-      .localCheckpoint(eager = false)) // dup agg + semi probe share it
-    val dup = sh.groupBy(col("h")).agg(count(lit(1)).as("occ"))
+    val dup = shingles.groupBy(col("h")).agg(count(lit(1)).as("occ"))
       .filter(col("occ") >= 2).select(col("h"))
     // span_cap(pos) = the longest span STARTING at pos whose every
     // width-window is duplicated = (island's last shingle − pos) + width
-    val marked = sh.join(dup, Seq("h"), "left_semi")
+    val marked = shingles.join(dup, Seq("h"), "left_semi")
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("doc_id")).orderBy(col("pos"))))
       .withColumn("island", col("pos") - col("rn"))
@@ -1280,7 +1197,8 @@ object Dedup {
     * rounded (6) per grid point, masses sum those rounded values as
     * exact decimals, so both engines integrate identical grids. */
   def lshCalibration(spark: org.apache.spark.sql.SparkSession,
-      numHashes: Int, threshold: Double, gridN: Int = 100): DataFrame = {
+      numHashes: Int, threshold: Double): DataFrame = {
+    val gridN = 100
     val p = round(lit(1.0) -
       pow(lit(1.0) - pow(col("s"), col("rows_per_band")), col("bands")), 6)
     val curve = spark.range(1L, numHashes + 1L)

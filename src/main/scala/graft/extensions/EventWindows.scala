@@ -20,7 +20,7 @@ object EventWindows {
     events
       .groupBy(window(col("ts"), duration).as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        Summaries.exactSum(col("value"), 2).as("sum_value"))
+        Summaries.exactSum(col("value")).as("sum_value"))
       .select(unix_timestamp(col("w.start")).as("bucket_start_s"),
         col("event_type"), col("n_events"), col("sum_value"))
 
@@ -76,24 +76,6 @@ object EventWindows {
             e => e.getField("event_type")),
           ">").as("event_seq"))
 
-  /** The built-in `session_window` form (state-store backed under
-    * streaming). Kept alongside `sessionize` so the batch oracle checks
-    * the hand-rolled form while streaming uses this one. PRECISION
-    * CONVENTION (measured, EventWindowsSpec's boundary test): Spark
-    * merges TOUCHING sessions, so both forms split iff gap > g — but
-    * `sessionize` evaluates the gap on unix_timestamp-TRUNCATED seconds
-    * while `session_window` uses full timestamp precision, so an event
-    * pair whose real gap is in (g, g+1) seconds but truncates to
-    * exactly g splits here and merges there. On SECOND-TRUNCATED data
-    * the two are identical at the same gap — the transform the
-    * streaming v2 parity test stages. */
-  def sessionWindowAgg(events: DataFrame, gap: String): DataFrame =
-    events
-      .groupBy(col("user_id"), session_window(col("ts"), gap).as("w"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), unix_timestamp(col("w.start")).as("session_start_s"),
-        col("n_events"))
-
   /** Calendar densification (time-series resample): per key, emit one
     * row per day across that key's [min, max] date span, zero-filling
     * days with no events. `sequence` + `explode` keeps generation
@@ -135,10 +117,10 @@ object EventWindows {
     * the same (user_id, day) sort — Catalyst plans a single Exchange +
     * Sort for both window frames. Calendar explode multiplies rows,
     * never exchanges. */
-  def interpolateDaily(events: DataFrame, valueCol: String = "value"): DataFrame = {
+  def interpolateDaily(events: DataFrame): DataFrame = {
     val daily = events
       .groupBy(col("user_id"), to_date(col("ts")).as("day"))
-      .agg((sum(col(valueCol).cast("decimal(38,6)")).cast("double") /
+      .agg((sum(col("value").cast("decimal(38,6)")).cast("double") /
         count(lit(1))).as("v"))
     val spans = daily.groupBy(col("user_id"))
       .agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
@@ -224,7 +206,7 @@ object EventWindows {
     * [[runningMaxExclusive]]: no single-partition pass over the event
     * table. */
   def watermarkAudit(events: DataFrame, delaySeconds: Long,
-      seqCol: String = "event_id"): DataFrame =
+      seqCol: String): DataFrame =
     runningMaxExclusive(
       events.withColumn("__ts_s", col("ts").cast("long")),
       seqCol, "__ts_s", "__run_max_s")
@@ -242,8 +224,7 @@ object EventWindows {
     * `withWatermark`'s delay before deploying the streaming job. Same
     * [[runningMaxExclusive]] decomposition — no single-partition window
     * over the event table; second flooring per the audit's convention. */
-  def disorderDelays(events: DataFrame,
-      seqCol: String = "event_id"): DataFrame =
+  def disorderDelays(events: DataFrame, seqCol: String): DataFrame =
     runningMaxExclusive(
       events.withColumn("__ts_s", col("ts").cast("long")),
       seqCol, "__ts_s", "__run_max_s")
@@ -312,25 +293,24 @@ object EventWindows {
     * engine's double→decimal conversion (shortest-repr vs full binary
     * expansion — a measured 1-ulp twa divergence). Instead the value
     * is quantized ONCE at its own magnitude (where the grid is far
-    * above ulp and the engines agree): vu = round(value·10^valueScale)
-    * — an exact integer — and vu·Δt rides DECIMAL(38,0) integer
-    * arithmetic end to end. `valueScale` must cover the value column's
-    * actual decimal resolution (events.value is a 2-decimal grid);
+    * above ulp and the engines agree): vu = round(value·10²) — an
+    * exact integer — and vu·Δt rides DECIMAL(38,0) integer arithmetic
+    * end to end. The 10² quantum covers the value column's actual
+    * decimal resolution (events.value is a 2-decimal grid);
     * the single final double division is left UNROUNDED (the exactAvg
     * rule). Keys whose total duration is zero (single event, or all
     * events on one microsecond) yield NULL, never a division error.
     * One shuffle: the lead window and the grouped aggregate share the
     * user_id partitioning. */
-  def timeWeightedAvg(events: DataFrame, valueCol: String = "value",
-      valueScale: Int = 2): DataFrame = {
-    val unit = math.pow(10.0, valueScale)
+  def timeWeightedAvg(events: DataFrame): DataFrame = {
+    val unit = 100.0
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("__us"), col("event_id"))
     events
-      .filter(col(valueCol).isNotNull)
+      .filter(col("value").isNotNull)
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("__us"),
-        round(col(valueCol) * lit(unit)).cast("decimal(19,0)").as("__vu"))
+        round(col("value") * lit(unit)).cast("decimal(19,0)").as("__vu"))
       .withColumn("__dt", lead(col("__us"), 1).over(w) - col("__us"))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"),
@@ -345,12 +325,12 @@ object EventWindows {
   /** Ordered conversion funnel: users progress through `steps` event
     * types strictly in time order — step k counts a user iff some
     * step-k event lands STRICTLY AFTER the user's step-(k−1) timestamp
-    * (the earliest qualifying one, greedily) and, when `windowSeconds`
-    * is set, within that many whole seconds of the user's funnel start
-    * (the "converts within N days" form — without a window, dense event
-    * streams eventually reach every step and the reach counts stop
-    * discriminating). Emits one summary row per step: users reaching it
-    * and the unrounded decimal-exact mean seconds from funnel start.
+    * (the earliest qualifying one, greedily) and within `windowSeconds`
+    * whole seconds of the user's funnel start (the "converts within N
+    * days" form — without a window, dense event streams eventually
+    * reach every step and the reach counts stop discriminating). Emits
+    * one summary row per step: users reaching it and the unrounded
+    * decimal-exact mean seconds from funnel start.
     *
     * Shape: a cascade of per-step `filter → equi-join on user →
     * min-aggregate` frames, each |users|-sized and checkpointed (each
@@ -362,7 +342,7 @@ object EventWindows {
     * uniform key beyond that). No window over the raw event stream, no
     * per-user sort — the greedy semantics need only mins. */
   def funnel(events: DataFrame, steps: Seq[String],
-      windowSeconds: Option[Long] = None): DataFrame = {
+      windowSeconds: Long): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
     def secs(c: Column): Column = c.cast("long")
     def summary(step: Int, name: String, frame: DataFrame): DataFrame =
@@ -379,10 +359,7 @@ object EventWindows {
       .localCheckpoint(eager = false)
     var out = summary(1, steps.head, cur)
     steps.tail.zipWithIndex.foreach { case (st, i) =>
-      val inWindow = windowSeconds match {
-        case Some(w) => (secs(col("ts")) - secs(col("t_first"))) <= w
-        case None => lit(true)
-      }
+      val inWindow = (secs(col("ts")) - secs(col("t_first"))) <= windowSeconds
       cur = events.filter(col("event_type") === st)
         .join(cur.select(col("user_id"), col("t_first"), col("t_curr")),
           Seq("user_id"))
@@ -405,9 +382,10 @@ object EventWindows {
     * content-grain split: s18 stops the same TEXT landing in two
     * splits; this stops the same TIME doing it.
     *
-    * Boundaries are integer arithmetic on epoch seconds — t₁ =
-    * lo + (hi−lo)·trainPct/100, t₂ = lo + (hi−lo)·(trainPct+valPct)/100,
-    * gap = (hi−lo)·embargoPct/100, all BIGINT-exact and engine-portable
+    * Boundaries are integer arithmetic on epoch seconds — a 60/20/20
+    * split with 1 % embargo gaps: t₁ = lo + (hi−lo)·60/100,
+    * t₂ = lo + (hi−lo)·80/100, gap = (hi−lo)·1/100, all BIGINT-exact
+    * and engine-portable
     * (no float quantiles, no timezone math). Output: one row per split
     * (train/embargo/val/test) with event + distinct-user counts, plus
     * the cross-split audit `n_spanning_users` (users appearing in >1 of
@@ -420,11 +398,8 @@ object EventWindows {
     * user_id (uniform). 100 TB note: min/max over event time prunes to
     * parquet footer statistics when the table is time-partitioned (the
     * layout every event store ships). */
-  def temporalSplit(events: DataFrame, trainPct: Int = 60,
-      valPct: Int = 20, embargoPct: Int = 1): DataFrame = {
-    require(trainPct > 0 && valPct > 0 &&
-      trainPct + valPct + 2 * embargoPct < 100,
-      "train/val/embargo percentages must leave room for test")
+  def temporalSplit(events: DataFrame): DataFrame = {
+    val (trainPct, valPct, embargoPct) = (60, 20, 1)
     val sec = floor(unix_timestamp(col("ts"))).cast("long")
     val ev = events.select(col("user_id"), sec.as("__sec"))
     val mm = ev.agg(min(col("__sec")).as("__lo"), max(col("__sec")).as("__hi"))

@@ -142,7 +142,7 @@ object Multimodal {
     * key, one per-doc aggregate — all key-grain, text/bytes never
     * shuffle past the fingerprint projection. */
   def frameNearDup(withPayload: DataFrame, frameBytes: Int, stride: Int,
-      minOverlap: Double = 0.8, maxBucket: Int = 100): DataFrame = {
+      minOverlap: Double, maxBucket: Int): DataFrame = {
     val frames = sampleFrames(withPayload, frameBytes, stride)
       .select(col("doc_id"), col("frame_fp")).distinct()
       // barrier: the per-doc count and the pair join both read it —
@@ -199,8 +199,7 @@ object Multimodal {
     * is small, a plain hash join on the uniform id key beyond. No
     * shuffle of payload bytes anywhere. */
   def pairCuration(withPayload: DataFrame, sidecar: DataFrame,
-      minDim: Int = 200, maxAspect: Double = 3.0,
-      minCapToks: Int = 10, maxCapToks: Int = 40): DataFrame = {
+      minDim: Int = 200, maxAspect: Double = 3.0): DataFrame = {
     // distinct: presence is a SET question — a sidecar carrying
     // duplicate doc_ids (multi-vector embeddings, re-ingested shards)
     // must not fan out the left join into duplicate pair rows
@@ -220,7 +219,7 @@ object Multimodal {
           .when(greatest(col("width"), col("height")) * lit(1.0)
             / least(col("width"), col("height")) > maxAspect,
             lit("bad_aspect"))
-          .when(!col("cap_tokens").between(minCapToks, maxCapToks),
+          .when(!col("cap_tokens").between(10, 40),
             lit("caption_len"))
           .when(col("__has_emb").isNull, lit("no_embedding"))
           .otherwise(lit("kept")))

@@ -335,9 +335,9 @@ object QualityModel {
     * deliberate bounded collect: ONE row, once per training run, never
     * per batch (the [[approxCutContract]] plan with the contract
     * columns dropped). */
-  def sketchCut(scoredFrame: DataFrame, accuracy: Int = 10000): Double =
+  def sketchCut(scoredFrame: DataFrame): Double =
     scoredFrame
-      .agg(expr(s"percentile_approx(model_score, 0.5, $accuracy)"))
+      .agg(expr("percentile_approx(model_score, 0.5, 10000)"))
       .collect()(0).getDouble(0)
 
   /** The PRODUCTION form of t41's quantile cut, executed and bounded:

@@ -65,9 +65,9 @@ object Similarity {
   }
 
   /** Random-hyperplane (SRP) signature: bit p = sign(v · plane_p).
-    * `dims` must be ≥ the embedding dimension (extra components are
-    * ignored; shorter vectors degrade to fewer effective planes, which
-    * only costs recall, not correctness).
+    * Planes have 64 components, which must be ≥ the embedding dimension
+    * (extra components are ignored; shorter vectors degrade to fewer
+    * effective planes, which only costs recall, not correctness).
     *
     * Computed by the native fused expression
     * ([[graft.functions.SrpSignature]]): the former per-plane
@@ -77,13 +77,13 @@ object Similarity {
     * native expression fuses the (dims × planes) arithmetic into one
     * codegen'd loop, bit-identical signatures (parity pinned in
     * FunctionsSpec). */
-  def srpSignature(vec: Column, numPlanes: Int, dims: Int = 64): Column = {
+  def srpSignature(vec: Column, numPlanes: Int): Column = {
     require(numPlanes >= 1 && numPlanes <= 64,
       s"numPlanes ($numPlanes) must be in [1,64] — the signature packs " +
         "one bit per plane into a 64-bit long; 1L << p wraps mod 64 and " +
         "would silently alias planes onto shared bits")
     graft.functions.SrpSignature.srp_signature(
-      vec, planeMatrix(numPlanes, dims))
+      vec, planeMatrix(numPlanes, 64))
   }
 
   /** LSH-bucketed ANN: bucket = SRP signature; search the query's bucket
@@ -95,7 +95,7 @@ object Similarity {
     * 0.7; tighter settings scan less and recall less (see
     * e5_ann_recall's driver-checked contract). */
   def annTopK(embeddings: DataFrame, queryId: Long, k: Int,
-      numPlanes: Int = 16, probeHamming: Int = 1): DataFrame = {
+      numPlanes: Int, probeHamming: Int = 1): DataFrame = {
     val signed = embeddings.withColumn("bucket",
       srpSignature(col("embedding"), numPlanes))
     val query = signed.filter(col("vec_id") === queryId)
@@ -112,19 +112,17 @@ object Similarity {
       .limit(k)
   }
 
-  /** IVF-style ANN: a coarse quantizer partitions the corpus into k
-    * cells; queries probe only the `nprobe` nearest cells.
+  /** IVF-style ANN: a coarse quantizer partitions the corpus into 16
+    * cells; queries probe only the 4 nearest cells.
     *
-    * The default quantizer picks the first k vectors by id as centroids
-    * (deterministic seeding); pass `trainIters > 0` to refine them with
-    * Lloyd iterations ([[kMeansCentroids]]) — same dataflow either way:
-    * a bounded broadcast centroid table, one argmin-assign pass,
+    * The quantizer picks the first 16 vectors by id as centroids
+    * (deterministic seeding, [[kMeansCentroids]] with no Lloyd pass): a
+    * bounded broadcast centroid table, one argmin-assign pass,
     * equi-join on cell id. The scan per query drops from N to
-    * ~N·nprobe/k — the IVF scale path alongside the SRP-LSH one. */
-  def ivfTopK(embeddings: DataFrame, queryId: Long, k: Int,
-      numCells: Int = 16, nprobe: Int = 2, trainIters: Int = 0): DataFrame = {
-    val centroids = broadcast(
-      kMeansCentroids(embeddings, numCells, trainIters))
+    * ~N·4/16 — the IVF scale path alongside the SRP-LSH one. */
+  def ivfTopK(embeddings: DataFrame, queryId: Long, k: Int): DataFrame = {
+    val nprobe = 4
+    val centroids = broadcast(kMeansCentroids(embeddings, 16, 0))
     val assigned = assignCells(embeddings, centroids)
     val probeCentroids = centroids
       .select(col("cell_id").as("probe_cell"), col("centroid"))
@@ -212,9 +210,9 @@ object Similarity {
     * sharing a bucket are candidates; verify with exact cosine. Scale:
     * equi-join on bucket key, no O(n²). */
   def cosineNearDupPairs(embeddings: DataFrame, threshold: Double,
-      numPlanes: Int = 12, maxBucket: Int = 10000): DataFrame = {
+      maxBucket: Int = 10000): DataFrame = {
     val signed = embeddings.select(col("vec_id"),
-      col("embedding"), srpSignature(col("embedding"), numPlanes).as("bucket"))
+      col("embedding"), srpSignature(col("embedding"), 8).as("bucket"))
       // same skew guard as the MinHash/SimHash pair generators: a
       // degenerate bucket (duplicate-heavy corpus, near-parallel
       // embeddings) would make the self-join quadratic
@@ -222,7 +220,7 @@ object Similarity {
         org.apache.spark.sql.expressions.Window.partitionBy("bucket")))
       .filter(col("__bsize") <= maxBucket)
       .drop("__bsize")
-      // materialize once: without the barrier the 12-plane SRP signature
+      // materialize once: without the barrier the 8-plane SRP signature
       // and the bucket-size window re-evaluate on BOTH sides of the
       // self-join (same pattern as Dedup's token-set projection)
       .localCheckpoint(eager = false)
@@ -237,18 +235,22 @@ object Similarity {
       .select(col("a_id"), col("b_id"), col("cosine_sim"))
   }
 
+  /** SRP planes of the persisted bucket index and of every probe into it. */
+  private val IndexPlanes = 8
+
   /** Persistable SRP bucket index — the ANN ingest shape at 100 TB: the
     * corpus persists `(bucket, vec_id, embedding)` ONCE; each incoming
     * batch then probes by bucket without the corpus ever being
     * re-signed. Build-time skew cap: a degenerate bucket (boilerplate
     * embeddings, zero-ish vectors) keeps its `maxBucket` MIN-id
     * exemplars — stable under snapshot advance, same keep-min-k policy
-    * as the MinHash band index. `numPlanes` is part of the index
-    * contract: probes must sign with the same value. */
-  def srpBucketIndex(embeddings: DataFrame, numPlanes: Int = 8,
+    * as the MinHash band index. The plane count is part of the index
+    * contract: [[incrementalAnnPairs]] probes sign with the same
+    * `IndexPlanes`. */
+  def srpBucketIndex(embeddings: DataFrame,
       maxBucket: Int = 10000): DataFrame = {
     val signed = embeddings.select(col("vec_id"), col("embedding"),
-      srpSignature(col("embedding"), numPlanes).as("bucket"))
+      srpSignature(col("embedding"), IndexPlanes).as("bucket"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("bucket").orderBy("vec_id")
     signed.withColumn("__rk", row_number().over(w))
@@ -274,10 +276,10 @@ object Similarity {
     * broadcasting a corpus-sized side here re-creates the scale bug this
     * API exists to avoid (ADVICE r3). */
   def incrementalAnnPairs(batch: DataFrame, index: DataFrame,
-      threshold: Double, numPlanes: Int = 8): DataFrame = {
+      threshold: Double): DataFrame = {
     val b = batch.select(col("vec_id").as("new_id"),
         col("embedding").as("new_vec"),
-        srpSignature(col("embedding"), numPlanes).as("bucket"))
+        srpSignature(col("embedding"), IndexPlanes).as("bucket"))
       .localCheckpoint(eager = false)
     index
       .select(col("bucket"), col("vec_id").as("old_id"),
@@ -567,7 +569,7 @@ object Similarity {
     * approx_cos = Σ_s dot(q_s, c_{s,codes[s]})
     *              / (‖q‖ · sqrt(Σ_s ‖c_{s,codes[s]}‖²)). */
   def pqTopK(embeddings: DataFrame, books: DataFrame, m: Int, ksub: Int,
-      queryId: Long, k: Int, codes: Option[DataFrame] = None): DataFrame = {
+      queryId: Long, k: Int, codes: DataFrame): DataFrame = {
     val qSub = subVectors(embeddings.filter(col("vec_id") === queryId), m)
       .select(col("sub_id"), col("subvec").as("qvec"))
     val lut = books.join(qSub, Seq("sub_id"))
@@ -583,11 +585,10 @@ object Similarity {
       .crossJoin(broadcast(
         embeddings.filter(col("vec_id") === queryId)
           .select(norm(col("embedding")).as("__qnorm"))))
-    // callers that score repeatedly (or also inspect the codes, like
-    // the e12b contract) pass a checkpointed pre-encoded frame — the
-    // encode pass is the expensive stage and would otherwise re-run
-    // per consumer (the t8/e3 shared-subplan rule)
-    codes.getOrElse(pqEncode(embeddings, books, m))
+    // `codes` is a pre-encoded ([[pqEncode]]) frame the caller shares
+    // — the encode pass is the expensive stage and would otherwise
+    // re-run per consumer (the t8/e3 shared-subplan rule)
+    codes
       .filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(meta))
       .select(col("vec_id"),
@@ -614,8 +615,7 @@ object Similarity {
     * e1-identical values whenever the true neighbors survive the
     * shortlist. */
   def pqTopKRerank(embeddings: DataFrame, books: DataFrame, m: Int, ksub: Int,
-      queryId: Long, k: Int, shortlist: Int,
-      codes: Option[DataFrame] = None): DataFrame = {
+      queryId: Long, k: Int, shortlist: Int, codes: DataFrame): DataFrame = {
     val cand = pqTopK(embeddings, books, m, ksub, queryId, shortlist, codes)
       .select(col("vec_id"))
     val query = embeddings.filter(col("vec_id") === queryId)
@@ -637,15 +637,13 @@ object Similarity {
     * 100 TB the corpus is stored `partitionBy(cell_id)` with codes as a
     * column: a query reads nprobe partitions' CODES plus `shortlist`
     * raw vectors — never the full vector column, never all cells.
-    * Codebooks/codes are train-once snapshot artifacts (pass `codes` —
-    * e17 shares e12's PqArtifact); cell routing reuses ivfTopK's
-    * deterministic (-cos, cell_id) probe order. */
+    * Codebooks/codes are train-once snapshot artifacts (e17 shares
+    * e12's PqArtifact); cell routing reuses ivfTopK's first-k-by-id
+    * centroids and deterministic (-cos, cell_id) probe order. */
   def ivfPqTopK(embeddings: DataFrame, books: DataFrame, m: Int,
       ksub: Int, queryId: Long, k: Int, numCells: Int, nprobe: Int,
-      shortlist: Int, trainIters: Int = 0,
-      codes: Option[DataFrame] = None): DataFrame = {
-    val centroids = broadcast(
-      kMeansCentroids(embeddings, numCells, trainIters))
+      shortlist: Int, codes: DataFrame): DataFrame = {
+    val centroids = broadcast(kMeansCentroids(embeddings, numCells, 0))
     val assigned = assignCells(embeddings, centroids)
     val probeCells = assigned.filter(col("vec_id") === queryId)
       .select(col("embedding").as("query_vec"))
@@ -667,10 +665,9 @@ object Similarity {
     // keeps that a non-assumption)
     val subset = probed.filter(col("vec_id") =!= queryId)
       .unionByName(embeddings.filter(col("vec_id") === queryId))
-    val probedCodes = codes.map(
-      _.join(probed.select(col("vec_id")), Seq("vec_id"), "left_semi"))
-    pqTopKRerank(subset, books, m, ksub, queryId, k, shortlist,
-      codes = probedCodes)
+    val probedCodes =
+      codes.join(probed.select(col("vec_id")), Seq("vec_id"), "left_semi")
+    pqTopKRerank(subset, books, m, ksub, queryId, k, shortlist, probedCodes)
   }
 
   /** Exact driver-side cosine of two float vectors — index-order double
@@ -706,7 +703,7 @@ object Similarity {
     * Returns (rank 1..k, vec_id, relevance, mmr_score). `mmr_score` of
     * the first pick is λ·rel (empty selected-set ⇒ zero penalty). */
   def mmrRerank(embeddings: DataFrame, queryId: Long, k: Int,
-      shortlist: Int, lambda: Double = 0.7): DataFrame = {
+      shortlist: Int, lambda: Double): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val pool = bruteForceTopK(embeddings, queryId, shortlist)

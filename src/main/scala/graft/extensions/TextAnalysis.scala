@@ -304,20 +304,16 @@ object TextAnalysis {
     * rounds to 4 dp — both engines replay the identical rounded
     * system, so the pairs hash-match like d2/d14. */
   def sparseCosinePairs(docs: DataFrame, threshold: Double,
-      maxDf: Long, ngram: Int = 3): DataFrame = {
+      maxDf: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // shingle-grain vocabulary (ngram ≥ 2): word-grain tf-idf needs a
-    // rich vocabulary to discriminate — on a small-vocabulary corpus
-    // (this synthetic one has 31 words) every posting list is
-    // corpus-sized and the posting join degenerates to all-pairs.
-    // Word n-grams restore both properties: vocabulary ~|words|^n,
-    // per-shingle df bounded. ngram == 1 is the classic word-grain
-    // form for natural-language corpora. Shingles are DISTINCT per doc
-    // (set semantics, cnt = 1): idf-weighted set cosine, the standard
-    // lexical near-dup score.
-    val grams =
-      if (ngram == 1) tokens(col("text"))
-      else Dedup.ngramShingles(col("text"), ngram)
+    // word-trigram vocabulary: word-grain tf-idf needs a rich
+    // vocabulary to discriminate — on a small-vocabulary corpus (this
+    // synthetic one has 31 words) every posting list is corpus-sized
+    // and the posting join degenerates to all-pairs. Word 3-grams
+    // restore both properties: vocabulary ~|words|^3, per-shingle df
+    // bounded. Shingles are DISTINCT per doc (set semantics, cnt = 1):
+    // idf-weighted set cosine, the standard lexical near-dup score.
+    val grams = Dedup.ngramShingles(col("text"), 3)
     // Cache placement is MEASURED, not assumed (VERDICT r12 item 2's
     // falsification path, closed r13 by a controlled experiment — three
     // cache regimes interleaved on the same 10×/25×/50× salted fixtures
@@ -376,8 +372,8 @@ object TextAnalysis {
 
   /** Okapi BM25 keyword retrieval over the corpus — the ranked-search
     * scoring tf-idf (t8) is the unranked ancestor of: saturating term
-    * frequency (k1) and document-length normalization (b) so long
-    * documents can't buy rank with raw repetition. The standard
+    * frequency (k1 = 1.2) and document-length normalization (b = 0.75)
+    * so long documents can't buy rank with raw repetition. The standard
     * probabilistic idf `ln(1 + (N−df+0.5)/(df+0.5))` never goes
     * negative.
     *
@@ -399,8 +395,9 @@ object TextAnalysis {
     * evaluate the identical expression tree, so the oracle replays
     * hash-exact. Constants fold to (k1+1) and (1−b) Spark-side and in
     * the SQL so both engines parse the same literals. */
-  def bm25(docs: DataFrame, queryTerms: Seq[String],
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+  def bm25(docs: DataFrame, queryTerms: Seq[String]): DataFrame = {
+    val k1 = 1.2
+    val b = 0.75
     require(queryTerms.nonEmpty, "bm25 needs at least one query term")
     val tf = docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))

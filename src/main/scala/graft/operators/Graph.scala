@@ -27,14 +27,23 @@ object Graph {
   private def broadcastIfFits(state: DataFrame, df: DataFrame): DataFrame =
     if (fitsBroadcast(state)) broadcast(df) else df
 
+  /** The damping factor d of every PageRank form (g1's oracle uses the
+    * same 0.85 and writes the teleport constant as 1.0 − d). */
+  private val Damping = 0.85
+  /** Per-edge contributions (and HITS half-step sums) round to this
+    * many places and sum exactly as DECIMAL(38,12). */
+  private val SumScale = 12
+  /** Ranks (and HITS scores) re-round to this many places. */
+  private val ScoreScale = 9
+
   /** Damped PageRank, fixed iteration count.
     *
     * Determinism contract (the cross-engine replay convention used by
     * every aggregate in this repo): per-edge contributions are doubles
-    * rounded to `contribScale`, summed EXACTLY as DECIMAL(38,12) (decimal
-    * addition is associative, so Spark's arbitrary aggregation order
-    * cannot produce ulp drift), and the new rank is re-rounded to
-    * `rankScale`. Both engines iterate the identical rounded system, so
+    * rounded to `SumScale` places, summed EXACTLY as DECIMAL(38,12)
+    * (decimal addition is associative, so Spark's arbitrary aggregation
+    * order cannot produce ulp drift), and the new rank is re-rounded to
+    * `ScoreScale` places. Both engines iterate the identical rounded system, so
     * five supersteps stay hash-identical.
     *
     * `edges` must be DIRECTED (src, dst) pairs, pre-deduplicated. The
@@ -78,12 +87,9 @@ object Graph {
     * unweighted results. Integer weights keep the w/Σw division a
     * single double op both engines replay identically.
     */
-  def pageRank(
-      edges: DataFrame, iterations: Int, damping: Double = 0.85,
-      contribScale: Int = 12, rankScale: Int = 9,
+  def pageRank(edges: DataFrame, iterations: Int,
       weightCol: Option[String] = None): DataFrame =
-    run(edges, damping, contribScale, rankScale, weightCol)
-      .ranks(iterations)
+    run(edges, weightCol).ranks(iterations)
 
   /** A PREPARED PageRank system whose iterate prefix is computed once and
     * shared by every consumer — the shared-artifact pattern applied to
@@ -98,8 +104,7 @@ object Graph {
     * iterates are |nodes|-sized cuts — bounded state, never a
     * data copy. */
   final class Run private[Graph] (
-      edges: DataFrame, damping: Double, contribScale: Int, rankScale: Int,
-      weightCol: Option[String]) {
+      edges: DataFrame, weightCol: Option[String]) {
     private val (ewd, init) = prepare(edges, weightCol)
     private val nodes = init.select(col("src"))
     // states(k) = the k-th iterate of the rounded system, a measured cut;
@@ -115,8 +120,7 @@ object Graph {
       * and caching any missing prefix. */
     def iterate(k: Int): DataFrame = synchronized {
       while (states.size <= k)
-        states += measuredCut(superstep(ewd, states.last, damping,
-          contribScale, rankScale))
+        states += measuredCut(superstep(ewd, states.last))
       states(k)
     }
 
@@ -128,8 +132,7 @@ object Graph {
       * whole chain. */
     def ranks(iterations: Int): DataFrame = {
       require(iterations >= 1, "need at least one iteration")
-      superstep(ewd, iterate(iterations - 1), damping, contribScale,
-          rankScale)
+      superstep(ewd, iterate(iterations - 1))
         .select(col("src").as("node"), col("rank"))
     }
 
@@ -179,8 +182,7 @@ object Graph {
         .withColumn("rank", col("__tele"))
         .select(col("src"), col("rank"), col("__tele")))
       for (k <- 1 to iterations) {
-        val next = personalizedSuperstep(ewd, ranks, damping, contribScale,
-          rankScale)
+        val next = personalizedSuperstep(ewd, ranks)
         ranks = if (k < iterations) measuredCut(next) else next
       }
       ranks.select(col("src").as("node"), col("rank"))
@@ -190,10 +192,8 @@ object Graph {
   /** Entry point for shared-prefix consumers; [[pageRank]],
     * [[pageRankConverged]] and [[personalizedPageRank]] are one-shot
     * wrappers over a fresh run. */
-  def run(edges: DataFrame, damping: Double = 0.85,
-      contribScale: Int = 12, rankScale: Int = 9,
-      weightCol: Option[String] = None): Run =
-    new Run(edges, damping, contribScale, rankScale, weightCol)
+  def run(edges: DataFrame, weightCol: Option[String] = None): Run =
+    new Run(edges, weightCol)
 
   /** Convergence-terminated damped PageRank: iterates the SAME rounded
     * system as [[pageRank]] and stops after the first superstep whose
@@ -211,9 +211,9 @@ object Graph {
     * driver-read row.
     *
     * Returns (final state, supersteps executed). The stop is
-    * DETERMINISTIC: ranks are decimal-rounded to `rankScale` every
+    * DETERMINISTIC: ranks are decimal-rounded to `ScoreScale` places every
     * superstep, and the residual sums per-node |Δ| (multiples of
-    * 10^-rankScale, exact in a double) as exact DECIMAL(38,12) — no
+    * 10^-ScoreScale, exact in a double) as exact DECIMAL(38,12) — no
     * float-summation-order ulp can flip the ε comparison. The selected
     * iteration count is therefore a pure function of the input, and an
     * oracle can replay it through the fixed-iteration system
@@ -221,12 +221,9 @@ object Graph {
     * GraphPropsSpec property).
     */
   def pageRankConverged(
-      edges: DataFrame, maxIterations: Int, epsilon: Double,
-      damping: Double = 0.85,
-      contribScale: Int = 12, rankScale: Int = 9,
-      weightCol: Option[String] = None): (DataFrame, Int) =
-    run(edges, damping, contribScale, rankScale, weightCol)
-      .converged(maxIterations, epsilon)
+      edges: DataFrame, maxIterations: Int, epsilon: Double)
+      : (DataFrame, Int) =
+    run(edges).converged(maxIterations, epsilon)
 
   /** PERSONALIZED PageRank: teleport mass (1−d) returns only to the
     * `seeds` (uniformly), not to every node — the "similar to THESE"
@@ -244,15 +241,11 @@ object Graph {
     * the contribution aggregate via max() over the per-node zero row —
     * no extra join. `seeds` (one column, same values as `src`) is
     * intersected with the graph's node set; seeds outside the graph are
-    * ignored. The teleport constant is written 1.0−damping in both
+    * ignored. The teleport constant is written 1.0 − Damping in both
     * engines (the g1 convention). */
   def personalizedPageRank(
-      edges: DataFrame, seeds: DataFrame, iterations: Int,
-      damping: Double = 0.85,
-      contribScale: Int = 12, rankScale: Int = 9,
-      weightCol: Option[String] = None): DataFrame =
-    run(edges, damping, contribScale, rankScale, weightCol)
-      .personalized(seeds, iterations)
+      edges: DataFrame, seeds: DataFrame, iterations: Int): DataFrame =
+    run(edges).personalized(seeds, iterations)
 
   /** One superstep of the personalized system: like [[superstep]], but
     * the teleport term is the per-NODE `__tele` column — which, in the
@@ -260,12 +253,11 @@ object Graph {
     * select (the old union form had to smuggle it through a max() over
     * per-node zero rows because contribution rows carried a NULL tele). */
   private def personalizedSuperstep(
-      ewd: DataFrame, ranks: DataFrame, damping: Double,
-      contribScale: Int, rankScale: Int): DataFrame = {
+      ewd: DataFrame, ranks: DataFrame): DataFrame = {
     val csums = ewd
       .join(ranks, Seq("src"))
       .select(col("dst"),
-        round((col("rank") * col("__w")) / col("outw"), contribScale)
+        round((col("rank") * col("__w")) / col("outw"), SumScale)
           .cast("decimal(38,12)").as("contrib"))
       .groupBy(col("dst"))
       .agg(sum(col("contrib")).as("csum"))
@@ -273,9 +265,9 @@ object Graph {
     ranks.select(col("src"), col("__tele"))
       .join(broadcastIfFits(ranks, csums), Seq("src"), "left")
       .select(col("src"),
-        round(lit(1.0 - damping) * col("__tele")
-          + lit(damping) * coalesce(col("csum"),
-              lit(0).cast("decimal(38,12)")).cast("double"), rankScale)
+        round(lit(1.0 - Damping) * col("__tele")
+          + lit(Damping) * coalesce(col("csum"),
+              lit(0).cast("decimal(38,12)")).cast("double"), ScoreScale)
           .as("rank"),
         col("__tele"))
   }
@@ -463,9 +455,9 @@ object Graph {
     * ranking is identical (normalization is a monotone per-side
     * rescale) but the arithmetic stays in the repo's replayable
     * rounded-system family — an L2 sqrt over a float sum has no exact
-    * cross-engine form. Determinism: scores round to `scoreScale`,
-    * half-step sums accumulate those rounded values exactly as
-    * DECIMAL(38,`sumScale`) (association-proof), and each
+    * cross-engine form. Determinism: scores round to `ScoreScale`
+    * places, half-step sums accumulate those rounded values exactly as
+    * DECIMAL(38,`SumScale`) (association-proof), and each
     * normalization is ONE double division rounded once — both engines
     * iterate the identical system (the pageRank convention).
     *
@@ -483,10 +475,9 @@ object Graph {
     *
     * `edges` must be pre-deduplicated (src, dst) pairs (the pageRank
     * contract); returns (side ∈ {hub, auth}, node, score). */
-  def hits(edges: DataFrame, iterations: Int,
-      sumScale: Int = 12, scoreScale: Int = 9): DataFrame = {
+  def hits(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
-    val dec = s"decimal(38,$sumScale)"
+    val dec = s"decimal(38,$SumScale)"
     // r15 (guide §2.4): the two half-steps cluster on OPPOSITE keys —
     // auth sums group by dst (probing the hub state by src), hub sums
     // group by src (probing the auth state by dst) — so ONE edge cut
@@ -511,7 +502,7 @@ object Graph {
       (r.crossJoin(broadcast(tot))
         .select(col(key),
           round(col("raw").cast("double") / col("tot").cast("double"),
-            scoreScale).as("score")),
+            ScoreScale).as("score")),
         fitsBroadcast(r))
     }
     // uniform 1/|hubs| start: a projection of the measured node set, so
@@ -521,19 +512,19 @@ object Graph {
     var auths: DataFrame = null
     for (k <- 1 to iterations) {
       // explicit round-then-cast (the pageRank contribution pattern):
-      // after the first normalize scores are already at scoreScale, but
+      // after the first normalize scores are already at ScoreScale, but
       // the 1/n init is a raw double whose decimal conversion must be
       // the same HALF_UP step in both engines
       val (authState, authFits) = normalize(
         eAuth.join(hubs, Seq("src"))
           .groupBy(col("dst"))
-          .agg(sum(round(col("score"), sumScale).cast(dec)).as("raw")),
+          .agg(sum(round(col("score"), SumScale).cast(dec)).as("raw")),
         "dst")
       auths = authState
       val (nextHubs, _) = normalize(
         eHub.join(if (authFits) broadcast(auths) else auths, Seq("dst"))
           .groupBy(col("src"))
-          .agg(sum(round(col("score"), sumScale).cast(dec)).as("raw")),
+          .agg(sum(round(col("score"), SumScale).cast(dec)).as("raw")),
         "src")
       // barrier BETWEEN iterations keeps plans linear (pageRank rule)
       hubs = if (k < iterations) measuredCut(nextHubs) else nextHubs
@@ -556,13 +547,13 @@ object Graph {
     * labeling both the d9 recursive-CTE oracle replay and the keep-min
     * dedup apply use). Isolated nodes are the caller's concern: a graph
     * extraction that emits edges has already dropped them. */
-  def connectedComponents(edges: DataFrame, srcCol: String = "src",
-      dstCol: String = "dst", driverEdgeLimit: Long = 5000000L): DataFrame = {
-    val nodes = edges.select(col(srcCol).as("node"))
-      .unionByName(edges.select(col(dstCol).as("node")))
+  def connectedComponents(edges: DataFrame,
+      driverEdgeLimit: Long = 5000000L): DataFrame = {
+    val nodes = edges.select(col("src").as("node"))
+      .unionByName(edges.select(col("dst").as("node")))
       .distinct()
     graft.extensions.Dedup.nearDupClusters(nodes,
-        edges.select(col(srcCol).as("a_id"), col(dstCol).as("b_id")),
+        edges.select(col("src").as("a_id"), col("dst").as("b_id")),
         "node", driverEdgeLimit = driverEdgeLimit)
       .select(col("node"), col("cluster_id").as("component_id"))
   }
@@ -607,8 +598,8 @@ object Graph {
   }
 
   /** One superstep of the rounded system: contributions rank·w/Σw
-    * rounded to `contribScale`, summed exactly as DECIMAL(38,12), new
-    * rank re-rounded to `rankScale`. r15 shape (guide §2.4): the old
+    * rounded to `SumScale` places, summed exactly as DECIMAL(38,12), new
+    * rank re-rounded to `ScoreScale` places. r15 shape (guide §2.4): the old
     * form unioned a zero-contribution row per node into the aggregate —
     * a Union whose output partitioning is unknown, so EVERY superstep
     * re-exchanged its partial aggregates even though ewd is already
@@ -618,13 +609,11 @@ object Graph {
     * (csum NULL → exact decimal 0 — bit-identical to summing the old
     * zero row, since adding decimal 0 never changes a sum; node-set
     * invariance now comes from joining FROM the state). */
-  private def superstep(
-      ewd: DataFrame, ranks: DataFrame, damping: Double,
-      contribScale: Int, rankScale: Int): DataFrame = {
+  private def superstep(ewd: DataFrame, ranks: DataFrame): DataFrame = {
     val csums = ewd
       .join(ranks, Seq("src"))
       .select(col("dst"),
-        round((col("rank") * col("__w")) / col("outw"), contribScale)
+        round((col("rank") * col("__w")) / col("outw"), SumScale)
           .cast("decimal(38,12)").as("contrib"))
       .groupBy(col("dst"))
       .agg(sum(col("contrib")).as("csum"))
@@ -632,9 +621,9 @@ object Graph {
     ranks.select(col("src"), col("n"))
       .join(broadcastIfFits(ranks, csums), Seq("src"), "left")
       .select(col("src"),
-        round(lit(1.0 - damping) / col("n")
-          + lit(damping) * coalesce(col("csum"),
-              lit(0).cast("decimal(38,12)")).cast("double"), rankScale)
+        round(lit(1.0 - Damping) / col("n")
+          + lit(Damping) * coalesce(col("csum"),
+              lit(0).cast("decimal(38,12)")).cast("double"), ScoreScale)
           .as("rank"),
         col("n"))
   }

@@ -69,9 +69,10 @@ object RowOps {
   def per100k(metric: Column, population: Column): Column =
     round(metric / population * 100000, 2)
 
-  /** X6 — guarded ratio (CFR): divide-by-zero → 0 (data_cleaner.py:241-247). */
-  def guardedRatio(num: Column, den: Column, scale: Int = 3): Column =
-    when(den > 0, round(num / den * 100, scale)).otherwise(lit(0.0))
+  /** X6 — guarded ratio (CFR), rounded 3: divide-by-zero → 0
+    * (data_cleaner.py:241-247). */
+  def guardedRatio(num: Column, den: Column): Column =
+    when(den > 0, round(num / den * 100, 3)).otherwise(lit(0.0))
 
   /** X7 — gap + guarded gap-percent (data_merger.py:315-329). */
   def gap(api: Column, owid: Column): Column = api - owid

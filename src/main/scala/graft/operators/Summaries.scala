@@ -15,11 +15,9 @@ object Summaries {
   /** W9/W10 — missing-data / completeness profile
     * (data_cleaner.py:110-122, data_merger.py:378-392): per column,
     * null count + null %, one row per profiled column. Single scan.
-    * `scale`: the reference rounds the W9 missing_percentage to 2
-    * decimals (data_cleaner.py:119) but the W10 completeness_percent to
-    * 1 (data_merger.py:390) — pick per call site. */
-  def missingProfile(df: DataFrame, cols: Seq[String], scale: Int = 2)
-      : DataFrame = {
+    * The percentage rounds to 2 decimals, the W9 missing_percentage
+    * rule (data_cleaner.py:119). */
+  def missingProfile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "missingProfile needs at least one column")
     val aggs = count(lit(1)).as("total_rows") +:
       cols.map(c => sum(col(c).isNull.cast("long")).as(s"__null_$c"))
@@ -39,7 +37,7 @@ object Summaries {
         // multiply-first, matching the oracle's n*100.0/t association —
         // (n/t)*100 can round to a different cent within ~1 ulp of a
         // .xx5 boundary (engine-identical arithmetic order policy)
-        round(col("null_count") * 100.0 / col("total_rows"), scale)
+        round(col("null_count") * 100.0 / col("total_rows"), 2)
           .as("null_percent"))
   }
 
@@ -63,9 +61,9 @@ object Summaries {
     * `corr()` over doubles is partition-order dependent in the last ulp
     * (SURVEY.md §7.5.5); summing exact decimals then combining a handful
     * of scalars in double is bit-deterministic and matches a DuckDB
-    * oracle computing the same formula. */
-  def pearson(df: DataFrame, groupCols: Seq[Column], x: Column, y: Column,
-      scale: Int = 6): DataFrame = {
+    * oracle computing the same formula. The result rounds to 6 places. */
+  def pearson(df: DataFrame, groupCols: Seq[Column], x: Column, y: Column)
+      : DataFrame = {
     val dec = "decimal(38,10)"
     // pairwise-complete: a row with either side NULL must not contribute
     // to ANY moment (pandas/Spark corr semantics) — without this filter,
@@ -83,7 +81,7 @@ object Summaries {
         (col("__n") * col("__sxy") - col("__sx") * col("__sy")) /
           sqrt((col("__n") * col("__sxx") - col("__sx") * col("__sx")) *
                (col("__n") * col("__syy") - col("__sy") * col("__sy"))),
-        scale))
+        6))
       .drop("__n", "__sx", "__sy", "__sxy", "__sxx", "__syy")
   }
 
@@ -97,14 +95,14 @@ object Summaries {
     * moment sums as DECIMAL(38,10) (associative-exact, so Spark's
     * aggregation order cannot ulp-drift), and both engines evaluate
     * the identical double expression tree over identical operands —
-    * round(…, scale) buries nothing engine-specific.
+    * round(…, 6) buries nothing engine-specific.
     *
     * Degenerate groups (n < 2, or zero x-variance) yield NULL slope/
     * intercept/R² via the guarded divisions — never NaN/Inf (the X6
     * guarded-ratio contract). Rows with either side NULL are dropped
     * from ALL moments (pairwise-complete, the pearson rule). */
-  def olsFit(df: DataFrame, groupCols: Seq[Column], x: Column, y: Column,
-      scale: Int = 6): DataFrame = {
+  def olsFit(df: DataFrame, groupCols: Seq[Column], x: Column, y: Column)
+      : DataFrame = {
     val dec = "decimal(38,10)"
     val vx = col("__n") * col("__sxx") - col("__sx") * col("__sx")
     val vy = col("__n") * col("__syy") - col("__sy") * col("__sy")
@@ -120,12 +118,12 @@ object Summaries {
         sum((y * y).cast(dec)).cast("double").as("__syy"))
       .withColumn("n_obs", col("__n").cast("long"))
       .withColumn("slope",
-        round(when(vx > 0.0, cxy / vx), scale))
+        round(when(vx > 0.0, cxy / vx), 6))
       .withColumn("intercept",
         round(when(vx > 0.0,
-          (col("__sy") - (cxy / vx) * col("__sx")) / col("__n")), scale))
+          (col("__sy") - (cxy / vx) * col("__sx")) / col("__n")), 6))
       .withColumn("r2",
-        round(when(vx > 0.0 && vy > 0.0, (cxy * cxy) / (vx * vy)), scale))
+        round(when(vx > 0.0 && vy > 0.0, (cxy * cxy) / (vx * vy)), 6))
       .drop("__n", "__sx", "__sy", "__sxy", "__sxx", "__syy")
   }
 
@@ -140,7 +138,8 @@ object Summaries {
     * single result row and an `explode` unpivots to (col_a, col_b,
     * corr) rows. Determinism: the [[pearson]] policy verbatim — exact
     * decimal moments (associative, aggregation-order-proof), then an
-    * identical IEEE expression tree both engines replay, rounded once.
+    * identical IEEE expression tree both engines replay, rounded once
+    * to 6 places.
     *
     * Row semantics are COMPLETE-CASE (a row with ANY of the k columns
     * null is dropped from every moment), NOT pearson's pairwise-
@@ -149,8 +148,7 @@ object Summaries {
     * aggregate, and is the standard trade documented by every stats
     * package that offers both. Zero-variance columns yield NULL (not
     * NaN) correlations via the guarded sqrt. */
-  def pearsonMatrix(df: DataFrame, cols: Seq[String], scale: Int = 6)
-      : DataFrame = {
+  def pearsonMatrix(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.size >= 2, "pearsonMatrix needs at least two columns")
     val dec = "decimal(38,10)"
     val pairs = for {
@@ -173,7 +171,7 @@ object Summaries {
       val vb = n * col(s"__ss_$b") - col(s"__s_$b") * col(s"__s_$b")
       val cab = n * col(s"__x_${a}_$b") - col(s"__s_$a") * col(s"__s_$b")
       struct(lit(a).as("col_a"), lit(b).as("col_b"),
-        round(when(va > 0.0 && vb > 0.0, cab / sqrt(va * vb)), scale)
+        round(when(va > 0.0 && vb > 0.0, cab / sqrt(va * vb)), 6)
           .as("corr"))
     }
     one.select(col("__n").cast("long").as("n_obs"),
@@ -208,7 +206,7 @@ object Summaries {
     * dropped, so a (0,1) fraction or NaN cannot slip through as a
     * zero-mass row and fabricate an all-zero group. */
   def weightedMedian(df: DataFrame, groupCols: Seq[String], valCol: Column,
-      weightCol: Column, orderCols: Seq[Column] = Seq.empty): DataFrame = {
+      weightCol: Column, orderCols: Seq[Column]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val gs = groupCols.map(col)
     val w = Window.partitionBy(gs: _*).orderBy(valCol +: orderCols: _*)
@@ -234,9 +232,10 @@ object Summaries {
   /** Decimal-exact sum of a double column, emitted as a rounded double.
     * Summing doubles is partition-order nondeterministic; casting each
     * value to an exact decimal makes the aggregate associative-exact,
-    * then one final round+cast gives a stable, oracle-matchable double. */
-  def exactSum(c: Column, scale: Int = 2): Column =
-    round(sum(c.cast("decimal(38,6)")), scale).cast("double")
+    * then one final round+cast to 2 places gives a stable,
+    * oracle-matchable double. */
+  def exactSum(c: Column): Column =
+    round(sum(c.cast("decimal(38,6)")), 2).cast("double")
 
   /** Decimal-exact mean: exact sum, one IEEE division at the end,
     * deliberately UNROUNDED — rounding a quotient that often terminates
@@ -424,7 +423,7 @@ object Summaries {
   }
 
   /** Robust (median/MAD) outlier profile per group — the
-    * Iglewicz–Hoaglin modified z-score |0.6745·(x−med)/MAD| > zCut,
+    * Iglewicz–Hoaglin modified z-score |0.6745·(x−med)/MAD| > 3.5,
     * the scale- and offset-free outlier rule for heavy-tailed metrics
     * (W11's fixed-threshold cousin that needs no tuned cutoff). ONE
     * hash exchange on the group key carries everything: median and MAD
@@ -434,8 +433,8 @@ object Summaries {
     * — the data never sorts globally and the input is scanned ONCE. A
     * MAD of 0 (over half the group identical) yields NULL z-scores:
     * those rows are not flagged. */
-  def robustOutliers(df: DataFrame, groupCol: String, valCol: String,
-      zCut: Double = 3.5): DataFrame = {
+  def robustOutliers(df: DataFrame, groupCol: String, valCol: String)
+      : DataFrame = {
     // Fused single-exchange form (r14 optimization round): the old
     // shape ran sortedPercentiles TWICE (median, then MAD) with a
     // broadcast join back onto a fresh scan after each — four scans of
@@ -456,7 +455,7 @@ object Summaries {
       .groupBy(col(groupCol))
       .agg(count(lit(1)).as("n"),
         count(when(
-          abs(lit(0.6745) * (col(valCol) - col("med")) / col("mad")) > zCut,
+          abs(lit(0.6745) * (col(valCol) - col("med")) / col("mad")) > 3.5,
           1)).as("n_outliers"),
         max(col("med")).as("med"), max(col("mad")).as("mad"))
   }

@@ -243,7 +243,6 @@ object CovidPipeline {
           .otherwise(raise_error(lit("no candidate countries after " +
             "cleaning — are both sources empty?")))
           .as("candidate_countries"))
-      .localCheckpoint(eager = false) // rate + report column both read it
     def completeness(c: String): Seq[Column] = Seq(
       count(col(c)).as(s"${c}_available"),
       round(lit(100.0) * count(col(c)) / count(lit(1)), 1)

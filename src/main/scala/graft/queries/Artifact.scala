@@ -5,9 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** A build-once shared artifact: the frames (or trained model) several
   * board queries read, built once per (session, dir) and held for the
   * session, so no consumer re-pays a construction another already paid.
-  * Builds stay lazy where they can (`localCheckpoint(eager = false)`);
-  * the named `forces` materialize them, and Bench times each one as a
-  * `builds` entry before its sweep.
+  * A build's `localCheckpoint(eager = false)` cuts are not lazy under
+  * AQE: a cut over a shuffle runs that shuffle when the build is
+  * called. The named `forces` materialize the rest, and Bench times
+  * each one as a `builds` entry before its sweep.
   *
   * Keyed by SparkSession REFERENCE identity — one live session per
   * process (Verify, Bench and the tests each run exactly one): a

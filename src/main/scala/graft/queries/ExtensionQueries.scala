@@ -109,14 +109,11 @@ object ExtensionQueries {
     // the semantics are identical.
     QuerySpec("d3_minhash_lsh", (s, d) => {
       val docs = Tables.documents(s, d)
-      val pairs = Dedup.minHashLshPairs(docs,
-        numHashes = Dedup.LshNumHashes, bands = Dedup.LshBands,
-        threshold = 0.3, hashFn = Dedup.md5Hash60)
+      val pairs = Dedup.minHashLshPairs(docs)
       val perDoc = pairs
         .select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_candidates"))
-      Dedup.withMinHashSignature(docs, "text", Dedup.LshNumHashes, 3,
-          Dedup.md5Hash60)
+      Dedup.withMinHashSignature(docs, "text", Dedup.LshNumHashes, 3)
         .select(col("doc_id"),
           col("minhash_sig")(0).as("sig0"), col("minhash_sig")(1).as("sig1"),
           col("minhash_sig")(2).as("sig2"), col("minhash_sig")(3).as("sig3"))
@@ -183,12 +180,9 @@ object ExtensionQueries {
     QuerySpec("d12_incremental_minhash", (s, d) => {
       val docs = Tables.documents(s, d)
       val index = Dedup.minHashBandIndex(
-        docs.filter(col("doc_id") < 400), numHashes = Dedup.LshNumHashes,
-        bands = Dedup.LshBands, hashFn = Dedup.md5Hash60, maxBucket = 100)
+        docs.filter(col("doc_id") < 400), maxBucket = 100)
       Dedup.incrementalMinHashPairs(
-          docs.filter(col("doc_id") >= 400), index,
-          numHashes = Dedup.LshNumHashes, bands = Dedup.LshBands,
-          threshold = 0.3, hashFn = Dedup.md5Hash60)
+          docs.filter(col("doc_id") >= 400), index)
         .orderBy(col("new_id"), col("old_id"))
     }, oracle = Some(
       // d3's signature/banding replay, split into snapshot index
@@ -279,9 +273,7 @@ object ExtensionQueries {
         .withColumn("n_chars", length(col("text")).cast("long"))
       val exactIdx = Dedup.exactGroups(state, "text", "doc_id")
         .select(col("fingerprint"))
-      val bandIdx = Dedup.minHashBandIndex(state,
-        numHashes = Dedup.LshNumHashes, bands = Dedup.LshBands,
-        hashFn = Dedup.md5Hash60, maxBucket = 100)
+      val bandIdx = Dedup.minHashBandIndex(state, maxBucket = 100)
       val spanIdx = Dedup.shingleIndex(state, "doc_id", "text", width = 8)
       Curation.curateIncremental(batch, exactIdx, bandIdx, spanIdx,
           "text", "doc_id", "n_chars")
@@ -452,9 +444,8 @@ object ExtensionQueries {
       // ONE vote pass: the signed frame is checkpointed and shared by
       // candidate generation and the signature output (r9: the query
       // previously computed the per-token hash + 60 sign votes twice)
-      val sim = Dedup.signedSimHashFrame(Tables.documents(s, d), "text",
-        Dedup.md5Hash60, bits = 60)
-      val pairs = Dedup.simHashPairsFromSigned(sim, maxHamming = 3, bits = 60)
+      val sim = Dedup.signedSimHashFrame(Tables.documents(s, d))
+      val pairs = Dedup.simHashPairsFromSigned(sim)
       val perDoc = pairs
         .select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_candidates"))
@@ -562,7 +553,7 @@ object ExtensionQueries {
     // (rows-only oracle; value-verified by the e3b contract below).
     QuerySpec("e3_cosine_neardup", (s, d) => {
       Similarity.cosineNearDupPairs(Tables.embeddings(s, d),
-          threshold = -1.0, numPlanes = 8)
+          threshold = -1.0)
         .orderBy(col("cosine_sim").desc, col("a_id"), col("b_id"))
         .limit(100)
     }, oracle = None),
@@ -593,7 +584,7 @@ object ExtensionQueries {
         .withColumn("vec_id", col("vec_id") + 1000000L)
       val aug = emb.unionByName(planted).localCheckpoint(eager = false)
       val pairs = Similarity.cosineNearDupPairs(aug, threshold = 0.3,
-          numPlanes = 8, maxBucket = Int.MaxValue)
+          maxBucket = Int.MaxValue)
         .localCheckpoint(eager = false) // feeds all three contract aggregates
       val reverified = pairs
         .join(aug.select(col("vec_id").as("a_id"), col("embedding").as("av")),
@@ -900,7 +891,7 @@ object ExtensionQueries {
         .agg(grouping(col("l_returnflag")).as("__gf"),
           grouping(col("l_linestatus")).as("__gs"),
           count(lit(1)).as("cnt"),
-          graft.operators.Summaries.exactSum(col("l_quantity"), 2).as("sum_qty"))
+          graft.operators.Summaries.exactSum(col("l_quantity")).as("sum_qty"))
         .select(
           when(col("__gf") === 1, lit("ALL"))
             .otherwise(coalesce(col("l_returnflag"), lit("(null)")))
@@ -986,7 +977,7 @@ object ExtensionQueries {
     QuerySpec("v9_funnel", (s, d) => {
       EventWindows.funnel(Tables.events(s, d),
         steps = Seq("view", "click", "purchase"),
-        windowSeconds = Some(86400L))
+        windowSeconds = 86400L)
     }, oracle = Some(
       // All step comparisons run on epoch-MICROSECOND bigints: Spark
       // truncates the parquet ns timestamps to µs (nanosAsLong + div
@@ -1118,9 +1109,8 @@ object ExtensionQueries {
       // computing the votes twice (was ~10 s at sf0.1, the top-cost
       // query; the fix removes half the vote work)
       val sim = Dedup.signedPayloadSimHashFrame(
-        Multimodal.withBinaryPayload(Tables.documentsWithDups(s, d)),
-        "payload", width = 16, stride = 1, Dedup.md5Hash60, bits = 60)
-      val pairs = Dedup.simHashPairsFromSigned(sim, maxHamming = 3, bits = 60)
+        Multimodal.withBinaryPayload(Tables.documentsWithDups(s, d)))
+      val pairs = Dedup.simHashPairsFromSigned(sim)
       val perDoc = pairs
         .select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_candidates"))
@@ -1449,7 +1439,7 @@ object ExtensionQueries {
       val (books, codes) = PqArtifact(s, d)
       Similarity.pqTopKRerank(Tables.embeddings(s, d), books,
         m = PqArtifact.M, ksub = PqArtifact.KSUB, queryId = 0L,
-        k = 10, shortlist = 256, codes = Some(codes))
+        k = 10, shortlist = 256, codes = codes)
     }, oracle = None),
 
     // E17 — IVF-PQ composed ANN (the production layout: cell routing ×
@@ -1462,7 +1452,7 @@ object ExtensionQueries {
       Similarity.ivfPqTopK(Tables.embeddings(s, d), books,
         m = PqArtifact.M, ksub = PqArtifact.KSUB, queryId = 0L,
         k = 10, numCells = 16, nprobe = 8, shortlist = 128,
-        codes = Some(codes))
+        codes = codes)
     }, oracle = None),
 
     // E13 — SPARSE tf-idf cosine near-dup pairs (the lexical complement
@@ -1478,7 +1468,7 @@ object ExtensionQueries {
     // unlike the float-projection ANN queries this one hash-matches.
     QuerySpec("e13_sparse_cosine", (s, d) => {
       TextAnalysis.sparseCosinePairs(Tables.documents(s, d),
-          threshold = 0.35, maxDf = 100L, ngram = 3)
+          threshold = 0.35, maxDf = 100L)
         .orderBy(col("a_id"), col("b_id"))
     }, oracle = Some(
       """WITH w AS (SELECT doc_id, string_split(text, ' ') AS wd FROM documents),
@@ -1524,8 +1514,7 @@ object ExtensionQueries {
     // E4 — IVF-style ANN (coarse-quantizer cells + probe; rows-only
     // oracle, recall vs brute force checked in SimilaritySpec).
     QuerySpec("e4_ivf_ann", (s, d) => {
-      Similarity.ivfTopK(Tables.embeddings(s, d), queryId = 0L, k = 10,
-        numCells = 16, nprobe = 4)
+      Similarity.ivfTopK(Tables.embeddings(s, d), queryId = 0L, k = 10)
     }, oracle = None),
 
     // E7 — symmetric int8 embedding quantization (the compression step
@@ -1670,8 +1659,7 @@ object ExtensionQueries {
     QuerySpec("e9_embed_clusters", (s, d) => {
       val emb = Tables.embeddings(s, d)
       // reused by the cluster build AND the colocation check
-      val pairs = Similarity.cosineNearDupPairs(emb, threshold = 0.3,
-          numPlanes = 8)
+      val pairs = Similarity.cosineNearDupPairs(emb, threshold = 0.3)
         .localCheckpoint(eager = false)
       val clusters = Dedup.nearDupClusters(
           emb.select(col("vec_id")), pairs, "vec_id")
@@ -1876,7 +1864,7 @@ object ExtensionQueries {
       Tables.lineitem(s, d)
         .groupBy(col("l_linestatus"))
         .pivot("l_returnflag", Seq("A", "N", "R"))
-        .agg(graft.operators.Summaries.exactSum(col("l_quantity"), 2))
+        .agg(graft.operators.Summaries.exactSum(col("l_quantity")))
         .orderBy(col("l_linestatus"))
     }, oracle = Some(
       """SELECT l_linestatus,
@@ -1901,7 +1889,7 @@ object ExtensionQueries {
         .agg(grouping(col("r_name")).as("__gr"),
           grouping(col("n_name")).as("__gn"),
           count(lit(1)).as("n_customers"),
-          graft.operators.Summaries.exactSum(col("c_acctbal"), 2).as("sum_acctbal"))
+          graft.operators.Summaries.exactSum(col("c_acctbal")).as("sum_acctbal"))
         .select(
           when(col("__gr") === 1, lit("ALL"))
             .otherwise(coalesce(col("r_name"), lit("(null)"))).as("r_name"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators._
@@ -23,7 +23,6 @@ object ParityQueries {
     Tables.read(s, sfDir, name)
 
   // Shared decimal-exact helpers
-  private val sumQty: Column => Column = c => Summaries.exactSum(c, 2)
   private val decSum = (c: String, sc: Int) =>
     s"CAST(round(sum(CAST($c AS DECIMAL(38,6))),$sc) AS DOUBLE)"
 
@@ -158,7 +157,7 @@ object ParityQueries {
     QuerySpec("f_date_cutoff", (s, d) => {
       RowOps.lastNDays(Tables.lineitem(s, d), "l_shipdate", 30)
         .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("cnt"), sumQty(col("l_quantity")).as("sum_qty"))
+        .agg(count(lit(1)).as("cnt"), Summaries.exactSum(col("l_quantity")).as("sum_qty"))
         .orderBy(col("l_returnflag"))
     }, oracle = Some(
       s"""SELECT l_returnflag, count(*) AS cnt, ${decSum("l_quantity", 2)} AS sum_qty
@@ -329,11 +328,11 @@ object ParityQueries {
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(
-          Summaries.exactSum(col("l_extendedprice"), 2).as("gross"),
-          Summaries.exactSum(col("l_extendedprice") * (lit(1) - col("l_discount")), 2)
+          Summaries.exactSum(col("l_extendedprice")).as("gross"),
+          Summaries.exactSum(col("l_extendedprice") * (lit(1) - col("l_discount")))
             .as("net"),
-          Summaries.exactSum(col("l_tax"), 2).as("sum_tax"),
-          Summaries.exactSum(col("l_quantity"), 2).as("sum_qty"))
+          Summaries.exactSum(col("l_tax")).as("sum_tax"),
+          Summaries.exactSum(col("l_quantity")).as("sum_qty"))
         .withColumn("gap", round(col("gross") - col("net"), 2))
         .withColumn("gap_pct",
           when(col("gross") > 0, round((col("gross") - col("net")) / col("gross") * 100, 2))
@@ -494,8 +493,8 @@ object ParityQueries {
       val base = li
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
-          sumQty(col("l_quantity")).as("sum_qty"),
-          Summaries.exactSum(col("l_extendedprice"), 2).as("sum_price"),
+          Summaries.exactSum(col("l_quantity")).as("sum_qty"),
+          Summaries.exactSum(col("l_extendedprice")).as("sum_price"),
           Summaries.exactAvg(col("l_quantity")).as("avg_qty"),
           min(col("l_quantity")).as("min_qty"),
           max(col("l_quantity")).as("max_qty"),
@@ -648,7 +647,7 @@ object ParityQueries {
         .join(r, col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("r_name"), col("n_name"))
         .agg(
-          Summaries.exactSum(col("l_extendedprice") * (lit(1) - col("l_discount")), 2)
+          Summaries.exactSum(col("l_extendedprice") * (lit(1) - col("l_discount")))
             .as("revenue"),
           count(lit(1)).as("n_lineitems"))
         .orderBy(col("r_name"), col("n_name"))
@@ -667,7 +666,7 @@ object ParityQueries {
       val stats = Tables.orders(s, d)
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("order_count"),
-          Summaries.exactSum(col("o_totalprice"), 2).as("total_spent"))
+          Summaries.exactSum(col("o_totalprice")).as("total_spent"))
       Tables.customer(s, d)
         .join(stats, col("c_custkey") === col("o_custkey"), "left")
         .select(
@@ -1069,7 +1068,7 @@ object ParityQueries {
     QuerySpec("w24_integration_report", (s, d) => {
       val spend = Tables.orders(s, d)
         .groupBy(col("o_custkey"))
-        .agg(Summaries.exactSum(col("o_totalprice"), 2).as("total_spend"),
+        .agg(Summaries.exactSum(col("o_totalprice")).as("total_spend"),
           count(lit(1)).as("n_orders"))
       // both report branches (summary agg, top-10 gap list) read the
       // joined frame — materialize it once instead of running the

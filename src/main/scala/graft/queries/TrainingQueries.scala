@@ -93,7 +93,7 @@ object TrainingQueries {
             .otherwise(20))
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n_sampled"),
-          Summaries.exactSum(col("l_quantity"), 2).as("sum_qty"))
+          Summaries.exactSum(col("l_quantity")).as("sum_qty"))
         .orderBy(col("l_returnflag"))
     }, oracle = Some(
       """SELECT l_returnflag, count(*) AS n_sampled,
@@ -446,7 +446,7 @@ object TrainingQueries {
           col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("l_orderkey"), col("o_orderdate"))
         .agg(Summaries.exactSum(
-          col("l_extendedprice") * (lit(1) - col("l_discount")), 2)
+          col("l_extendedprice") * (lit(1) - col("l_discount")))
           .as("revenue"))
         .select(col("l_orderkey"), col("revenue"),
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_orderdate"))
@@ -473,7 +473,7 @@ object TrainingQueries {
       Tables.events(s, d)
         .groupBy(window(col("ts"), "1 hour", "15 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
-          Summaries.exactSum(col("value"), 2).as("sum_value"))
+          Summaries.exactSum(col("value")).as("sum_value"))
         .select(unix_timestamp(col("window.start")).as("bucket_start_s"),
           col("event_type"), col("n_events"), col("sum_value"))
         .orderBy(col("bucket_start_s"), col("event_type"))
@@ -710,7 +710,7 @@ object TrainingQueries {
         .agg(grouping(col("r_name")).as("__gr"),
           grouping(col("n_name")).as("__gn"),
           count(lit(1)).as("n_customers"),
-          Summaries.exactSum(col("c_acctbal"), 2).as("sum_acctbal"))
+          Summaries.exactSum(col("c_acctbal")).as("sum_acctbal"))
         .select(
           when(col("__gr") === 1, lit("ALL"))
             .otherwise(coalesce(col("r_name"), lit("(null)"))).as("r_name"),
@@ -783,7 +783,7 @@ object TrainingQueries {
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_items"),
           Summaries.exactSum(
-            col("l_extendedprice") * (lit(1) - col("l_discount")), 2)
+            col("l_extendedprice") * (lit(1) - col("l_discount")))
             .as("revenue"))
         .orderBy(col("o_orderpriority"))
     }, oracle = Some(
@@ -1155,15 +1155,14 @@ object TrainingQueries {
         .join(srcOf, Seq("doc_id"))
         .groupBy(col("__src").as("source"))
         .agg(sum(col("n_bpe_tokens")).as("__n_bpe"))
-      val nearBySrc = Dedup.minHashLshPairs(docs, threshold = 0.3,
-          maxBucket = 100, hashFn = Dedup.md5Hash60)
+      val nearBySrc = Dedup.minHashLshPairs(docs)
         .select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
         .distinct()
         .join(srcOf, Seq("doc_id"))
         .groupBy(col("__src").as("source"))
         .agg(count(lit(1)).as("__n_near"))
       val contamBySrc = Dedup.crossGroupContaminatedIds(docs, "source",
-          "doc_id", "text", n = 8)
+          "doc_id", "text")
         .join(srcOf, Seq("doc_id"))
         .groupBy(col("__src").as("source"))
         .agg(count(lit(1)).as("__n_contam"))
@@ -1520,7 +1519,7 @@ object TrainingQueries {
     // corpus size (see Dedup.crossGroupOverlap).
     QuerySpec("t36_source_overlap", (s, d) => {
       Dedup.crossGroupOverlap(Tables.spread(Tables.documents(s, d)),
-          "source", "text", n = 8)
+          "source", "text")
         .orderBy(col("a_group"), col("b_group"))
     }, oracle = Some(
       // t36 replays the shingle recipe (d5's list_slice form at n=8, md5
@@ -2301,7 +2300,7 @@ object TrainingQueries {
         .bandJoin(li, tiers, "price_c", "lo_c", "hi_c", width = 500000L)
         .groupBy(col("tier"))
         .agg(count(lit(1)).as("n_items"),
-          Summaries.exactSum(col("l_extendedprice"), 2).as("sum_price"))
+          Summaries.exactSum(col("l_extendedprice")).as("sum_price"))
         .orderBy(col("tier"))
     }, oracle = Some(
       // j10's oracle is the plain BETWEEN join — bucket-decomposition
@@ -2332,7 +2331,7 @@ object TrainingQueries {
           .withColumn("vec_id", col("vec_id") + 1000000L))
         .localCheckpoint(eager = false) // pairs, clusters, apply share it
       val pairs = Similarity.cosineNearDupPairs(cloned,
-        threshold = 0.95, numPlanes = 8)
+        threshold = 0.95)
       Dedup.nearDupClusters(cloned, pairs, "vec_id")
         .filter(col("is_canonical"))
         .select(col("vec_id"))
@@ -2353,7 +2352,7 @@ object TrainingQueries {
           .withColumn("vec_id", col("vec_id") + 1000000L))
         .localCheckpoint(eager = false)
       val pairs = Similarity.cosineNearDupPairs(cloned,
-        threshold = 0.95, numPlanes = 8)
+        threshold = 0.95)
       val cl = Dedup.nearDupClusters(cloned, pairs, "vec_id")
         .localCheckpoint(eager = false) // feeds both aggregates below
       val planted = cl.filter(col("vec_id") >= 1000000L)
@@ -2428,8 +2427,7 @@ object TrainingQueries {
       val emb = Tables.embeddings(s, d)
       val exact = Similarity.bruteForceTopK(emb, queryId = 0L, k = 10)
         .select(col("vec_id")).localCheckpoint(eager = false)
-      val ivf = Similarity.ivfTopK(emb, queryId = 0L, k = 10,
-          numCells = 16, nprobe = 4)
+      val ivf = Similarity.ivfTopK(emb, queryId = 0L, k = 10)
         .select(col("vec_id"))
       ivf.join(exact, Seq("vec_id"), "left_semi")
         .agg((count(lit(1)) >= 8).as("recall_at_10_ge_08"))
@@ -2463,7 +2461,7 @@ object TrainingQueries {
       val pq = Similarity.pqTopKRerank(emb, books,
           m = ExtensionQueries.PqArtifact.M,
           ksub = ExtensionQueries.PqArtifact.KSUB,
-          queryId = 0L, k = 10, shortlist = 256, codes = Some(encoded))
+          queryId = 0L, k = 10, shortlist = 256, codes = encoded)
         .select(col("vec_id"))
       val recall = pq.join(exact, Seq("vec_id"), "left_semi")
         .agg((count(lit(1)) >= 8).as("ok_recall"))
@@ -2496,7 +2494,7 @@ object TrainingQueries {
           m = ExtensionQueries.PqArtifact.M,
           ksub = ExtensionQueries.PqArtifact.KSUB,
           queryId = 0L, k = 10, numCells = 16, nprobe = 8,
-          shortlist = 128, codes = Some(codes))
+          shortlist = 128, codes = codes)
         .select(col("vec_id"))
       ivfpq.join(exact, Seq("vec_id"), "left_semi")
         .agg((count(lit(1)) >= 8).as("ok_recall"))
@@ -2798,8 +2796,8 @@ object TrainingQueries {
         .rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(grouping_id().cast("long").as("gid"),
           count(lit(1)).as("n_rows"),
-          Summaries.exactSum(col("l_quantity"), 2).as("sum_qty"),
-          Summaries.exactSum(col("l_extendedprice"), 2).as("sum_price"))
+          Summaries.exactSum(col("l_quantity")).as("sum_qty"),
+          Summaries.exactSum(col("l_extendedprice")).as("sum_price"))
         .select(col("gid"),
           coalesce(col("l_returnflag"), lit("(all)")).as("returnflag"),
           coalesce(col("l_linestatus"), lit("(all)")).as("linestatus"),
@@ -4561,7 +4559,7 @@ object TrainingQueries {
         .groupBy(col("l_orderkey"), col("o_orderdate"),
           col("o_orderpriority"))
         .agg(Summaries.exactSum(
-          col("l_extendedprice") * (lit(1) - col("l_discount")), 2)
+          col("l_extendedprice") * (lit(1) - col("l_discount")))
           .as("revenue"))
         .select(col("l_orderkey"),
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("o_date"),
@@ -4619,7 +4617,7 @@ object TrainingQueries {
         .groupBy(col("n_name"))
         .agg(count(lit(1)).as("n_items"),
           Summaries.exactSum(
-            col("l_extendedprice") * (lit(1) - col("l_discount")), 2)
+            col("l_extendedprice") * (lit(1) - col("l_discount")))
             .as("revenue"))
         .orderBy(col("revenue").desc, col("n_name"))
     }, oracle = Some(
@@ -4665,7 +4663,7 @@ object TrainingQueries {
         .groupBy(col("c_custkey"), col("c_name"), col("c_nationkey"))
         .agg(count(lit(1)).as("n_items"),
           Summaries.exactSum(
-            col("l_extendedprice") * (lit(1) - col("l_discount")), 2)
+            col("l_extendedprice") * (lit(1) - col("l_discount")))
             .as("revenue"))
       grouped
         .join(broadcast(Tables.nation(s, d)
@@ -4793,7 +4791,7 @@ object TrainingQueries {
       // md5 explode is paid once for the d18/d20 pair
       val (injected, sh) = InjectedShingles(s, d)
       Dedup.substringRuns(injected, "doc_id", "text", width = 8,
-          shingles = Some(sh))
+          shingles = sh)
         .orderBy(col("doc_id"))
     }, oracle = Some(
       // d18 replays the injection, the per-position 8-token shingles, the
@@ -4850,7 +4848,7 @@ object TrainingQueries {
     QuerySpec("d20_exact_dup_span", (s, d) => {
       val (injected, sh) = InjectedShingles(s, d)
       Dedup.exactDupSpan(injected, "doc_id", "text",
-        width = 8, maxLen = 64, shingles = Some(sh))
+        width = 8, maxLen = 64, shingles = sh)
     }, oracle = Some(
       // d20 re-derives the exact answer by BRUTE FORCE over every
       // candidate length 8..64 (no binary search — an independent
@@ -4943,7 +4941,7 @@ object TrainingQueries {
     QuerySpec("q18_large_orders", (s, d) => {
       val big = Tables.lineitem(s, d)
         .groupBy(col("l_orderkey"))
-        .agg(Summaries.exactSum(col("l_quantity"), 2).as("sum_qty"))
+        .agg(Summaries.exactSum(col("l_quantity")).as("sum_qty"))
         .filter(col("sum_qty") > 250)
       Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -5174,7 +5172,7 @@ object TrainingQueries {
           year(col("l_shipdate")).cast("long").as("yr"))
         .agg(count(lit(1)).as("n_items"),
           Summaries.exactSum(
-            col("l_extendedprice") * (lit(1) - col("l_discount")), 2)
+            col("l_extendedprice") * (lit(1) - col("l_discount")))
             .as("revenue"))
         .orderBy(col("supp_nation"), col("cust_nation"), col("yr"))
     }, oracle = Some(
@@ -5226,7 +5224,7 @@ object TrainingQueries {
           col("s_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"),
           year(col("o_orderdate")).cast("long").as("yr"))
-        .agg(Summaries.exactSum(amount, 2).as("sum_profit"))
+        .agg(Summaries.exactSum(amount).as("sum_profit"))
         .orderBy(col("n_name"), col("yr"))
     }, oracle = Some(
       """SELECT n_name, yr,
@@ -5306,7 +5304,7 @@ object TrainingQueries {
               && col("l_quantity").between(20, 40))))
         .agg(count(lit(1)).as("n_items"),
           Summaries.exactSum(
-            col("l_extendedprice") * (lit(1) - col("l_discount")), 2)
+            col("l_extendedprice") * (lit(1) - col("l_discount")))
             .as("revenue"))
     }, oracle = Some(
       """SELECT count(*) AS n_items,
@@ -5489,7 +5487,7 @@ object TrainingQueries {
           && col("l_discount").between(0.03, 0.05)
           && col("l_quantity") < 24)
         .agg(Summaries.exactSum(
-            col("l_extendedprice") * col("l_discount"), 2).as("revenue"),
+            col("l_extendedprice") * col("l_discount")).as("revenue"),
           count(lit(1)).as("n_items"))
     }, oracle = Some(
       """SELECT CAST(round(sum(CAST(l_extendedprice * l_discount
@@ -5581,7 +5579,7 @@ object TrainingQueries {
         .select(col("l_partkey"), col("l_suppkey"), col("l_extendedprice"))
         .join(natSupp, col("l_suppkey") === col("s_suppkey"))
         .groupBy(col("l_partkey"))
-        .agg(Summaries.exactSum(col("l_extendedprice"), 2)
+        .agg(Summaries.exactSum(col("l_extendedprice"))
           .as("part_value"))
         .localCheckpoint(eager = false) // threshold + filter share it
       val threshold = value.agg(
@@ -5676,7 +5674,7 @@ object TrainingQueries {
           && col("l_shipdate") < lit("1996-04-01").cast("timestamp"))
         .groupBy(col("l_suppkey").as("supplier_no"))
         .agg(Summaries.exactSum(
-          col("l_extendedprice") * (lit(1) - col("l_discount")), 2)
+          col("l_extendedprice") * (lit(1) - col("l_discount")))
           .as("total_revenue"))
         .localCheckpoint(eager = false) // argmax + filter share it
       val top = rev.agg(max(col("total_revenue")).as("max_rev"))

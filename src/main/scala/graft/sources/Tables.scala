@@ -96,10 +96,9 @@ object Tables {
   }
 
   /** S5 — CSV export sink (reference `df.to_csv`, streamlit_app.py:651-657).
-    * `coalesce(1)` mirrors the reference's single-file download contract;
-    * drop it for sharded exports at scale. */
-  def exportCsv(df: DataFrame, path: String, singleFile: Boolean = true): Unit =
-    (if (singleFile) df.coalesce(1) else df)
+    * `coalesce(1)` mirrors the reference's single-file download contract. */
+  def exportCsv(df: DataFrame, path: String): Unit =
+    df.coalesce(1)
       .write.mode("overwrite").option("header", "true").csv(path)
 
   /** Small-files compaction — the table-maintenance pass every
@@ -114,15 +113,12 @@ object Tables {
     * Safety: the parquet read is LAZY, so `mode("overwrite")` deletes
     * its target before a single input row is materialized — compacting
     * in place (or into a parent of the input) would destroy the table.
-    * Both layouts are rejected on canonicalized paths. A
-    * `partitionBy`-laid-out input must pass its partition columns via
-    * `partitionCols`: partition discovery folds them into data columns,
-    * and a flat rewrite would silently drop the directory layout (and
-    * with it partition pruning) on e.g. the s9 day-partitioned sink.
-    * With `partitionCols` set, `targetFiles` caps files PER leaf task —
-    * each coalesced task writes one file per partition value it holds. */
+    * Both layouts are rejected on canonicalized paths. The rewrite is
+    * flat: partition discovery folds a `partitionBy` input's partition
+    * columns into data columns, so its directory layout (and partition
+    * pruning) does not survive. */
   def compact(spark: SparkSession, inDir: String, outDir: String,
-      targetFiles: Int, partitionCols: Seq[String] = Nil): Unit = {
+      targetFiles: Int): Unit = {
     val in = java.nio.file.Paths.get(inDir).toAbsolutePath.normalize
     val out = java.nio.file.Paths.get(outDir).toAbsolutePath.normalize
     require(in != out,
@@ -134,9 +130,7 @@ object Tables {
       s"compact() output $out inside the input $in — the next read of " +
         "the table would pick up originals plus the compacted copy and " +
         "double-count every row")
-    val df = parquet(spark, inDir).coalesce(targetFiles)
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(outDir)
+    parquet(spark, inDir).coalesce(targetFiles)
+      .write.mode("overwrite").parquet(outDir)
   }
 }

@@ -30,6 +30,14 @@ object StreamingOps {
     StructField("props", StringType)
   ))
 
+  /** Column names of the streamed document frames (the `documents`
+    * table's) and the event metric key. */
+  private val textCol = "text"
+  private val idCol = "doc_id"
+  private val srcCol = "source"
+  private val nCharsCol = "n_chars"
+  private val keyCol = "event_type"
+
   /** File-based streaming source over a directory of event parquet. */
   def readEventStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(eventSchema).parquet(dir)
@@ -58,7 +66,11 @@ object StreamingOps {
         col("n_events"), col("sum_value"))
 
   /** Session windows with an inactivity gap — the streaming-native form
-    * of EventWindows.sessionize (state: one open session per key). */
+    * of EventWindows.sessionize (state: one open session per key). Both
+    * split iff gap > g, but `session_window` measures the gap at full
+    * timestamp precision while `sessionize` truncates to seconds, so the
+    * two agree on second-truncated data (the v2 parity test stages
+    * that). */
   def sessionCounts(events: DataFrame, gap: String): DataFrame =
     events
       .withWatermark("ts", "10 minutes")
@@ -150,9 +162,9 @@ object StreamingOps {
     * or accept per-batch ordering as the online approximation —
     * exactly the contract `statefulSessions` documents and
     * StreamingSpec proves for in-order feeds). */
-  def rollingZScoreStream(events: org.apache.spark.sql.Dataset[Event],
-      window: Int = 8, zCut: Double = 3.0)
+  def rollingZScoreStream(events: org.apache.spark.sql.Dataset[Event])
       : org.apache.spark.sql.Dataset[ZOut] = {
+    val (window, zCut) = (8, 3.0)
     import events.sparkSession.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import scala.math.BigDecimal.RoundingMode.HALF_UP
@@ -234,83 +246,6 @@ object StreamingOps {
               .setScale(2, scala.math.BigDecimal.RoundingMode.HALF_UP)
               .toDouble))
       }
-  }
-
-  /** One Misra-Gries sketch per shard: bounded-state streaming heavy
-    * hitters. `n_processed` carries the shard's stream size so the
-    * consumer can evaluate the n/(k+1) error bound per shard. The
-    * counters travel as parallel arrays (the state encoder rejects
-    * MapType); [[ShardHitters.counters]] restores the map view. */
-  case class ShardHitters(shard: Long, n_processed: Long,
-      keys: Seq[Long], counts: Seq[Long]) {
-    def counters: Map[Long, Long] = keys.zip(counts).toMap
-  }
-  object ShardHitters {
-    def of(shard: Long, n: Long, m: Map[Long, Long]): ShardHitters = {
-      val ks = m.keys.toSeq.sorted // deterministic row layout
-      ShardHitters(shard, n, ks, ks.map(m))
-    }
-  }
-
-  /** STREAMING heavy hitters — the SURVEY §7.4 "streaming top-k"
-    * extension: each shard of the key space folds its arrivals into a
-    * [[graft.functions.MisraGriesAggregator]] sketch held in a
-    * ValueState slot — AT MOST k counters per shard FOREVER, however
-    * many distinct keys the stream carries (the bounded-state
-    * discipline that separates a streaming sketch from an exact
-    * per-key count whose RocksDB state grows with key cardinality).
-    * Each micro-batch emits the shard's updated sketch (Update mode);
-    * the consumer merges the final per-shard rows with the PODS'12
-    * merge ([[mergeHitters]]) into one corpus-level sketch whose error
-    * bound is the SUM of the shard bounds — the same guarantee algebra
-    * the batch w30 contract query asserts, proven batch-vs-stream in
-    * StatefulStreamingSpec. Sharding by key-hash keeps every
-    * occurrence of one key in one sketch (estimates stay
-    * underestimates; no cross-shard double counting). */
-  class HeavyHittersProcessor(k: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, Event, ShardHitters] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-    private val mg = new graft.functions.MisraGriesAggregator(k)
-    @transient private var st: ValueState[ShardHitters] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[ShardHitters]("mgState",
-        org.apache.spark.sql.Encoders.product[ShardHitters], TTLConfig.NONE)
-
-    override def handleInputRows(shard: Long, rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[ShardHitters] = {
-      val prev =
-        if (st.exists()) st.get()
-        else ShardHitters(shard, 0L, Seq.empty, Seq.empty)
-      var m = prev.counters
-      var n = prev.n_processed
-      rows.foreach { e =>
-        m = mg.reduce(m, java.lang.Long.valueOf(e.user_id)); n += 1
-      }
-      val next = ShardHitters.of(shard, n, m)
-      st.update(next)
-      Iterator(next)
-    }
-  }
-
-  /** [[HeavyHittersProcessor]] over a `user_id % shards` keyed stream.
-    * Requires the RocksDB state-store provider (transformWithState). */
-  def streamingHeavyHitters(events: org.apache.spark.sql.Dataset[Event],
-      k: Int, shards: Int): org.apache.spark.sql.Dataset[ShardHitters] = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    events
-      .groupByKey(e => math.floorMod(e.user_id, shards.toLong))
-      .transformWithState(new HeavyHittersProcessor(k),
-        TimeMode.None(), OutputMode.Update())
-  }
-
-  /** PODS'12 merge of the final per-shard sketches into one
-    * corpus-level MG sketch (≤ k counters; error ≤ Σ shard n/(k+1)). */
-  def mergeHitters(shards: Seq[Map[Long, Long]], k: Int): Map[Long, Long] = {
-    val mg = new graft.functions.MisraGriesAggregator(k)
-    shards.foldLeft(Map.empty[Long, Long])(mg.merge)
   }
 
   /** One open session per key. */
@@ -450,8 +385,7 @@ object StreamingOps {
     * detected by an explicit existence check, so a CORRUPT index fails
     * loudly instead of silently disabling dedup. */
   def incrementalIngest(docsStream: DataFrame, indexDir: String,
-      outDir: String, checkpointDir: String,
-      textCol: String = "text", idCol: String = "doc_id")
+      outDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     docsStream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -518,14 +452,11 @@ object StreamingOps {
     * already-persisted state re-registers the tables and recovers
     * their partitions. */
   def curationIngest(docsStream: DataFrame, stateDir: String,
-      outDir: String, checkpointDir: String,
-      textCol: String = "text", idCol: String = "doc_id",
-      nCharsCol: String = "n_chars")
+      outDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     docsStream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        curationIngestBatch(batch, batchId, stateDir, outDir,
-          textCol, idCol, nCharsCol)
+        curationIngestBatch(batch, batchId, stateDir, outDir)
         () // foreachBatch wants Unit; the kept slice is for composers
       }
       .option("checkpointLocation", checkpointDir)
@@ -537,11 +468,9 @@ object StreamingOps {
     * loops — [[exportIngestBatch]] — continue from it without
     * re-reading the fates they just wrote. */
   def curationIngestBatch(batch: DataFrame, batchId: Long,
-      stateDir: String, outDir: String, textCol: String = "text",
-      idCol: String = "doc_id", nCharsCol: String = "n_chars"): DataFrame = {
+      stateDir: String, outDir: String): DataFrame = {
     val spark = batch.sparkSession
-    ensureCurationStateTables(spark, stateDir, batch.limit(0),
-      textCol, idCol)
+    ensureCurationStateTables(spark, stateDir, batch.limit(0))
     val (exactIdx, bandIdx, spanIdx) =
       curationStateIndexes(spark, stateDir, excludeBatchId = batchId)
     val fates = graft.extensions.Curation.curateIncremental(batch,
@@ -551,7 +480,7 @@ object StreamingOps {
     val kept = batch.join(
       fates.filter(col("status") === "kept").select(col(idCol)),
       Seq(idCol), "left_semi")
-    advanceCurationState(kept, batchId, stateDir, textCol, idCol)
+    advanceCurationState(kept, batchId, stateDir)
     kept
   }
 
@@ -574,16 +503,14 @@ object StreamingOps {
     * the d22s scale leg (which loads snapshots as batch 0 through the
     * same write path the stream uses). */
   def advanceCurationState(kept: DataFrame, batchId: Long,
-      stateDir: String, textCol: String = "text",
-      idCol: String = "doc_id"): Unit = {
+      stateDir: String): Unit = {
     val keptB = kept.localCheckpoint(eager = false) // three index builds
     def insert(name: String, frame: DataFrame): Unit =
       insertBatchPartition(frame, curationStateTable(stateDir, name),
         batchId)
     insert("exact", graft.extensions.Dedup.exactGroups(keptB, textCol,
       idCol).select(col("fingerprint")))
-    insert("band", graft.extensions.Dedup.minHashBandIndex(keptB,
-      hashFn = graft.extensions.Dedup.md5Hash60, maxBucket = 100))
+    insert("band", graft.extensions.Dedup.minHashBandIndex(keptB, maxBucket = 100))
     insert("span", graft.extensions.Dedup.shingleIndex(keptB, idCol,
       textCol, width = 8))
   }
@@ -674,8 +601,7 @@ object StreamingOps {
     * snapshot as batch 0) can create the tables before calling
     * [[advanceCurationState]] without running a curation pass. */
   def ensureCurationStateTables(spark: SparkSession,
-      stateDir: String, empty: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id"): Unit = {
+      stateDir: String, empty: DataFrame): Unit = {
     def ensure(name: String, schemaDonor: DataFrame, key: String): Unit = {
       val t = curationStateTable(stateDir, name)
       if (!spark.catalog.tableExists(t)) {
@@ -698,8 +624,7 @@ object StreamingOps {
     }
     ensure("exact", graft.extensions.Dedup.exactGroups(empty, textCol,
       idCol).select(col("fingerprint")), "fingerprint")
-    ensure("band", graft.extensions.Dedup.minHashBandIndex(empty,
-      hashFn = graft.extensions.Dedup.md5Hash60, maxBucket = 100),
+    ensure("band", graft.extensions.Dedup.minHashBandIndex(empty, maxBucket = 100),
       "bhash")
     ensure("span", graft.extensions.Dedup.shingleIndex(empty, idCol,
       textCol, width = 8), "h")
@@ -749,21 +674,18 @@ object StreamingOps {
     * compaction relabels a PREFIX of batches, and the per-row `__seg`
     * witness preserves batch-major packing order through the fold).
     *
-    * The packing facts (`contextLen`/`numShards`/`seed`) are persisted
+    * The packing facts (`contextLen`/`numShards`/seed) are persisted
     * write-once at the first batch and VALIDATED on every later batch
     * and view read — a caller drifting any of them would silently
     * corrupt shard assignment or the window index (ADVICE r13). */
   def exportIngest(docsStream: DataFrame, stateDir: String,
       exportDir: String, checkpointDir: String,
-      merges: Seq[(String, String)], textCol: String = "text",
-      idCol: String = "doc_id", srcCol: String = "source",
-      nCharsCol: String = "n_chars", contextLen: Int = 256,
-      numShards: Int = 8, seed: String = "epoch42")
+      merges: Seq[(String, String)], contextLen: Int, numShards: Int)
       : org.apache.spark.sql.streaming.StreamingQuery =
     docsStream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         exportIngestBatch(batch, batchId, stateDir, exportDir, merges,
-          textCol, idCol, srcCol, nCharsCol, contextLen, numShards, seed)
+          contextLen, numShards)
       }
       .option("checkpointLocation", checkpointDir)
       .start()
@@ -772,14 +694,12 @@ object StreamingOps {
     * backfill job drive the EXACT code path the stream executes. */
   def exportIngestBatch(batch: DataFrame, batchId: Long,
       stateDir: String, exportDir: String,
-      merges: Seq[(String, String)], textCol: String = "text",
-      idCol: String = "doc_id", srcCol: String = "source",
-      nCharsCol: String = "n_chars", contextLen: Int = 256,
-      numShards: Int = 8, seed: String = "epoch42"): Unit = {
+      merges: Seq[(String, String)], contextLen: Int, numShards: Int,
+      seed: String = graft.extensions.Curation.ExportSeed): Unit = {
     val spark = batch.sparkSession
     ensureExportMeta(spark, exportDir, contextLen, numShards, seed)
     val kept = curationIngestBatch(batch, batchId, stateDir,
-        s"$exportDir/fates", textCol, idCol, nCharsCol)
+        s"$exportDir/fates")
       .select(col(idCol), col(textCol), col(srcCol))
       // the curate→tokenize materialization point (the exportDocGrain
       // barrier): the word explode AND the source join read it
@@ -966,7 +886,7 @@ object StreamingOps {
     * every written doc-grain row in batch-major packing order.
     * `contextLen` is validated against the persisted export metadata. */
   def exportManifestView(spark: SparkSession, exportDir: String,
-      contextLen: Int = 256, alpha: Double = 0.3): DataFrame = {
+      contextLen: Int): DataFrame = {
     validateExportContext(spark, exportDir, contextLen)
     graft.extensions.Curation.manifestFromCounters(
       exportState(spark, exportDir, "counters")
@@ -974,7 +894,7 @@ object StreamingOps {
         .agg(sum(col("n_docs")).as("n_docs"),
           sum(col("n_tokens")).as("n_tokens"),
           sum(col("__split_src")).as("__split_src")),
-      contextLen, alpha)
+      contextLen, graft.extensions.Curation.MixAlpha)
   }
 
   /** The incremental export's window-membership index (x3's columns):
@@ -988,7 +908,7 @@ object StreamingOps {
     * contributions. Empty before the first batch; `contextLen`
     * validated against the persisted export metadata. */
   def exportWindowsView(spark: SparkSession, exportDir: String,
-      contextLen: Int = 256): DataFrame = {
+      contextLen: Int): DataFrame = {
     validateExportContext(spark, exportDir, contextLen)
     exportState(spark, exportDir, "windows")
       .groupBy(col("shard_id"), col("seq_id"))
@@ -1033,7 +953,7 @@ object StreamingOps {
     * id — a folded batch can never be re-delivered, so its
     * overwrite-idempotence is no longer needed. */
   def compactExportState(spark: SparkSession, exportDir: String,
-      snapshotBatchId: Long, idCol: String = "doc_id"): Unit = {
+      snapshotBatchId: Long): Unit = {
     val hc = spark.sparkContext.hadoopConfiguration
     def path(s: String) = new org.apache.hadoop.fs.Path(s)
     def batchDirs(loc: org.apache.hadoop.fs.Path)
@@ -1123,14 +1043,11 @@ object StreamingOps {
     * same cut produce identical rows (ClassifierStreamSpec asserts the
     * multi-micro-batch union equals t41's batch form at the same cut). */
   def classifierScoringIngest(docsStream: DataFrame, weightsDir: String,
-      cut: Double, outDir: String, checkpointDir: String,
-      textCol: String = "text", idCol: String = "doc_id",
-      labelCol: String = "label", numBuckets: Int = 4096)
+      cut: Double, outDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     docsStream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        classifierScoringBatch(batch, batchId, weightsDir, cut, outDir,
-          textCol, idCol, labelCol, numBuckets)
+        classifierScoringBatch(batch, batchId, weightsDir, cut, outDir)
       }
       .option("checkpointLocation", checkpointDir)
       .start()
@@ -1140,16 +1057,13 @@ object StreamingOps {
     * Output rows: (idCol, model_score, kept, rule_label) — t41's
     * schema under the frozen sketch cut. */
   def classifierScoringBatch(batch: DataFrame, batchId: Long,
-      weightsDir: String, cut: Double, outDir: String,
-      textCol: String = "text", idCol: String = "doc_id",
-      labelCol: String = "label", numBuckets: Int = 4096): Unit = {
+      weightsDir: String, cut: Double, outDir: String): Unit = {
     val spark = batch.sparkSession
-    // the published model: bounded (≤ numBuckets rows) — scoredWith-
-    // Trained broadcasts it into the per-batch plan
+    // the published model: bounded (≤ 4096 hashed-feature rows) —
+    // scoredWithTrained broadcasts it into the per-batch plan
     val weights = spark.read.parquet(weightsDir)
     graft.extensions.QualityModel
-      .scoredWithTrained(batch, textCol, idCol, labelCol, weights,
-        numBuckets)
+      .scoredWithTrained(batch, textCol, idCol, "label", weights, 4096)
       .select(col(idCol), col("model_score"),
         (col("model_score") >= lit(cut)).as("kept"), col("rule_label"))
       .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
@@ -1166,14 +1080,13 @@ object StreamingOps {
     * whose per-batch content depends on prior state). History is never
     * re-scanned: per-batch cost is one partial aggregate of the batch. */
   def metricStateIngest(eventsStream: DataFrame, stateDir: String,
-      checkpointDir: String, keyCol: String = "event_type",
-      valCol: String = "value")
+      checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     eventsStream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.groupBy(col(keyCol))
           .agg(count(lit(1)).as("n"),
-            sum(col(valCol).cast("decimal(38,6)")).as("s"))
+            sum(col("value").cast("decimal(38,6)")).as("s"))
           .write.mode("overwrite").parquet(s"$stateDir/batch_id=$batchId")
         ()
       }
@@ -1200,8 +1113,8 @@ object StreamingOps {
     * scan instead of failing the poll (same degraded-to-absent
     * semantics). */
   def metricState(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, keyCol: String = "event_type"): DataFrame =
-    metricPartials(spark, stateDir, keyCol)
+      stateDir: String): DataFrame =
+    metricPartials(spark, stateDir)
       .groupBy(col(keyCol))
       .agg(sum(col("n")).as("n_rows"), sum(col("s")).as("s2"))
       .select(col(keyCol), col("n_rows"),
@@ -1211,8 +1124,8 @@ object StreamingOps {
   /** The committed per-batch partial rows of [[metricStateIngest]] —
     * shared by the merge-on-read ([[metricState]]) and the compaction
     * job ([[compactMetricState]]). */
-  private def metricPartials(spark: SparkSession, stateDir: String,
-      keyCol: String): DataFrame = {
+  private def metricPartials(spark: SparkSession, stateDir: String)
+      : DataFrame = {
     val committed = committedMetricDirs(spark, stateDir)
     if (committed.nonEmpty)
       spark.read.option("basePath", stateDir)
@@ -1269,12 +1182,12 @@ object StreamingOps {
     * no longer needed. The production form on a transactional table
     * (Delta/Iceberg) is the same merge with the swap made atomic. */
   def compactMetricState(spark: SparkSession, stateDir: String,
-      snapshotBatchId: Long, keyCol: String = "event_type"): Unit = {
+      snapshotBatchId: Long): Unit = {
     val root = new org.apache.hadoop.fs.Path(stateDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new org.apache.hadoop.fs.Path(stateDir + ".compact_tmp")
     if (!fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")))
-      metricPartials(spark, stateDir, keyCol)
+      metricPartials(spark, stateDir)
         .groupBy(col(keyCol))
         .agg(sum(col("n")).cast("long").as("n"),
           sum(col("s")).cast("decimal(38,6)").as("s"))

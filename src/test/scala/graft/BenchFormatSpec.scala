@@ -7,8 +7,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * must never silently shrink the total into a better-looking number. */
 class BenchFormatSpec extends AnyFunSuite {
 
+  /** A line with fixed calibration fields; Bench.main always has them. */
+  private def emit(rs: Seq[Bench.QueryResult], sf: String,
+      medianQueries: Option[Seq[(String, Double)]] = None,
+      builds: Option[Seq[(String, Double)]] = None): String =
+    Bench.formatLine(rs, sf, medianQueries, warmupS = 12.5, canaryS = 0.8,
+      builds, canaryRef = 0.292, canaryProbes = Seq(0.8),
+      canarySeries = Seq(0.8))
+
   test("all-green run emits failed:0 and an empty errors map") {
-    val line = Bench.formatLine(Seq(
+    val line = emit(Seq(
       Bench.QueryResult("q1", 0.5, None),
       Bench.QueryResult("q2", 1.25, None)), "/data/sf0.1")
     assert(line.contains("\"failed\":0"))
@@ -18,7 +26,7 @@ class BenchFormatSpec extends AnyFunSuite {
   }
 
   test("forced failure shows up as an error entry and counts in the total") {
-    val line = Bench.formatLine(Seq(
+    val line = emit(Seq(
       Bench.QueryResult("q1", 0.5, None),
       Bench.QueryResult("qbad", 0.25, Some("AnalysisException"))), "/data/sf0.1")
     assert(line.contains("\"failed\":1"))
@@ -28,7 +36,7 @@ class BenchFormatSpec extends AnyFunSuite {
   }
 
   test("env-controlled strings are escaped — a quoted path cannot break the line") {
-    val line = Bench.formatLine(Seq(
+    val line = emit(Seq(
       Bench.QueryResult("q1", 0.1, Some("Weird\"Exception\\Name"))),
       "/data/sf\"0.1\\x")
     assert(line.contains("\"sf\":\"/data/sf\\\"0.1\\\\x\""))
@@ -37,9 +45,8 @@ class BenchFormatSpec extends AnyFunSuite {
 
   test("median block is additive and absent by default") {
     val rs = Seq(Bench.QueryResult("q1", 0.5, None))
-    assert(!Bench.formatLine(rs, "/x").contains("median"))
-    val line = Bench.formatLine(rs, "/x",
-      Some(Seq("q1" -> 0.4, "q2" -> 1.0)))
+    assert(!emit(rs, "/x").contains("median"))
+    val line = emit(rs, "/x", Some(Seq("q1" -> 0.4, "q2" -> 1.0)))
     assert(line.contains("\"median_queries\":{\"q1\":0.4,\"q2\":1}"))
     assert(line.contains("\"median_total\":1.4"))
     // driver-contract fields untouched by the extra block
@@ -47,13 +54,12 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(line.count(_ == '{') == line.count(_ == '}'))
   }
 
-  test("calibration + builds blocks are additive and absent by default") {
+  test("builds block absent without builds; calibration fields always emitted") {
     val rs = Seq(Bench.QueryResult("q1", 0.5, None))
-    val bare = Bench.formatLine(rs, "/x")
-    assert(!bare.contains("warmup_s") && !bare.contains("canary_s") &&
-      !bare.contains("builds"))
-    val line = Bench.formatLine(rs, "/x",
-      warmupS = Some(12.5), canaryS = Some(0.8),
+    val bare = emit(rs, "/x")
+    assert(!bare.contains("builds"))
+    assert(bare.contains("\"warmup_s\":12.5") && bare.contains("\"canary_s\":0.8"))
+    val line = emit(rs, "/x",
       builds = Some(Seq("classifier_train_score" -> 9.25,
         "pq_codebooks_encode" -> 3.0)))
     assert(line.contains("\"warmup_s\":12.5"))
@@ -73,10 +79,10 @@ class BenchFormatSpec extends AnyFunSuite {
     val line = Bench.formatLine(
       (1 to 50).map(i => Bench.QueryResult(s"q$i", i * 0.1, None)), "/x",
       medianQueries = Some((1 to 50).map(i => s"q$i" -> i * 0.1)),
-      warmupS = Some(12.5), canaryS = Some(0.31),
+      warmupS = 12.5, canaryS = 0.31,
       builds = Some(Seq("b1" -> 9.25)),
-      canaryRef = Some(0.292), canaryProbes = Some(Seq(0.41, 0.31)),
-      canarySeries = Some(Seq(0.3, 0.32, 0.9, 0.31)))
+      canaryRef = 0.292, canaryProbes = Seq(0.41, 0.31),
+      canarySeries = Seq(0.3, 0.32, 0.9, 0.31))
     def at(k: String) = { val i = line.indexOf(k); assert(i >= 0, k); i }
     // big maps first…
     assert(at("\"median_queries\"") < at("\"queries\""))
@@ -113,11 +119,11 @@ class BenchFormatSpec extends AnyFunSuite {
     val line = Bench.formatLine(
       (1 to 300).map(i => Bench.QueryResult(s"q$i", i * 0.01, None)), "/x",
       medianQueries = Some((1 to 300).map(i => s"q$i" -> i * 0.01)),
-      warmupS = Some(454.027), canaryS = Some(0.242445),
+      warmupS = 454.027, canaryS = 0.242445,
       builds = Some(Seq("b1" -> 9.25, "b2" -> 3.0)),
-      canaryRef = Some(0.292),
-      canaryProbes = Some(Seq(0.477863, 0.407117)),
-      canarySeries = Some(Seq(0.375262, 0.369871, 0.500966)))
+      canaryRef = 0.292,
+      canaryProbes = Seq(0.477863, 0.407117),
+      canarySeries = Seq(0.375262, 0.369871, 0.500966))
     val scalars = Seq("warmup_s" -> "454.027",
       "median_total" -> Bench.fmt((1 to 300).map(_ * 0.01).sum),
       "canary_ref" -> "0.292", "canary_s" -> "0.242445")
@@ -182,7 +188,7 @@ class BenchFormatSpec extends AnyFunSuite {
   }
 
   test("emitted line is parseable JSON with the driver's expected fields") {
-    val line = Bench.formatLine(Seq(
+    val line = emit(Seq(
       Bench.QueryResult("q1", 0.1, None),
       Bench.QueryResult("q2", 0.2, Some("SparkException"))), "/x")
     // minimal structural check without a JSON lib: balanced braces,

@@ -27,16 +27,6 @@ class EventWindowsSpec extends SparkSpec {
     assert(got == Seq((1L, 1L, 2L, 100L), (1L, 2L, 1L, 0L), (2L, 1L, 1L, 0L)))
   }
 
-  test("session_window builtin agrees with gaps-and-islands on counts") {
-    val a = EventWindows.sessionize(events, 1800)
-      .select("user_id", "session_start_s", "n_events")
-      .as[(Long, Long, Long)].collect().toSet
-    val b = EventWindows.sessionWindowAgg(events, "1800 seconds")
-      .select("user_id", "session_start_s", "n_events")
-      .as[(Long, Long, Long)].collect().toSet
-    assert(a == b)
-  }
-
   test("exactly-the-gap merges in BOTH forms; sub-second precision is the real divergence") {
     // measured boundary semantics, pinned explicitly rather than left
     // to fixtures that avoid the boundary: session_window merges
@@ -46,24 +36,26 @@ class EventWindowsSpec extends SparkSpec {
     // PRECISION: a real gap in (g, g+1) that truncates to g merges in
     // the batch form (truncated seconds) but splits in the builtin.
     // Second-truncation removes it — the streaming v2 parity transform.
+    def builtin(df: org.apache.spark.sql.DataFrame) =
+      df.groupBy(col("user_id"), session_window(col("ts"), "1800 seconds"))
+        .count()
     val boundary = Seq(
       (1L, ts(0), 1L, "view", 1.0, "{}"),
       (2L, ts(1800), 1L, "view", 2.0, "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     assert(EventWindows.sessionize(boundary, 1800).count() == 1)
-    assert(EventWindows.sessionWindowAgg(boundary, "1800 seconds").count() == 1)
+    assert(builtin(boundary).count() == 1)
     val subsec = Seq(
       (1L, new Timestamp(100L), 1L, "view", 1.0, "{}"),     // 0.1 s
       (2L, new Timestamp(1800900L), 1L, "view", 2.0, "{}")  // 1800.9 s
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     // real gap 1800.8 s > 1800 → the builtin splits ...
-    assert(EventWindows.sessionWindowAgg(subsec, "1800 seconds").count() == 2)
+    assert(builtin(subsec).count() == 2)
     // ... but the truncated-second gap is exactly 1800 → batch merges
     assert(EventWindows.sessionize(subsec, 1800).count() == 1)
     // second-truncation restores agreement at the same gap
-    assert(EventWindows.sessionWindowAgg(
-      subsec.withColumn("ts", date_trunc("second", col("ts"))),
-      "1800 seconds").count() == 1)
+    assert(builtin(
+      subsec.withColumn("ts", date_trunc("second", col("ts")))).count() == 1)
   }
 
   test("tumbling window buckets to the hour") {
@@ -101,13 +93,13 @@ class EventWindowsSpec extends SparkSpec {
       (32L, ts(210), 3L, "purchase", 0.0, "{}")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val got = EventWindows.funnel(fev, Seq("view", "click", "purchase"),
-        windowSeconds = Some(100L))
+        windowSeconds = 100L)
       .select("step", "n_users").as[(Long, Long)].collect().toSeq
     assert(got == Seq((1L, 3L), (2L, 2L), (3L, 1L)))
     // greedy earliest-qualifying step events: user 1 converts in 20 s,
     // and only user 1 reaches step 3
     val avg3 = EventWindows.funnel(fev, Seq("view", "click", "purchase"),
-        windowSeconds = Some(100L))
+        windowSeconds = 100L)
       .filter(col("step") === 3).select("avg_s_from_start")
       .as[Double].head()
     assert(avg3 == 20.0)
@@ -226,7 +218,8 @@ class EventWindowsSpec extends SparkSpec {
       // dropped by the real watermark — exactly the audit's verdict
       assert(streamedKept == Set((1000L, 1L), (1500L, 1L), (2000L, 1L)))
       val auditLate = EventWindows.watermarkAudit(
-          spark.createDataset(evs).toDF(), delaySeconds = 600L)
+          spark.createDataset(evs).toDF(), delaySeconds = 600L,
+          seqCol = "event_id")
         .filter(col("is_late")).select("event_id").as[Long].collect().toSeq
       assert(auditLate == Seq(3L))
     } finally q.stop()
@@ -284,7 +277,8 @@ class EventWindowsSpec extends SparkSpec {
       (3L, ts(500), 1L, "click", 1.0, "{}"),  // 500 < 2000-600 → late
       (4L, ts(1500), 1L, "view", 1.0, "{}")   // 1500 ≥ 2000-600 → kept
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val got = EventWindows.watermarkAudit(ev, delaySeconds = 600L)
+    val got = EventWindows.watermarkAudit(ev, delaySeconds = 600L,
+      seqCol = "event_id")
       .orderBy("event_id").select("event_id", "is_late")
       .as[(Long, Boolean)].collect().toSeq
     assert(got == Seq(1L -> false, 2L -> false, 3L -> true, 4L -> false))
@@ -296,7 +290,7 @@ class EventWindowsSpec extends SparkSpec {
     val ev = times.zipWithIndex.map { case (t, i) =>
       ((i + 1).toLong, ts(t), 1L, "view", 1.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val got = EventWindows.disorderDelays(ev)
+    val got = EventWindows.disorderDelays(ev, "event_id")
       .orderBy("event_id").select("event_id", "delay_s")
       .as[(Long, Long)].collect().toSeq
     // naive replay: delay = max over earlier arrivals of ts − own ts
@@ -308,7 +302,8 @@ class EventWindowsSpec extends SparkSpec {
     // consistency with the audit: a candidate delay D drops exactly the
     // events whose measured disorder exceeds D
     val d = 600L
-    val late = EventWindows.watermarkAudit(ev, delaySeconds = d)
+    val late = EventWindows.watermarkAudit(ev, delaySeconds = d,
+      seqCol = "event_id")
       .orderBy("event_id").select("is_late").as[Boolean].collect().toSeq
     assert(late == naive.map(_._2 > d))
   }
@@ -614,8 +609,8 @@ class StreamingSpec extends SparkSpec {
     // seconds while session_window uses full precision — a real gap in
     // (1800 s, 1801 s) would merge in batch and split in streaming.
     // On second-truncated data the two are identical at the SAME gap
-    // (sessionWindowAgg's documented precision convention, pinned at
-    // the boundary in EventWindowsSpec), so the parity below holds by
+    // (the precision convention pinned at the boundary in
+    // EventWindowsSpec), so the parity below holds by
     // construction, not by fixture luck.
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("ts"))
     val ranked = graft.sources.Tables.events(spark, sf0001)
@@ -911,74 +906,6 @@ class StatefulStreamingSpec extends SparkSpec {
       // the fixture actually exercises the interesting rows
       assert(batch.values.exists(_._2.isDefined), "no full windows scored")
     } finally q.stop()
-  }
-
-  test("streaming Misra-Gries heavy hitters: bounded state, merged guarantees hold") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.StreamingOps
-    import graft.streaming.StreamingOps.Event
-
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // the REAL sf0.001 stream with a planted hitter: every user_id%5==0
-    // event collapses onto user 1, so ~1/5 of the stream is ONE key --
-    // above the merged n/(k+1) bound, hence MUST survive the sketch
-    val evs = graft.sources.Tables.events(spark, sf0001)
-      .orderBy(col("ts"), col("event_id"))
-      .collect()
-      .map(r => Event(r.getAs[Long]("event_id"),
-        r.getAs[java.sql.Timestamp]("ts"),
-        { val u = r.getAs[Long]("user_id"); if (u % 5 == 0) 1L else u },
-        r.getAs[String]("event_type"), r.getAs[Double]("value")))
-    val k = 8
-    val shards = 4
-    val input = MemoryStream[Event]
-    val q = StreamingOps.streamingHeavyHitters(input.toDS(), k, shards)
-      .writeStream.format("memory").queryName("hh_out")
-      .outputMode("update").start()
-    try {
-      evs.grouped((evs.length + 2) / 3).foreach { chunk =>
-        input.addData(chunk.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-      val rows = spark.table("hh_out")
-        .as[StreamingOps.ShardHitters].collect().toSeq
-      // final state per shard = its highest-n emission (update mode
-      // re-emits the accumulated sketch each micro-batch)
-      val fin = rows.groupBy(_.shard)
-        .map { case (_, rs) => rs.maxBy(_.n_processed) }.toSeq
-      assert(fin.map(_.n_processed).sum == evs.length)
-      fin.foreach(r => assert(r.counters.size <= k,
-        s"shard state exceeded k: ${r.counters.size}"))
-      val merged = StreamingOps.mergeHitters(fin.map(_.counters), k)
-      assert(merged.size <= k)
-      val exact = evs.groupBy(_.user_id)
-        .map { case (u, es) => u -> es.size.toLong }
-      // the MERGED-sketch guarantee is N/(k+1) over the COMBINED
-      // stream (PODS'12) — summing per-shard floors would assert a
-      // tighter bound than the algorithm promises
-      val bound = fin.map(_.n_processed).sum / (k + 1)
-      // the planted hitter makes the capture assertion non-vacuous
-      assert(exact.exists(_._2 > bound),
-        s"fixture lost its hitter (bound $bound, max ${exact.values.max})")
-      merged.foreach { case (u, est) =>
-        val t = exact.getOrElse(u, 0L)
-        assert(est <= t, s"overestimate for $u: $est > $t")
-        assert(t - est <= bound, s"error bound broken for $u")
-      }
-      exact.filter(_._2 > bound).keys.foreach(u =>
-        assert(merged.contains(u), s"heavy hitter $u lost"))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
   }
 
   test("event-time-timer sessionization closes sessions at the watermark, matching batch semantics") {

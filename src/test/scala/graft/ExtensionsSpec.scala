@@ -26,7 +26,7 @@ class DedupSpec extends SparkSpec {
       ("gB", "a b c d e f g h x"),
       ("gC", "z y x w v u t s")
     ).toDF("source", "text")
-    val got = Dedup.crossGroupOverlap(docs, "source", "text", n = 8)
+    val got = Dedup.crossGroupOverlap(docs, "source", "text")
       .as[(String, String, Long, Double)].collect().toSeq
     assert(got == Seq(("gA", "gB", 1L, 0.5)))
   }
@@ -48,8 +48,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("MinHash-LSH surfaces exact and near dup candidates") {
-    val pairs = Dedup.minHashLshPairs(docs, numHashes = 32, bands = 8,
-        threshold = 0.5)
+    val pairs = Dedup.minHashLshPairs(docs)
       .collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"),
         r.getAs[Double]("est_jaccard"))).toSeq
     val exact = pairs.find(p => p._1 == 1L && p._2 == 2L)
@@ -60,7 +59,7 @@ class DedupSpec extends SparkSpec {
   test("incremental minhash matches batch docs against the snapshot index only") {
     val index = Dedup.minHashBandIndex(docs.filter(col("doc_id") <= 2))
     val pairs = Dedup.incrementalMinHashPairs(
-        docs.filter(col("doc_id") >= 3), index, threshold = 0.3)
+        docs.filter(col("doc_id") >= 3), index)
       .select("new_id", "old_id").as[(Long, Long)].collect().toSet
     // doc 3 is a one-word edit of snapshot docs 1/2; doc 4 shares nothing
     assert(pairs.contains((3L, 1L)) && pairs.contains((3L, 2L)))
@@ -110,7 +109,8 @@ class DedupSpec extends SparkSpec {
       (4L, "w1 w2 w3"),
       (5L, "x1 x2 x3 x4 y9 x1 x2 x3 x4")
     ).toDF("doc_id", "text")
-    val got = Dedup.substringRuns(sdocs, "doc_id", "text", width = 4)
+    val got = Dedup.substringRuns(sdocs, "doc_id", "text", width = 4,
+        Dedup.positionedShingleFrame(sdocs, "doc_id", "text", 4))
       .orderBy(col("doc_id"))
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(got == Seq(
@@ -135,7 +135,8 @@ class DedupSpec extends SparkSpec {
       (3L, "m b c d n"),
       (4L, "p c d e r")
     ).toDF("doc_id", "text")
-    val got = Dedup.substringRuns(chain, "doc_id", "text", width = 3)
+    val got = Dedup.substringRuns(chain, "doc_id", "text", width = 3,
+        Dedup.positionedShingleFrame(chain, "doc_id", "text", 3))
       .filter(col("doc_id") === 1L)
       .as[(Long, Long, Long, Long)].collect().head
     assert(got == ((1L, 1L, 5L, 3L)))
@@ -153,7 +154,8 @@ class DedupSpec extends SparkSpec {
       (4L, "p c d e r")
     ).toDF("doc_id", "text")
     val got = Dedup.exactDupSpan(chain, "doc_id", "text",
-        width = 3, maxLen = 8)
+        width = 3, maxLen = 8,
+        Dedup.positionedShingleFrame(chain, "doc_id", "text", 3))
       .as[(Long, Long, Long)].collect().head
     assert(got == ((3L, 6L, 4L)))
     // single-source duplication (the planted block): exact answer MEETS
@@ -163,7 +165,8 @@ class DedupSpec extends SparkSpec {
       (2L, "q1 q2 q3 q4 q5 s1 s2 s3 s4 s5 s6 s7 s8 u1 u2 u3")
     ).toDF("doc_id", "text")
     val block = Dedup.exactDupSpan(sdocs, "doc_id", "text",
-        width = 4, maxLen = 16)
+        width = 4, maxLen = 16,
+        Dedup.positionedShingleFrame(sdocs, "doc_id", "text", 4))
       .as[(Long, Long, Long)].collect().head
     assert(block == ((8L, 2L, 2L)))
     // no duplication at the width grain → explicit zeros, not an
@@ -171,7 +174,8 @@ class DedupSpec extends SparkSpec {
     val clean = Seq((1L, "v1 v2 v3 v4 v5 v6"), (2L, "w1 w2 w3 w4 w5"))
       .toDF("doc_id", "text")
     val zero = Dedup.exactDupSpan(clean, "doc_id", "text",
-        width = 4, maxLen = 8)
+        width = 4, maxLen = 8,
+        Dedup.positionedShingleFrame(clean, "doc_id", "text", 4))
       .as[(Long, Long, Long)].collect().head
     assert(zero == ((0L, 0L, 0L)))
   }
@@ -288,8 +292,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("SimHash: identical docs collide at hamming 0, unrelated docs do not") {
-    // maxHamming = 3 is the radius the 4-chunk blocking fully guarantees
-    val pairs = Dedup.simHashPairs(docs, maxHamming = 3)
+    // Hamming 3 is the radius the 4-chunk blocking fully guarantees
+    val pairs = Dedup.simHashPairsFromSigned(Dedup.signedSimHashFrame(docs))
       .collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"),
         r.getAs[Long]("hamming"))).toSeq
     val exact = pairs.find(p => p._1 == 1L && p._2 == 2L)
@@ -355,21 +359,20 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("SRP near-dup bucketing finds same-direction vectors") {
-    val pairs = Similarity.cosineNearDupPairs(vecs, threshold = 0.99,
-        numPlanes = 8)
+    val pairs = Similarity.cosineNearDupPairs(vecs, threshold = 0.99)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(pairs.contains((0L, 1L)))
   }
 
   test("incremental ANN finds the planted near-dup of an indexed vector") {
     val index = Similarity.srpBucketIndex(
-      vecs.filter(col("vec_id") <= 1), numPlanes = 4)
+      vecs.filter(col("vec_id") <= 1))
     val batch = Seq(
       (10L, Array(1.0f, 0.01f, 0.0f), 0),  // near-dup of indexed 0 and 1
       (11L, Array(0.0f, 1.0f, 0.0f), 1)    // orthogonal — below threshold
     ).toDF("vec_id", "embedding", "label")
     val got = Similarity.incrementalAnnPairs(batch, index,
-        threshold = 0.9, numPlanes = 4)
+        threshold = 0.9)
       .select("new_id", "old_id").as[(Long, Long)].collect().toSet
     assert(got == Set((10L, 0L), (10L, 1L)))
   }
@@ -387,7 +390,7 @@ class SimilaritySpec extends SparkSpec {
     val books = Similarity.pqCodebooks(pvecs, m = 2, ksub = 2, iters = 1)
     assert(books.count() == 4) // 2 subspaces × 2 codewords
     val adc = Similarity.pqTopK(pvecs, books, m = 2, ksub = 2,
-        queryId = 0L, k = 3)
+        queryId = 0L, k = 3, codes = Similarity.pqEncode(pvecs, books, 2))
       .select("vec_id", "approx_cos").as[(Long, Double)].collect().toMap
     val exact = Similarity.bruteForceTopK(pvecs, queryId = 0L, k = 3)
       .select("vec_id", "cosine_sim").as[(Long, Double)].collect().toMap
@@ -405,7 +408,8 @@ class SimilaritySpec extends SparkSpec {
     val brute = Similarity.bruteForceTopK(emb, 0L, 500)
       .select("vec_id", "cosine_sim").as[(Long, Double)].collect().toMap
     val pq = Similarity.pqTopKRerank(emb, books, m = 8, ksub = 16,
-        queryId = 0L, k = 5, shortlist = 32)
+        queryId = 0L, k = 5, shortlist = 32,
+        codes = Similarity.pqEncode(emb, books, 8))
       .select("vec_id", "cosine_sim").as[(Long, Double)].collect().toSeq
     // the unit-level claim: re-ranked scores are EXACT cosines (ADC
     // error cannot leak into emitted values), descending order holds
@@ -422,7 +426,7 @@ class SimilaritySpec extends SparkSpec {
   test("srpBucketIndex caps degenerate buckets to min-id exemplars") {
     val clones = (0L until 20L).map(i => (i, Array(1.0f, 0.0f, 0.0f), 0))
       .toDF("vec_id", "embedding", "label")
-    val idx = Similarity.srpBucketIndex(clones, numPlanes = 4, maxBucket = 5)
+    val idx = Similarity.srpBucketIndex(clones, maxBucket = 5)
       .select("vec_id").as[Long].collect().toSeq.sorted
     assert(idx == Seq(0L, 1L, 2L, 3L, 4L))
   }
@@ -465,11 +469,11 @@ class SimilaritySpec extends SparkSpec {
     val m = graft.queries.ExtensionQueries.PqArtifact.M
     val ksub = graft.queries.ExtensionQueries.PqArtifact.KSUB
     val full = Similarity.pqTopKRerank(emb, books, m, ksub, queryId = 0L,
-        k = 10, shortlist = 64, codes = Some(codes))
+        k = 10, shortlist = 64, codes = codes)
       .select("vec_id", "cosine_sim").as[(Long, Double)].collect().toSeq
     val ivfpq = Similarity.ivfPqTopK(emb, books, m, ksub, queryId = 0L,
         k = 10, numCells = 8, nprobe = 8, shortlist = 64,
-        codes = Some(codes))
+        codes = codes)
       .select("vec_id", "cosine_sim").as[(Long, Double)].collect().toSeq
     assert(ivfpq == full)
   }
@@ -575,7 +579,7 @@ class TextAnalysisSpec extends SparkSpec {
       (4L, "alpha beta gamma zeta eta theta")  // overlaps both camps
     ).toDF("doc_id", "text")
     val pairs = TextAnalysis
-      .sparseCosinePairs(docs, threshold = 0.0, maxDf = 10, ngram = 3)
+      .sparseCosinePairs(docs, threshold = 0.0, maxDf = 10)
       .collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(pairs((1L, 2L)) == 1.0)
@@ -588,12 +592,12 @@ class TextAnalysisSpec extends SparkSpec {
     // thresholding keeps only the clone pair once it clears the partials
     val thresh = pairs.values.filter(_ < 1.0).max + 0.01
     val kept = TextAnalysis
-      .sparseCosinePairs(docs, threshold = thresh, maxDf = 10, ngram = 3)
+      .sparseCosinePairs(docs, threshold = thresh, maxDf = 10)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(kept == Set((1L, 2L)))
     // maxDf = 1 prunes every shingle two docs share → no pairs survive
     assert(TextAnalysis
-      .sparseCosinePairs(docs, threshold = 0.0, maxDf = 1, ngram = 3)
+      .sparseCosinePairs(docs, threshold = 0.0, maxDf = 1)
       .count() == 0)
   }
 
@@ -752,8 +756,8 @@ class MultimodalSpec extends SparkSpec {
   test("payload SimHash: planted near-identical byte payloads cluster, disjoint ones don't") {
     import spark.implicits._
     // SimHash vote math sets the fixture scale: a single flipped byte
-    // corrupts `width` stride-1 shingles, and a signature bit flips
-    // when that disturbance (sd ≈ 2√width) beats the bit's vote margin
+    // corrupts the 16 stride-1 shingles covering it, and a signature bit
+    // flips when that disturbance (sd ≈ 2√16) beats the bit's vote margin
     // (sd ≈ √n_shingles) — so "near-identical" at Hamming ≤ 3 means
     // the corrupted FRACTION must be ~0.1%, not "a couple of edits in
     // a short string" (the first fixture draft flipped 2 bytes of 800
@@ -775,9 +779,9 @@ class MultimodalSpec extends SparkSpec {
     val df = Seq((1L, base), (2L, near), (3L, other), (4L, "tiny"),
         (5L, base))
       .toDF("doc_id", "text")
-    val pairs = Dedup.payloadSimHashPairs(
-        Multimodal.withBinaryPayload(df), "payload", width = 8, stride = 1,
-        maxHamming = 3)
+    // the m6 path: one signed frame, pairs over it
+    val signed = Dedup.signedPayloadSimHashFrame(Multimodal.withBinaryPayload(df))
+    val pairs = Dedup.simHashPairsFromSigned(signed)
       .collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"),
         r.getAs[Long]("hamming"))).toSeq
     // exactly the planted cluster {1, 2, 5}; nothing touches 3 or 4
@@ -787,8 +791,6 @@ class MultimodalSpec extends SparkSpec {
     assert(byPair((1L, 5L)) == 0L) // byte-identical clone: Hamming 0
     assert(byPair((1L, 2L)) <= 3L && byPair((1L, 2L)) == byPair((2L, 5L)))
     // sub-width payloads are dropped before signing (nothing to vote)
-    val signed = Dedup.withPayloadSimHash(
-      Multimodal.withBinaryPayload(df), "payload", width = 8)
     assert(signed.select("doc_id").as[Long].collect().toSet ==
       Set(1L, 2L, 3L, 5L))
   }
@@ -849,7 +851,7 @@ class MultimodalSpec extends SparkSpec {
     // height >= 1 by construction; aspect bound above 1920/1)
     val got = Multimodal.pairCuration(
         Multimodal.withBinaryPayload(docs), side,
-        minDim = 1, maxAspect = 1e9, minCapToks = 10, maxCapToks = 40)
+        minDim = 1, maxAspect = 1e9)
       .orderBy("doc_id")
       .select("doc_id", "width", "height", "cap_tokens", "fate")
       .as[(Long, Long, Long, Long, String)].collect().toSeq
@@ -866,7 +868,7 @@ class MultimodalSpec extends SparkSpec {
     // every later rule (first-failing precedence from the top)
     val strict = Multimodal.pairCuration(
         Multimodal.withBinaryPayload(docs), side,
-        minDim = 1921, maxAspect = 1e9, minCapToks = 10, maxCapToks = 40)
+        minDim = 1921, maxAspect = 1e9)
       .select("fate").as[String].collect().toSeq
     assert(strict == Seq("too_small", "too_small", "too_small"))
     // presence is a SET question: a sidecar with duplicate doc_ids
@@ -874,7 +876,7 @@ class MultimodalSpec extends SparkSpec {
     val dupSide = Seq(3L, 3L, 3L).toDF("doc_id")
     val dedup = Multimodal.pairCuration(
         Multimodal.withBinaryPayload(docs), dupSide,
-        minDim = 1, maxAspect = 1e9, minCapToks = 10, maxCapToks = 40)
+        minDim = 1, maxAspect = 1e9)
     assert(dedup.count() == 3L)
     assert(dedup.filter(col("doc_id") === 3L && col("fate") === "kept")
       .count() == 1L)
@@ -1087,7 +1089,7 @@ class QualityFilterSpec extends SparkSpec {
 class KMeansIvfSpec extends SparkSpec {
   import org.apache.spark.sql.functions.col
 
-  test("k-means quantizer keeps k cells and trained IVF retains recall") {
+  test("k-means quantizer keeps k cells and IVF retains recall") {
     val emb = graft.sources.Tables.embeddings(spark, sf0001)
     val trained = Similarity.kMeansCentroids(emb, k = 8, iters = 2)
     assert(trained.count() == 8)
@@ -1095,8 +1097,7 @@ class KMeansIvfSpec extends SparkSpec {
 
     val exact = Similarity.bruteForceTopK(emb, 0L, 10)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    val ivf = Similarity.ivfTopK(emb, 0L, 10, numCells = 8, nprobe = 3,
-        trainIters = 2)
+    val ivf = Similarity.ivfTopK(emb, 0L, 10)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert((ivf & exact).size >= 5, s"recall ${(ivf & exact).size}/10")
   }
@@ -1581,8 +1582,7 @@ class CurationIncrementalSpec extends SparkSpec {
   private lazy val fates = {
     val exactIdx = Dedup.exactGroups(state, "text", "doc_id")
       .select(col("fingerprint"))
-    val bandIdx = Dedup.minHashBandIndex(state, numHashes = 32, bands = 8,
-      hashFn = Dedup.md5Hash60, maxBucket = 100)
+    val bandIdx = Dedup.minHashBandIndex(state, maxBucket = 100)
     val spanIdx = Dedup.shingleIndex(state, "doc_id", "text", width = 8)
     Curation.curateIncremental(batch, exactIdx, bandIdx, spanIdx,
         "text", "doc_id", "n_chars")
@@ -1614,11 +1614,8 @@ class CurationIncrementalSpec extends SparkSpec {
       fates.filter(_._2 == "kept").keySet.toSeq ++
         fates.filter(_._2 == "near_dup_state").keySet.toSeq ++
         fates.filter(_._2 == "span_dup_state").keySet.toSeq: _*))
-    val bandIdx = Dedup.minHashBandIndex(state, numHashes = 32, bands = 8,
-      hashFn = Dedup.md5Hash60, maxBucket = 100)
-    val nearIds = Dedup.incrementalMinHashPairs(slice, bandIdx,
-        numHashes = 32, bands = 8, threshold = 0.3,
-        hashFn = Dedup.md5Hash60)
+    val bandIdx = Dedup.minHashBandIndex(state, maxBucket = 100)
+    val nearIds = Dedup.incrementalMinHashPairs(slice, bandIdx)
       .select("new_id").as[Long].collect().toSet
     assert(fates.filter(_._2 == "near_dup_state").keySet == nearIds)
     val spanIdx = Dedup.shingleIndex(state, "doc_id", "text", width = 8)

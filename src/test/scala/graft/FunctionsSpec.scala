@@ -159,7 +159,7 @@ class FunctionsSpec extends SparkSpec {
       assert(r.getLong(1) == r.getLong(2),
         s"doc ${r.getLong(0)}: ${r.getLong(1)} vs ${r.getLong(2)}")
     }
-    // expression-level edges on 64 bits (the xxhash64 default form):
+    // expression-level edges on 64 bits (the widest fingerprint):
     // null array and empty array → fingerprint 0 (never null); a null
     // ELEMENT votes −1 on every bit exactly like the lambda's
     // otherwise(-1) branch; sign bit (j=63) uses the same arithmetic

@@ -321,19 +321,16 @@ class ScaleSpec extends SparkSpec {
     assert(csRows == cbRows)
   }
 
-  test("IVF ANN returns true cosine scores; probing more cells only helps") {
+  test("IVF ANN returns true cosine scores") {
     val emb = Tables.embeddings(spark, sf0001)
     val brute = Similarity.bruteForceTopK(emb, 0L, 500)
       .select("vec_id", "cosine_sim")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val ivf = Similarity.ivfTopK(emb, 0L, 10, numCells = 16, nprobe = 4)
+    val ivf = Similarity.ivfTopK(emb, 0L, 10)
       .select("vec_id", "cosine_sim")
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(ivf.nonEmpty)
     ivf.foreach { case (id, sim) => assert(brute(id) == sim) }
-    val fewer = Similarity.ivfTopK(emb, 0L, 10, numCells = 16, nprobe = 1)
-      .count()
-    assert(fewer <= ivf.length)
   }
 
   test("d9 distributed CC path at bench scale agrees with union-find (and is timed)") {
@@ -388,7 +385,7 @@ class ScaleSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$tmp/bands")
     val d12 = graft.extensions.Dedup.incrementalMinHashPairs(
       docs.filter(col("doc_id") >= 400),
-      spark.read.parquet(s"$tmp/bands"), threshold = 0.3)
+      spark.read.parquet(s"$tmp/bands"))
     d12.collect()
     val p12 = d12.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
@@ -458,17 +455,6 @@ class ScaleSpec extends SparkSpec {
         Tables.compact(spark, s"$tmp/frag/child/..", s"$tmp", targetFiles = 1)
       }
       assert(parquetFiles(s"$tmp/frag") == 32, "guards must not touch input")
-
-      // a partitionBy layout survives compaction when declared: the
-      // rewritten table keeps its day=... directories (and pruning)
-      ev.withColumn("day", to_date(col("ts")))
-        .repartition(16).write.partitionBy("day").parquet(s"$tmp/pfrag")
-      Tables.compact(spark, s"$tmp/pfrag", s"$tmp/pcompact",
-        targetFiles = 2, partitionCols = Seq("day"))
-      val dayDirs = new java.io.File(s"$tmp/pcompact").listFiles
-        .count(_.getName.startsWith("day="))
-      assert(dayDirs > 0, "partition directories must be preserved")
-      assert(spark.read.parquet(s"$tmp/pcompact").count() == ev.count())
     } finally {
       import scala.jdk.CollectionConverters._
       val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(tmp))

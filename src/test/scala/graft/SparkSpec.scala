@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,6 +24,39 @@ object SparkTestSession {
     try body
     finally saved.foreach { case (k, v) =>
       v.fold(get.conf.unset(k))(get.conf.set(k, _)) }
+  }
+
+  /** The number of Spark jobs `body` fires on this thread. Its jobs are
+    * tagged with a local property; listener events arrive in order, so
+    * once a sentinel job run after `body` is seen, every job `body`
+    * fired has been counted. */
+  def jobsFiredBy(body: => Unit): Int = {
+    val probe = "graft.test.jobProbe"
+    val jobs = new AtomicInteger
+    val sentinel = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(probe)) match {
+          case Some("body") => jobs.incrementAndGet()
+          case Some("sentinel") => sentinel.incrementAndGet()
+          case _ =>
+        }
+    }
+    val sc = get.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(probe, "body")
+      body
+      sc.setLocalProperty(probe, "sentinel")
+      get.range(1).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (sentinel.get == 0 && System.nanoTime() < deadline) Thread.sleep(10)
+      require(sentinel.get > 0, "the sentinel job never reached the listener")
+      jobs.get
+    } finally {
+      sc.setLocalProperty(probe, null)
+      sc.removeSparkListener(listener)
+    }
   }
 }
 

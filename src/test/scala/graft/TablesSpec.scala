@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, StructField, StructType}
 
@@ -41,35 +39,11 @@ class TablesSpec extends SparkSpec {
   }
 
   test("Tables.read, lineitem and events fire no Spark job") {
-    val probe = "graft.tablesSpec.probe"
-    val jobs = new AtomicInteger
-    val sentinel = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(probe)) match {
-          case Some("reads") => jobs.incrementAndGet()
-          case Some("sentinel") => sentinel.incrementAndGet()
-          case _ =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(probe, "reads")
+    val jobs = SparkTestSession.jobsFiredBy {
       Tables.read(spark, sf0001, "nation")
       Tables.lineitem(spark, sf0001)
       Tables.events(spark, sf0001)
-      // listener events arrive in order: once the sentinel job is seen,
-      // every job the reads fired has been counted
-      sc.setLocalProperty(probe, "sentinel")
-      spark.range(1).count()
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (sentinel.get == 0 && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(sentinel.get > 0, "the sentinel job never reached the listener")
-      assert(jobs.get == 0, s"${jobs.get} jobs fired by three table reads")
-    } finally {
-      sc.setLocalProperty(probe, null)
-      sc.removeSparkListener(listener)
     }
+    assert(jobs == 0, s"$jobs jobs fired by three table reads")
   }
 }

@@ -303,7 +303,8 @@ class AsOfJoinSpec extends SparkSpec {
       ("B", 1.0, 5L), ("B", 2.0, 1L),
       ("C", 7.0, 0L), ("C", 9.0, 2L) // zero weight drops
     ).toDF("g", "v", "wt")
-    val got = Summaries.weightedMedian(df, Seq("g"), col("v"), col("wt"))
+    val got = Summaries.weightedMedian(df, Seq("g"), col("v"), col("wt"),
+      Seq.empty)
       .orderBy(col("g"))
       .as[(String, Long, Double)].collect().toSeq
     assert(got == Seq(("A", 6L, 3.0), ("B", 6L, 1.0), ("C", 2L, 9.0)))
@@ -311,7 +312,8 @@ class AsOfJoinSpec extends SparkSpec {
     // lower of the two central values)
     val units = Seq(("U", 10.0, 1L), ("U", 20.0, 1L),
       ("U", 30.0, 1L), ("U", 40.0, 1L)).toDF("g", "v", "wt")
-    val lm = Summaries.weightedMedian(units, Seq("g"), col("v"), col("wt"))
+    val lm = Summaries.weightedMedian(units, Seq("g"), col("v"), col("wt"),
+      Seq.empty)
       .select("weighted_median").as[Double].collect().head
     assert(lm == 20.0)
     // fractional and NaN weights truncate to zero mass and must DROP —
@@ -319,14 +321,15 @@ class AsOfJoinSpec extends SparkSpec {
     // group whose first row "qualifies" (2·0 ≥ 0)
     val frac = Seq(("F", 1.0, 0.5), ("F", 2.0, 0.7),
       ("F", 3.0, Double.NaN)).toDF("g", "v", "wt")
-    assert(Summaries.weightedMedian(frac, Seq("g"), col("v"), col("wt"))
-      .count() == 0)
+    assert(Summaries.weightedMedian(frac, Seq("g"), col("v"), col("wt"),
+      Seq.empty).count() == 0)
     // fractional weights ≥ 1 quantize by FLOOR, not round-to-nearest:
     // 2.7 contributes mass 2 (a nearest-rounding engine would give 3
     // and flip the median to 5.0 — the cross-engine divergence the
     // explicit floor() pins down on both sides of the oracle)
     val fl = Seq(("G", 5.0, 2.7), ("G", 1.0, 2.0)).toDF("g", "v", "wt")
-    val flGot = Summaries.weightedMedian(fl, Seq("g"), col("v"), col("wt"))
+    val flGot = Summaries.weightedMedian(fl, Seq("g"), col("v"), col("wt"),
+      Seq.empty)
       .as[(String, Long, Double)].collect().head
     assert(flGot == (("G", 4L, 1.0)))
   }

@@ -86,7 +86,7 @@ object WindowPropsSpec extends Properties("graft.windows") {
       (vs, parts) =>
         import graft.operators.Summaries
         val got = vs.toDF("v").repartition(parts)
-          .agg(Summaries.exactSum(col("v"), 2).as("s"))
+          .agg(Summaries.exactSum(col("v")).as("s"))
           .as[Double].collect().head
         // the policy's exact reference: each double canonically decimal-
         // ized (Double.toString), scaled to 6 dp HALF_UP, summed exactly,
