@@ -1,17 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** X1/J4 — dictionary map with identity fallback (reference
   * `standardize_country_names`, data_cleaner.py:41-51; the 25-entry map
   * at config/constants.py:14-41).
   *
-  * Implemented as a **broadcast left join + coalesce** — the idiomatic
-  * scale-safe form: the mapping side is a bounded constant table
-  * (broadcast), the fact side streams through untouched; unmapped keys
-  * fall back to their original value exactly like the pandas
-  * `.map(...).fillna(original)`.
+  * Implemented as a **map literal lookup + coalesce** —
+  * `coalesce(element_at(map(k, v, …), key), key)`, the column form of
+  * the pandas `dict.map(...).fillna(original)`: a narrow projection, no
+  * join, no broadcast, no Spark job at construction. Unmapped keys fall
+  * back to their original value; a NULL key stays NULL.
   */
 object Standardize {
 
@@ -20,12 +20,12 @@ object Standardize {
       keyCol: String,
       mapping: Map[String, String],
       outCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val mapDf = mapping.toSeq.toDF("__map_key", "__map_value")
-    df.join(broadcast(mapDf), df(keyCol) === col("__map_key"), "left")
-      .withColumn(outCol, coalesce(col("__map_value"), col(keyCol)))
-      .drop("__map_key", "__map_value")
+    val key = col(keyCol)
+    // `map()` with no entries is typed map<void,void>: no string lookup
+    df.withColumn(outCol,
+      if (mapping.isEmpty) key
+      else coalesce(element_at(map(mapping.toSeq.sorted.flatMap {
+        case (k, v) => Seq(lit(k), lit(v)) }: _*), key), key))
   }
 
   /** The reference's OWID→API country rename rules, verbatim

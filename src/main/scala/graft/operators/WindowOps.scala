@@ -29,9 +29,8 @@ object WindowOps {
       .partitionBy(partCol)
       .orderBy(orderCols.map(col): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    fillCols.foldLeft(df) { (d, c) =>
-      d.withColumn(c, last(col(c), ignoreNulls = true).over(w))
-    }
+    df.withColumns(fillCols.map(c =>
+      c -> last(col(c), ignoreNulls = true).over(w)).toMap)
   }
 
   /** W2 — lag-diff per group (reference
@@ -70,12 +69,10 @@ object WindowOps {
       lastNonNullCols: Seq[String]): DataFrame = {
     val ordered = Window.partitionBy(partCol).orderBy(orderCols: _*)
     val full = ordered.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val withLasts = lastNonNullCols.foldLeft(df) { (d, c) =>
-      d.withColumn(c, last(col(c), ignoreNulls = true).over(full))
-    }
-    withLasts
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(partCol).orderBy(orderCols.map(_.desc): _*)))
+    df.withColumns(lastNonNullCols.map(c =>
+        c -> last(col(c), ignoreNulls = true).over(full)).toMap +
+        ("__rn" -> row_number().over(
+          Window.partitionBy(partCol).orderBy(orderCols.map(_.desc): _*))))
       .filter(col("__rn") === 1)
       .drop("__rn")
   }
@@ -102,10 +99,9 @@ object WindowOps {
     val ord = (col(dateCol) +: tieBreak)
     val w = Window.partitionBy(partCol).orderBy(ord: _*)
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val withFl = firstLastCols.foldLeft(windowed) { (d, c) =>
-      d.withColumn(s"__first_$c", first(col(c)).over(w))
-        .withColumn(s"__last_$c", last(col(c)).over(w))
-    }
+    val withFl = windowed.select(col("*") +: firstLastCols.flatMap(c => Seq(
+      first(col(c)).over(w).as(s"__first_$c"),
+      last(col(c)).over(w).as(s"__last_$c"))): _*)
     // __first_/__last_ are constant within each group (full-frame window),
     // so min() reads them back deterministically regardless of row order;
     // avg is computed as exact-decimal sum / non-null count (= pandas

@@ -13,9 +13,13 @@ import graft.operators._
   * data_cleaner.py → data_merger.py).
   *
   * Everything is lazy plan construction — one Catalyst plan end-to-end,
-  * with exactly two hash exchanges on `country_standardized` (one for
-  * the OWID window ops, one implicit in the trend aggregation) and
-  * broadcast joins everywhere a side is bounded.
+  * with broadcast joins everywhere a side is bounded. The executed plan
+  * of [[integrate]] has five exchanges: two hash exchanges on raw
+  * `country` (the cleaning's forward-fill window, computed once for the
+  * alignment branch and once for the trend branch — Spark reuses no
+  * exchange between them), two on `country_standardized` (the
+  * alignment window and the trend window + aggregation) and one
+  * single-partition exchange for the trend cutoff's max date.
   *
   * Determinism: the reference calls `datetime.now()`
   * (data_merger.py:272,291); we inject `asOf` (SURVEY.md §7.5.4).
@@ -74,18 +78,18 @@ object CovidPipeline {
     val clipCols = filtered.schema.fields.collect {
       case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
         && f.name != "latitude" && f.name != "longitude" => f.name
-    }.toSeq
-    val clipped = clipCols.foldLeft(filtered) { (d, c) =>
-      d.withColumn(c, RowOps.clipNonNegative(col(c)))
-    }
-    clipped
-      .withColumn("cases_per_100k",
-        RowOps.per100k(col("current_cases"), col("population")))
-      .withColumn("deaths_per_100k",                 // data_cleaner.py:235-238
-        RowOps.per100k(col("current_deaths"), col("population")))
-      .withColumn("case_fatality_rate",
-        RowOps.guardedRatio(col("current_deaths"), col("current_cases")))
-      .withColumn("data_source", lit("disease_sh_current"))
+    }.toSet
+    // one projection: the derived rates read the CLIPPED values
+    def clipped(c: String): Column =
+      if (clipCols(c)) RowOps.clipNonNegative(col(c)) else col(c)
+    filtered.select(filtered.columns.toSeq.map(c => clipped(c).as(c)) ++ Seq(
+      RowOps.per100k(clipped("current_cases"), clipped("population"))
+        .as("cases_per_100k"),
+      RowOps.per100k(clipped("current_deaths"), clipped("population"))
+        .as("deaths_per_100k"),                      // data_cleaner.py:235-238
+      RowOps.guardedRatio(clipped("current_deaths"), clipped("current_cases"))
+        .as("case_fatality_rate"),
+      lit("disease_sh_current").as("data_source")): _*)
   }
 
   /** W3 — temporal alignment of the historical side
@@ -146,39 +150,42 @@ object CovidPipeline {
     * candidate pool provably derives from the exact frames the merge
     * consumed, not a second cleaning that could drift. NOTE on cost:
     * the frames stay LAZY here (the pipeline's documented
-    * one-Catalyst-plan contract), so a caller running MULTIPLE actions
-    * over them (merge + report, like perfbench's covid workload) should
-    * `localCheckpoint(eager = false)` the cleaned frames to make the
-    * window-heavy cleaning stage physically run once. */
+    * one-Catalyst-plan contract), and the merge reads the cleaned OWID
+    * frame twice (alignment and trend branches), so a lazy frame runs
+    * its window-heavy cleaning twice per action. A caller running
+    * several actions over them (merge + report, like perfbench's covid
+    * workload) should `localCheckpoint(eager = false)` the cleaned
+    * frames so the cleaning physically runs once. */
   def integrateCleaned(cleanedOwid: DataFrame, cleanedApi: DataFrame,
       cfg: Config): DataFrame = {
     val merged = alignOwid(cleanedOwid)
       .join(alignApi(cleanedApi), Seq("country_standardized"), "inner")
       .join(trendMetrics(cleanedOwid), Seq("country_standardized"), "left")
-    merged
-      .withColumn("cases_data_gap",
-        RowOps.gap(col("api_current_cases"), col("owid_total_cases")))
-      .withColumn("cases_data_gap_percent",
-        RowOps.gapPercent(col("api_current_cases"), col("owid_total_cases")))
-      .withColumn("deaths_data_gap",
-        RowOps.gap(col("api_current_deaths"), col("owid_total_deaths")))
-      .withColumn("deaths_data_gap_percent",
-        RowOps.gapPercent(col("api_current_deaths"), col("owid_total_deaths")))
+    merged.select(
+      col("*"),
+      RowOps.gap(col("api_current_cases"), col("owid_total_cases"))
+        .as("cases_data_gap"),
+      RowOps.gapPercent(col("api_current_cases"), col("owid_total_cases"))
+        .as("cases_data_gap_percent"),
+      RowOps.gap(col("api_current_deaths"), col("owid_total_deaths"))
+        .as("deaths_data_gap"),
+      RowOps.gapPercent(col("api_current_deaths"), col("owid_total_deaths"))
+        .as("deaths_data_gap_percent"),
       // per-100k metrics divide by the OWID population — the reference
       // deliberately uses owid_population for both (data_merger.py:330-340)
-      .withColumn("current_cases_per_100k",
-        RowOps.per100k(col("api_current_cases"), col("owid_population")))
-      .withColumn("current_deaths_per_100k",
-        RowOps.per100k(col("api_current_deaths"), col("owid_population")))
-      .withColumn("current_case_fatality_rate",
-        RowOps.guardedRatio(col("api_current_deaths"), col("api_current_cases")))
-      .withColumn("owid_data_age_days",
-        RowOps.dataAgeDays(col("owid_date"), lit(cfg.asOf.toString).cast("date")))
+      RowOps.per100k(col("api_current_cases"), col("owid_population"))
+        .as("current_cases_per_100k"),
+      RowOps.per100k(col("api_current_deaths"), col("owid_population"))
+        .as("current_deaths_per_100k"),
+      RowOps.guardedRatio(col("api_current_deaths"), col("api_current_cases"))
+        .as("current_case_fatality_rate"),
+      RowOps.dataAgeDays(col("owid_date"), lit(cfg.asOf.toString).cast("date"))
+        .as("owid_data_age_days"),
       // X9 — reference stamps `merge_timestamp = datetime.now()`
       // (data_merger.py:272). The clock is injected (cfg.asOf) so runs
       // are reproducible and oracle-safe (SURVEY.md §7.5.4).
-      .withColumn("merge_timestamp",
-        lit(cfg.asOf.toString + " 00:00:00").cast("timestamp"))
+      lit(cfg.asOf.toString + " 00:00:00").cast("timestamp")
+        .as("merge_timestamp"))
   }
 
   /** Stable record shape of the trend output — the one place SURVEY.md
@@ -219,14 +226,18 @@ object CovidPipeline {
     * candidate_countries = distinct standardized countries present in
     * EITHER cleaned source (the merge's candidate pool), matched =
     * |merged| (the inner-join survivors), match_rate_pct their ratio.
-    * Scale shape: three bounded distinct-aggregates at country grain
-    * plus one profile pass over the merged frame — no joins beyond the
-    * pipeline's own, every 1-row side broadcast. */
+    *
+    * Plan shape: each cleaned frame is read ONCE. Their standardized
+    * countries are unioned, each row tagged with its side; one groupBy
+    * at country grain keeps a per-side presence flag, and one global
+    * aggregate over those groups yields all three distinct counts (a
+    * NULL country is one group, as `distinct()` counts it). That row
+    * is cross-joined once with the profile pass over the merged frame. */
   def matchReport(cleanedOwid: DataFrame, cleanedApi: DataFrame,
       merged: DataFrame): DataFrame = {
-    def countries(df: DataFrame, as: String): DataFrame =
-      df.select(col("country_standardized")).distinct()
-        .agg(count(lit(1)).as(as))
+    def side(df: DataFrame, owid: Boolean): DataFrame =
+      df.select(col("country_standardized"),
+        lit(owid).as("in_owid"), lit(!owid).as("in_api"))
     // in-plan 1-row guard: an empty candidate pool means the cleaning
     // stage dropped every country, and the rate below would ship as a
     // silent NULL/NaN — raise instead, AT ACTION TIME. The guard lives
@@ -235,11 +246,15 @@ object CovidPipeline {
     // building the report stays lazy (the repo's one-Catalyst-plan
     // convention) and the guard fires exactly once with the consuming
     // action rather than eagerly at construction.
-    val candidates = cleanedOwid.select(col("country_standardized"))
-      .unionByName(cleanedApi.select(col("country_standardized")))
-      .distinct().agg(count(lit(1)).as("candidate_countries"))
-      .select(
-        when(col("candidate_countries") > 0, col("candidate_countries"))
+    val candidates = count(lit(1))
+    val countries = side(cleanedOwid, owid = true)
+      .unionByName(side(cleanedApi, owid = false))
+      .groupBy(col("country_standardized"))
+      .agg(max(col("in_owid")).as("in_owid"), max(col("in_api")).as("in_api"))
+      .agg(
+        count(when(col("in_owid"), 1)).as("owid_countries"),
+        count(when(col("in_api"), 1)).as("api_countries"),
+        when(candidates > 0, candidates)
           .otherwise(raise_error(lit("no candidate countries after " +
             "cleaning — are both sources empty?")))
           .as("candidate_countries"))
@@ -253,9 +268,7 @@ object CovidPipeline {
         "api_current_deaths").flatMap(completeness) :+
         count(col("avg_daily_new_cases")).as("countries_with_trends")): _*)
     profile
-      .crossJoin(broadcast(countries(cleanedOwid, "owid_countries")))
-      .crossJoin(broadcast(countries(cleanedApi, "api_countries")))
-      .crossJoin(broadcast(candidates))
+      .crossJoin(broadcast(countries))
       .withColumn("match_rate_pct",
         round(lit(100.0) * col("matched_countries")
           / col("candidate_countries"), 1))

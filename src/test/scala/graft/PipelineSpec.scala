@@ -3,6 +3,7 @@ package graft
 import java.sql.{Date, Timestamp}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.CovidPipeline
@@ -27,13 +28,16 @@ class PipelineSpec extends SparkSpec {
   ).toDF("iso_code", "country", "date", "total_cases", "total_deaths",
     "new_cases", "new_deaths", "population")
 
-  private def apiFixture: DataFrame = Seq(
-    // (country, iso, cases, deaths, recovered, population)
+  private def apiFixture: DataFrame = apiFrame(
     ("USA", "USA", 1200L, 60L, 100L, 40000000L),
     ("Afghanistan", "AFG", 600L, 30L, 50L, 40000000L),
-    ("World", "WRL", 99999999L, 999999L, 0L, 8000000000L)
-  ).toDF("country", "iso_code", "current_cases", "current_deaths",
-    "current_recovered", "population")
+    ("World", "WRL", 99999999L, 999999L, 0L, 8000000000L))
+
+  /** (country, iso, cases, deaths, recovered, population) rows in the
+    * flattened disease.sh shape. */
+  private def apiFrame(rows: (String, String, Long, Long, Long, Long)*): DataFrame =
+    rows.toDF("country", "iso_code", "current_cases", "current_deaths",
+      "current_recovered", "population")
     .withColumn("current_active", lit(0L))
     .withColumn("current_critical", lit(0L))
     .withColumn("tests_total", lit(0L))
@@ -164,6 +168,60 @@ class PipelineSpec extends SparkSpec {
     assert(r.getAs[Long]("api_current_deaths_available") == 3L)
     assert(r.getAs[Double]("api_current_deaths_completeness_pct") == 75.0)
     assert(r.getAs[Long]("countries_with_trends") == 3L)
+  }
+
+  test("match report reads each cleaned frame once") {
+    // perfbench's shape: both cleaned frames checkpointed, the merged
+    // frame persisted. Each checkpoint is one LogicalRDD leaf; a report
+    // that counted each side in a branch of its own would read it twice.
+    val cfg = CovidPipeline.Config(asOf = java.time.LocalDate.parse("2024-01-05"))
+    val co = CovidPipeline.cleanOwid(owidFixture).localCheckpoint(eager = false)
+    val ca = CovidPipeline.cleanApi(apiFixture).localCheckpoint(eager = false)
+    val m = CovidPipeline.cachedDashboard(CovidPipeline.integrateCleaned(co, ca, cfg))
+    try {
+      val report = CovidPipeline.matchReport(co, ca, m)
+      val plan = report.queryExecution.optimizedPlan
+      def reads(input: DataFrame): Int = {
+        val rdd = input.queryExecution.logical.collectFirst {
+          case r: LogicalRDD => r.rdd.id }.get
+        plan.collect { case r: LogicalRDD if r.rdd.id == rdd => r }.size
+      }
+      assert(reads(co) == 1, s"cleaned OWID read ${reads(co)} times\n$plan")
+      assert(reads(ca) == 1, s"cleaned API read ${reads(ca)} times\n$plan")
+      assert(report.columns.toSeq == Seq("matched_countries",
+        "owid_total_cases_available", "owid_total_cases_completeness_pct",
+        "api_current_cases_available", "api_current_cases_completeness_pct",
+        "owid_total_deaths_available", "owid_total_deaths_completeness_pct",
+        "api_current_deaths_available", "api_current_deaths_completeness_pct",
+        "countries_with_trends", "owid_countries", "api_countries",
+        "candidate_countries", "match_rate_pct"))
+    } finally m.unpersist()
+  }
+
+  test("match report counts equal distinct() per side and over both; NULL is one country") {
+    // a NULL country survives cleaning on both sides (the exclusion
+    // filters keep NULL names); Carpathia is OWID-only, Syldavia API-only
+    val owid = owidFixture.unionByName(Seq(
+      ("NUL", null: String, d("2024-01-02"), Some(7.0), Some(1.0), Some(1.0), Some(0.0), Some(1000.0)),
+      ("CAR", "Carpathia", d("2024-01-02"), Some(10.0), Some(1.0), Some(1.0), Some(0.0), Some(1000.0))
+    ).toDF(owidFixture.columns.toSeq: _*))
+    val api = apiFixture.unionByName(apiFrame(
+      (null, "NUL", 5L, 1L, 0L, 1000L),
+      ("Syldavia", "SYL", 40L, 4L, 0L, 1000L)))
+    val co = CovidPipeline.cleanOwid(owid)
+    val ca = CovidPipeline.cleanApi(api)
+    val r = CovidPipeline.matchReport(co, ca,
+      CovidPipeline.integrateCleaned(co, ca, CovidPipeline.Config())).collect()(0)
+    def countries(df: DataFrame): DataFrame = df.select("country_standardized")
+    assert(r.getAs[Long]("owid_countries") == countries(co).distinct().count())
+    assert(r.getAs[Long]("api_countries") == countries(ca).distinct().count())
+    assert(r.getAs[Long]("candidate_countries") ==
+      countries(co).unionByName(countries(ca)).distinct().count())
+    // by hand: {USA, Afghanistan, Carpathia, NULL}, {USA, Afghanistan,
+    // Syldavia, NULL}, five in all; NULL keys never join, so 2 match
+    assert(Seq("owid_countries", "api_countries", "candidate_countries",
+      "matched_countries").map(r.getAs[Long]) == Seq(4L, 4L, 5L, 2L))
+    assert(r.getAs[Double]("match_rate_pct") == 40.0)
   }
 
   test("match report fails loudly on an empty candidate pool") {
